@@ -50,6 +50,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -296,63 +297,96 @@ TILE_PIXELS_SCHEMA = StructType(
 )
 
 
-def materialize_tiles(tiles_with_content: DataFrame, tile_size: int,
-                      pad_option: str = "None",
-                      spread_skew: bool = True) -> DataFrame:
-    """Stage (b) of the tiling operator: actually crop (and pad) the
-    pixel tiles that operators/tiling.py computed geometry for.
+_GEOM_COLS = ("id", "i", "j", "box_left", "box_top", "box_right", "box_bottom")
+# Rows (and encoded bytes) the tile kernel buffers before it yields one
+# output batch: one image's tiles can span several batches, so a
+# 100k-tile image never builds one giant pandas frame.
+_TILE_CHUNK_ROWS = 256
+_TILE_CHUNK_BYTES = 32 << 20
 
-    Input columns: id, content, fmt, i, j, box_left/top/right/bottom.
-    Skew: by default the input is repartitioned on (id, j) BEFORE the
-    decode kernel, so one giant image's tile rows spread across tasks
-    instead of pinning the task that read the file (plan-asserted in
-    tests/test_png.py). ``spread_skew=False`` opts out when the caller
-    already co-partitioned (e.g. reading a bucketed tile table).
+
+def tiles_by_image(geom: DataFrame, content: DataFrame) -> DataFrame:
+    """The tile kernel's input: ONE row per image, ``(id, tiles, fmt,
+    content)``, where ``tiles`` is the array of the image's geometry
+    structs (i, j, box_*, then every extra ``geom`` column).
+
+    The exchange is per image, not per tile: a decode cannot be split,
+    so a per-tile spread would decode the image again in every task its
+    tile rows reach, and ship the image's bytes once per tile. Here the
+    ~40-byte geometry rows are hash-partitioned on ``id`` (explicit
+    ``defaultParallelism`` count, which AQE does not coalesce; keyed by
+    the column alone it would merge a few-MB frame into one task) and
+    grouped, and ``content`` is joined once. A sort-merge join moves
+    ``content`` once onto those same partitions; when the grouped
+    geometry is small enough to broadcast, ``content`` stays in its scan
+    partitions and is never shuffled. Either way each image's bytes
+    cross into Python once.
     """
-    if spread_skew:
-        from pyspark.sql import functions as F
+    extra = [c for c in geom.columns if c not in _GEOM_COLS]
+    n = geom.sparkSession.sparkContext.defaultParallelism
+    grouped = (
+        geom.repartition(n, F.col("id"))
+        .groupBy("id")
+        .agg(F.collect_list(F.struct(*_GEOM_COLS[1:], *extra)).alias("tiles"))
+    )
+    return grouped.join(content.select("id", "fmt", "content"), "id")
 
-        tiles_with_content = tiles_with_content.repartition(
-            F.col("id"), F.col("j")
-        )
+
+def materialize_tiles(geom: DataFrame, content: DataFrame, tile_size: int,
+                      pad_option: str = "None") -> DataFrame:
+    """Stage (b) of the tiling operator: crop (and pad) the pixel tiles
+    that operators/tiling.py computed geometry for.
+
+    ``geom``: one row per tile — id, i, j, box_left/top/right/bottom,
+    plus any pass-through columns (e.g. tile_name, caption), which come
+    back unchanged on the tile's output row. ``content``: one row per
+    image — id, fmt, content. Output: id, i, j, tile_w, tile_h, content
+    (rawrgb), error, then the pass-through columns. An image that fails
+    to decode yields one error row per tile (F7 quarantine).
+
+    One ``mapInPandas`` kernel over :func:`tiles_by_image` decodes each
+    image once, then crops, pads and encodes all of its tiles.
+    """
+    extra = [geom.schema[c] for c in geom.columns if c not in _GEOM_COLS]
+    schema = StructType(TILE_PIXELS_SCHEMA.fields + extra)
+    names = [f.name for f in schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out: list[dict] = []
+        size = 0
         for pdf in batches:
-            out = []
-            # round 15 (guide §1.2 per-task work): tile rows of one
-            # image that land in the same Arrow batch share ONE
-            # decode — the per-row decode_any re-decoded the source
-            # image once per tile. Batch-scoped memo, cleared between
-            # batches; capped so a batch of many large images cannot
-            # hold every decoded array at once.
-            dec: dict = {}
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "i": int(row.i), "j": int(row.j),
-                       "tile_w": None, "tile_h": None, "content": None,
-                       "error": None}
+            for rid, fmt, data, tiles in zip(
+                pdf["id"], pdf["fmt"], pdf["content"], pdf["tiles"]
+            ):
                 try:
-                    key = (row.id, row.fmt)
-                    arr = dec.get(key)
-                    if arr is None:
-                        arr = decode_any(row.fmt, bytes(row.content))
-                        if len(dec) >= 64:
-                            dec.clear()
-                        dec[key] = arr
-                    t = crop(arr, row.box_left, row.box_top,
-                             row.box_right, row.box_bottom)
-                    if pad_option == "Extend Edges":
-                        t = pad_extend_edges(t, tile_size)
-                    elif pad_option == "Pad to Square":
-                        t = pad_to_square(t, tile_size)
-                    t = np.ascontiguousarray(t)
-                    rec["tile_h"], rec["tile_w"] = int(t.shape[0]), int(t.shape[1])
-                    rec["content"] = encode_rawrgb(t)
+                    arr, err = decode_any(fmt, bytes(data)), None
                 except Exception as e:
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_PIXELS_SCHEMA.fields])
+                    arr, err = None, f"{type(e).__name__}: {e}"
+                for t in tiles:
+                    rec = {**t, "id": str(rid), "tile_w": None, "tile_h": None,
+                           "content": None, "error": err}
+                    if arr is not None:
+                        try:
+                            px = crop(arr, t["box_left"], t["box_top"],
+                                      t["box_right"], t["box_bottom"])
+                            if pad_option == "Extend Edges":
+                                px = pad_extend_edges(px, tile_size)
+                            elif pad_option == "Pad to Square":
+                                px = pad_to_square(px, tile_size)
+                            px = np.ascontiguousarray(px)
+                            rec["tile_h"], rec["tile_w"] = px.shape[:2]
+                            rec["content"] = encode_rawrgb(px)
+                            size += len(rec["content"])
+                        except Exception as e:
+                            rec["error"] = f"{type(e).__name__}: {e}"
+                    out.append(rec)
+                    if len(out) >= _TILE_CHUNK_ROWS or size >= _TILE_CHUNK_BYTES:
+                        yield pd.DataFrame(out, columns=names)
+                        out, size = [], 0
+        if out:
+            yield pd.DataFrame(out, columns=names)
 
-    return tiles_with_content.mapInPandas(run, schema=TILE_PIXELS_SCHEMA)
+    return tiles_by_image(geom, content).mapInPandas(run, schema=schema)
 
 
 # ----------------------------------------------------------- conversion

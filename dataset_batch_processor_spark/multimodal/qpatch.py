@@ -79,7 +79,7 @@ def _q_tile_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_png, schema="id string, fmt string, content binary"
     )
     pix = binary.materialize_tiles(
-        geom.join(content, "id"), tile_size=TILE_CK, pad_option="Extend Edges"
+        geom, content, tile_size=TILE_CK, pad_option="Extend Edges"
     )
 
     def checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

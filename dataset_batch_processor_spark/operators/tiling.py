@@ -18,8 +18,9 @@ two stages:
 
 Skew note: a pathological single huge image produces h_tiles×v_tiles
 rows from one input row. The geometry rows are ~40 bytes each so even
-a 100k-tile image is ~4 MB — no salting needed for stage (a); the
-pixel stage repartitions by (image_id, j) before decoding.
+a 100k-tile image is ~4 MB — no salting needed for stage (a). The
+pixel stage exchanges per image, not per tile (see
+multimodal/binary.tiles_by_image for why).
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .multimodal import binary as mm
@@ -40,6 +40,11 @@ class RunResult:
     output: DataFrame | None = None
 
 
+def _count_if(cond, name: str):
+    """Row counter for an Observation: rows where ``cond`` holds."""
+    return F.count(F.when(cond, 1)).alias(name)
+
+
 # ------------------------------------------------------------- prepare
 
 def prepare_images(
@@ -52,29 +57,39 @@ def prepare_images(
 ) -> RunResult:
     """§3.2 prepare pipeline: scan → header-only meta → route (F2∨F3)
     → routed write + K6 crop reports. One DataFrame chain replaces the
-    two filesystem-coupled button clicks."""
-    meta = img_src.build_images_meta(img_src.scan_image_folder(spark, in_dir))
+    two filesystem-coupled button clicks.
+
+    The header parse runs once: the counters ride the one routed write
+    as Observations, and the report exporter reads the written table
+    back (it holds only the geometry columns)."""
+    quarantine_obs, route_obs = Observation("quarantine"), Observation("routes")
+    meta = img_src.build_images_meta(
+        img_src.scan_image_folder(spark, in_dir)
+    ).observe(quarantine_obs, _count_if(F.col("error").isNotNull(), "quarantined"))
     valid = img_src.valid_images(meta).withColumn("image_id", F.col("basename"))
-    routed = routing_ops.route_images(valid, tile_size, overlap_ratio)
+    routed = routing_ops.route_images(valid, tile_size, overlap_ratio).observe(
+        route_obs,
+        _count_if(F.col("route") == routing_ops.ROUTE_OK, "kept"),
+        _count_if(F.col("route") == routing_ops.ROUTE_INCOMPATIBLE, "moved"),
+    )
     sinks.write_routed(routed, f"{out_dir}/routed")
+    # the schema is given: a write with no valid image holds no data
+    # file to infer it from
+    written = spark.read.schema(routed.schema).parquet(f"{out_dir}/routed")
     n_reports = (
-        sinks.export_crop_reports(routed, f"{out_dir}/reports")
+        sinks.export_crop_reports(written, f"{out_dir}/reports")
         if write_reports
         else 0
     )
-    counts = {
-        r["route"]: r["n_images"]
-        for r in routing_ops.route_counts(routed).collect()
-    }
-    quarantined = img_src.quarantine(meta).count()
+    routes = route_obs.get
     return RunResult(
         metrics={
-            "kept": counts.get(routing_ops.ROUTE_OK, 0),
-            "moved": counts.get(routing_ops.ROUTE_INCOMPATIBLE, 0),
+            "kept": routes["kept"],
+            "moved": routes["moved"],
             "reports": n_reports,
-            "quarantined": quarantined,
+            "quarantined": quarantine_obs.get["quarantined"],
         },
-        output=routed,
+        output=written,
     )
 
 
@@ -90,17 +105,18 @@ def tile_folder(
     use_sidecar_captions: bool = False,
 ) -> RunResult:
     """§3.1 flagship pipeline: scan → meta → geometry explode →
-    re-join content → pixel materialization → tiles table
-    (+ optional sidecar/zip exporters).
+    per-image pixel materialization → tiles table (+ optional
+    sidecar/zip exporters).
 
     Captions: ``spec.caption`` stamps one caption on every tile (J2,
     tiling.py:71-75); ``use_sidecar_captions=True`` instead LEFT-joins
     per-image ``<basename>.txt`` sidecars by basename (J1,
     skip_tiles.py:41-48) — missing sidecars yield null captions.
 
-    Shuffle budget: ONE repartition before the pixel UDF, keyed
-    (path, j) so a giant image's tile rows spread across tasks (the
-    skew mitigation from SURVEY §4.2); geometry itself is narrow.
+    Shuffle budget: geometry is narrow; the pixel stage exchanges per
+    image (see ``binary.tiles_by_image`` for why). The ``tiles``/
+    ``failed`` counters ride the one parquet write as an Observation;
+    the sidecar exporter reads the written table back.
     """
     scanned = img_src.scan_image_folder(spark, in_dir)
     meta = img_src.valid_images(img_src.build_images_meta(scanned))
@@ -119,39 +135,29 @@ def tile_folder(
             )
         )
         geom = geom.join(F.broadcast(side), "basename", "left")
-    content_df = scanned.select(F.col("path").alias("image_id"), "content").join(
-        images.select("image_id", "ext"), "image_id"
+    geom = geom.select(
+        F.col("image_id").alias("id"), "i", "j",
+        "box_left", "box_top", "box_right", "box_bottom",
+        "tile_name", *(["caption"] if has_caption else []),
     )
-    with_content = geom.join(content_df, "image_id").select(
-        F.col("image_id").alias("id"),
-        F.col("ext").alias("fmt"),
+    # the extension as build_images_meta derives it: images outside
+    # the geometry (invalid or untileable) drop out in the kernel join
+    content = scanned.select(
+        F.col("path").alias("id"),
+        F.lower(F.element_at(F.split("path", r"\."), -1)).alias("fmt"),
         "content",
-        "i",
-        "j",
-        "box_left",
-        "box_top",
-        "box_right",
-        "box_bottom",
-        "tile_name",
-        *(["caption"] if has_caption else []),
     )
+    counts = Observation("tiles")
     tiles = mm.materialize_tiles(
-        with_content.repartition(F.col("id"), F.col("j")),
-        tile_size=spec.tile_size,
-        pad_option=spec.pad_option,
+        geom, content, tile_size=spec.tile_size, pad_option=spec.pad_option
+    ).observe(
+        counts,
+        _count_if(F.col("error").isNull(), "tiles"),
+        _count_if(F.col("error").isNotNull(), "failed"),
     )
-    named = tiles.join(
-        geom.select(
-            F.col("image_id").alias("id"), "i", "j", "tile_name",
-            *(["caption"] if has_caption else []),
-        ),
-        ["id", "i", "j"],
-    )
-    named.write.mode("errorifexists").parquet(f"{out_dir}/tiles")
+    tiles.write.mode("errorifexists").parquet(f"{out_dir}/tiles")
     written = spark.read.parquet(f"{out_dir}/tiles")
-    n_tiles = written.filter(F.col("error").isNull()).count()
-    n_failed = written.filter(F.col("error").isNotNull()).count()
-    metrics = {"tiles": n_tiles, "failed": n_failed}
+    metrics = dict(counts.get)
     if export_sidecars and has_caption:
         metrics["sidecars"] = sinks.export_sidecar_files(
             written.filter(F.col("error").isNull()), f"{out_dir}/sidecars"
@@ -179,15 +185,15 @@ def convert_images(
         F.lower(F.element_at(F.split("path", r"\."), -1)).alias("fmt"),
         "content",
     )
-    decoded = mm.convert_batch(src, target_fmt)
-    decoded.write.mode("errorifexists").parquet(f"{out_dir}/converted")
-    written = spark.read.parquet(f"{out_dir}/converted")
+    counts = Observation("converted")
+    mm.convert_batch(src, target_fmt).observe(
+        counts,
+        _count_if(F.col("error").isNull(), "converted"),
+        _count_if(F.col("error").isNotNull(), "failed"),
+    ).write.mode("errorifexists").parquet(f"{out_dir}/converted")
     return RunResult(
-        metrics={
-            "converted": written.filter(F.col("error").isNull()).count(),
-            "failed": written.filter(F.col("error").isNotNull()).count(),
-        },
-        output=written,
+        metrics=dict(counts.get),
+        output=spark.read.parquet(f"{out_dir}/converted"),
     )
 
 
@@ -209,8 +215,7 @@ def merge_text_folder(spark: SparkSession, in_dir: str, out_path: str,
         return RunResult(
             metrics={"n_lines": lines.count(), "n_parts": n_parts}
         )
-    sinks.export_merged_text(lines, out_path)
-    return RunResult(metrics={"n_lines": lines.count()})
+    return RunResult(metrics={"n_lines": sinks.export_merged_text(lines, out_path)})
 
 
 def split_text_file(

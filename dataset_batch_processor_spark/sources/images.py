@@ -31,7 +31,7 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -142,6 +142,28 @@ _HEADER_PARSERS = (
     parse_rawrgb_header,
 )
 
+# Formats whose dimensions sit at a fixed offset near the start of the
+# file (PNG IHDR, GIF screen descriptor, WebP VP8X/VP8L header, rawrgb):
+# for these only the first _HEADER_PREFIX bytes cross into Python. The
+# parsers read nothing past byte 30 for them, so the result is the same.
+# JPEG, TIFF-family and unknown payloads still send the whole file: a
+# JPEG SOF or a TIFF IFD can sit anywhere in it.
+_FIXED_HEADER_MAGIC = (b"\x89PNG\r\n\x1a\n", b"GIF87a", b"GIF89a", b"RAW1")
+_HEADER_PREFIX = 64
+
+
+def _header_bytes(content: Column) -> Column:
+    """``content`` cut to its header prefix where the magic bytes say
+    the dimensions sit at a fixed offset; the whole payload otherwise."""
+    def starts(magic: bytes, pos: int = 1) -> Column:
+        return F.substring(content, pos, len(magic)) == F.lit(magic)
+
+    fixed = starts(b"RIFF") & starts(b"WEBP", 9)
+    for magic in _FIXED_HEADER_MAGIC:
+        fixed = fixed | starts(magic)
+    return F.when(fixed, F.substring(content, 1, _HEADER_PREFIX)).otherwise(content)
+
+
 _META_SCHEMA = StructType(
     [
         StructField("path", StringType()),
@@ -192,9 +214,9 @@ def build_images_meta(scanned: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=[f.name for f in _META_SCHEMA.fields])
 
-    return scanned.select("path", "content").mapInPandas(
-        parse_batch, schema=_META_SCHEMA
-    )
+    return scanned.select(
+        "path", _header_bytes(F.col("content")).alias("content")
+    ).mapInPandas(parse_batch, schema=_META_SCHEMA)
 
 
 def quarantine(meta: DataFrame) -> DataFrame:

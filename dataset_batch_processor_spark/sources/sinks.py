@@ -57,16 +57,18 @@ def export_sidecar_files(df: DataFrame, out_dir: str, name_col: str = "tile_name
     return target.count()
 
 
-def export_merged_text(df: DataFrame, out_path: str, sep: str = "\n\n") -> None:
+def export_merged_text(df: DataFrame, out_path: str, sep: str = "\n\n") -> int:
     """K3 merged-text sink, small-corpus convenience form: materializes
     textops.merge_text's one merged row on the driver and writes one
     file. Keep for oracle parity and modest inputs; the scale path is
-    :func:`export_merged_text_distributed` (no single-reducer string)."""
+    :func:`export_merged_text_distributed` (no single-reducer string).
+    Returns the number of merged lines (the same aggregate's count)."""
     from ..operators.textops import merge_text
 
     row = merge_text(df, sep=sep).collect()[0]
     with open(out_path, "w") as fh:
         fh.write(row["merged"])
+    return row["n_lines"]
 
 
 def _write_ordered_parts(ordered: DataFrame, out_dir: str, fmt) -> int:

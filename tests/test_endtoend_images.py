@@ -66,18 +66,21 @@ def test_full_pipeline_on_real_pngs(spark, tmp_path):
         for r in geo
     )
 
-    # S3/G2/K1: join content back, decode REAL PNG, crop+pad, re-encode
+    # S3/G2/K1: per-image content, decode REAL PNG, crop+pad, re-encode
     content = scanned.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fname"),
         "content",
     ).withColumn("image_id", F.expr("substring_index(fname, '.', 1)"))
-    tiles_in = grid.join(content, "image_id").select(
-        F.col("image_id").alias("id"), "content",
-        F.lit("png").alias("fmt"),
+    geom = grid.select(
+        F.col("image_id").alias("id"),
         "i", "j", "box_left", "box_top", "box_right", "box_bottom",
     )
-    pix = binary.materialize_tiles(tiles_in, tile_size=16,
-                                   pad_option="Extend Edges")
+    pix = binary.materialize_tiles(
+        geom,
+        content.select(F.col("image_id").alias("id"), "content",
+                       F.lit("png").alias("fmt")),
+        tile_size=16, pad_option="Extend Edges",
+    )
     pix_rows = pix.collect()
     assert len(pix_rows) == 15 and all(r.error is None for r in pix_rows)
     one = next(r for r in pix_rows if (r.i, r.j) == (0, 0))

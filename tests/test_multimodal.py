@@ -77,12 +77,14 @@ def test_materialize_tiles_end_to_end(spark):
     """Geometry (SQL) + pixels (pandas UDF): a 4x4 image tiled at 2."""
     img = grad_image(4, 4)
     tiles_geom = [
-        Row(id="im", fmt="rawrgb", content=bytearray(mm.encode_rawrgb(img)),
-            i=i, j=j, box_left=i * 2, box_top=j * 2,
+        Row(id="im", i=i, j=j, box_left=i * 2, box_top=j * 2,
             box_right=i * 2 + 2, box_bottom=j * 2 + 2)
         for j in range(2) for i in range(2)
     ]
-    out = mm.materialize_tiles(spark.createDataFrame(tiles_geom), tile_size=2)
+    content = [Row(id="im", fmt="rawrgb",
+                   content=bytearray(mm.encode_rawrgb(img)))]
+    out = mm.materialize_tiles(spark.createDataFrame(tiles_geom),
+                               spark.createDataFrame(content), tile_size=2)
     got = {(r.i, r.j): r for r in out.collect()}
     assert len(got) == 4 and all(r.error is None for r in got.values())
     tile = mm.decode_rawrgb(bytes(got[(1, 1)].content))
@@ -91,10 +93,13 @@ def test_materialize_tiles_end_to_end(spark):
 
 def test_materialize_tiles_pad_extend(spark):
     img = grad_image(3, 3)
-    rows = [Row(id="im", fmt="rawrgb", content=bytearray(mm.encode_rawrgb(img)),
-                i=1, j=1, box_left=2, box_top=2, box_right=3, box_bottom=3)]
+    rows = [Row(id="im", i=1, j=1, box_left=2, box_top=2, box_right=3,
+                box_bottom=3)]
+    content = [Row(id="im", fmt="rawrgb",
+                   content=bytearray(mm.encode_rawrgb(img)))]
     out = mm.materialize_tiles(
-        spark.createDataFrame(rows), tile_size=2, pad_option="Extend Edges"
+        spark.createDataFrame(rows), spark.createDataFrame(content),
+        tile_size=2, pad_option="Extend Edges"
     ).collect()[0]
     assert (out.tile_w, out.tile_h) == (2, 2)
     tile = mm.decode_rawrgb(bytes(out.content))

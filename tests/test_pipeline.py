@@ -4,11 +4,14 @@ codec path is fully real)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
 from dataset_batch_processor_spark import pipeline
 from dataset_batch_processor_spark.multimodal import binary as mm
+from dataset_batch_processor_spark.multimodal import png
 from dataset_batch_processor_spark.operators.tiling import TileSpec
 
 
@@ -43,6 +46,23 @@ def test_prepare_pipeline(spark, image_folder, tmp_path):
     assert {r.route for r in routed.collect()} == {"ok", "incompatible"}
 
 
+def test_prepare_pipeline_nothing_valid(spark, tmp_path):
+    """A folder in which no image parses: the routed write holds no
+    data file, and the facade still reports every file quarantined
+    with an empty output."""
+    d = tmp_path / "imgs"
+    d.mkdir()
+    (d / "a.jpg").write_bytes(b"\xff\xd8nope")
+    (d / "b.png").write_bytes(b"not a png")
+    (d / "c.heic").write_bytes(b"\x00\x00\x00\x18ftypheic")
+    res = pipeline.prepare_images(
+        spark, str(d), str(tmp_path / "prep"), tile_size=8, overlap_ratio=0.0
+    )
+    assert res.metrics == {"kept": 0, "moved": 0, "reports": 0, "quarantined": 3}
+    assert res.output.count() == 0
+    assert "route" in res.output.columns
+
+
 def test_tile_pipeline_end_to_end(spark, image_folder, tmp_path):
     spec = TileSpec(tile_size=8, overlap_ratio=0.0, padding=0, caption="cap")
     res = pipeline.tile_folder(
@@ -62,6 +82,104 @@ def test_tile_pipeline_end_to_end(spark, image_folder, tmp_path):
     big = grad_image(16, 16)
     t11 = next(r for r in out if r.i == 1 and r.j == 1 and "big" in r.id)
     assert np.array_equal(mm.decode_rawrgb(bytes(t11.content)), big[8:16, 8:16])
+
+
+@pytest.mark.parametrize("pad_option", ["Extend Edges", "Pad to Square"])
+def test_tile_pipeline_pads_edge_tiles(spark, tmp_path, pad_option):
+    """G2/G3 through the facade: every tile of a 24x20 image at tile 16,
+    step 8 is 16x16, and the clipped edge tiles carry the padding."""
+    d = tmp_path / "imgs"
+    d.mkdir()
+    img = grad_image(24, 20, seed=5)
+    (d / "pad.png").write_bytes(mm.encode_rawrgb(img))
+    spec = TileSpec(tile_size=16, overlap_ratio=0.5, pad_option=pad_option)
+    res = pipeline.tile_folder(spark, str(d), str(tmp_path / "out"), spec)
+    assert res.metrics == {"tiles": 6, "failed": 0}
+    rows = {(r.i, r.j): r for r in res.output.collect()}
+    assert sorted(rows) == [(i, j) for i in range(2) for j in range(3)]
+    for (i, j), r in rows.items():
+        left, top = i * 8, j * 8
+        part = img[top:min(top + 16, 24), left:min(left + 16, 20)]
+        h, w = part.shape[:2]
+        if pad_option == "Extend Edges":
+            want = np.pad(part, ((0, 16 - h), (0, 16 - w), (0, 0)), mode="edge")
+        else:
+            want = np.zeros((16, 16, 3), np.uint8)
+            want[:h, :w] = part
+        assert (r.tile_w, r.tile_h) == (16, 16)
+        assert np.array_equal(mm.decode_rawrgb(bytes(r.content)), want), (i, j)
+
+
+def test_tile_pipeline_truncated_image_fails_every_tile(spark, tmp_path):
+    """A truncated PNG (header intact, body cut) gets its full tile grid
+    from the header, then fails to decode: one error row per tile, and
+    ``failed`` counts exactly those rows."""
+    d = tmp_path / "imgs"
+    d.mkdir()
+    (d / "ok.png").write_bytes(mm.encode_rawrgb(grad_image(16, 16)))
+    full = png.encode_png(grad_image(32, 24, seed=2))
+    (d / "cut.png").write_bytes(full[: len(full) // 2])
+    spec = TileSpec(tile_size=8, overlap_ratio=0.0)
+    res = pipeline.tile_folder(spark, str(d), str(tmp_path / "out"), spec)
+    bad = [r for r in res.output.collect() if r.error is not None]
+    # 24 wide x 32 high at tile 8 -> 3 x 4 tiles, none decodes
+    assert sorted((r.i, r.j) for r in bad) == [
+        (i, j) for i in range(3) for j in range(4)
+    ]
+    assert all(r.id.endswith("cut.png") and r.content is None for r in bad)
+    assert res.metrics == {"tiles": 4, "failed": 12}
+
+
+_SIZE = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30}
+
+
+def _python_sent_bytes(spark, since: int) -> float:
+    """Sum of the SQL metric "data sent to Python workers" over the SQL
+    executions with id >= ``since``, from the status store (kept with
+    the UI disabled)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    total, eid = 0.0, since
+    while store.execution(eid).isDefined():
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for n in range(nodes.size()):
+            metrics = nodes.apply(n).metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                v = values.get(m.accumulatorId())
+                if m.name() == "data sent to Python workers" and v.isDefined():
+                    # "total (min, med, max ...)\n12.0 KiB (...)" or "12.0 KiB"
+                    num, unit = re.match(
+                        r"\s*([\d.,]+)\s*(\w+)", v.get().split("\n")[-1]
+                    ).groups()
+                    total += float(num.replace(",", "")) * _SIZE[unit]
+        eid += 1
+    return total
+
+
+def _next_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.last().executionId() + 1 if execs.size() else 0
+
+
+def test_tile_pipeline_sends_each_image_to_python_once(spark, tmp_path):
+    """The header parse sends only a header prefix and the tile kernel
+    gets each image's bytes once, not once per tile: the whole facade
+    sends at most 2x the folder's bytes to Python workers (64 tiles per
+    image here, so a per-tile join would send ~64x)."""
+    d = tmp_path / "imgs"
+    d.mkdir()
+    for k in range(3):
+        (d / f"im{k}.png").write_bytes(mm.encode_rawrgb(grad_image(64, 64, k)))
+    folder_bytes = sum(p.stat().st_size for p in d.iterdir())
+    since = _next_execution_id(spark)
+    spec = TileSpec(tile_size=16, overlap_ratio=0.5)
+    res = pipeline.tile_folder(spark, str(d), str(tmp_path / "out"), spec)
+    assert res.metrics == {"tiles": 3 * 64, "failed": 0}
+    sent = _python_sent_bytes(spark, since)
+    assert folder_bytes <= sent <= 2 * folder_bytes, (sent, folder_bytes)
 
 
 def test_convert_pipeline(spark, image_folder, tmp_path):

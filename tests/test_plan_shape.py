@@ -203,7 +203,7 @@ def test_containment_reuses_candidate_join_shape(spark, sf_dir):
 def test_tile_checksum_fans_out_and_spreads_skew(spark, sf_dir):
     """Both Python stages keep their exchanges: the id fan-out before
     the PNG-generation kernel (RoundRobin) and materialize_tiles'
-    (id, j) hash repartition before the crop kernel."""
+    per-image (id) hash exchange before the crop kernel."""
     from dataset_batch_processor_spark.multimodal import queries as mmq
 
     df = mmq.QUERIES["mm_tile_checksum"](spark, sf_dir)
