@@ -302,47 +302,15 @@ def main() -> None:
     from dataset_batch_processor_spark.operators import bpe
     _warm("bpe_merges_artifact",
           lambda: bpe.bpe_merges_artifact(spark, sf_dir).count())
-    # round 13 (VERDICT r12 next #4): the streaming twins' shard
-    # staging is session-shared now (fixtures.stage_mod_shards /
-    # staged_once) — build each once here so every twin's recorded
-    # timing is its drain loop, not fixture parquet writes.
-    from dataset_batch_processor_spark.streaming import (
-        canarygate,
-        convgate,
-        driftmon,
-        hllgate,
-        incremental,
-        prefgate,
-        qualitygate,
-        quotagate,
-        rlvrgate,
-        turndedup,
-    )
-    # round 16: the three operators-side stream twins (CMS grid, heavy
-    # hitters, histogram) were the only drains whose shard staging was
-    # not pre-built — their first-touch timing carried fixture parquet
-    # writes like every twin's did before round 13
-    from dataset_batch_processor_spark.operators import (
-        cms as _cms,
-        funnel as _funnel,
-        histsketch as _hist,
-    )
-    for _mod, _label in (
-        (_cms, "stage_cms"),
-        (_funnel, "stage_hh"),
-        (_hist, "stage_hist"),
-        (turndedup, "stage_turnadm"),
-        (incremental, "stage_inc_q"),
-        (driftmon, "stage_drift"),
-        (convgate, "stage_cvg"),
-        (qualitygate, "stage_qg"),
-        (quotagate, "stage_qg2"),
-        (prefgate, "stage_pfg"),
-        (rlvrgate, "stage_rvg"),
-        (canarygate, "stage_cng"),
-        (hllgate, "stage_hlg"),
-    ):
-        _warm(_label, lambda m=_mod: m.stage(spark, sf_dir))
+    # every stream twin's shard staging is session-shared
+    # (fixtures.Twin.stage; twins with one layout share one) — build
+    # them here so each twin's recorded timing is its drain loop, not
+    # fixture parquet writes
+    from dataset_batch_processor_spark.streaming.fixtures import Twin
+
+    for _name, _fn in qs.items():
+        if isinstance(_fn, Twin):
+            _warm(f"stage:{_name}", lambda t=_fn: t.stage(spark, sf_dir))
     pair_graph_build_s = warmup_builds["pair_graph"]
 
     # Queries whose registered form scans a matcache-materialized

@@ -135,7 +135,7 @@ def staged_once(
     reusing one kind with a different shard count or column selection
     must NOT silently share a staging dir — callers that parameterize
     the written layout encode those parameters here (see
-    fixtures.stage_mod_shards)."""
+    fixtures.stage_shards)."""
     ck = (spark.sparkContext.applicationId, f"staged:{kind}:{layout}",
           os.path.abspath(key))
     with _LOCK:

@@ -9,10 +9,9 @@ The two properties that matter at 100 TB:
 - **mergeable**: CMS(A ∪ B) = CMS(A) + CMS(B) element-wise, so
   partial sketches combine associatively across partitions, days, or
   micro-batches — the same reason HLL is the production distinct
-  counter. ``accumulate_cms`` below is exactly that: per-micro-batch
-  partial grids committed idempotently (overwrite-by-batch_id, the
-  incremental-LSH pattern), summed on read; the batch grid and the
-  drained streaming grid are equal INTEGER BY INTEGER, which the
+  counter. The stream twin below is exactly that: per-micro-batch
+  partial grids (``cms_partial``) summed on read; the batch grid and
+  the drained streaming grid are equal INTEGER BY INTEGER, which the
   parity test pins.
 - **never underestimates**: est >= exact always. The heavy-hitters
   query carries that invariant as a boolean column, so the driver's
@@ -30,12 +29,11 @@ all the work); the heavy-hitter estimate joins the bounded
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..streaming import fixtures
 
 CMS_D = 4   # hash rows
 CMS_W = 64  # counters per row
@@ -185,32 +183,13 @@ def cms_partial(events: DataFrame, production_hash: bool = False) -> DataFrame:
     )
 
 
-def accumulate_cms(events_stream: DataFrame, counters_dir: str,
-                   checkpoint_dir: str):
-    """foreachBatch CMS accumulation: each micro-batch commits its
-    partial grid to ``counters_dir/batch_id=N`` (overwrite — a
-    retried batch replaces its own partition instead of
-    double-counting). Read the accumulated sketch back with
-    :func:`read_cms`."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(counters_dir, f"batch_id={batch_id}")
-        cms_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_cms(spark: SparkSession, counters_dir: str) -> DataFrame:
     """Merge the accumulated per-batch grids: element-wise sum."""
     return (
         spark.read.parquet(counters_dir)
         .groupBy("row_idx", "col")
         .agg(F.sum("counter").alias("counter"))
+        .orderBy("row_idx", "col")
     )
 
 
@@ -225,56 +204,14 @@ ORACLES = {
 
 
 # ------------------------------------------------- driver-gated stream
-# Runs the WHOLE streaming accumulation loop inside one query (the
-# docs_incremental_lsh_pairs precedent): stage the events in two
-# chunks, drain an availableNow foreachBatch stream that commits one
-# partial grid per micro-batch, merge on read. The result equals the
-# one-pass batch grid by mergeability, so CMS_COUNTERS_DUCK hash-gates
-# the micro-batching, the idempotent per-batch commits, and the merge.
+# The stream twin of events_cms_counters: events staged in two chunks,
+# one partial grid per micro-batch, merged on read. The result equals
+# the one-pass batch grid by mergeability, so CMS_COUNTERS_DUCK
+# hash-gates the micro-batching, the per-batch commits, and the merge.
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for the streaming CMS twin —
-    exposed for bench warmup (round 16: the three operators-side
-    twins were the only streams whose staging was not pre-built, so
-    their first-touch timing carried fixture parquet writes)."""
-    from ..streaming.fixtures import stage_expr_shards
-
-    events = catalog.load_table(spark, sf_dir, "events").select("user_id")
-    return stage_expr_shards(events, "cms_q", sf_dir, "user_id % 2")
-
-
-def _q_cms_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_cms_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the merged grid is partitioning-invariant by
-    # mergeability, which CMS_COUNTERS_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_cms(
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            counters_dir=os.path.join(work, "counters"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return (
-        read_cms(spark, os.path.join(work, "counters"))
-        .select(
-            F.col("row_idx").cast("int").alias("row_idx"),
-            F.col("col").cast("int").alias("col"),
-            F.col("counter").cast("bigint").alias("counter"),
-        )
-        .orderBy("row_idx", "col")
-    )
-
-
-QUERIES["events_cms_streaming_counters"] = _q_cms_streaming
+QUERIES["events_cms_streaming_counters"] = fixtures.Twin(
+    "events", ("user_id",), "user_id",
+    cms_partial, fixtures.merge_commits(read_cms),
+)
 ORACLES["events_cms_streaming_counters"] = CMS_COUNTERS_DUCK

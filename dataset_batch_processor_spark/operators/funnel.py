@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..streaming import fixtures
 
 DAY_US = 86_400_000_000
 FUNNEL_WINDOW_US = 7 * DAY_US
@@ -314,69 +315,22 @@ ORACLES["events_value_percentiles_exact"] = PERCENTILES_DUCK
 # ------------------------------------- streaming heavy hitters
 # The incremental form of ``heavy_hitters``: per-user counts are
 # mergeable by addition, so each micro-batch commits its partial
-# count table idempotently (overwrite of its own batch_id partition —
-# a retried batch replaces itself, never double-counts) and the read
-# side sums partials before thresholding. The result EQUALS the
-# one-pass batch query by mergeability, so HEAVY_HITTERS_DUCK
-# hash-gates the micro-batching, the idempotent commits, and the
-# merge — the same invariant family as events_cms_streaming_counters.
+# count table and the read side sums partials before thresholding.
+# The result EQUALS the one-pass batch query by mergeability, so
+# HEAVY_HITTERS_DUCK hash-gates the micro-batching, the commits, and
+# the merge — the same invariant family as
+# events_cms_streaming_counters.
 
 
-def accumulate_user_counts(events_stream: DataFrame, counts_dir: str,
-                           checkpoint_dir: str):
-    import os
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(counts_dir, f"batch_id={batch_id}")
-        (
-            batch_df.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+def user_counts_partial(events: DataFrame) -> DataFrame:
+    """(user_id, n) event counts for one batch — the mergeable unit."""
+    return events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for the heavy-hitter twin (see
-    cms.stage)."""
-    from ..streaming.fixtures import stage_expr_shards
-
-    events = catalog.load_events(spark, sf_dir).select("user_id")
-    return stage_expr_shards(events, "hh_q", sf_dir, "user_id % 2")
-
-
-def _q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_hh_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the summed counts are partitioning-invariant by
-    # mergeability, which HEAVY_HITTERS_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_user_counts(
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            counts_dir=os.path.join(work, "counts"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
+def read_heavy_hitters(spark: SparkSession, counts_dir: str) -> DataFrame:
+    """Sum the per-batch counts, then threshold as ``heavy_hitters``."""
     per_user = (
-        spark.read.parquet(os.path.join(work, "counts"))
+        spark.read.parquet(counts_dir)
         .groupBy("user_id")
         .agg(F.sum("n").alias("n_events"))
     )
@@ -393,7 +347,10 @@ def _q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["events_stream_heavy_hitters"] = _q_stream_heavy_hitters
+QUERIES["events_stream_heavy_hitters"] = fixtures.Twin(
+    "events", ("user_id",), "user_id",
+    user_counts_partial, fixtures.merge_commits(read_heavy_hitters),
+)
 ORACLES["events_stream_heavy_hitters"] = HEAVY_HITTERS_DUCK
 
 

@@ -20,19 +20,18 @@ mergeability and engine-portable determinism.
 Scale shape: the histogram build is a narrow map + a groupBy over at
 most (max-min)*BIN_SCALE bins with map-side combine; the quantile
 extraction is a window over the BIN TABLE (thousands of rows), never
-the data. ``accumulate_hist`` commits per-micro-batch partial
-histograms idempotently (overwrite-by-batch_id, the cms.py pattern)
-and the parity test pins streaming merge == one-pass batch.
+the data. The stream twin commits per-micro-batch partial histograms
+(``hist_partial``) and the parity test pins streaming merge ==
+one-pass batch.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..streaming import fixtures
 
 BIN_SCALE = 10  # bin width 0.1
 QS = (50, 90, 99)
@@ -154,28 +153,13 @@ def hist_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def accumulate_hist(events_stream: DataFrame, hist_dir: str,
-                    checkpoint_dir: str):
-    """foreachBatch histogram accumulation with idempotent per-batch
-    commits; merge with :func:`read_hist`."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(hist_dir, f"batch_id={batch_id}")
-        hist_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_hist(spark: SparkSession, hist_dir: str) -> DataFrame:
+    """Merge the accumulated per-batch histograms: per-bin sum."""
     return (
         spark.read.parquet(hist_dir)
         .groupBy("bin")
         .agg(F.sum("n").alias("n"))
+        .orderBy("bin")
     )
 
 
@@ -190,52 +174,13 @@ ORACLES = {
 
 
 # ------------------------------------------------- driver-gated stream
-# Same contract as cms._q_cms_streaming: drain the whole accumulation
-# loop inside the query; mergeability makes the result equal the
-# one-pass batch histogram, so HIST_DUCK gates the loop.
+# The stream twin of events_value_histogram: mergeability makes the
+# drained result equal the one-pass batch histogram, so HIST_DUCK
+# gates the loop.
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for the histogram twin (see
-    cms.stage)."""
-    from ..streaming.fixtures import stage_expr_shards
-
-    events = catalog.load_table(spark, sf_dir, "events").select("value")
-    return stage_expr_shards(
-        events, "hist_q", sf_dir, "CAST(value * 100 AS BIGINT) % 2"
-    )
-
-
-def _q_hist_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_hist_work_")
-    # micro-batch shuffles sized to the batch, not the session (the
-    # round-15 drain discipline — this drain was missed by the first
-    # pass); the merged histogram is partitioning-invariant by
-    # mergeability, which HIST_DUCK re-proves.
-    from ..streaming.fixtures import drain_sized
-
-    with drain_sized(spark):
-        q = accumulate_hist(
-            spark.readStream.schema("value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            hist_dir=os.path.join(work, "hist"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return (
-        read_hist(spark, os.path.join(work, "hist"))
-        .select(
-            F.col("bin").cast("bigint").alias("bin"),
-            F.col("n").cast("bigint").alias("n"),
-        )
-        .orderBy("bin")
-    )
-
-
-QUERIES["events_hist_streaming"] = _q_hist_streaming
+QUERIES["events_hist_streaming"] = fixtures.Twin(
+    "events", ("value",), "CAST(value * 100 AS BIGINT)",
+    hist_partial, fixtures.merge_commits(read_hist),
+)
 ORACLES["events_hist_streaming"] = HIST_DUCK

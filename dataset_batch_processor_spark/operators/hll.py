@@ -42,6 +42,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import catalog
+from ..streaming.fixtures import batch_sql
 
 HLL_M = 256           # registers (p = 8)
 RHO_CAP = 53          # w == 0 sentinel (w has ~52 usable bits)
@@ -236,9 +237,7 @@ def _regs_sql(engine: str, table: str) -> str:
 
 def hll_partial(docs: DataFrame) -> DataFrame:
     """(source, grain, reg, m_j) register maxima for one batch."""
-    spark = docs.sparkSession
-    docs.createOrReplaceTempView("hll_batch_docs")
-    return spark.sql(_regs_sql("spark", "hll_batch_docs"))
+    return batch_sql(docs, lambda view: _regs_sql("spark", view))
 
 
 QUERIES = {"docs_hll_distinct_tokens": _q_hll_distinct_tokens}

@@ -41,11 +41,8 @@ from dataset_batch_processor_spark.matcache import scratch_dir
 # Round 15b re-measured 8/4/3/2 across all five stateful twins: 4
 # dominates (join 5.8 -> 3.8 s, sessions 2.9 -> 2.2 s; 2-3 is inside
 # noise of 4 but loses parallelism headroom) — aligned with the
-# foreachBatch twins' drain sizing (fixtures.DRAIN_PARTITIONS, same
-# env story).
-STATE_PARTITIONS = os.environ.get(
-    "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"
-)
+# foreachBatch twins' drain sizing (fixtures.DRAIN_PARTITIONS).
+STATE_PARTITIONS = "4"
 
 
 @contextlib.contextmanager

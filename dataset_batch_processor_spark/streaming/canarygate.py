@@ -12,21 +12,13 @@ docs — and merge-on-read recomputes the corpus leak card EXACTLY:
 counts and sums over a disjoint union of per-doc rows equal the
 one-pass batch rollup term for term. The SAME DuckDB oracle that
 gates docs_canary_leak_card gates the whole loop.
-
-100-TB posture (the convgate contract): per batch one bounded x8
-rollout fan-out over the ~1/CANARY_MOD planted slice; the partial is
-planted-docs-per-shard rows; commits are batch_id-keyed overwrites
-(a retried batch replaces its own partition); no cross-batch state.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from ..operators import canary
 from . import fixtures
 
@@ -39,27 +31,8 @@ FROM leaks WHERE is_planted GROUP BY doc_id
 def exposure_partial(batch_docs: DataFrame) -> DataFrame:
     """(doc_id, n_leak) for one shard's planted docs via the gated
     plant->rollout->leak chain."""
-    spark = batch_docs.sparkSession
-    batch_docs.createOrReplaceTempView("stream_canary_docs")
-    return spark.sql(
-        canary._sql("spark", _PARTIAL_TAIL, table="stream_canary_docs")
-    )
-
-
-def accumulate_exposure(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch exposure partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        exposure_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fixtures.batch_sql(
+        batch_docs, lambda view: canary._sql("spark", _PARTIAL_TAIL, table=view)
     )
 
 
@@ -82,35 +55,12 @@ def read_leak_card(spark: SparkSession, commits_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------- driver query
-
-
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+QUERIES = {
+    "docs_stream_canary_card": fixtures.Twin(
+        "documents", ("doc_id", "text"), "doc_id",
+        exposure_partial, fixtures.merge_commits(read_leak_card),
     )
-    return fixtures.stage_mod_shards(docs, "cng", sf_dir)
-
-
-def _q_stream_canary_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_cng_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_exposure(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_leak_card(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_canary_card": _q_stream_canary_card}
+}
 # batch parity: per-doc exposure is stateless and docs are disjoint
 # across shards, so the drained stream equals the one-pass batch card
 # — the SAME oracle that gates docs_canary_leak_card.

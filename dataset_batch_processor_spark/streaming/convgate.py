@@ -6,54 +6,26 @@ per-reason admission dashboard accumulates exactly.
 
 Shape (the qualitygate.py contract): each micro-batch runs the SAME
 parameterized verdict chain over the batch view and commits its
-(decision, reason, n_convs) partial to ``commits_dir/batch_id=N``
-with overwrite — a retried batch replaces its own partition instead
-of double-counting. Verdicts are stateless per conversation, so the
-merged dashboard EQUALS the one-pass batch rollup and the batch
-DuckDB oracle (CHAT_VALIDATE_COUNTS_DUCK) hash-gates the whole loop:
-micro-batch scoring, the idempotent commit layout, and merge-on-read.
-
-100-TB posture: per batch one turns-chain pass + a reasons-sized
-aggregate (the partial is at most |decisions x reasons| rows); the
-commit log grows one tiny file per batch; no cross-batch state at
-all (unlike turndedup.py, which needs the digest index — validation
-is per-doc, so admission needs no memory).
+(decision, reason, n_convs) partial. Verdicts are stateless per
+conversation and need no cross-batch state (unlike turndedup.py's
+digest index), so the merged dashboard EQUALS the one-pass batch
+rollup and the batch DuckDB oracle (CHAT_VALIDATE_COUNTS_DUCK)
+hash-gates the whole loop: micro-batch scoring, the idempotent
+commit layout, and merge-on-read.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from . import fixtures
 from ..operators import chatvalidate
 
 
 def validation_partial(batch_docs: DataFrame) -> DataFrame:
     """(decision, reason, n_convs) for one shard via the gated chain."""
-    spark = batch_docs.sparkSession
-    batch_docs.createOrReplaceTempView("stream_conv_docs")
-    return spark.sql(chatvalidate.validate_counts_sql("stream_conv_docs"))
-
-
-def accumulate_validation(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch validation partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        validation_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fixtures.batch_sql(batch_docs, chatvalidate.validate_counts_sql)
 
 
 def read_validation(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -65,37 +37,12 @@ def read_validation(spark: SparkSession, commits_dir: str) -> DataFrame:
     )
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin (built at most once
-    per (session, dataset); bench.py pre-builds it in warmup)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+QUERIES = {
+    "docs_stream_conv_validation": fixtures.Twin(
+        "documents", ("doc_id", "text"), "doc_id",
+        validation_partial, fixtures.merge_commits(read_validation),
     )
-    return fixtures.stage_mod_shards(docs, "cvg", sf_dir)
-
-
-# ------------------------------------------------------- driver query
-
-
-def _q_stream_conv_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_cvg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_validation(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_validation(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_conv_validation": _q_stream_conv_validation}
+}
 # batch parity: stateless per-doc verdicts + associative counts mean
 # the drained stream equals the one-pass batch rollup — the SAME
 # oracle that gates docs_chat_validate_counts gates the whole loop.

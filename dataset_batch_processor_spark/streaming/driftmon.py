@@ -2,8 +2,8 @@
 
 The batch twin is ``docs_snapshot_drift`` (dataops.py): as document
 shards land, each micro-batch commits its length-bucket histogram
-partial (plus the shard identity it carries — ``min(doc_id % 3)`` on
-the fixture sharding), and the dashboard read merges partials and
+partial (plus each row's shard identity, ``doc_id % N_SHARDS``),
+and the dashboard read merges partials and
 reports, per shard, the total-variation distance in ppm between the
 shard's histogram and the FULL accumulated corpus histogram — "which
 arriving shard looks unlike the corpus so far".
@@ -14,23 +14,14 @@ output is keyed on the shard's data identity, not its batch_id, and
 every reported number is a pure function of the drained corpus —
 histogram counts merge by addition, TV is computed on the merged
 table. The DuckDB oracle recomputes the same shards directly from
-``documents``. Same idempotent commit layout as qualitygate.py
-(batch_id-keyed partition dirs, overwrite-on-retry).
-
-100-TB posture: per batch one tiny keyed agg (8 buckets x shards);
-the commit log grows one bucket-count file per batch; merge-on-read
-is a sum over (shards x buckets x batches) rows. Bounded state, no
-cross-batch joins, no corpus-sized anything on the driver.
+``documents``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from . import fixtures
 
 N_BUCKETS = 8
@@ -50,23 +41,6 @@ def drift_partial(batch_docs: DataFrame) -> DataFrame:
         )
         .groupBy("shard_id", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-
-
-def accumulate_drift(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch histogram partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        drift_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -118,47 +92,6 @@ def read_drift(spark: SparkSession, commits_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------- driver query
-
-
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging: ONE corpus pass into N_SHARDS
-    files (review fix: the per-shard filter loop scanned the table
-    N_SHARDS times). The monitor is keyed on shard DATA identity, so
-    arbitrary file slicing — even mixed-shard batches — drains to the
-    identical gated output; that indifference is the point. Staged
-    once per session (matcache.staged_once), drained fresh every
-    run."""
-    from ..matcache import staged_once
-
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "n_chars"
-    )
-    return staged_once(
-        spark, "drift", sf_dir,
-        lambda path: docs.repartition(N_SHARDS)
-        .write.mode("overwrite").parquet(path),
-        layout=f"rep{N_SHARDS}",
-    )
-
-
-def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_drift_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_drift(
-            spark.readStream.schema("doc_id long, n_chars long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_drift(spark, os.path.join(work, "commits"))
-
-
 STREAM_DRIFT_DUCK = f"""
 WITH b AS (
   SELECT CAST(doc_id % {N_SHARDS} AS INT) AS shard_id,
@@ -197,5 +130,10 @@ GROUP BY shard_id, n_shard
 ORDER BY shard_id
 """
 
-QUERIES = {"docs_stream_drift_monitor": _q_stream_drift}
+QUERIES = {
+    "docs_stream_drift_monitor": fixtures.Twin(
+        "documents", ("doc_id", "n_chars"), "doc_id",
+        drift_partial, fixtures.merge_commits(read_drift),
+    )
+}
 ORACLES = {"docs_stream_drift_monitor": STREAM_DRIFT_DUCK}

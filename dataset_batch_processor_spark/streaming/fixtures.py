@@ -1,53 +1,59 @@
-"""Session-shared shard staging for the availableNow streaming twins.
+"""The availableNow stream twins: shard staging, the one drain, and the
+twin registry.
 
-Round 13 (VERDICT r12 next #4): every twin used to rewrite its
-n-shard parquet staging on EVERY run — pure fixture setup,
-deterministic per (session, dataset). The staging is now built once
-per (session, kind, dataset) through ``matcache.staged_once`` and
-shared across runs/reps, like every other session-scoped artifact;
-bench.py pre-builds them in warmup so each twin's recorded timing is
-the drain loop, not fixture I/O.
+A stream twin is a streaming version of a batch query whose drained
+result the batch query's DuckDB oracle checks. Each twin module keeps
+only three things:
 
-The write layout is one ``coalesce(1)`` append per
-``doc_id % n_shards`` slice, in slice order: same file count, same
-per-file contents, same append sequence => ``maxFilesPerTrigger=1``
-drains a deterministic micro-batch sequence (the first-wins loops —
-turn admission, incremental LSH — gate only arrival-order-INVARIANT
-facts, but determinism keeps their lineage logs reproducible). The
-per-run checkpoint/commit work dirs deliberately stay fresh
-``scratch_dir`` state.
+- its staging rule — catalog table, columns and shard key — staged
+  once per (session, table, layout, dataset) by :func:`stage_shards`
+  through ``matcache.staged_once``, so bench warm-up pre-builds it and
+  a twin's timing is its drain, not fixture I/O;
+- its per-batch step (a partial, plus for the two dual-sink twins a
+  second sink);
+- its merge-on-read and oracle.
 
-Round 15 (VERDICT r14 next #7, stream-family cost diet): the default
-shard count drops 3 -> 2. Two micro-batches prove exactly what three
-did — multi-batch accumulation, idempotent per-batch commits, and
-merge-on-read — while paying one fewer micro-batch cycle of planning
-and commit machinery per run. Every twin's gate is batch-partitioning
--invariant (counts/sketches merge; pair/digest sets are emission-
-exact), so the gated outputs are unchanged.
+:func:`drain` owns everything else — stream wiring, drain sizing, the
+commit layout and the replay rule — and :class:`Twin` binds the three
+parts into the registered query, so ``isinstance(fn, Twin)`` over
+``queries()`` is the one list of twins.
+
+Staging layout: one ``coalesce(1)`` append per shard slice, in slice
+order, :data:`SHARDS` shards. Same file count, same per-file contents,
+same append sequence, so ``maxFilesPerTrigger=1`` drains the same
+micro-batch sequence every run. Two micro-batches prove what more
+would — multi-batch accumulation, idempotent per-batch commits and
+merge-on-read — and every twin's gate is invariant to the batch
+partitioning (counts and sketches merge; pair and digest sets are
+emission-exact).
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..matcache import staged_once
+from .. import catalog
+from ..matcache import scratch_dir, staged_once
 
-# A micro-batch is INPUT-BOUNDED (one staged shard, ~|corpus|/2 rows
-# here), so its shuffle width should track per-batch volume, not the
-# session's core count: at the session default (32) every per-batch
-# aggregation/window/commit pays 32 tasks + 32 output files of fixed
-# overhead per micro-batch. Measured at sf0.1 across the six heaviest
-# twins (round 15b): 32 -> 4 cuts each drain 30-50% (turn admission
-# 4.8 -> 2.4 s). A production stream sizes this to micro-batch
-# throughput (rows/trigger / target partition size), which is exactly
-# what the env knob expresses; the gated outputs are partitioning-
-# invariant by construction (counts/sketches merge, pair/digest sets
-# are emission-exact), which every twin's oracle gate re-proves.
-DRAIN_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "4")
+# A micro-batch is input-bounded (one staged shard), so its shuffle
+# width tracks per-batch volume, not the session's core count: at a
+# session default of 32 every per-batch aggregation and commit pays 32
+# tasks and 32 output files. Measured at sf0.1 across the six heaviest
+# twins: 32 -> 4 cuts each drain 30-50%. The gated outputs are
+# partitioning-invariant, which every twin's oracle re-proves.
+DRAIN_PARTITIONS = "4"
+SHARDS = 2
+
+Step = Callable[..., "DataFrame | dict[str, DataFrame]"]
 
 
 @contextlib.contextmanager
@@ -65,42 +71,177 @@ def drain_sized(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def stage_mod_shards(
-    docs: DataFrame, kind: str, key: str, n_shards: int = 2
+def stage_shards(
+    frame: DataFrame, kind: str, key: str, shard_key: str
 ) -> str:
-    """Stage ``docs`` as ``n_shards`` single-file parquet appends
-    split by ``doc_id % n_shards`` (slice order preserved), once per
-    (session, kind, key); returns the staging directory."""
+    """Stage ``frame`` as :data:`SHARDS` single-file parquet appends
+    split by ``pmod(shard_key, SHARDS)`` (slice order preserved), once
+    per (session, kind, layout, key); returns the staging directory.
+    Twins that stage the same columns of one table on the same shard
+    key share it."""
 
     def write(path: str) -> None:
-        for part in range(n_shards):
-            docs.filter(F.col("doc_id") % n_shards == part).coalesce(
-                1
-            ).write.mode("append").parquet(path)
+        for part in range(SHARDS):
+            frame.filter(
+                F.expr(f"pmod({shard_key}, {SHARDS})") == part
+            ).coalesce(1).write.mode("append").parquet(path)
 
-    # layout parameters are cache identity (r13 ADVICE): a second
-    # caller reusing `kind` with another shard count or schema gets
-    # its own staging dir instead of silently sharing this one
-    layout = f"mod{n_shards}|{','.join(docs.columns)}"
-    return staged_once(docs.sparkSession, kind, key, write, layout=layout)
+    # the layout is cache identity: another column selection or shard
+    # key gets its own staging dir instead of silently sharing this one
+    layout = f"pmod({shard_key},{SHARDS})|{','.join(frame.columns)}"
+    return staged_once(frame.sparkSession, kind, key, write, layout=layout)
 
 
-def stage_expr_shards(
-    df: DataFrame, kind: str, key: str, shard_expr: str, n_shards: int = 2
+def batch_sql(batch: DataFrame, sql: Callable[[str], str]) -> DataFrame:
+    """``spark.sql(sql(view))`` with ``batch`` registered as ``view``,
+    a temp-view name unique to this call. Two streams sharing a
+    session cannot race on one global name (a partial computed over
+    the other stream's batch would be a wrong, permanently committed
+    answer). The view is dropped on return: ``spark.sql`` analyses
+    eagerly, so the returned frame no longer needs it."""
+    spark = batch.sparkSession
+    view = f"stream_batch_{uuid.uuid4().hex}"
+    batch.createOrReplaceTempView(view)
+    try:
+        return spark.sql(sql(view))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def _prior(spark: SparkSession, sink_dir: str, batch_id: int):
+    """The sink's committed batches other than ``batch_id``, or None
+    when there are none."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(sink_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return None
+    others = sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(path)
+        if st.getPath().getName().startswith("batch_id=")
+        and st.getPath().getName() != f"batch_id={batch_id}"
+    )
+    if not others:
+        return None
+    return spark.read.option("basePath", sink_dir).parquet(*others)
+
+
+def commit_batch(
+    batch: DataFrame, batch_id: int, work_dir: str, step: Step,
+    reads: tuple[str, ...] = (),
+) -> None:
+    """One micro-batch of :func:`drain`: run ``step`` and commit its
+    sinks (the rules are in :func:`drain`'s docstring)."""
+    spark = batch.sparkSession
+    prior = {s: _prior(spark, os.path.join(work_dir, s), batch_id)
+             for s in reads}
+    out = step(batch, **prior)
+    sinks = out if isinstance(out, dict) else {"commits": out}
+
+    def write(sink: str) -> None:
+        sinks[sink].write.mode("overwrite").parquet(
+            os.path.join(work_dir, sink, f"batch_id={batch_id}")
+        )
+
+    shared = [df for df in sinks.values() if df.is_cached]
+    try:
+        for df in shared:
+            df.count()
+        if len(sinks) == 1:
+            write(next(iter(sinks)))
+        else:
+            with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+                for fut in [pool.submit(write, s) for s in sinks]:
+                    fut.result()
+    finally:
+        for df in shared:
+            df.unpersist()
+
+
+def drain(
+    spark: SparkSession, staged_dir: str, schema: StructType, step: Step,
+    work_dir: str | None = None, reads: tuple[str, ...] = (),
 ) -> str:
-    """:func:`stage_mod_shards` for tables without a ``doc_id`` —
-    shards on an arbitrary integer SQL expression (e.g.
-    ``user_id % 2``... the expression must already be reduced modulo
-    ``n_shards``). Round 15: the cms / histsketch / funnel
-    heavy-hitter stream twins rebuilt their shard staging on EVERY
-    run; their splits ride this helper so staging is session-shared
-    like every other twin's."""
+    """Drain ``staged_dir`` (files of ``schema``, the staged frame's)
+    through ``step`` as an availableNow stream, one micro-batch per
+    staged file; returns the work directory (a fresh scratch directory
+    unless ``work_dir`` is given).
 
-    def write(path: str) -> None:
-        for part in range(n_shards):
-            df.filter(F.expr(shard_expr) == part).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
+    ``step(batch, **prior)`` returns the batch's partial, committed to
+    sink ``commits``, or a dict of sink name -> frame. For each sink
+    name in ``reads`` it receives that sink's earlier commits as a
+    keyword argument (None when there are none).
 
-    layout = f"expr({shard_expr})x{n_shards}|{','.join(df.columns)}"
-    return staged_once(df.sparkSession, kind, key, write, layout=layout)
+    Commit rule. foreachBatch is at-least-once, so micro-batch ``N``
+    of sink ``s`` is written to ``<work>/<s>/batch_id=N`` with
+    overwrite: a replayed batch replaces its own partition instead of
+    appending duplicates. Several sinks are written concurrently. A
+    frame the step persisted and returned as a sink is the work the
+    sinks share: it is materialized once before the writes and
+    unpersisted after them.
+
+    Replay rule. A step's read of its own earlier sinks covers the
+    committed batches other than ``N`` only. A batch killed after its
+    sinks committed but before the checkpoint did is replayed with
+    the same id; reading its own commit would anti-join away its own
+    rows, and its concurrent overwrite would delete files the read
+    is still scanning.
+
+    Sizing. Shuffles inside the drain run at :data:`DRAIN_PARTITIONS`
+    (:func:`drain_sized`)."""
+    work = work_dir or scratch_dir("dbp_drain_")
+    with drain_sized(spark):
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staged_dir)
+            .writeStream.foreachBatch(
+                lambda batch, n: commit_batch(batch, n, work, step, reads)
+            )
+            .option("checkpointLocation", os.path.join(work, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return work
+
+
+@dataclass(frozen=True)
+class Twin:
+    """A registered stream twin; calling it runs the query.
+
+    The staging rule is ``columns`` of catalog ``table`` sharded on
+    ``shard_key`` (:func:`stage_shards`); ``step`` and ``reads`` are
+    :func:`drain`'s; ``merge(spark, sf_dir, work)`` reads the drained
+    sinks back into the gated result."""
+
+    table: str
+    columns: tuple[str, ...]
+    shard_key: str
+    step: Step
+    merge: Callable[[SparkSession, str, str], DataFrame]
+    reads: tuple[str, ...] = ()
+
+    def frame(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return catalog.load_table(spark, sf_dir, self.table).select(
+            *self.columns
+        )
+
+    def stage(self, spark: SparkSession, sf_dir: str) -> str:
+        frame = self.frame(spark, sf_dir)
+        return stage_shards(frame, self.table, sf_dir, self.shard_key)
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        frame = self.frame(spark, sf_dir)
+        staged = stage_shards(frame, self.table, sf_dir, self.shard_key)
+        work = drain(spark, staged, frame.schema, self.step,
+                     reads=self.reads)
+        return self.merge(spark, sf_dir, work)
+
+
+def merge_commits(read: Callable[[SparkSession, str], DataFrame]):
+    """``Twin.merge`` for a single-sink twin from its reader of the
+    ``commits`` sink directory."""
+    return lambda spark, _sf_dir, work: read(
+        spark, os.path.join(work, "commits")
+    )

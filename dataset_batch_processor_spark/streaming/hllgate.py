@@ -11,10 +11,6 @@ groupBy.max reproduces the one-pass register table EXACTLY; the
 estimator (integer inverses + the ppm linear-counting relation) then
 runs on the merged registers, so the drained stream equals the
 one-pass batch card and the SAME DuckDB oracle gates the whole loop.
-
-100-TB posture: per batch one (source, grain, reg) combine bounded by
-|sources| x 2 x 256 rows; batch_id-keyed overwrite commits (idempotent
-retry); no cross-batch state.
 """
 
 from __future__ import annotations
@@ -29,74 +25,32 @@ from ..operators import hll
 from . import fixtures
 
 
-def accumulate_hll(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch register partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        hll.hll_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_hll_card(spark: SparkSession, commits_dir: str) -> DataFrame:
+def read_hll_card(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Merge register partials (max — exact) and run the batch
     estimator + exact-count comparison over the merged registers.
-    The exact side re-reads the accumulated corpus (the
-    quality-vs-cost comparison column is an AUDIT read, not sketch
-    state)."""
-    spark.read.parquet(commits_dir).groupBy("source", "grain", "reg").agg(
-        F.max("m_j").alias("m_j")
-    ).createOrReplaceTempView("hll_merged_regs")
+    The exact side re-reads the drained corpus (the quality-vs-cost
+    comparison column is an AUDIT read, not sketch state)."""
+    catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
+        "documents"
+    )
+    spark.read.parquet(os.path.join(work, "commits")).groupBy(
+        "source", "grain", "reg"
+    ).agg(F.max("m_j").alias("m_j")).createOrReplaceTempView(
+        "hll_merged_regs"
+    )
     # built from the SAME parameterized template as the batch query
-    # (review r13 #2: no textual splicing of the batch SQL)
+    # (no textual splicing of the batch SQL)
     return spark.sql(
         hll._hll_sql("spark", regs_table="hll_merged_regs")
     )
 
 
-# ------------------------------------------------------- driver query
-
-
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
+QUERIES = {
+    "docs_stream_hll_card": fixtures.Twin(
+        "documents", ("doc_id", "text", "source"), "doc_id",
+        hll.hll_partial, read_hll_card,
     )
-    return fixtures.stage_mod_shards(docs, "hlg", sf_dir)
-
-
-def _q_stream_hll_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_hlg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_hll(
-            spark.readStream.schema(
-                "doc_id long, text string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    # the audit's exact side reads the fully-drained corpus
-    catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return read_hll_card(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_hll_card": _q_stream_hll_card}
+}
 # batch parity: register max-merge is exact, the estimator is a pure
 # function of the merged registers — the SAME oracle gates the loop.
 ORACLES = {"docs_stream_hll_card": hll.HLL_DUCK}

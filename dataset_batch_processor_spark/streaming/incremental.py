@@ -3,15 +3,14 @@
 The batch MinHash-LSH pipeline (operators/dedup.py) assumes the whole
 corpus is present; a production ingestion pipeline sees documents
 arrive continuously and wants each batch checked against EVERYTHING
-ingested so far without recomputing history. This module is that
-pattern: a ``foreachBatch`` loop that
+ingested so far without recomputing history. Each micro-batch
 
 1. computes MinHash band buckets for the new micro-batch only
    (the per-batch cost is linear in the batch),
 2. equi-joins the new buckets against the ACCUMULATED bucket index
    (new-vs-old) and against themselves (new-vs-new) to emit exactly
    the candidate pairs that involve a new document,
-3. appends the new buckets to the index and the new pairs to the
+3. commits the new buckets to the index and the new pairs to the
    pairs log.
 
 Invariant (test-pinned): after the stream drains, the union of all
@@ -40,17 +39,11 @@ the batch pipeline shuffles on. At deployment the index is a table
 bucketed by (band, bucket) (`storage.write_bucketed`) so each
 micro-batch joins exchange-free on the index side, and compaction is
 a background rewrite.
-
-Exactly-once under retries: foreachBatch is at-least-once, so both
-sinks are written as batch_id-keyed partition directories with
-per-directory OVERWRITE — a replayed batch rewrites its own
-directory instead of appending duplicates. (A bare
-``mode("append")`` here would silently break the exactly-once
-invariant on the first task retry.)
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,179 +53,91 @@ from ..operators.dedup import lsh_bands_df, minhash_signatures_df
 from . import fixtures
 
 
-def incremental_lsh_pairs(
-    docs_stream: DataFrame, index_dir: str, pairs_dir: str,
-    checkpoint_dir: str, max_bucket_size: int | None = None,
-):
-    """Start the foreachBatch loop; returns the StreamingQuery.
+def lsh_step(
+    batch: DataFrame, band_index: DataFrame | None = None,
+    max_bucket_size: int | None = None,
+) -> dict[str, DataFrame]:
+    """One micro-batch: its new pairs and its band-index rows.
 
-    ``docs_stream`` must carry (doc_id, text). Pairs land in
-    ``pairs_dir`` as (doc_a, doc_b) parquet; the bucket index
-    accumulates in ``index_dir``. ``max_bucket_size`` is the
+    ``batch`` carries (doc_id, text); ``band_index`` is the index
+    accumulated by earlier batches. ``max_bucket_size`` is the
     streaming EMISSION cap (module docstring): buckets whose
     accumulated size exceeds it stop yielding candidates."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        all_bands = lsh_bands_df(minhash_signatures_df(batch)).persist()
-        bands = all_bands
-        try:
-            pairs_out = os.path.join(pairs_dir, f"batch_id={batch_id}")
-            index_out = os.path.join(index_dir, f"batch_id={batch_id}")
-            # Probe for the index EXPLICITLY rather than catching read
-            # errors: a bare except here would treat a transient IO or
-            # corrupt-footer failure as "first batch" and silently drop
-            # every new-vs-old pair, breaking the incremental == batch
-            # invariant. A real read failure must propagate so the
-            # micro-batch retries instead of committing an incomplete
-            # pair set.
-            have_index = any(
-                e.name.startswith("batch_id=")
-                for e in os.scandir(index_dir)
-            ) if os.path.isdir(index_dir) else False
-            if have_index:
-                idx = spark.read.parquet(index_dir)
-            if max_bucket_size is not None:
-                # emission cap: exclude saturated buckets from the
-                # CANDIDATE joins only — the index append below keeps
-                # every band row, so saturation is judged against the
-                # true accumulated size
-                acc = all_bands.select("band", "bucket")
-                if have_index:
-                    acc = acc.unionByName(idx.select("band", "bucket"))
-                sizes = acc.groupBy("band", "bucket").agg(
-                    F.count(F.lit(1)).alias("_bsz")
-                )
-                bands = all_bands.join(
-                    sizes.filter(F.col("_bsz") <= max_bucket_size),
-                    ["band", "bucket"],
-                ).drop("_bsz")
-            new_new = (
-                bands.alias("a")
-                .join(
-                    bands.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-            )
-            if have_index:
-                new_old = (
-                    bands.alias("n")
-                    .join(
-                        idx.alias("o"),
-                        (F.col("n.band") == F.col("o.band"))
-                        & (F.col("n.bucket") == F.col("o.bucket")),
-                    )
-                    .select(
-                        F.least(
-                            F.col("n.doc_id"), F.col("o.doc_id")
-                        ).alias("doc_a"),
-                        F.greatest(
-                            F.col("n.doc_id"), F.col("o.doc_id")
-                        ).alias("doc_b"),
-                    )
-                    .filter(F.col("doc_a") != F.col("doc_b"))
-                )
-                pairs = new_new.unionByName(new_old)
-            else:
-                pairs = new_new
-            # idempotent per-batch commit: a retried batch OVERWRITES
-            # its own partition directory rather than appending dups.
-            # Round 16 (guide §2.6): the two sinks are independent
-            # jobs — materialize the shared bands cache ONCE first
-            # (otherwise the concurrent jobs would race to compute the
-            # signature chain), then let the index dump back-fill the
-            # pair join's tail. The pair job's index scan is pinned to
-            # the file listing taken above, so the concurrent append
-            # of this batch's index partition cannot leak into it.
-            all_bands.count()
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _write_pairs() -> None:
-                pairs.distinct().write.mode("overwrite").parquet(pairs_out)
-
-            def _write_index() -> None:
-                all_bands.write.mode("overwrite").parquet(index_out)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for fut in [pool.submit(_write_pairs),
-                            pool.submit(_write_index)]:
-                    fut.result()
-        finally:
-            all_bands.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # persisted: both sinks are computed from it (fixtures.drain)
+    all_bands = lsh_bands_df(
+        minhash_signatures_df(batch.select("doc_id", "text"))
+    ).persist()
+    bands = all_bands
+    if max_bucket_size is not None:
+        # emission cap: exclude saturated buckets from the CANDIDATE
+        # joins only — the index sink keeps every band row, so
+        # saturation is judged against the true accumulated size
+        acc = all_bands.select("band", "bucket")
+        if band_index is not None:
+            acc = acc.unionByName(band_index.select("band", "bucket"))
+        sizes = acc.groupBy("band", "bucket").agg(
+            F.count(F.lit(1)).alias("_bsz")
+        )
+        bands = all_bands.join(
+            sizes.filter(F.col("_bsz") <= max_bucket_size),
+            ["band", "bucket"],
+        ).drop("_bsz")
+    pairs = (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
     )
+    if band_index is not None:
+        new_old = (
+            bands.alias("n")
+            .join(
+                band_index.alias("o"),
+                (F.col("n.band") == F.col("o.band"))
+                & (F.col("n.bucket") == F.col("o.bucket")),
+            )
+            .select(
+                F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_a"),
+                F.greatest(
+                    F.col("n.doc_id"), F.col("o.doc_id")
+                ).alias("doc_b"),
+            )
+            .filter(F.col("doc_a") != F.col("doc_b"))
+        )
+        pairs = pairs.unionByName(new_old)
+    return {"pairs": pairs.distinct(), "band_index": all_bands}
 
 
-def run_incremental_over_dir(
-    spark: SparkSession, staged_dir: str, work_dir: str,
-    max_files_per_trigger: int = 1, schema=None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Drive ``incremental_lsh_pairs`` over a staged directory of
-    document parquet files — one micro-batch per file — and return
-    the drained pairs DataFrame (distinct)."""
-    if schema is None:
-        schema = spark.read.parquet(staged_dir).schema
-    with fixtures.drain_sized(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(staged_dir)
-            .select("doc_id", "text")
-        )
-        q = incremental_lsh_pairs(
-            stream,
-            index_dir=os.path.join(work_dir, "band_index"),
-            pairs_dir=os.path.join(work_dir, "pairs"),
-            checkpoint_dir=os.path.join(work_dir, "checkpoint"),
-            max_bucket_size=max_bucket_size,
-        )
-        q.awaitTermination()
-    # partition discovery adds the batch_id dir key as a column;
-    # project it away so the result schema is exactly (doc_a, doc_b)
+def read_pairs(spark: SparkSession, _sf_dir: str, work: str) -> DataFrame:
+    """The drained pair log, distinct. Partition discovery adds the
+    batch_id dir key as a column; it is projected away so the result
+    schema is exactly (doc_a, doc_b)."""
     return (
-        spark.read.parquet(os.path.join(work_dir, "pairs"))
+        spark.read.parquet(os.path.join(work, "pairs"))
         .select("doc_a", "doc_b")
         .distinct()
     )
 
 
-# ------------------------------------------------------- driver query
-# The drained incremental result EQUALS the batch pipeline's pairs by
-# the invariant above, so the batch DuckDB oracle (LSH_PAIRS_DUCK)
-# hash-gates the whole streaming loop: micro-batch signature compute,
-# index accumulation, new-vs-old/new-vs-new joins, exactly-once log.
-
-
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging: two micro-batches, dup partners
-    split (fixtures.stage_mod_shards; slice order preserved, so the
-    new-vs-old/new-vs-new split sees the identical batch sequence)."""
-    from .. import catalog as cat
-
-    docs = cat.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+def run_incremental_over_dir(
+    spark: SparkSession, staged_dir: str, work_dir: str,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Drain a staged directory of (doc_id, text) parquet files — one
+    micro-batch per file — and return the drained pairs (distinct)."""
+    step = functools.partial(lsh_step, max_bucket_size=max_bucket_size)
+    schema = spark.read.parquet(staged_dir).schema
+    fixtures.drain(
+        spark, staged_dir, schema, step, work_dir, reads=("band_index",)
     )
-    return fixtures.stage_mod_shards(docs, "inc_q", sf_dir, n_shards=2)
-
-
-def _q_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-    work = scratch_dir("dbp_inc_q_work_")
-    return run_incremental_over_dir(spark, stage_path, work)
+    return read_pairs(spark, "", work_dir)
 
 
 def _oracle():
@@ -241,5 +146,14 @@ def _oracle():
     return LSH_PAIRS_DUCK
 
 
-QUERIES = {"docs_incremental_lsh_pairs": _q_incremental_pairs}
+# The drained incremental result EQUALS the batch pipeline's pairs by
+# the invariant above, so the batch DuckDB oracle (LSH_PAIRS_DUCK)
+# hash-gates the whole streaming loop: micro-batch signature compute,
+# index accumulation, new-vs-old/new-vs-new joins, exactly-once log.
+TWIN = fixtures.Twin(
+    "documents", ("doc_id", "text"), "doc_id",
+    lsh_step, read_pairs, reads=("band_index",),
+)
+stage = TWIN.stage
+QUERIES = {"docs_incremental_lsh_pairs": TWIN}
 ORACLES = {"docs_incremental_lsh_pairs": _oracle()}

@@ -10,23 +10,14 @@ the (margin_bucket, n_pairs, min/max margin) histogram — at most 10
 rows per batch. Counts add and min/max merge associatively, so
 merge-on-read reproduces the one-pass batch rollup EXACTLY and the
 SAME DuckDB oracle that gates docs_pref_margin_hist gates the whole
-loop (micro-batch scoring, idempotent batch_id-keyed commits,
-merge-on-read).
-
-100-TB posture (the convgate/rlvrgate contract): per batch one
-bounded x2 candidate fan-out + a (doc, k) combine; the partial is
-<= 10 rows; commits are batch_id-keyed overwrites (a retried batch
-replaces its own partition); no cross-batch state.
+loop (micro-batch scoring, idempotent commits, merge-on-read).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from . import fixtures
 from ..operators import preference
 
@@ -34,31 +25,14 @@ from ..operators import preference
 def margin_partial(batch_docs: DataFrame) -> DataFrame:
     """(margin_bucket, n_pairs, min_margin, max_margin) for one shard
     via the gated pairs chain."""
-    spark = batch_docs.sparkSession
-    batch_docs.createOrReplaceTempView("stream_pref_docs")
     # built from the SAME parameterized template as the batch query
     # (rlvr._chain convention) — no textual rewriting of the batch
     # SQL, so a chain-internal rename cannot silently retarget it
-    sql = preference._sql(
-        "spark", preference._MARGIN_TAIL, 2, table="stream_pref_docs"
-    )
-    return spark.sql(sql)
-
-
-def accumulate_margins(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch margin histograms."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        margin_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fixtures.batch_sql(
+        batch_docs,
+        lambda view: preference._sql(
+            "spark", preference._MARGIN_TAIL, 2, table=view
+        ),
     )
 
 
@@ -75,37 +49,12 @@ def read_margins(spark: SparkSession, commits_dir: str) -> DataFrame:
     )
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin (built at most once
-    per (session, dataset); bench.py pre-builds it in warmup)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+QUERIES = {
+    "docs_stream_margin_hist": fixtures.Twin(
+        "documents", ("doc_id", "text"), "doc_id",
+        margin_partial, fixtures.merge_commits(read_margins),
     )
-    return fixtures.stage_mod_shards(docs, "pfg", sf_dir)
-
-
-# ------------------------------------------------------- driver query
-
-
-def _q_stream_margin_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_pfg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_margins(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_margins(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_margin_hist": _q_stream_margin_hist}
+}
 # batch parity: stateless per-prompt scoring + associative histogram
 # merges mean the drained stream equals the one-pass batch rollup —
 # the SAME oracle that gates docs_pref_margin_hist.

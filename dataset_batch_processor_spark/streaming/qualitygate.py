@@ -4,32 +4,22 @@ The curation surface meets the streaming surface: as document shards
 land (one micro-batch per file), each batch is scored with the SAME
 batch operators the offline pipeline uses — Gopher rules
 (webquality.gopher_quality) plus the blocklist budget — and a
-per-source (n_seen, n_admitted) partial is committed idempotently to
-``commits_dir/batch_id=N`` (overwrite: a retried batch replaces its
-own partition instead of double-counting — the cms.py/funnel.py
-accumulation contract). Reading the dashboard back merges partials
-by addition, which is exact because counts are mergeable.
+per-source (n_seen, n_admitted) partial is committed per batch.
+Reading the dashboard back merges partials by addition, which is
+exact because counts are mergeable.
 
 Batch parity: the drained, merged dashboard EQUALS the one-pass
 batch aggregate over the full corpus (counts are associative and the
 per-doc verdicts are stateless), so the batch DuckDB oracle
 hash-gates the entire streaming loop — micro-batch scoring, the
 idempotent commit layout, and the merge-on-read.
-
-100-TB posture: per batch, one keyed agg over the shard (sources are
-few — the partial is source-count-sized); the commit log grows one
-tiny file per batch; merge-on-read is a sum over (sources x batches)
-rows. Bounded state, no cross-batch joins.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from . import fixtures
 from ..operators import webquality
 
@@ -65,23 +55,6 @@ def admission_partial(batch_docs: DataFrame) -> DataFrame:
     )
 
 
-def accumulate_admission(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch admission partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        admission_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_admission(spark: SparkSession, commits_dir: str) -> DataFrame:
     """Merge the per-batch partials (exact: counts add)."""
     return (
@@ -98,38 +71,6 @@ def read_admission(spark: SparkSession, commits_dir: str) -> DataFrame:
             F.expr("n_admitted * 1000000 DIV n_seen").alias("admit_ppm"),
         )
     )
-
-
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin (built at most once
-    per (session, dataset); bench.py pre-builds it in warmup)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    return fixtures.stage_mod_shards(docs, "qg", sf_dir)
-
-
-# ------------------------------------------------------- driver query
-
-
-def _q_stream_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_qg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_admission(
-            spark.readStream.schema(
-                "doc_id long, text string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_admission(spark, os.path.join(work, "commits"))
 
 
 _BLOCK_LIST = ", ".join(f"'{w}'" for w in webquality.BLOCKWORDS)
@@ -166,5 +107,10 @@ JOIN blk k ON d.doc_id = k.doc_id
 GROUP BY d.source
 """
 
-QUERIES = {"docs_stream_quality_admission": _q_stream_quality}
+QUERIES = {
+    "docs_stream_quality_admission": fixtures.Twin(
+        "documents", ("doc_id", "text", "source"), "doc_id",
+        admission_partial, fixtures.merge_commits(read_admission),
+    )
+}
 ORACLES = {"docs_stream_quality_admission": STREAM_QUALITY_DUCK}

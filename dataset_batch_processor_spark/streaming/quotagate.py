@@ -9,66 +9,25 @@ bottom-k of per-shard bottom-k's equals the bottom-k of the union
 (a row outside its shard's bottom k cannot be in the global bottom
 k — the same argument that makes the batch query's two-level
 tournament exact). So each micro-batch commits its per-source
-bottom-k PARTIAL (keeping the md5 draw ``h``) to
-``commits_dir/batch_id=N`` with overwrite (the qualitygate/convgate
-idempotent-retry contract: a replayed batch replaces its own
-partition, admission never double-counts), and merge-on-read
+bottom-k PARTIAL (keeping the md5 draw ``h``), and merge-on-read
 re-ranks the union of partials. The drained stream therefore EQUALS
 the one-pass batch rollup, and the SAME DuckDB oracle that gates
 docs_quota_sample (the one-level window spelling) hash-gates the
 whole loop: micro-batch sampling, the commit layout, and the merge.
-
-100-TB posture: per batch the tournament touches only that shard;
-each commit is at most |sources| * QUOTA_K rows; merge-on-read ranks
-|batches| * |sources| * QUOTA_K rows — index-sized, never
-corpus-sized. No cross-batch state beyond the tiny commit log (the
-admission decision is re-derived from partials, so there is nothing
-to corrupt on retry).
 """
 
 from __future__ import annotations
 
-import itertools
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import catalog
 from . import fixtures
 from ..operators import curation
 
 
-_VIEW_SEQ = itertools.count()
-
-
 def quota_partial(batch_docs: DataFrame) -> DataFrame:
     """(source, doc_id, h): one shard's per-source bottom-k via the
-    gated tournament chain. The batch view name is unique per call
-    (review r12 #5): two quota streams sharing a SparkSession must
-    not race on one global view name — a partial computed over the
-    OTHER stream's batch would be a wrong, permanently committed
-    admission decision."""
-    spark = batch_docs.sparkSession
-    view = f"stream_quota_docs_{next(_VIEW_SEQ)}"
-    batch_docs.createOrReplaceTempView(view)
-    return spark.sql(curation.quota_bottomk_sql(view))
-
-
-def accumulate_quota(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch bottom-k partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        quota_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    gated tournament chain."""
+    return fixtures.batch_sql(batch_docs, curation.quota_bottomk_sql)
 
 
 def read_quota(spark: SparkSession, commits_dir: str) -> DataFrame:
@@ -88,37 +47,12 @@ FROM (
 """)
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin (built at most once
-    per (session, dataset); bench.py pre-builds it in warmup)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source"
+QUERIES = {
+    "docs_stream_quota_sample": fixtures.Twin(
+        "documents", ("doc_id", "source"), "doc_id",
+        quota_partial, fixtures.merge_commits(read_quota),
     )
-    return fixtures.stage_mod_shards(docs, "qg2", sf_dir)
-
-
-# ------------------------------------------------------- driver query
-
-
-def _q_stream_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_qg2_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_quota(
-            spark.readStream.schema("doc_id long, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_quota(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_quota_sample": _q_stream_quota_sample}
+}
 # batch parity: associative bottom-k partials + idempotent commits
 # mean the drained stream equals the one-pass batch sample — the SAME
 # oracle that gates docs_quota_sample gates the whole loop.

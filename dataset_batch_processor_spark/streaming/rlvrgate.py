@@ -14,23 +14,14 @@ EXACTLY:
 
 equals the one-pass batch rollup term for term — the SAME DuckDB
 oracle that gates docs_passk_estimate gates the whole loop
-(micro-batch grading, idempotent batch_id-keyed commits,
-merge-on-read).
-
-100-TB posture (the convgate contract): per batch one bounded x8
-rollout fan-out + a (doc, token) combine; the partial is <= 9 rows;
-commits are batch_id-keyed overwrites (a retried batch replaces its
-own partition); no cross-batch state.
+(micro-batch grading, idempotent commits, merge-on-read).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
 from . import fixtures
 from ..operators import rlvr
 
@@ -44,27 +35,8 @@ def grade_partial(batch_docs: DataFrame) -> DataFrame:
     """(n_correct, n_rolls, n_tasks) histogram for one shard via the
     gated grading chain — n_rolls rides along so read_passk's
     binomial term uses the TASK's own rollout count (ADVICE r12)."""
-    spark = batch_docs.sparkSession
-    batch_docs.createOrReplaceTempView("stream_rlvr_docs")
-    return spark.sql(
-        rlvr._sql("spark", _PARTIAL_TAIL, table="stream_rlvr_docs")
-    )
-
-
-def accumulate_grades(
-    docs_stream: DataFrame, commits_dir: str, checkpoint_dir: str
-):
-    """foreachBatch loop committing per-batch grade histograms."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(commits_dir, f"batch_id={batch_id}")
-        grade_partial(batch_df).write.mode("overwrite").parquet(out)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fixtures.batch_sql(
+        batch_docs, lambda view: rlvr._sql("spark", _PARTIAL_TAIL, table=view)
     )
 
 
@@ -98,37 +70,12 @@ FROM sel GROUP BY k
 """)
 
 
-def stage(spark: SparkSession, sf_dir: str) -> str:
-    """Session-shared shard staging for this twin (built at most once
-    per (session, dataset); bench.py pre-builds it in warmup)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
+QUERIES = {
+    "docs_stream_passk": fixtures.Twin(
+        "documents", ("doc_id", "text"), "doc_id",
+        grade_partial, fixtures.merge_commits(read_passk),
     )
-    return fixtures.stage_mod_shards(docs, "rvg", sf_dir)
-
-
-# ------------------------------------------------------- driver query
-
-
-def _q_stream_passk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..matcache import scratch_dir
-
-    stage_path = stage(spark, sf_dir)
-
-    work = scratch_dir("dbp_rvg_work_")
-    with fixtures.drain_sized(spark):
-        q = accumulate_grades(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_path),
-            commits_dir=os.path.join(work, "commits"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-        )
-        q.awaitTermination()
-    return read_passk(spark, os.path.join(work, "commits"))
-
-
-QUERIES = {"docs_stream_passk": _q_stream_passk}
+}
 # batch parity: the estimator is a function of the associative
 # c-histogram alone, so the drained stream equals the one-pass batch
 # rollup — the SAME oracle that gates docs_passk_estimate.

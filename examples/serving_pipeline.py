@@ -36,7 +36,9 @@ def serve_plan(spark, sf_dir: str) -> dict:
             spark, sf_dir
         ),
         "ann_served": similarity._q_ivf_serving_topk(spark, sf_dir),
-        "admitted": quotagate._q_stream_quota_sample(spark, sf_dir),
+        "admitted": quotagate.QUERIES["docs_stream_quota_sample"](
+            spark, sf_dir
+        ),
     }
 
 

@@ -3,12 +3,11 @@ batch grid, and the estimate invariant must hold."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import cms
+from dataset_batch_processor_spark.streaming import fixtures
 
 
 def test_streaming_grid_equals_batch(spark, sf_dir, tmp_path):
@@ -20,21 +19,15 @@ def test_streaming_grid_equals_batch(spark, sf_dir, tmp_path):
             "append"
         ).parquet(stage)
 
-    stream = (
-        spark.readStream.schema("user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    fixtures.drain(
+        spark, stage, events.schema, cms.cms_partial, str(tmp_path / "work")
     )
-    q = cms.accumulate_cms(
-        stream,
-        counters_dir=str(tmp_path / "counters"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
 
     streamed = {
         (r.row_idx, r.col): r.counter
-        for r in cms.read_cms(spark, str(tmp_path / "counters")).collect()
+        for r in cms.read_cms(
+            spark, str(tmp_path / "work" / "commits")
+        ).collect()
     }
     batch = {
         (r.row_idx, r.col): r.counter
@@ -61,18 +54,16 @@ def test_hist_streaming_merge_equals_batch(spark, sf_dir, tmp_path):
             (F.col("value") * 100).cast("bigint") % 3 == part
         ).coalesce(1).write.mode("append").parquet(stage)
 
-    q = histsketch.accumulate_hist(
-        spark.readStream.schema("value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        hist_dir=str(tmp_path / "hist"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    fixtures.drain(
+        spark, stage, events.schema, histsketch.hist_partial,
+        str(tmp_path / "work"),
     )
-    q.awaitTermination()
 
     streamed = {
         r.bin: r.n
-        for r in histsketch.read_hist(spark, str(tmp_path / "hist")).collect()
+        for r in histsketch.read_hist(
+            spark, str(tmp_path / "work" / "commits")
+        ).collect()
     }
     batch = {r.bin: r.n for r in histsketch.hist_partial(events).collect()}
     assert streamed == batch

@@ -13,20 +13,17 @@ from __future__ import annotations
 import duckdb
 
 from dataset_batch_processor_spark import catalog
-from dataset_batch_processor_spark.streaming import driftmon
+from dataset_batch_processor_spark.streaming import driftmon, fixtures
 
 SF = "/root/testdata/sf0.001"
 
 
-def _drain(spark, stage: str, commits: str, ckpt: str) -> None:
-    q = driftmon.accumulate_drift(
-        spark.readStream.schema("doc_id long, n_chars long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        commits_dir=commits,
-        checkpoint_dir=ckpt,
-    )
-    q.awaitTermination()
+def _drain(spark, stage: str, work: str) -> str:
+    """Drain ``stage`` into ``work`` (the same work dir resumes its
+    checkpoint); returns the commits directory."""
+    schema = spark.read.parquet(stage).schema
+    fixtures.drain(spark, stage, schema, driftmon.drift_partial, work)
+    return f"{work}/commits"
 
 
 def _report(spark, commits: str):
@@ -53,17 +50,16 @@ def test_late_shard_is_merged_on_read(spark, tmp_path):
     late = docs.filter(f"doc_id % {n} = {n - 1}")
 
     stage = str(tmp_path / "stage")
-    commits = str(tmp_path / "commits")
-    ckpt = str(tmp_path / "ckpt")
+    work = str(tmp_path / "work")
     early.coalesce(1).write.mode("overwrite").parquet(stage)
-    _drain(spark, stage, commits, ckpt)
+    commits = _drain(spark, stage, work)
     snap1 = _report(spark, commits)
     assert {s for s, *_ in snap1} == early_ids  # late shard not arrived
 
     # the late shard lands; the SAME checkpointed stream drains only
     # the new file (batch ids continue — no partial is overwritten)
     late.coalesce(1).write.mode("append").parquet(stage)
-    _drain(spark, stage, commits, ckpt)
+    _drain(spark, stage, work)
     final = _report(spark, commits)
     assert {s for s, *_ in final} == set(range(n))
     # already-reported shards' TV moved: the corpus histogram now
@@ -74,12 +70,11 @@ def test_late_shard_is_merged_on_read(spark, tmp_path):
 
     # reversed arrival order → byte-identical final report
     stage2 = str(tmp_path / "stage2")
-    commits2 = str(tmp_path / "commits2")
-    ckpt2 = str(tmp_path / "ckpt2")
+    work2 = str(tmp_path / "work2")
     late.coalesce(1).write.mode("overwrite").parquet(stage2)
-    _drain(spark, stage2, commits2, ckpt2)
+    commits2 = _drain(spark, stage2, work2)
     early.coalesce(1).write.mode("append").parquet(stage2)
-    _drain(spark, stage2, commits2, ckpt2)
+    _drain(spark, stage2, work2)
     assert _report(spark, commits2) == final
 
     # and equal to the independent DuckDB direct computation

@@ -59,9 +59,7 @@ def test_incremental_single_batch_degenerates_to_batch(spark, sf_dir):
     stage = tempfile.mkdtemp(prefix="dbp_inc_one_")
     docs.coalesce(1).write.parquet(stage, mode="append")
     work = tempfile.mkdtemp(prefix="dbp_inc_onework_")
-    inc = incremental.run_incremental_over_dir(
-        spark, stage, work, max_files_per_trigger=10
-    )
+    inc = incremental.run_incremental_over_dir(spark, stage, work)
     assert {(r.doc_a, r.doc_b) for r in inc.collect()} == {
         (r.doc_a, r.doc_b)
         for r in lsh_pairs_df(docs, max_bucket_size=None).collect()

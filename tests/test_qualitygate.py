@@ -13,7 +13,9 @@ from dataset_batch_processor_spark.streaming import qualitygate
 def test_streamed_equals_batch(spark, sf_dir):
     streamed = {
         r.source: (r.n_seen, r.n_admitted, r.admit_ppm)
-        for r in qualitygate._q_stream_quality(spark, sf_dir).collect()
+        for r in qualitygate.QUERIES["docs_stream_quality_admission"](
+            spark, sf_dir
+        ).collect()
     }
     docs = catalog.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"

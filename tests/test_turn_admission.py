@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
-from dataset_batch_processor_spark.streaming import turndedup
+from dataset_batch_processor_spark.streaming import fixtures, turndedup
 
 SF = "/root/testdata/sf0.001"
 
@@ -67,22 +67,27 @@ def test_admission_exactly_once_and_order_free(spark, tmp_path):
 
 
 def test_batch_retry_is_idempotent(spark, tmp_path):
-    """The at-least-once failure scenario from the round-10 review:
-    a micro-batch that committed its partitions but died before the
-    checkpoint offset commit gets REPLAYED. The replay must reproduce
-    its own admitted set byte-identically — not anti-join against its
-    own prior commit and wipe it."""
-    from pyspark.sql import functions as F2
-
+    """The at-least-once failure scenario: a micro-batch that
+    committed its partitions but died before the checkpoint offset
+    commit gets REPLAYED. The replay must reproduce its own admitted
+    set byte-identically — not anti-join against its own prior commit
+    and wipe it."""
     docs = catalog.load_table(spark, SF, "documents").select(
         "doc_id", "text"
     )
-    index_dir = str(tmp_path / "idx")
-    admitted_dir = str(tmp_path / "adm")
+    work = str(tmp_path / "work")
+    admitted_dir = str(tmp_path / "work" / "admitted")
+
+    def commit(batch, batch_id):
+        fixtures.commit_batch(
+            batch, batch_id, work, turndedup.admit_step,
+            reads=("digest_index",),
+        )
+
     b0 = docs.filter("doc_id % 3 = 0")
     b1 = docs.filter("doc_id % 3 = 1")
-    turndedup.process_turn_batch(b0, 0, index_dir, admitted_dir)
-    turndedup.process_turn_batch(b1, 1, index_dir, admitted_dir)
+    commit(b0, 0)
+    commit(b1, 1)
 
     def snap():
         return sorted(
@@ -95,11 +100,9 @@ def test_batch_retry_is_idempotent(spark, tmp_path):
     before = snap()
     assert any(b == 1 for b, _ in before)  # batch 1 admitted something
     # replay batch 1 (same input, same id) — the retry
-    turndedup.process_turn_batch(b1, 1, index_dir, admitted_dir)
+    commit(b1, 1)
     assert snap() == before
     # and a genuinely NEW batch still dedups against history
-    turndedup.process_turn_batch(
-        docs.filter("doc_id % 3 = 2"), 2, index_dir, admitted_dir
-    )
+    commit(docs.filter("doc_id % 3 = 2"), 2)
     after = spark.read.parquet(admitted_dir).select("digest")
     assert after.count() == after.distinct().count()

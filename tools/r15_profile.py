@@ -62,24 +62,11 @@ def warmup(spark, sf_dir):
     langid.corpus_teach_df(spark, sf_dir).count()
     langid.nb_model_df(spark, sf_dir).count()
     bpe.bpe_merges_artifact(spark, sf_dir).count()
-    from dataset_batch_processor_spark.streaming import (
-        canarygate,
-        convgate,
-        driftmon,
-        hllgate,
-        incremental,
-        prefgate,
-        qualitygate,
-        quotagate,
-        rlvrgate,
-        turndedup,
-    )
+    from dataset_batch_processor_spark.streaming.fixtures import Twin
 
-    for mod in (
-        turndedup, incremental, driftmon, convgate, qualitygate,
-        quotagate, prefgate, rlvrgate, canarygate, hllgate,
-    ):
-        mod.stage(spark, sf_dir)
+    for fn in entrymod.queries().values():
+        if isinstance(fn, Twin):
+            fn.stage(spark, sf_dir)
 
 
 def main() -> None:
