@@ -5,6 +5,20 @@ multi-executor cluster because nothing here is local-mode-specific:
 AQE handles runtime re-planning (skew joins, partition coalescing),
 shuffle partitions default to the core count, and Arrow is enabled
 for the pandas-UDF slow path.
+
+The session is long-lived: the bench, the tests, the CLI and the
+examples run many short queries in one session, and a pass over a
+workload repeats them. Spark keeps its compiled generated classes
+(whole-stage codegen, projections, predicates) in one LRU cache keyed
+by the generated source and sized by
+``spark.sql.codegen.cache.maxEntries``, default 100. The engine's
+working set is far larger: one pass of the 366-query registry compiles
+4,590 to 4,613 distinct classes (three runs, at sf0.001 and sf0.01).
+At 100 entries every pass evicted what the previous pass compiled and
+compiled it again in Janino (a second registry pass: 6,990 compiles,
+53 s of compile), and the recompiled classes started cold in the JIT.
+:data:`CODEGEN_CACHE_MAX_ENTRIES` sizes the cache to the measured
+working set instead.
 """
 
 from __future__ import annotations
@@ -15,6 +29,12 @@ import tempfile
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The largest registry working set above (one pass in one session,
+# nothing evicted), rounded up to a power of two with at least 1.5x
+# headroom. The price is Metaspace: the kept classes stay loaded, where
+# evicted ones could be unloaded. After two registry passes at sf0.001
+# it held 251 MB at this cap and 214 MB at 100.
+CODEGEN_CACHE_MAX_ENTRIES = 8192
 
 
 def get_spark(
@@ -31,6 +51,14 @@ def get_spark(
       AQE's coalescing makes the initial number less critical.
     - Arrow on: all pandas UDFs move data in columnar batches.
     - UTC session timezone so timestamp semantics are stable.
+    - codegen class cache sized to the engine's working set
+      (:data:`CODEGEN_CACHE_MAX_ENTRIES`), so a repeated pass reuses
+      its compiled classes: a second pass of the llm_curation queries
+      went from 171 compiles to 0, a second registry pass at sf0.001
+      from 6,990 to 260 and from 237 s to 179 s. The conf is static
+      (read once, when the JVM-wide cache is created), so it is set
+      on the builder before ``getOrCreate`` and cannot change in a
+      running session; ``extra_conf`` can still override it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -53,6 +81,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # static conf: sized by CODEGEN_CACHE_MAX_ENTRIES
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # static conf: managed-table warehouse for bucketed tables
         # (sources/storage.py); keep it session-unique under tmp
         .config(

@@ -3,7 +3,8 @@
 The reference writes loose files next to its inputs; at scale the
 primary output is always a TABLE (parquet), with loose-file layouts
 (sidecar .txt, split_<k>.txt, zip) provided as opt-in exporters that
-run ``foreachPartition`` so no data funnels through the driver.
+run ``foreachPartition`` so no data funnels through the driver; they
+count what they write with an accumulator in that one write job.
 
 Write-mode contract (K9): the reference refuses to run unless the
 output folder exists AND is empty (/root/reference/modules/
@@ -34,6 +35,23 @@ def write_routed(df: DataFrame, path: str, route_col: str = "route") -> None:
     df.write.partitionBy(route_col).mode("errorifexists").parquet(path)
 
 
+def _export_rows(df: DataFrame, write_row) -> int:
+    """Run ``write_row(row)`` over every row of ``df`` on the executors
+    (foreachPartition) and return how many rows it wrote, counted by an
+    accumulator in the same job rather than by a second ``count()``."""
+    written = df.sparkSession.sparkContext.accumulator(0)
+
+    def write_partition(rows):
+        n = 0
+        for row in rows:
+            write_row(row)
+            n += 1
+        written.add(n)
+
+    df.foreachPartition(write_partition)
+    return written.value
+
+
 def export_sidecar_files(df: DataFrame, out_dir: str, name_col: str = "tile_name",
                          caption_col: str = "caption") -> int:
     """K2 sidecar exporter: one ``<name>.txt`` per row, written by the
@@ -47,14 +65,12 @@ def export_sidecar_files(df: DataFrame, out_dir: str, name_col: str = "tile_name
     os.makedirs(out_dir, exist_ok=True)
     target = df.select(name_col, caption_col).filter(F.col(caption_col).isNotNull())
 
-    def write_partition(rows):
-        for row in rows:
-            stem = row[0].rsplit(".", 1)[0]
-            with open(os.path.join(out_dir, stem + ".txt"), "w") as fh:
-                fh.write(row[1])
+    def write_row(row):
+        stem = row[0].rsplit(".", 1)[0]
+        with open(os.path.join(out_dir, stem + ".txt"), "w") as fh:
+            fh.write(row[1])
 
-    target.foreachPartition(write_partition)
-    return target.count()
+    return _export_rows(target, write_row)
 
 
 def export_merged_text(df: DataFrame, out_path: str, sep: str = "\n\n") -> int:
@@ -166,6 +182,9 @@ def export_chunked_text(df: DataFrame, out_dir: str, records_per_file: int = 50)
     joined = chunks.join(df, ["line_no", "input_file"]).select(
         "file_id", "rn", "value"
     )
+    # the repartition puts each file_id in one task, so the per-task
+    # file counts sum to the number of distinct files
+    n_files = df.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
         by_file: dict[int, list[tuple[int, str]]] = {}
@@ -176,9 +195,10 @@ def export_chunked_text(df: DataFrame, out_dir: str, records_per_file: int = 50)
             with open(os.path.join(out_dir, f"split_{fid}.txt"), "w") as fh:
                 for _, v in lines:
                     fh.write(v + "\n")
+        n_files.add(len(by_file))
 
     joined.repartition("file_id").foreachPartition(write_partition)
-    return joined.select("file_id").distinct().count()
+    return n_files.value
 
 
 def export_crop_reports(routed: DataFrame, out_dir: str) -> int:
@@ -190,19 +210,17 @@ def export_crop_reports(routed: DataFrame, out_dir: str) -> int:
         "basename", "width", "height", "rec_w", "rec_h"
     )
 
-    def write_partition(rows):
-        for r in rows:
-            with open(os.path.join(out_dir, r["basename"] + ".txt"), "w") as fh:
-                fh.write(
-                    f"Original size: {r['width']}x{r['height']}\n"
-                    f"Recommended crop: {r['rec_w']}x{r['rec_h']}\n"
-                    "Crop from the center for best results.\n"
-                    "Or rescale to a compatible size.\n"
-                    "Then re-run the filter.\n"
-                )
+    def write_row(r):
+        with open(os.path.join(out_dir, r["basename"] + ".txt"), "w") as fh:
+            fh.write(
+                f"Original size: {r['width']}x{r['height']}\n"
+                f"Recommended crop: {r['rec_w']}x{r['rec_h']}\n"
+                "Crop from the center for best results.\n"
+                "Or rescale to a compatible size.\n"
+                "Then re-run the filter.\n"
+            )
 
-    inc.foreachPartition(write_partition)
-    return inc.count()
+    return _export_rows(inc, write_row)
 
 
 def create_zip(folder: str, zip_name: str = "output.zip") -> str:

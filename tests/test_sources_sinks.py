@@ -155,3 +155,20 @@ def test_sidecar_export(spark, tmp_path):
     assert n == 1
     assert (out / "img_tile_0_0.txt").read_text() == "cap a"
     assert not (out / "img_tile_1_0.txt").exists()
+
+
+def test_sidecar_export_counts_in_its_write_job(spark, tmp_path):
+    # the file count rides the foreachPartition write (an accumulator),
+    # not a second count() job over the same rows
+    tiles = spark.createDataFrame(
+        [Row(tile_name=f"img_tile_{i}_0.png", caption=f"cap {i}") for i in range(5)]
+    )
+    sc = spark.sparkContext
+    group = "sidecar-export-jobs"
+    sc.setJobGroup(group, "export_sidecar_files")
+    try:
+        n = sinks.export_sidecar_files(tiles, str(tmp_path / "sidecars"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
