@@ -82,8 +82,8 @@ def fanout(df: DataFrame, rows: int | None = None) -> DataFrame:
 
     Applied per MEASURED call site, not in load_table: cheap scans
     (simple projections, broadcast sides) lose more to the exchange
-    than the fan-out returns — the sweep numbers live in
-    OPTIMIZATION_r15.md.
+    than the fan-out returns — the sweep numbers are in
+    OPTIMIZATION_r15.md at git 0753e1d, since deleted.
 
     ``rows`` (round 16): when the caller knows the input row count
     (catalog.table_rows) and its per-row work is Arrow-kernel class,

@@ -62,23 +62,13 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def invalidate(kind_prefix: str) -> None:
-    """Drop cache entries whose kind starts with ``kind_prefix`` so
-    the next consumer rebuilds. Scratch directories stay on disk until
-    process-exit cleanup (they are result-sized, not corpus-sized).
-    Used by bench.py to make repeated timings of build-once queries
-    measure the BUILD, not the cached scan."""
-    with _LOCK:
-        for ck in [k for k in _CACHE if k[1].startswith(kind_prefix)]:
-            del _CACHE[ck]
-
-
 def invalidate_exact(kind: str) -> None:
-    """Drop cache entries for exactly ``kind``. bench.py uses this so
-    busting one ANN family's result cache (``anntopk_ivf``) cannot
-    evict a sibling whose kind shares the prefix
-    (``anntopk_ivfpq``) — prefix eviction mid-run reintroduced
-    order-dependent timings for the other families."""
+    """Drop cache entries for exactly ``kind`` so the next consumer
+    rebuilds. Scratch directories stay on disk until process-exit
+    cleanup (they are result-sized, not corpus-sized). Exact, not by
+    prefix: busting one ANN family's result cache (``anntopk_ivf``,
+    see ``warmset.RESULT_CACHES``) must not evict a sibling whose
+    kind shares the prefix (``anntopk_ivfpq``)."""
     with _LOCK:
         for ck in [k for k in _CACHE if k[1] == kind]:
             del _CACHE[ck]

@@ -84,7 +84,8 @@ FROM chars
 # Round 16 (VERDICT r15 next #3, the catalog.fanout rule applied to
 # the mm kernels): minimum rows a LIGHT kernel task should hold. An
 # in-session sweep of every mm query at fan widths 32 vs 8 (sf0.1,
-# /tmp committed to OPTIMIZATION_r16.md) split the family cleanly:
+# recorded in OPTIMIZATION_r16.md at git 0753e1d, since deleted)
+# split the family cleanly:
 # the per-bit entropy decoders (vp8, progressive/tiled/lossless
 # codecs, exif scrub) want every slot (ratios 0.4-0.6 — keep the
 # full-width fan), while the vectorized-numpy kernels (audio

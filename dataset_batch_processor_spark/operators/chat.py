@@ -191,11 +191,15 @@ def run_with_mat_turns(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     # ADVICE r15 #4: the materialized chain drops the intermediate
     # ``tl`` CTE — a consumer tail referencing it would pass the seam
     # check and only fail later at analysis (or silently bind to
-    # something else). Reject it here, loudly.
+    # something else). Reject it here, loudly. Only relation
+    # references count (``FROM tl``, ``JOIN tl``, ``tl.col``), outside
+    # string literals and ``--`` comments: a literal 'tl' or a column
+    # aliased ``AS tl`` is valid SQL over the materialized chain.
     import re
 
     tail = sql.split(_CHAIN_SPARK, 1)[1]
-    if re.search(r"\btl\b", tail):
+    tail = re.sub(r"'(?:[^']|'')*'|--[^\n]*", " ", tail)
+    if re.search(r"\b(?:FROM|JOIN)\s+tl\b|\btl\s*\.", tail, re.IGNORECASE):
         raise ValueError(
             "run_with_mat_turns: consumer tail references the `tl` "
             "CTE, which the materialized chain does not provide — "

@@ -345,12 +345,13 @@ def _bucket_pairs(
 # (Shrivastava & Li, ICML 2014). The K-perm build above pays K affine
 # maps + K running-min updates per shingle; OPH pays ONE modulo + ONE
 # min update — per-shingle CPU drops from O(K) to O(1) in the
-# abstract model. MEASURED caveat (round 9, tools/round9_scale_study
-# study A + SCALE.md): on Spark's whole-stage codegen K=64 affine
-# mins are effectively free (kperm 12.7 s at ~400M shingles), while
-# the OPH pivot/ladder carries a ~15 s constant codegen overhead and
-# a (doc_id, bin) combine with K× more groups — K-perm wins the wall
-# clock at every tested scale up to 4096× fanout. OPH stays gated as
+# abstract model. MEASURED caveat (round 9, tools/round9_scale_study.py
+# at git 0753e1d, since deleted; study A + SCALE.md): on Spark's
+# whole-stage codegen K=64 affine mins are effectively free (kperm
+# 12.7 s at ~400M shingles), while the OPH pivot/ladder carries a
+# ~15 s constant codegen overhead and a (doc_id, bin) combine with K×
+# more groups — K-perm wins the wall clock at every tested scale up
+# to 4096× fanout. OPH stays gated as
 # algorithm parity; it is the right shape only when the per-shingle
 # hash itself is expensive or K >> 64. Bin j takes
 # the min of h DIV K over shingles with h % K == j (the DIV keeps the
@@ -371,10 +372,11 @@ def signatures_df(docs: DataFrame, method: str = "kperm",
     """The ONE front door for MinHash signature builds (round 10,
     VERDICT r9 next #8). Defaults to K-perm because that is what the
     measurements say to run on this engine: tools/round9_scale_study.py
-    study A (SCALE.md) found K independent affine mins effectively
-    free under whole-stage codegen up to 4096× fanout (~400M
-    shingles), while the OPH build carries a ~15 s constant plan
-    overhead with no better slope — K-perm wins the wall clock at
+    (at git 0753e1d, since deleted) study A (SCALE.md) found K
+    independent affine mins effectively free under whole-stage
+    codegen up to 4096× fanout (~400M shingles), while the OPH build
+    carries a ~15 s constant plan overhead with no better slope —
+    K-perm wins the wall clock at
     every tested scale for K ≤ 64. ``method="oph"`` remains available
     as algorithm parity (Li/Owen/Zhang 2012) and is the right shape
     only when the per-shingle hash itself is expensive or K >> 64;
@@ -398,8 +400,9 @@ def signatures_df(docs: DataFrame, method: str = "kperm",
 def oph_signatures_df(docs: DataFrame) -> DataFrame:
     """K-wide OPH signature per doc: (doc_id, oph_0 .. oph_{K-1}).
 
-    Round 9 (measured, tools/round9_scale_study.py study A): the
-    original one-level build — K conditional-min aggregate buffers
+    Round 9 (measured, tools/round9_scale_study.py at git 0753e1d,
+    since deleted; study A): the original one-level build — K
+    conditional-min aggregate buffers
     evaluated per SHINGLE — was O(K) per shingle in practice and its
     K² coalesce ladder blew past whole-stage-codegen limits at K=64
     (18.5 s vs the K-perm build's 0.7 s, the OPPOSITE of the OPH
@@ -1199,8 +1202,9 @@ def truth_panel_mod(n_docs: int) -> int:
     size — runs on ~TRUTH_PANEL_DOCS docs, which is precisely the
     'estimate truth from a sampled pair panel' production posture the
     sweep documents. BLOCK sampling, not a per-doc stride (round 9,
-    tools/round9_scale_study.py study D): a per-doc stride keeps only
-    ~1/mod² of the true pairs (both endpoints must survive
+    tools/round9_scale_study.py at git 0753e1d, since deleted; study
+    D): a per-doc stride keeps only ~1/mod² of the true pairs (both
+    endpoints must survive
     independently) — at sf0.1 a 500-doc stride panel held 6 of 256
     true pairs and flipped the chooser's pick; keeping contiguous
     blocks preserves ~1/mod of the pairs at the same panel size.

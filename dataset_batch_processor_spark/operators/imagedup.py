@@ -63,7 +63,8 @@ def lattice_image(doc_id: int):
     """The fixture image for ``doc_id`` as a (h, w, 3) uint8 array —
     the SINGLE numpy twin of the SQL lattice below (tests pin the
     kernel against the SQL through it; tools/round5b_scale_study.py
-    synthesizes its PNG corpus from it)."""
+    at git 0753e1d, since deleted, synthesized its PNG corpus from
+    it)."""
     import numpy as np
 
     g, v = doc_id % 250, doc_id // 250

@@ -1146,7 +1146,9 @@ def _q_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     change it, which is exactly the defect the gate exists to catch),
     and auditing the index the serving queries actually probe is the
     stronger invariant. Profiled 1.65 s of the query's 2.97 s wall
-    was the redundant retrain (tools/r15_profile.py)."""
+    was the redundant retrain (the round-15 profiling tool at git
+    0753e1d, since deleted; tools/profile_queries.py splits the
+    same phases)."""
     emb, ids, Cn = _trained_index(spark, sf_dir)
     return ivf_topk_trained(emb, ids, Cn, n_probe=len(ids))
 

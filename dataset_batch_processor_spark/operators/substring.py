@@ -55,8 +55,9 @@ def _spans_sql(dialect: str) -> str:
     # Spark side uses the codegen-native xxhash64 — the production
     # hash substring_dup_spans_df already runs — while the DuckDB
     # oracle keeps the md5 prefix: identical spans, ~2x Spark
-    # throughput (round 15; measured in OPTIMIZATION_r15.md, same
-    # md5-vs-xxhash64 delta SCALE.md records for the prodhash chain)
+    # throughput (round 15; measured in OPTIMIZATION_r15.md at git
+    # 0753e1d, since deleted; the same md5-vs-xxhash64 delta SCALE.md
+    # records for the prodhash chain)
     if spark:
         h = f"xxhash64(substr(text, p, {WIDTH}))"
     else:

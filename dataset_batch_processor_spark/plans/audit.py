@@ -25,7 +25,7 @@ sf0.01 and fatal at 100 TB:
 ``audit_plan`` works on the explain(formatted) text so it composes
 with the existing plan-pin helpers; ``audit_registry`` sweeps every
 driver-contract query and returns {name: [violations]} for the
-pinned sweep test and the per-round verify artifact.
+pinned sweep test; tools/verify_oracle.py audits each query it runs.
 """
 
 from __future__ import annotations

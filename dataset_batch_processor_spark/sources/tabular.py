@@ -208,7 +208,8 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the read side's ORC column pruning means the other 11 columns
     # were encoded but never decoded — write-side waste, not proof; the
     # CSV/XML roundtrip twins already project). Profiled: the write IS
-    # the query's build cost (1.53 s of 1.92 s, tools/r15_profile.py).
+    # the query's build cost (1.53 s of 1.92 s, the round-15 profiling
+    # tool at git 0753e1d, since deleted).
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity",
         "l_extendedprice", "l_discount",

@@ -622,3 +622,26 @@ def test_template_migration_diff_replay():
             )
         )
         assert (len_v1, len_v2) == (len(v1), len(v2))
+
+
+@pytest.mark.parametrize(
+    "tail, raises",
+    [
+        ("SELECT doc_id, 'tl' AS tag FROM turns", False),
+        ("SELECT doc_id AS tl FROM turns -- not FROM tl", False),
+        ("SELECT t.doc_id FROM turns t JOIN tl USING (doc_id)", True),
+        ("SELECT tl.tok FROM turns AS tl", True),
+    ],
+)
+def test_mat_turns_seam_guard_rejects_only_tl_relations(
+    spark, sf_dir, tail, raises
+):
+    """The materialized chain has no ``tl`` CTE: a tail that reads it
+    as a relation is rejected, while ``tl`` in a literal, a comment or
+    a column alias is valid SQL over the chain and runs."""
+    sql = chat._CHAIN_SPARK + "\n" + tail
+    if raises:
+        with pytest.raises(ValueError, match="`tl`"):
+            chat.run_with_mat_turns(spark, sf_dir, sql)
+    else:
+        assert chat.run_with_mat_turns(spark, sf_dir, sql).limit(3).collect()

@@ -106,8 +106,8 @@ def test_degree_orientation_preserves_triangle_counts(spark):
     (degree, id) ordering the max-degree hub can never be a source,
     REGARDLESS of its id (id-ordering's wedge count depends on where
     the hub's id lands — zero at the extremes, (d/2)^2 mid-range —
-    which is exactly the fragility; see tools/round6_scale_study.py
-    for the measured mid-id blowup)."""
+    which is exactly the fragility; tools/round6_scale_study.py at
+    git 0753e1d, since deleted, measured the mid-id blowup)."""
     from itertools import combinations
 
     from pyspark.sql import functions as F

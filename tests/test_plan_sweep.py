@@ -3,10 +3,10 @@
 Every driver-contract query's plan is audited for the four
 scale-shape anti-patterns (plans/audit.py): unpartitioned data
 windows, CartesianProduct, row-at-a-time Python UDFs, and
-unbounded-broadcast BroadcastNestedLoopJoins. The per-round
-oracle gate (tools/verify_oracle.py) runs the same audit at sf0.01
-and fails the query on violation; this pytest pins it at sf0.001 so
-a regression is caught before any round close.
+unbounded-broadcast BroadcastNestedLoopJoins. The oracle gate
+(tools/verify_oracle.py) runs the same audit at sf0.01 and fails the
+query on violation; this pytest pins it at sf0.001 so a regression
+is caught at commit time.
 
 The r13 judge found three unpartitioned-window queries by hand
 (docs_hybrid_rrf, docs_surprisal_rank, docs_vocab_coverage); this

@@ -244,8 +244,8 @@ STREAM_TWINS = {
 
 def test_every_stream_twin_runs_through_the_drain():
     """The twins the drain knows about (the registered ``Twin``
-    queries, which bench.py warms) are exactly the 13 foreachBatch
-    twins, and each has a DuckDB oracle."""
+    queries, whose staging warmset.warm builds) are exactly the 13
+    foreachBatch twins, and each has a DuckDB oracle."""
     import __spark_entry__ as entrymod
 
     twins = {

@@ -1,22 +1,16 @@
-"""Never-verified tripwire (round 9, VERDICT r8 what's-wrong #1).
+"""Never-verified tripwire.
 
-Round 8 shipped two registered queries (docs_classifier_train/eval)
-with no verification row in ANY committed artifact, and a VERIFY_FULL
-mirror recording a FAIL its own fix had already cured. This test makes
-that class of staleness a pytest failure at commit time:
-
-* every name in ``queries()`` must have a green row somewhere —
-  the ``VERIFY_LEDGER.json`` that tools/verify_oracle.py folds on
-  every run, a driver ``CORRECTNESS_r{N}.json`` window, or the latest
-  ``VERIFY_FULL_r{N}.json`` mirror. Registering a query and committing
-  without ever running verify_oracle on it trips this test.
+* every name in ``queries()`` must have a green row in
+  ``VERIFY_LEDGER.json``, which tools/verify_oracle.py folds on every
+  run (a FAIL erases the row). Registering a query and committing
+  without a green verify_oracle run on it trips this test.
 * every ``oracle_sql()`` key must name a registered query (a stray
-  oracle is a dead row the driver would never exercise).
+  oracle is a dead row nothing would ever exercise).
 """
 
 from __future__ import annotations
 
-import glob
+import importlib.util
 import json
 import os
 import re
@@ -25,38 +19,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _verified_names() -> set[str]:
-    seen: set[str] = set()
-    # 1. the local ledger (updated by every verify_oracle run)
-    try:
-        with open(os.path.join(REPO, "VERIFY_LEDGER.json")) as fh:
-            seen.update(json.load(fh))
-    except (OSError, ValueError):
-        pass
-    # 2. driver correctness windows (green rows only)
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            if isinstance(r, dict) and not r.get("err") and (
-                r.get("hash_match") or r.get("rows_match")
-            ):
-                seen.add(name)
-    # 3. full-surface mirrors (PASS/rows-only rows)
-    for path in glob.glob(os.path.join(REPO, "VERIFY_FULL_r*.json")):
-        try:
-            with open(path) as fh:
-                blob = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, r in blob.get("queries", {}).items():
-            if isinstance(r, dict) and r.get("status") in (
-                "PASS", "rows-only"
-            ):
-                seen.add(name)
-    return seen
+    with open(os.path.join(REPO, "VERIFY_LEDGER.json")) as fh:
+        return set(json.load(fh))
 
 
 def test_every_registered_query_has_a_verification_row():
@@ -66,17 +30,15 @@ def test_every_registered_query_has_a_verification_row():
     never = sorted(registered - _verified_names())
     assert not never, (
         f"{len(never)} registered queries have NO green row in "
-        f"VERIFY_LEDGER.json, any CORRECTNESS_r*.json, or any "
-        f"VERIFY_FULL_r*.json — run "
+        f"VERIFY_LEDGER.json — run "
         f"`python tools/verify_oracle.py /root/testdata/sf0.01 "
         f"{' '.join(never)}` and commit the ledger: {never}"
     )
 
 
 def test_readme_query_count_matches_registry():
-    """VERDICT r10 wrong #2: README said 285 while the registry held
-    290 — the figure is now DERIVED (round_close.sync_readme_count)
-    and this tripwire fails any commit where it drifts again."""
+    """README once said 285 while the registry held 290; this fails
+    any commit where the figure drifts again."""
     import __spark_entry__ as entrymod
 
     with open(os.path.join(REPO, "README.md")) as fh:
@@ -84,10 +46,8 @@ def test_readme_query_count_matches_registry():
     assert m, "README.md lost the 'N driver queries' line"
     assert int(m.group(1)) == len(entrymod.queries()), (
         f"README.md says {m.group(1)} driver queries but the registry "
-        f"has {len(entrymod.queries())} — run tools/round_close.py "
-        f"(step 0 rewrites it) or python -c \"import sys; "
-        f"sys.path.insert(0,'tools'); import round_close; "
-        f"round_close.sync_readme_count()\""
+        f"has {len(entrymod.queries())} — update the layout line in "
+        f"README.md"
     )
 
 
@@ -98,43 +58,15 @@ def test_every_oracle_names_a_registered_query():
     assert not stray, f"oracle_sql entries with no queries() twin: {stray}"
 
 
-def test_no_unresolved_mirror_failures():
-    """Every FAIL recorded in the latest committed VERIFY_FULL mirror
-    must have a green row in the ledger (i.e. it was re-verified after
-    the fix). Historical mirrors are immutable driver artifacts, but a
-    FAIL nothing ever re-proved green is either a live wrong answer or
-    a stale mirror — the r8 incident either way."""
-    paths = glob.glob(os.path.join(REPO, "VERIFY_FULL_r*.json"))
-    if not paths:
-        return
-    latest = max(
-        paths,
-        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-    )
-    with open(latest) as fh:
-        blob = json.load(fh)
-    try:
-        with open(os.path.join(REPO, "VERIFY_LEDGER.json")) as fh:
-            ledger = json.load(fh)
-    except (OSError, ValueError):
-        ledger = {}
-    unresolved = [f for f in blob.get("failures", []) if f not in ledger]
-    assert not unresolved, (
-        f"{os.path.basename(latest)} records failures with no later "
-        f"green ledger row: {unresolved} — fix and re-run "
-        f"tools/verify_oracle.py on them"
-    )
-
-
 def test_ledger_fail_erases_green_row(tmp_path, monkeypatch):
-    """Round-9 review fix: a FAIL erases the query's ledger row (so
-    the unresolved-mirror-failure check actually fires until a later
-    green run), and scale factors compare numerically, not
-    lexicographically."""
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import verify_oracle as vo
+    """A FAIL erases the query's ledger row (so the registered-query
+    check fires until a later green run), and scale factors compare
+    numerically, not lexicographically."""
+    spec = importlib.util.spec_from_file_location(
+        "verify_oracle", os.path.join(REPO, "tools", "verify_oracle.py")
+    )
+    vo = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vo)
 
     ledger = tmp_path / "ledger.json"
     monkeypatch.setattr(vo, "LEDGER_PATH", str(ledger))

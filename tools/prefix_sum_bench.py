@@ -12,10 +12,11 @@ Usage: python tools/prefix_sum_bench.py [n_rows]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F

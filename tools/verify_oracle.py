@@ -1,33 +1,31 @@
-"""Local mirror of the driver's correctness gate.
+"""The DuckDB oracle gate.
 
 Runs every ``queries()[name]`` on Spark and the matching
-``oracle_sql()[name]`` on DuckDB over the same parquet tables,
-then compares row count, column-name set, and an order-insensitive
-value multiset. Usage:
+``oracle_sql()[name]`` on DuckDB over the same parquet tables, then
+compares row count, column names and types, and an order-insensitive
+value multiset. A query's plan must also pass ``plans.audit``. Usage:
 
-    python tools/verify_oracle.py [--json OUT.json] [sf_dir] [query ...]
+    python tools/verify_oracle.py [sf_dir] [query ...]
 
-``--json`` writes the per-query record (status, rows, wall) — the
-round-close full-surface artifact (`VERIFY_FULL_r{N}.json`) that
-complements the driver's rotating ~50-query window (README
-"Correctness gates").
-
-Every run also folds its PASSes into ``VERIFY_LEDGER.json`` at the
-repo root (round 9): a deterministic name -> last-green-scale map that
-tests/test_tripwire.py checks against the registry, so a query can no
-longer be REGISTERED without ever having been verified anywhere (the
-round-8 staleness: docs_classifier_train/eval shipped with no artifact
-row at all). Commit the ledger together with each new query.
+Every run folds its results into ``VERIFY_LEDGER.json`` at the repo
+root: a deterministic name -> last-green-scale map. A PASS records the
+query; a FAIL erases its row. tests/test_tripwire.py checks the ledger
+against the registry, so a query cannot be registered, or stay
+registered after a failure, without a green run. Commit the ledger
+together with each new query.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -59,7 +57,7 @@ def canon(rows, colnames):
     return out
 
 
-LEDGER_PATH = "/root/repo/VERIFY_LEDGER.json"
+LEDGER_PATH = os.path.join(REPO, "VERIFY_LEDGER.json")
 
 
 def _sf_num(sf: str) -> float:
@@ -77,12 +75,9 @@ def _update_ledger(records: dict[str, dict], sf_dir: str) -> None:
     one-line-per-new-query. Semantics (round 9, review fix): a green
     row means 'verified green, with no failure observed SINCE' — a
     FAIL ERASES the query's row, so tests/test_tripwire.py's
-    unresolved-failure check actually fires until a later run
-    re-proves the fix; status and sf always come from the SAME run
+    registered-query check fires until a later run re-proves the
+    fix; status and sf always come from the SAME run
     (the one at the largest numeric scale seen green)."""
-    import json
-    import os
-
     sf = os.path.basename(sf_dir.rstrip("/"))
     try:
         with open(LEDGER_PATH) as fh:
@@ -103,15 +98,7 @@ def _update_ledger(records: dict[str, dict], sf_dir: str) -> None:
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        if i + 1 >= len(argv):
-            sys.exit("usage: verify_oracle.py [--json OUT.json] "
-                     "[sf_dir] [query ...]")
-        json_out = argv[i + 1]
-        del argv[i : i + 2]
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     records: dict[str, dict] = {}
@@ -145,21 +132,16 @@ def main() -> int:
         except Exception:
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
             failures.append(name)
-            records[name] = {"status": "FAIL", "rows": None,
-                             "wall_s": round(time.time() - t0, 2),
-                             "err": "spark error"}
+            records[name] = {"status": "FAIL"}
             continue
         if name not in oracles:
             if plan_violations:
                 print(f"FAIL  {name}: plan violations {plan_violations}")
                 failures.append(name)
-                records[name] = {"status": "FAIL", "rows": len(srows),
-                                 "wall_s": round(time.time() - t0, 2),
-                                 "err": f"plan violations: {plan_violations}"}
+                records[name] = {"status": "FAIL"}
                 continue
             print(f"rows-only  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            records[name] = {"status": "rows-only", "rows": len(srows),
-                             "wall_s": round(time.time() - t0, 2)}
+            records[name] = {"status": "rows-only"}
             continue
         try:
             res = con.execute(oracles[name])
@@ -168,9 +150,7 @@ def main() -> int:
         except Exception:
             print(f"FAIL  {name}: duckdb error\n{traceback.format_exc()}")
             failures.append(name)
-            records[name] = {"status": "FAIL", "rows": len(srows),
-                             "wall_s": round(time.time() - t0, 2),
-                             "err": "duckdb error"}
+            records[name] = {"status": "FAIL"}
             continue
         ok = True
         msgs = []
@@ -224,10 +204,7 @@ def main() -> int:
             f"{status}  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)"
             + ("  " + "; ".join(msgs) if msgs else "")
         )
-        records[name] = {"status": status, "rows": len(srows),
-                         "wall_s": round(time.time() - t0, 2)}
-        if msgs:
-            records[name]["err"] = "; ".join(msgs)
+        records[name] = {"status": status}
     unknown = only - set(qs)
     if unknown:
         print(f"\nERROR: unknown query name(s): {sorted(unknown)}")
@@ -236,27 +213,6 @@ def main() -> int:
     print(
         f"\n{len(failures)} failures" + (f": {failures}" if failures else "")
     )
-    if json_out:
-        import json
-
-        n_pass = sum(1 for r in records.values() if r["status"] == "PASS")
-        with open(json_out, "w") as fh:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "n_queries": len(records),
-                    "n_pass": n_pass,
-                    "n_fail": len(failures),
-                    "n_rows_only": sum(
-                        1 for r in records.values()
-                        if r["status"] == "rows-only"
-                    ),
-                    "failures": failures,
-                    "queries": records,
-                },
-                fh,
-                indent=1,
-            )
     return 1 if failures else 0
 
 
