@@ -9,8 +9,6 @@ so the Spark engine and the DuckDB oracle compute them identically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,21 +32,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Round 16 (VERDICT r15 next #3): minimum rows a fanned task should
-# hold. A fanout to defaultParallelism is right for the md5/gram
-# chains (huge per-row cost), but an Arrow-kernel stage at 32 slots
-# over a few thousand rows fragments into sub-100-row tasks whose
-# fixed JVM<->Python round-trip dominates — measured at sf0.1 the
-# 2000-row exact-cosine stage runs 1.25 s at 32 partitions vs 0.69 s
-# at 8 (250 rows/task), which is also why the driver's 8-core bench
-# beat 32 cores on the Arrow heavies. Call sites that know their
-# stage class pass ``rows`` (from the cached table count) so the fan
-# width is min(parallelism, rows / this floor); sites with dominant
-# per-row cost keep the unconditional full-width fan. Env-tunable for
-# production (rows/task should track per-row kernel cost).
-FANOUT_ROWS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_ROWS_PER_TASK", "256")
-)
+# Minimum rows a rows-sized fanned task should hold: the one fanout
+# rule for every Arrow/Python-kernel stage. A fanout to
+# defaultParallelism is right for the md5/gram chains (huge per-row
+# cost), but a Python-kernel stage over a few thousand rows fragments
+# into sub-100-row tasks whose fixed JVM<->Python round-trip dominates
+# — measured at sf0.1 the 2000-row exact-cosine stage runs 1.25 s at
+# 32 partitions vs 0.69 s at 8 (250 rows/task), and the vectorized
+# mm kernels (audio features/resample/VAD, frame sampling, packed-raw
+# and depth roundtrips) lost 1.3-2.6x to sub-200-row tasks. Call sites
+# whose per-row work is kernel class pass ``rows`` (the rows that
+# reach the kernel); sites with dominant per-row cost (md5/gram
+# chains, per-bit entropy decoders) keep the full-width fan.
+FANOUT_ROWS_PER_TASK = 256
 
 _ROWS_CACHE: dict[tuple[str, str], int] = {}
 
@@ -85,12 +81,12 @@ def fanout(df: DataFrame, rows: int | None = None) -> DataFrame:
     than the fan-out returns — the sweep numbers are in
     OPTIMIZATION_r15.md at git 0753e1d, since deleted.
 
-    ``rows`` (round 16): when the caller knows the input row count
-    (catalog.table_rows) and its per-row work is Arrow-kernel class,
-    the fan width is capped at rows / FANOUT_ROWS_PER_TASK so tasks
-    never shrink below the batch size where the Python round-trip
-    dominates; omitted, the fan keeps the full-width round 15
-    behavior (right for the heavy md5/gram chains)."""
+    ``rows``: when the caller knows how many rows reach its kernel
+    (from catalog.table_rows) and its per-row work is Arrow-kernel
+    class, the fan width is capped at rows / FANOUT_ROWS_PER_TASK so
+    tasks never shrink below the batch size where the Python
+    round-trip dominates; omitted, the fan is full width (right for
+    the heavy md5/gram chains)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     if rows is not None:

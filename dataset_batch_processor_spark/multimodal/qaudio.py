@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
-
 
 # WAV analogue of the PNG roundtrip: deterministic int16 ramp per doc,
 # encoded to real RIFF/PCM bytes (stdlib wave), decoded back through
@@ -32,7 +30,10 @@ def _q_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"), rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents"),
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -85,9 +86,12 @@ def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 0)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 0)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -148,9 +152,12 @@ def _q_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 1)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 1)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -232,9 +239,12 @@ def _q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 2)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 2)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -315,9 +325,12 @@ def _q_audio_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 1)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 1)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -353,9 +366,12 @@ def _q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 2)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 2)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -467,9 +483,12 @@ def _q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 2).select(
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 2)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    ).select(
         "doc_id", F.expr(_FP_SEED).alias("seed")
     )
 
@@ -580,12 +599,12 @@ def _q_wav_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av as avmod
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 9 == 1
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 9 == 1)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 9,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def riff(code, bits, payload, rate):

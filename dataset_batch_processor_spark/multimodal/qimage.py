@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
-
 
 
 # -------------------------------------------------- real-codec roundtrip
@@ -37,7 +35,9 @@ def _q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -89,7 +89,9 @@ def _q_png_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -144,7 +146,9 @@ def _q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -202,7 +206,9 @@ def _q_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -267,7 +273,9 @@ def _q_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -325,7 +333,9 @@ def _q_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, webp
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -402,7 +412,9 @@ def _q_vp8_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import vp8, webp
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -492,9 +504,10 @@ def _q_heif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import binary
     from . import optional_codecs as oc
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter("doc_id % 8 = 0"),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter("doc_id % 8 = 0")
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -557,12 +570,12 @@ def _q_png_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 3 == 1
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 1)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from . import png as pngmod
@@ -689,11 +702,10 @@ def _q_bmp_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 7 == 0
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 7 == 0)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -824,11 +836,10 @@ def _q_format_convert_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 9 == 5
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 9 == 5)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -894,12 +905,12 @@ def _q_jpeg12_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg as jpegmod
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 11 == 4
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 11 == 4)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 11,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1054,7 +1065,9 @@ def _watermark_kernel(
 
 
 def _q_watermark_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
     return docs.mapInPandas(_watermark_kernel, schema=WATERMARK_SCHEMA)
 
 

@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
-
 
 TILE_CK = 4  # tile size; overlap 0.5 -> step 2
 
@@ -75,7 +73,7 @@ def _q_tile_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["id", "fmt", "content"])
 
-    content = _fanout(spark, docs).mapInPandas(
+    content = catalog.fanout(docs.select("doc_id")).mapInPandas(
         gen_png, schema="id string, fmt string, content binary"
     )
     pix = binary.materialize_tiles(
@@ -147,11 +145,10 @@ def _q_vit_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 3
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 3)
+        .select("doc_id")
     )
     wgt = (
         1 + np.arange(PATCH_P * PATCH_P * 3, dtype=np.int64)
@@ -235,11 +232,10 @@ def _q_augment_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 4
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 4)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
 
 # Camera-RAW entropy layer (T.81 process 14 / SOF3, multimodal/
 # ljpeg.py) driven end-to-end through the DNG container: per doc a
@@ -38,11 +37,10 @@ def _q_dng_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 == 0
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 0)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -110,11 +108,10 @@ def _q_dng_tiled_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 0
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 0)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -191,11 +188,10 @@ def _q_cr2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, optional_codecs, rawvendor
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 == 1
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 1)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -274,12 +270,12 @@ def _q_nef_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 == 2
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 2)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 4,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -352,11 +348,10 @@ def _q_nef_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 4
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 4)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -425,12 +420,12 @@ def _q_arw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, optional_codecs, rawvendor
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 == 3
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 3)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 4,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -511,12 +506,12 @@ def _q_arw_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 1
-        ),
-    rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 1)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

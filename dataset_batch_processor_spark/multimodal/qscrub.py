@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
-
 
 
 # ----------------------------------- EXIF orientation probe + apply
@@ -37,11 +35,10 @@ def _q_exif_orientation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 3 == 0
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 0)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -139,7 +136,10 @@ def _q_scrub_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import jpeg, metascrub, tiff as tiff_mod
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"), rows=catalog.table_rows(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents"),
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -219,7 +219,9 @@ def _q_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg, metascrub
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -312,7 +314,9 @@ def _q_exif_orientation_normalize(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from . import binary, jpeg, metascrub, png, tiff
 
-    docs = _fanout(spark, catalog.load_table(spark, sf_dir, "documents"))
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -2,7 +2,7 @@
 
 The 3,278-line accretion module was regrouped by family (VERDICT r9
 next #5, the relational-strata precedent from round 9): qcommon
-(Arrow plumbing probe + fan-out), qimage (standard codec roundtrips),
+(Arrow plumbing probe), qimage (standard codec roundtrips),
 qraw (DNG/CR2/NEF/ARW), qaudio, qvideo, qscrub (EXIF/PII hygiene),
 qpatch (tiles/ViT/augment). This shim keeps the `queries` import path
 and the merged QUERIES/ORACLES dicts byte-stable for

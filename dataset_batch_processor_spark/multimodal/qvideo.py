@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 
-from .qcommon import _fanout
-
 
 
 # --------------------------------------------------- video frame sampling
@@ -40,9 +38,12 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av, binary
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 5 == 0)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 0)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -134,9 +135,12 @@ def _q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = _fanout(
-        spark, catalog.load_table(spark, sf_dir, "documents")
-    , rows=catalog.table_rows(spark, sf_dir, "documents")).filter(F.col("doc_id") % 5 == 0)
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 0)
+        .select("doc_id"),
+        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -212,11 +216,10 @@ def _q_avi_mjpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av as avmod
 
-    docs = _fanout(
-        spark,
-        catalog.load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 13 == 6
-        ),
+    docs = catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 13 == 6)
+        .select("doc_id")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -31,10 +31,8 @@ single map-side-combined aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .. import catalog
 from .rlvr import N_ROLLOUTS, RESP_CHARS
+from .sqlrun import _run
 
 CANARY_MOD = 10
 CANARY_RESIDUE = 4
@@ -128,16 +126,6 @@ def _sql(engine: str, tail: str, table: str = "documents") -> str:
     return f"WITH {_chain(engine, table)}" + tail.format(div=div)
 
 
-def _run(sql: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(sql)
-
-    return q
-
-
 PLANT_SPARK = _sql("spark", _PLANT_TAIL)
 PLANT_DUCK = _sql("duck", _PLANT_TAIL)
 EXPOSURE_SPARK = _sql("spark", _EXPOSURE_TAIL)
@@ -146,9 +134,9 @@ CARD_SPARK = _sql("spark", _CARD_TAIL)
 CARD_DUCK = _sql("duck", _CARD_TAIL)
 
 QUERIES = {
-    "docs_canary_plant": _run(PLANT_SPARK),
-    "docs_canary_exposure": _run(EXPOSURE_SPARK),
-    "docs_canary_leak_card": _run(CARD_SPARK),
+    "docs_canary_plant": _run(PLANT_SPARK, ("documents",)),
+    "docs_canary_exposure": _run(EXPOSURE_SPARK, ("documents",)),
+    "docs_canary_leak_card": _run(CARD_SPARK, ("documents",)),
 }
 ORACLES = {
     "docs_canary_plant": PLANT_DUCK,

@@ -42,6 +42,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import catalog
+from .sqlrun import _run
 
 TURN_MIN = 3          # shortest turn, tokens
 TURN_MOD = 6          # turn_len = TURN_MIN + h % TURN_MOD  in [3, 8]
@@ -1295,19 +1296,6 @@ def loss_spans_py(doc_id: int, text: str) -> list[tuple[int, int]]:
 
 # ------------------------------------------------------------ queries
 
-def _run(sql: str, fan: bool = False):
-    """``fan=True`` spreads the one-row-group documents scan across
-    the worker slots (catalog.fanout, guide §2.5) — only for queries
-    whose scan stage is a measured CPU-bound chain."""
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = catalog.load_table(spark, sf_dir, "documents")
-        if fan:
-            df = catalog.fanout(df)
-        df.createOrReplaceTempView("documents")
-        return spark.sql(sql)
-
-    return q
-
 
 
 # -------------------------------------- template-migration diff
@@ -1380,7 +1368,7 @@ QUERIES = {
     "docs_turn_near_dup": _q_turn_near_dup,
     "docs_chat_pack_sequences": _q_chat_pack_sequences,
     "docs_mm_chat_token_plan": _run_mat(MM_CHAT_PLAN_SPARK),
-    "docs_chunk_windows": _run(CHUNK_WINDOWS_SPARK),
+    "docs_chunk_windows": _run(CHUNK_WINDOWS_SPARK, ("documents",)),
     "chat_jsonl_roundtrip": _q_chat_jsonl_roundtrip,
     "docs_chat_truncate": _run_mat(CHAT_TRUNCATE_SPARK),
     "docs_tool_trace_render": _run_mat(TOOL_TRACE_SPARK),

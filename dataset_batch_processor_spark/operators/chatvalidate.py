@@ -55,7 +55,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import catalog
 from .chat import toks_duck, toks_spark, turns_duck, turns_spark
 
 PLANT_MOD = 41
@@ -151,16 +150,6 @@ def validate_counts_sql(src: str) -> str:
     """The counts rollup over an arbitrary (doc_id, text) relation —
     the streaming twin's per-batch partial (streaming/convgate.py)."""
     return f"WITH {_validate_ctes('spark', src)}{_COUNTS_TAIL}"
-
-
-def _run(sql: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(sql)
-
-    return q
 
 
 def _run_mat(sql: str):

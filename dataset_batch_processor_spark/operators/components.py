@@ -70,9 +70,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
 # scale (the collect is checked against the ALREADY-COMPUTED witness
 # count before any driver transfer); dedup pair graphs at this size
 # are pure fixed-overhead work for the 5-shuffles-per-round loop.
-SMALL_GRAPH_EDGE_CAP = int(
-    __import__("os").environ.get("SPARK_GRAFT_CC_LOCAL_EDGE_CAP", "100000")
-)
+SMALL_GRAPH_EDGE_CAP = 100_000
 
 
 def _small_star(edges: DataFrame) -> DataFrame:

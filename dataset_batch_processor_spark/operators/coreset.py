@@ -73,8 +73,8 @@ def kcenter_greedy(emb: DataFrame, k: int = K_CENTERS):
 
 
 def _q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout (guide §2.5): 1.79 -> 1.39 s at sf0.1; round 16: sized
-    # by rows so Arrow tasks keep >=FANOUT_ROWS_PER_TASK rows
+    # fanout (guide §2.5): 1.79 -> 1.39 s at sf0.1; sized by rows, so
+    # each Arrow task keeps >= catalog.FANOUT_ROWS_PER_TASK rows
     emb = catalog.fanout(
         catalog.load_table(spark, sf_dir, "embeddings"),
         rows=catalog.table_rows(spark, sf_dir, "embeddings"),

@@ -24,11 +24,12 @@ Scale ledger (100 TB story):
   higher-order ``transform()`` lambda alternative is interpreted —
   see MEMORY determinism rules / winnowing history).
 - The Jaccard index drops *stop-grams* (document frequency > DF_CAP)
-  before the self-join: frequent grams contribute candidates
-  quadratically but evidence of near-duplication only via rare grams,
-  so the cutoff bounds every posting list, making the self-join
-  output at most DF_CAP * |distinct grams| rows. This is the same
-  lever ExactSubstr/suffix-array dedup pipelines use.
+  before pairing, through dedup's capped pair primitive
+  (``capped_groups`` + ``unfold_pairs``): frequent grams contribute
+  candidates quadratically but evidence of near-duplication only via
+  rare grams, so the cutoff bounds every posting list at DF_CAP
+  members. This is the same lever ExactSubstr/suffix-array dedup
+  pipelines use.
 - Decontamination's eval side is tiny by construction (an eval set is
   thousands of docs, not billions) — Catalyst broadcast-joins the
   distinct eval-gram table; the corpus side never shuffles.
@@ -229,47 +230,23 @@ def _q_decontaminate(spark, sf_dir):
     return spark.sql(_DECON_TAIL.format(v="decon_grams"))
 
 
-# Round 15b: the driver entry replaces the posting SELF-JOIN
-# (kept a ⋈ kept b ON a.gh = b.gh) with the dedup._bucket_pairs
-# shape — one groupBy(gh) collecting each gram's (distinct) doc list,
-# with the (a < b) pairs unfolded from the sorted array as a codegen
-# expression. Round 16 (VERDICT r15 "what's wrong" #1): the DF_CAP
-# stop-gram cutoff runs as a partitioned window COUNT *before* the
-# collect — a degenerate stop-gram spills in the (disk-backed) window
-# buffer and is dropped before any array is built, instead of
-# buffering its full doc list in one in-memory aggregation buffer.
-# The window rides the same gh exchange the groupBy needs. Per-pair
-# counts and sizes are the same multisets (grams is SELECT DISTINCT,
-# so count-over-window == the old HAVING count(*)), which
-# NGRAM_JACCARD_DUCK re-proves. The grouped relation is persisted by
-# _q_ngram_jaccard and referenced through a temp view, so its two
-# consumers (sizes, shared) scan ONE evaluation instead of inlining
-# the window+groupBy twice (ADVICE r15 #3).
-_JAC_GROUPED = f"""
-SELECT gh, sort_array(collect_list(doc_id)) AS ids
-FROM (
-  SELECT gh, doc_id, count(*) OVER (PARTITION BY gh) AS df
-  FROM jac_grams
-) WHERE df <= {DF_CAP}
-GROUP BY gh
-"""
-
+# The registered query swaps _JAC_TAIL's posting self-join (kept a JOIN
+# kept b ON a.gh = b.gh) for dedup's capped pair primitive, whose
+# hot-key guard is the DF_CAP stop-gram cutoff (grams is SELECT
+# DISTINCT, so the window count is the gram's document frequency).
+# The grouped relation is persisted: its two consumers (sizes and the
+# pair unfold) would otherwise each re-run the gh exchange and the
+# aggregation (ADVICE r15 #3). NGRAM_JACCARD_DUCK re-proves the rows.
 _JAC_UNFOLD_TAIL = f"""
-grouped AS (
-  SELECT gh, ids FROM jac_grouped
-),
-sizes AS (
+WITH sizes AS (
   SELECT doc_id, count(*) AS n
-  FROM (SELECT explode(ids) AS doc_id FROM grouped)
+  FROM (SELECT explode(ids) AS doc_id FROM jac_grouped)
   GROUP BY doc_id
 ),
 shared AS (
-  SELECT p.doc_a AS id1, p.doc_b AS id2, count(*) AS n_shared
-  FROM grouped
-  LATERAL VIEW explode(flatten(transform(ids, (a, i) ->
-      transform(slice(ids, i + 2, size(ids)),
-                b -> struct(a AS doc_a, b AS doc_b))))) t AS p
-  GROUP BY p.doc_a, p.doc_b
+  SELECT doc_a AS id1, doc_b AS id2, count(*) AS n_shared
+  FROM jac_pairs
+  GROUP BY doc_a, doc_b
 )
 SELECT id1, id2,
        CAST(round(CAST(n_shared AS DOUBLE)
@@ -284,16 +261,20 @@ ORDER BY id1, id2
 """
 
 
-def _q_ngram_jaccard(spark, sf_dir):
-    _materialized_grams(
-        spark, sf_dir, JAC_N, "jac_grams", production_hash=True
-    )
-    # evaluate the window+groupBy ONCE: Spark inlines CTEs, so the two
-    # grouped consumers (sizes, shared) would otherwise each re-run
-    # the gh exchange + aggregation (ADVICE r15 #3)
-    grouped = spark.sql(_JAC_GROUPED).persist()
+def ngram_jaccard_df(grams):
+    """(id1, id2, jaccard) over distinct (doc_id, gh) grams."""
+    from .dedup import capped_groups, unfold_pairs
+
+    grouped = capped_groups(grams, ("gh",), DF_CAP, min_members=1).persist()
     grouped.createOrReplaceTempView("jac_grouped")
-    return spark.sql("WITH " + _JAC_UNFOLD_TAIL.lstrip())
+    unfold_pairs(grouped).createOrReplaceTempView("jac_pairs")
+    return grams.sparkSession.sql(_JAC_UNFOLD_TAIL)
+
+
+def _q_ngram_jaccard(spark, sf_dir):
+    return ngram_jaccard_df(
+        gram_table(spark, sf_dir, JAC_N, production_hash=True)
+    )
 
 
 QUERIES = {
@@ -727,10 +708,10 @@ ORACLES["docs_decontam_report"] = DECON_REPORT_DUCK
 # (dedup.minhash_signatures_df); the eval side of the band join is
 # tiny by construction (an eval set is thousands of docs) so Catalyst
 # broadcasts it; hot buckets are capped at FUZZY_BUCKET_CAP before
-# the join — and the DuckDB oracle applies the IDENTICAL cap, so the
-# candidate definition matches on both engines at any bucket size
-# (r13 ADVICE: parity previously held only while no fixture bucket
-# exceeded the cap).
+# the join (dedup.drop_hot_keys) — and the DuckDB oracle applies the
+# IDENTICAL cap, so the candidate definition matches on both engines
+# at any bucket size (r13 ADVICE: parity previously held only while
+# no fixture bucket exceeded the cap).
 #
 # RECALL ASYMMETRY (decontam-specific, unlike dedup): dedup tolerates
 # a dropped mega-bucket because connected components restores cliques
@@ -753,7 +734,7 @@ def fuzzy_decontam_df(docs, cap: int | None = FUZZY_BUCKET_CAP, sigs=None):
     from pyspark.sql import functions as F
 
     from .dedup import (
-        _drop_hot_buckets,
+        drop_hot_keys,
         lsh_bands_df,
         minhash_signatures_df,
         shingle_sets,
@@ -763,7 +744,7 @@ def fuzzy_decontam_df(docs, cap: int | None = FUZZY_BUCKET_CAP, sigs=None):
         sigs if sigs is not None else minhash_signatures_df(docs)
     )
     if cap is not None:
-        bands = _drop_hot_buckets(bands, cap)
+        bands = drop_hot_keys(bands, ("band", "bucket"), cap)
     ev = bands.filter(F.col("doc_id") % EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "band", "bucket"
     )

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import catalog
+from .sqlrun import _run
 
 SHINGLE_W = 8
 SHINGLE_STRIDE = 4
@@ -195,24 +196,57 @@ def lsh_bands_df(sigs: DataFrame) -> DataFrame:
 DEFAULT_MAX_BUCKET_SIZE = 256
 
 
-def _drop_hot_buckets(
-    bands: DataFrame, cap: int, keys: tuple[str, str] = ("band", "bucket")
+def drop_hot_keys(
+    rel: DataFrame, keys: tuple[str, ...], cap: int, min_members: int = 1
 ) -> DataFrame:
-    """Drop rows of buckets holding more than ``cap`` members. One
-    partitioned window count (same shuffle key the pair join needs
-    anyway — no extra join back). Recall cost is small by
+    """The one hot-key guard: keep the rows of keys holding between
+    ``min_members`` and ``cap`` rows, by one partitioned window count
+    (``count(*) OVER (PARTITION BY keys)``). It runs before anything
+    buffers a key: WindowExec holds a degenerate key's rows in a
+    buffer that spills to disk, where a post-aggregation
+    ``size(collect_list()) <= cap`` filter would first build the whole
+    member list in one in-memory aggregation buffer. The window
+    hash-partitions on the same keys a following groupBy or equi-join
+    needs, so it rides that exchange. Recall cost is small by
     construction: members of a mega-bucket are near-identical docs
     that almost always ALSO collide in other, smaller band buckets,
     and downstream connected components restores cliques from any
     surviving edge path (measured on the fixture in SCALE.md)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*[F.col(k) for k in keys])
     return (
-        bands.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bsz") <= cap)
-        .drop("_bsz")
+        rel.withColumn("_n", F.count(F.lit(1)).over(w))
+        .filter(F.col("_n").between(min_members, cap))
+        .drop("_n")
     )
+
+
+def capped_groups(
+    rel: DataFrame, keys: tuple[str, ...], cap: int, *, min_members: int
+) -> DataFrame:
+    """(keys..., ids): each kept key's ``doc_id`` members as one sorted
+    array, hard-bounded at ``cap`` because ``drop_hot_keys`` runs
+    first. A key's members must be distinct for ``unfold_pairs`` to
+    emit the self-join's pairs."""
+    return (
+        drop_hot_keys(rel, keys, cap, min_members)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+    )
+
+
+def unfold_pairs(grouped: DataFrame) -> DataFrame:
+    """(doc_a, doc_b): every (a < b) pair of each row's sorted ``ids``,
+    unfolded as one codegen expression — the rows the self-join
+    ``a.key = b.key AND a.doc_id < b.doc_id`` emits, one per key."""
+    return grouped.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ids, (a, i) -> "
+                "transform(slice(ids, i + 2, size(ids)), "
+                "b -> struct(a AS doc_a, b AS doc_b))))"
+            )
+        ).alias("p")
+    ).select("p.doc_a", "p.doc_b")
 
 
 def lsh_pairs_df(
@@ -273,53 +307,19 @@ def _bucket_pairs(
     sweep's per-config bandings) bottoms out in. The hot-bucket cap
     is applied here so no banded family can regress to uncapped.
 
-    Capped shape (round 15, guide §2.2/§2.4): ONE groupBy on the
-    bucket key collects each bucket's members (an array hard-bounded
-    at ``max_bucket_size``), and the (a < b) pairs unfold from the
-    sorted array as a codegen expression. Versus the self-join: ONE
-    exchange of the bands table instead of two plus the cap
-    window's — the sorted-array i<j unfold emits exactly the join's
-    doc_a < doc_b pairs (members are distinct: one bucket per doc
-    per band), and the trailing distinct is unchanged. The uncapped
-    escape hatch (``max_bucket_size=None``) keeps the streaming
-    self-join: with no cap a degenerate bucket must not be
-    materialized as one array.
-
-    Round 16 (VERDICT r15 "what's wrong" #1): the cap is enforced
-    BEFORE the collect — ``_drop_hot_buckets``' partitioned window
-    count (spill-safe: WindowExec buffers a degenerate key's rows in
-    an ExternalAppendOnlyUnsafeRowBuffer that spills to disk) drops
-    over-cap buckets, and only then does the aggregation buffer an
-    array. A round-15-style post-aggregation ``size(ids) <= cap``
-    filter would have buffered a degenerate bucket's ENTIRE member
-    list in one in-memory ObjectHashAggregate buffer before
-    discarding it — fine at sf0.1, an OOM hazard on a 100 TB
-    stop-gram/constant-band key. The window hash-partitions on the
-    same (band, bucket) key the groupBy needs, so the pre-filter
-    rides the ONE exchange (plan: Exchange -> Window -> Filter ->
-    ObjectHashAggregate); kept set identical by construction
-    (``count(*) OVER (PARTITION BY band, bucket) <= cap`` == the old
-    ``size(collect_list()) <= cap``)."""
+    Capped: ``capped_groups`` + ``unfold_pairs`` — ONE exchange of the
+    bands table (the guard's window rides it) instead of the
+    self-join's two plus the window's; members are distinct (one
+    bucket per doc per band). The uncapped escape hatch
+    (``max_bucket_size=None``) keeps the streaming self-join: with no
+    cap a degenerate bucket must not be materialized as one array,
+    and the tests use it as the reference for the capped path."""
     if max_bucket_size is not None:
-        grouped = (
-            _drop_hot_buckets(bands, max_bucket_size)
-            .groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
-        return (
-            grouped.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (a, i) -> "
-                        "transform(slice(ids, i + 2, size(ids)), "
-                        "b -> struct(a AS doc_a, b AS doc_b))))"
-                    )
-                ).alias("p")
+        return unfold_pairs(
+            capped_groups(
+                bands, ("band", "bucket"), max_bucket_size, min_members=2
             )
-            .select("p.doc_a", "p.doc_b")
-            .distinct()
-        )
+        ).distinct()
     a = bands.select(
         F.col("doc_id").alias("doc_a"), "band", "bucket"
     )
@@ -905,16 +905,6 @@ deg AS (
 SELECT degree, CAST(count(*) AS BIGINT) AS n_docs
 FROM deg GROUP BY degree ORDER BY degree
 """
-
-
-def _run(sql: str):
-    def f(spark: SparkSession, sf_dir: str) -> DataFrame:
-        catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(sql)
-
-    return f
 
 
 CONTAINMENT_DUCK = f"""WITH {_SHINGLES_DUCK},
@@ -1516,8 +1506,9 @@ def _q_index_dedup_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-bucket cap on the PERSISTED index (round 9, default-on): a
     # degenerate corpus bucket would otherwise fan every probing batch
     # row out B ways; cap sized above all fixture buckets (hash-stable)
-    idx = _drop_hot_buckets(
-        spark.read.parquet(index_dir), DEFAULT_MAX_BUCKET_SIZE
+    idx = drop_hot_keys(
+        spark.read.parquet(index_dir), ("band", "bucket"),
+        DEFAULT_MAX_BUCKET_SIZE,
     ).select(F.col("doc_id").alias("corpus_doc"), "band", "bucket")
 
     new_bands = lsh_bands_df(sigs.filter(F.col("doc_id") % 10 == 7)).select(
@@ -1922,14 +1913,14 @@ ORDER BY doc_id
 
 
 QUERIES = {
-    "dedup_exact_docs": _run(EXACT_SPARK),
+    "dedup_exact_docs": _run(EXACT_SPARK, ("documents",)),
     "dup_source_overlap": _q_source_overlap,
     "dup_graph_triangles": _q_dup_triangles,
     "minhash_signatures": _q_minhash,
     "minhash_lsh_pairs": _q_lsh_pairs,
     "minhash_jaccard_verify": _q_jaccard,
     "docs_containment_pairs": _q_containment,
-    "simhash_signatures": _run(SIMHASH_SPARK),
+    "simhash_signatures": _run(SIMHASH_SPARK, ("documents",)),
     "dup_graph_degree_stats": _q_degree_stats,
     "minhash_banding_sweep": _q_banding_sweep,
     "docs_index_dedup_newbatch": _q_index_dedup_newbatch,

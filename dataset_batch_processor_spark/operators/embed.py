@@ -382,7 +382,7 @@ ORACLES = {
 # |Q_b| x |D_b| — linear-ish while buckets stay balanced; at corpus
 # scale P grows O(log n) (the dedup.py sign-LSH note) so bucket sizes
 # stay O(duplication density), and hot buckets would be capped by the
-# dedup._drop_hot_buckets lever. Recall is the LSH trade: the gate
+# dedup.drop_hot_keys lever. Recall is the LSH trade: the gate
 # pins both engines to the identical candidate definition, and the
 # test measures recall vs the exact baseline on the fixture.
 
@@ -442,7 +442,7 @@ def _embed_lsh_sql(
     the fixed-P quadratic — the O(log n) rule is a measured row, not
     an extrapolation.
 
-    ``bucket_cap`` (round 14): the dedup._drop_hot_buckets lever made
+    ``bucket_cap`` (round 14): the dedup.drop_hot_keys lever made
     REAL for this operator — the r13 docstring said hot buckets
     "would be" capped; the round-14 study showed one skewed sign
     pattern driving the candidate join to tens of minutes at 16x

@@ -347,11 +347,9 @@ def banded_hamming_pairs(
     evaluates ONCE per plan instead of being re-run by every
     reference (the round-15 shape re-evaluated it up to four times:
     two self-join sides + two verify joins). The banded candidate
-    join is ``dedup._bucket_pairs`` — the guarded bucket unfold (one
-    exchange of the bands, the hot-band cap enforced by a spill-safe
-    window count BEFORE the collect); identical kept set and pair set
-    to the old ``_drop_hot_buckets`` + self-join. The verify joins
-    read the persisted (tiny: one row per image) hash relation."""
+    join is ``dedup._bucket_pairs``, the capped pair primitive over
+    the (band, bucket) key. The verify joins read the persisted
+    (tiny: one row per image) hash relation."""
     from .dedup import _bucket_pairs
 
     hashes = hashes.persist()

@@ -119,8 +119,8 @@ def knn_label_purity(emb: DataFrame, k: int = TOP_K) -> DataFrame:
 
 
 def _q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout (guide §2.5): 1.22 -> 0.94 s at sf0.1; round 16: sized
-    # by rows so Arrow tasks keep >=FANOUT_ROWS_PER_TASK rows
+    # fanout (guide §2.5): 1.22 -> 0.94 s at sf0.1; sized by rows, so
+    # each Arrow task keeps >= catalog.FANOUT_ROWS_PER_TASK rows
     return hard_negatives(
         catalog.fanout(
             catalog.load_table(spark, sf_dir, "embeddings"),
@@ -130,8 +130,8 @@ def _q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout (guide §2.5): 1.09 -> 0.96 s at sf0.1; round 16: sized
-    # by rows so Arrow tasks keep >=FANOUT_ROWS_PER_TASK rows
+    # fanout (guide §2.5): 1.09 -> 0.96 s at sf0.1; sized by rows, so
+    # each Arrow task keeps >= catalog.FANOUT_ROWS_PER_TASK rows
     return knn_label_purity(
         catalog.fanout(
             catalog.load_table(spark, sf_dir, "embeddings"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import catalog
+from .sqlrun import _run
 from .textanalysis import _SW_LIST_SQL
 
 N_CANDIDATES = 4     # rejection sampling best-of-N
@@ -166,16 +167,6 @@ def _sql(engine: str, tail: str, n_cands: int = N_CANDIDATES,
          table: str = "documents") -> str:
     div = "DIV" if engine == "spark" else "//"
     return f"WITH {_chain(engine, n_cands, table)}" + tail.format(div=div)
-
-
-def _run(sql: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(sql)
-
-    return q
 
 
 PREF_PAIRS_SPARK = _sql("spark", _PAIRS_TAIL, 2)
@@ -520,14 +511,14 @@ CALIB_SPARK = _sql("spark", _CALIB_TAIL, 2)
 CALIB_DUCK = _sql("duck", _CALIB_TAIL, 2)
 
 QUERIES = {
-    "docs_pref_pairs": _run(PREF_PAIRS_SPARK),
-    "docs_rejection_sampling": _run(BESTOF_SPARK),
-    "docs_policy_winrate": _run(WINRATE_SPARK),
-    "docs_pref_margin_hist": _run(MARGIN_HIST_SPARK),
+    "docs_pref_pairs": _run(PREF_PAIRS_SPARK, ("documents",)),
+    "docs_rejection_sampling": _run(BESTOF_SPARK, ("documents",)),
+    "docs_policy_winrate": _run(WINRATE_SPARK, ("documents",)),
+    "docs_pref_margin_hist": _run(MARGIN_HIST_SPARK, ("documents",)),
     "docs_policy_bt_strengths": _q_bt_strengths,
-    "docs_reward_ensemble_disagreement": _run(ENSEMBLE_SPARK),
-    "docs_pref_length_bias": _run(LEN_BIAS_SPARK),
-    "docs_margin_agreement_curve": _run(CALIB_SPARK),
+    "docs_reward_ensemble_disagreement": _run(ENSEMBLE_SPARK, ("documents",)),
+    "docs_pref_length_bias": _run(LEN_BIAS_SPARK, ("documents",)),
+    "docs_margin_agreement_curve": _run(CALIB_SPARK, ("documents",)),
 }
 ORACLES = {
     "docs_pref_pairs": PREF_PAIRS_DUCK,

@@ -50,6 +50,7 @@ from math import comb
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import catalog
+from .sqlrun import _run
 
 N_ROLLOUTS = 8
 RESP_CHARS = 40
@@ -225,16 +226,6 @@ def _sql(
     return f"WITH {ctes}" + tail.format(div=div)
 
 
-def _run(sql: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        catalog.load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(sql)
-
-    return q
-
-
 # ------------------------------------- difficulty curriculum card
 # RLVR training orders tasks easy-to-hard (staged difficulty is the
 # standard curriculum for verifiable-reward RL: Bengio et al. 2009
@@ -331,12 +322,12 @@ SRC_PASS_DUCK = _sql("duck", _SRC_TAIL)
 
 
 QUERIES = {
-    "docs_verifier_grade": _run(GRADE_SPARK),
-    "docs_passk_estimate": _run(PASSK_SPARK),
-    "docs_grpo_advantage": _run(GRPO_SPARK),
-    "docs_verifier_dpo_pairs": _run(DPO_SPARK),
+    "docs_verifier_grade": _run(GRADE_SPARK, ("documents",)),
+    "docs_passk_estimate": _run(PASSK_SPARK, ("documents",)),
+    "docs_grpo_advantage": _run(GRPO_SPARK, ("documents",)),
+    "docs_verifier_dpo_pairs": _run(DPO_SPARK, ("documents",)),
     "docs_rlvr_curriculum": _q_rlvr_curriculum,
-    "docs_rlvr_source_passrate": _run(SRC_PASS_SPARK),
+    "docs_rlvr_source_passrate": _run(SRC_PASS_SPARK, ("documents",)),
 }
 ORACLES = {
     "docs_verifier_grade": GRADE_DUCK,
@@ -406,5 +397,5 @@ GROUP BY doc_id
 DIVERSITY_SPARK = _diversity_sql("spark")
 DIVERSITY_DUCK = _diversity_sql("duck")
 
-QUERIES["docs_rollout_diversity"] = _run(DIVERSITY_SPARK)
+QUERIES["docs_rollout_diversity"] = _run(DIVERSITY_SPARK, ("documents",))
 ORACLES["docs_rollout_diversity"] = DIVERSITY_DUCK

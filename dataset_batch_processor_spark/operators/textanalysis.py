@@ -15,9 +15,8 @@ division — deterministic on both engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from .. import catalog
+from .sqlrun import _run
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 _SW_LIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -256,21 +255,6 @@ FROM hashed WHERE fp_rank <= 4
 """
 
 
-def _run(sql: str, fan: bool = False):
-    """``fan=True`` spreads the one-row-group documents scan across
-    the worker slots (catalog.fanout, guide §2.5) — only for queries
-    whose scan stage is a measured CPU-bound chain; cheap queries
-    lose more to the exchange than the fan-out returns."""
-    def f(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = catalog.load_table(spark, sf_dir, "documents")
-        if fan:
-            df = catalog.fanout(df)
-        df.createOrReplaceTempView("documents")
-        return spark.sql(sql)
-
-    return f
-
-
 # --------------------------------- quality-vs-length rank correlation
 # "Is my quality filter just a length filter?" — the curation audit
 # that catches a heuristic score which secretly ranks documents by
@@ -358,12 +342,14 @@ FROM s
 
 
 QUERIES = {
-    "docs_token_stats": _run(TOKEN_STATS_SPARK),
-    "docs_quality_score": _run(QUALITY_SPARK),
+    "docs_token_stats": _run(TOKEN_STATS_SPARK, ("documents",)),
+    "docs_quality_score": _run(QUALITY_SPARK, ("documents",)),
     "docs_quality_length_spearman": _q_quality_length_spearman,
-    "docs_lang_id": _run(LANG_ID_SPARK),
-    "docs_langid_confusion": _run(LANGID_CONFUSION_SPARK),
-    "docs_fingerprint": _run(FINGERPRINT_SPARK, fan=True),  # 1.15->0.91 s
+    "docs_lang_id": _run(LANG_ID_SPARK, ("documents",)),
+    "docs_langid_confusion": _run(LANGID_CONFUSION_SPARK, ("documents",)),
+    "docs_fingerprint": _run(  # fanned: 1.15 -> 0.91 s
+        FINGERPRINT_SPARK, ("documents",), fanout=("documents",)
+    ),
 }
 
 ORACLES = {
@@ -582,7 +568,7 @@ FROM (
 )
 """
 
-QUERIES["docs_repetition_metrics"] = _run(REPETITION_SPARK)
+QUERIES["docs_repetition_metrics"] = _run(REPETITION_SPARK, ("documents",))
 ORACLES["docs_repetition_metrics"] = REPETITION_DUCK
 
 
@@ -641,5 +627,5 @@ GROUP BY doc_id
 ORDER BY doc_id
 """
 
-QUERIES["docs_cdc_chunks"] = _run(CDC_SPARK)
+QUERIES["docs_cdc_chunks"] = _run(CDC_SPARK, ("documents",))
 ORACLES["docs_cdc_chunks"] = CDC_DUCK

@@ -29,10 +29,10 @@ Both stages are engine-friendly at 100 TB:
   codegen, zero shuffles, zero joins, output ~2m/(W+1) values per
   m-gram doc;
 * overlap pairs are the banded-LSH join shape: explode the selected
-  fingerprints, drop hot fingerprints above a cap (same hazard and
-  same fix as dedup._drop_hot_buckets — one boilerplate fingerprint
-  shared by B docs would emit B²/2 pairs), equi-join on the
-  fingerprint value, count shared values per (a < b) pair.
+  fingerprints, drop hot fingerprints above a cap (one boilerplate
+  fingerprint shared by B docs would emit B²/2 pairs) and unfold the
+  (a < b) pairs per fingerprint — dedup.capped_groups + unfold_pairs —
+  then count shared values per pair.
 
 Hash parity: the house md5 28-bit base hash — Spark
 ``conv(substr(md5(g),1,7),16,10)`` == DuckDB
@@ -45,6 +45,11 @@ position-independent.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .. import catalog
+from .dedup import capped_groups, unfold_pairs
 from .sqlrun import _run
 
 WINNOW_K = 4     # tokens per gram
@@ -163,51 +168,37 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _pairs_unfold_spark() -> str:
-    """Round 15b driver entry: the dedup._bucket_pairs shape — one
-    groupBy(fp) collecting each fingerprint's (distinct) doc list
-    and the (a < b) pairs unfolded from the sorted array. ONE
-    evaluation of the winnow chain and one exchange instead of the
-    self-join's two inlined chains + three exchanges. Round 16
-    (VERDICT r15 "what's wrong" #1): the FP_DOC_CAP hot cutoff runs
-    as a partitioned window COUNT *before* the collect, so a
-    degenerate fingerprint (a boilerplate page shared by millions of
-    docs at 100 TB) spills in the disk-backed window buffer and is
-    dropped before any array is built — it never materializes as one
-    in-memory aggregation buffer. The window rides the same fp
-    exchange the groupBy needs; kept set identical (fps emits
-    distinct (doc_id, fp), so count-over-window == the old HAVING).
-    ``_pairs_sql`` stays the self-join spec both dialects share (the
-    oracle spelling); parity pinned by
-    test_winnow_pairs_unfold_matches_self_join."""
-    return f"""
-WITH {_fps_core('spark')},
-grouped AS (
-  SELECT fp, sort_array(collect_list(doc_id)) AS ids
-  FROM (
-    SELECT fp, doc_id, count(*) OVER (PARTITION BY fp) AS df
-    FROM fps
-  ) WHERE df BETWEEN 2 AND {FP_DOC_CAP}
-  GROUP BY fp
-)
-SELECT p.doc_a, p.doc_b, CAST(count(*) AS INT) AS n_shared
-FROM grouped
-LATERAL VIEW explode(flatten(transform(ids, (a, i) ->
-    transform(slice(ids, i + 2, size(ids)),
-              b -> struct(a AS doc_a, b AS doc_b))))) t AS p
-GROUP BY p.doc_a, p.doc_b
-HAVING count(*) >= {MIN_SHARED}
-ORDER BY doc_a, doc_b
-"""
+def overlap_pairs_df(spark: SparkSession) -> DataFrame:
+    """``_pairs_sql``'s rows from the ``documents`` view by dedup's
+    capped pair primitive: ONE evaluation of the winnow chain and one
+    fp exchange instead of the self-join's two inlined chains and
+    three exchanges. ``fps`` emits distinct (doc_id, fp), so the
+    guard's window count is the fingerprint's document frequency.
+    ``_pairs_sql`` stays the self-join spec both dialects share."""
+    fps = spark.sql(f"WITH {_fps_core('spark')} SELECT fp, doc_id FROM fps")
+    pairs = unfold_pairs(
+        capped_groups(fps, ("fp",), FP_DOC_CAP, min_members=2)
+    )
+    return (
+        pairs.groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).cast("int").alias("n_shared"))
+        .filter(F.col("n_shared") >= MIN_SHARED)
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def _q_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fanout: the winnow fingerprint chain is the scan stage and the
+    # one-partition input serialized it (2.81 -> 1.11 s, guide §2.5)
+    catalog.fanout(
+        catalog.load_table(spark, sf_dir, "documents")
+    ).createOrReplaceTempView("documents")
+    return overlap_pairs_df(spark)
 
 
 QUERIES = {
     "docs_winnow_fingerprints": _run(_fp_card_sql("spark"), ("documents",)),
-    # fanout: the winnow fingerprint chain is the scan stage and the
-    # one-partition input serialized it (2.81 -> 1.11 s, guide §2.5)
-    "docs_winnow_overlap_pairs": _run(
-        _pairs_unfold_spark(), ("documents",), fanout=("documents",)
-    ),
+    "docs_winnow_overlap_pairs": _q_overlap_pairs,
 }
 ORACLES = {
     "docs_winnow_fingerprints": _fp_card_sql("duck"),

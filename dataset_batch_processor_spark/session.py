@@ -24,9 +24,10 @@ working set instead.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
+
+from .matcache import scratch_dir
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # The largest registry working set above (one pass in one session,
@@ -83,16 +84,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # static conf: sized by CODEGEN_CACHE_MAX_ENTRIES
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
-        # static conf: managed-table warehouse for bucketed tables
-        # (sources/storage.py); keep it session-unique under tmp
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                tempfile.mkdtemp(prefix="dbp_warehouse_"),
-            ),
-        )
     )
+    # static conf: managed-table warehouse for bucketed tables
+    # (sources/storage.py). Unset, each new session gets its own
+    # scratch directory (removed at exit); a running session keeps its
+    # warehouse, so none is made for it.
+    warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE")
+    if warehouse is None and SparkSession.getActiveSession() is None:
+        warehouse = scratch_dir("dbp_warehouse_")
+    if warehouse is not None:
+        builder = builder.config("spark.sql.warehouse.dir", warehouse)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

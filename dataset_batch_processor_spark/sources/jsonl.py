@@ -80,14 +80,13 @@ ORDER BY o_orderstatus
 
 
 def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str):
-    import tempfile
-
     from .. import catalog
+    from ..matcache import scratch_dir
 
     orders = catalog.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="dbp_jsonl_rt_") + "/orders"
+    path = scratch_dir("dbp_jsonl_rt_") + "/orders"
     orders.write.mode("errorifexists").json(path)
     back = read_jsonl(spark, path, JSONL_ORDERS_SCHEMA)
     back.createOrReplaceTempView("jsonl_orders_rt")

@@ -23,12 +23,11 @@ parquet — any encode/decode corruption breaks the hash match.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..matcache import scratch_dir
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -181,7 +180,7 @@ def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
     )
-    path = tempfile.mkdtemp(prefix="dbp_csv_rt_") + "/orders"
+    path = scratch_dir("dbp_csv_rt_") + "/orders"
     write_csv(orders, path)
     clean, _quar = read_csv(spark, path, CSV_ORDERS_SCHEMA)
     clean.createOrReplaceTempView("csv_orders_rt")
@@ -214,7 +213,7 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag", "l_linestatus", "l_quantity",
         "l_extendedprice", "l_discount",
     )
-    path = tempfile.mkdtemp(prefix="dbp_orc_rt_") + "/lineitem"
+    path = scratch_dir("dbp_orc_rt_") + "/lineitem"
     write_orc(li, path)
     read_orc(spark, path).createOrReplaceTempView("orc_lineitem_rt")
     return spark.sql(_LINEITEM_AGG.format(src="orc_lineitem_rt"))
@@ -245,7 +244,7 @@ def _q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
     )
-    path = tempfile.mkdtemp(prefix="dbp_xml_rt_") + "/orders"
+    path = scratch_dir("dbp_xml_rt_") + "/orders"
     orders.write.format("xml").option("rowTag", "order").save(path)
     back = (
         spark.read.format("xml")

@@ -47,3 +47,26 @@ def test_scratch_root_override(spark, tmp_path):
     finally:
         matcache.set_scratch_root(None)
         matcache.cleanup_scratch()
+
+
+def test_format_roundtrips_leave_no_scratch_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """The four write -> read -> aggregate roundtrip queries stage their
+    files through scratch_dir, so cleanup_scratch() removes them (raw
+    mkdtemp left one copy of orders/lineitem in the temp dir per run).
+    The scratch registry is swapped for an empty one so the cleanup
+    removes nothing the shared session still uses."""
+    import glob
+    import tempfile
+
+    from dataset_batch_processor_spark.sources import jsonl, tabular
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(matcache, "_SCRATCH_DIRS", [])
+    monkeypatch.setattr(matcache, "_CACHE", {})
+    queries = {**tabular.QUERIES, **jsonl.QUERIES}
+    for name in ("csv_roundtrip_orders", "orc_roundtrip_lineitem",
+                 "xml_roundtrip_orders", "jsonl_roundtrip_orders"):
+        assert queries[name](spark, sf_dir).collect()
+    assert glob.glob(str(tmp_path / "dbp_*_rt_*"))
+    matcache.cleanup_scratch()
+    assert not glob.glob(str(tmp_path / "dbp_*_rt_*"))

@@ -132,6 +132,18 @@ def test_codec_roundtrips_fan_out_before_kernel(spark, sf_dir):
     assert "RoundRobinPartitioning" in plan
 
 
+def test_rows_sized_mm_fanout_skips_a_width_one_exchange(spark, sf_dir):
+    """catalog.fanout is the one fan rule: a rows-sized kernel whose
+    input (500 docs / 3 at sf0.001) fills one task keeps the one-file
+    scan's single partition instead of adding a repartition(1)
+    exchange (Spark prints it as SinglePartition, REPARTITION_BY_NUM);
+    the unsized codec fans above still repartition."""
+    from dataset_batch_processor_spark.multimodal import queries as mmq
+
+    df = mmq.QUERIES["mm_audio_features"](spark, sf_dir)
+    assert "REPARTITION_BY_NUM" not in explain.formatted_plan(df)
+
+
 def test_first_last_order_is_one_agg_no_window(spark, sf_dir):
     """The encoded argmax needs exactly one grouping shuffle and no
     window exec (a window formulation would sort every group)."""

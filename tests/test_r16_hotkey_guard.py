@@ -1,161 +1,162 @@
-"""Round 16 (VERDICT r15 "what's wrong" #1): the hot-key cap in the
-pair-unfold pattern must be enforced BEFORE the collect_list, so a
+"""The hot-key guard in front of every pair unfold: ``dedup.drop_hot_keys``
+(alone, or inside ``capped_groups`` + ``unfold_pairs``) must drop a
 degenerate key (a constant band signature over an exact-dup class, a
-stop-gram shared by billions of docs) is dropped by a spill-safe
-window count instead of being buffered as ONE in-memory array in the
-aggregation and only then discarded.
+stop-gram shared by billions of docs) by a spill-safe window count
+BEFORE anything buffers its members, instead of building them as ONE
+in-memory array in the aggregation and only then discarding it.
 
-Pinned here, for each of the three unfold sites (dedup._bucket_pairs,
-decontam._JAC_GROUPED, winnow._pairs_unfold_spark):
+Pinned here:
 
-1. parity on a SYNTHETIC DEGENERATE key (≫ cap members): the unfold
-   emits exactly the self-join spec's rows — the over-cap key's pairs
-   are gone, the under-cap keys' pairs survive untouched;
-2. plan shape: the executed plan runs the partitioned window count
-   BELOW (= before) the collect_list aggregation, i.e. the filter
-   feeds the aggregate, not the other way round.
+1. parity on a SYNTHETIC DEGENERATE key (≫ cap members), once per
+   unfold shape (the banded bucket pairs every LSH family and the image
+   hashes share, the winnow fingerprint pairs, the n-gram Jaccard
+   postings): the unfold emits exactly the self-join spec's rows — the
+   over-cap key's pairs are gone, the under-cap keys' pairs survive;
+2. plan shape, once per caller of the guard: the executed plan runs
+   the partitioned window count BELOW (= before) the operator that
+   buffers a key's members — the collect_list aggregation, or the
+   candidate join where the guarded rows feed a join instead.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
-from dataset_batch_processor_spark.operators import decontam, dedup, winnow
+from dataset_batch_processor_spark import catalog
+from dataset_batch_processor_spark.operators import (
+    decontam,
+    dedup,
+    imagedup,
+    phash,
+    winnow,
+)
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _assert_count_prefilter_feeds_collect(df) -> None:
-    """The tree string prints parents above children: the collect_list
-    aggregate must appear ABOVE the window count (window runs first),
-    and no post-aggregation size(ids) cap filter may remain."""
-    plan = _plan(df)
-    assert "collect_list" in plan, plan
-    assert "windowspecdefinition" in plan, plan
-    agg_at = plan.index("collect_list")
-    win_at = plan.index("windowspecdefinition")
-    assert agg_at < win_at, (
-        "window count must sit below (execute before) the collect "
-        "aggregation:\n" + plan
-    )
+# ------------------------------------------------------------- parity
 
 
-# ------------------------------------------------- dedup._bucket_pairs
-
-
-def _synthetic_bands(spark, cap: int):
-    """One degenerate bucket (cap + 40 members) + two small buckets."""
+def _bucket_case(spark):
+    """One degenerate bucket (cap + 40 members) + two small buckets;
+    spec: the uncapped self-join over the guarded bands."""
+    cap = dedup.DEFAULT_MAX_BUCKET_SIZE
     rows = [(i, 0, 7) for i in range(cap + 40)]
     rows += [(1000 + i, 1, 11) for i in range(3)]
     rows += [(2000 + i, 2, 13) for i in range(4)]
-    return spark.createDataFrame(rows, "doc_id long, band int, bucket long")
-
-
-def test_bucket_pairs_degenerate_bucket_dropped_before_collect(spark):
-    cap = dedup.DEFAULT_MAX_BUCKET_SIZE
-    bands = _synthetic_bands(spark, cap)
-    got = sorted(
-        (r.doc_a, r.doc_b) for r in dedup._bucket_pairs(bands, cap).collect()
+    bands = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
+    got = dedup._bucket_pairs(bands, cap)
+    spec = dedup._bucket_pairs(
+        dedup.drop_hot_keys(bands, ("band", "bucket"), cap), None
     )
-    # spec: the uncapped self-join over the under-cap buckets only
-    spec = sorted(
-        (r.doc_a, r.doc_b)
-        for r in dedup._bucket_pairs(
-            dedup._drop_hot_buckets(bands, cap), None
-        ).collect()
-    )
-    assert got == spec
-    # the two small buckets: 3 and 4 members -> 3 + 6 pairs
-    assert len(got) == 3 + 6
-    assert not any(b < 1000 for _, b in got), "degenerate-bucket pair leaked"
+
+    def shape_ok(pairs):
+        # the two small buckets: 3 and 4 members -> 3 + 6 pairs
+        return len(pairs) == 3 + 6 and not any(b < 1000 for _, b in pairs)
+
+    return got, spec, shape_ok
 
 
-def test_bucket_pairs_plan_counts_before_collect(spark):
-    bands = _synthetic_bands(spark, dedup.DEFAULT_MAX_BUCKET_SIZE)
-    _assert_count_prefilter_feeds_collect(dedup._bucket_pairs(bands))
-
-
-# ------------------------------------------- winnow pair unfold (SQL)
-
-
-def _winnow_docs(spark, n_hot: int):
+def _winnow_case(spark):
     """n_hot docs sharing one fingerprint class (over cap) + one
-    under-cap pair of similar docs."""
+    under-cap pair of similar docs; spec: ``_pairs_sql``'s self-join."""
     base = "alpha beta gamma delta epsilon zeta eta theta " * 6
-    rows = [(i, base) for i in range(n_hot)]
+    rows = [(i, base) for i in range(winnow.FP_DOC_CAP + 20)]
     tail = "iota kappa lam mu nu xi omicron pi " * 6
     rows += [(5000, tail + "rho"), (5001, tail + "sigma")]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    spark.createDataFrame(
+        rows, "doc_id long, text string"
+    ).createOrReplaceTempView("documents")
+    got = winnow.overlap_pairs_df(spark)
+    spec = spark.sql(winnow._pairs_sql("spark"))
+
+    def shape_ok(pairs):
+        return any(r[0] == 5000 and r[1] == 5001 for r in pairs) and not any(
+            r[0] < 5000 and r[1] < 5000 for r in pairs
+        )
+
+    return got, spec, shape_ok
 
 
-def test_winnow_unfold_degenerate_fp_matches_self_join_spec(spark):
-    docs = _winnow_docs(spark, winnow.FP_DOC_CAP + 20)
-    docs.createOrReplaceTempView("documents")
-    spec = sorted(
-        tuple(r) for r in spark.sql(winnow._pairs_sql("spark")).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in spark.sql(winnow._pairs_unfold_spark()).collect()
-    )
-    assert got == spec
-    # the under-cap pair must have survived; no hot-class pair may
-    assert any(r[0] == 5000 and r[1] == 5001 for r in got)
-    assert not any(r[0] < 5000 and r[1] < 5000 for r in got)
-
-
-def test_winnow_unfold_plan_counts_before_collect(spark):
-    docs = _winnow_docs(spark, winnow.FP_DOC_CAP + 20)
-    docs.createOrReplaceTempView("documents")
-    _assert_count_prefilter_feeds_collect(
-        spark.sql(winnow._pairs_unfold_spark())
-    )
-
-
-# --------------------------------------- ngram-Jaccard unfold (SQL)
-
-
-def _jac_grams_view(spark, n_hot: int) -> None:
-    """Synthetic documents: one gram class shared by n_hot docs (over
-    DF_CAP) + two docs sharing an under-cap gram set; jac_grams built
-    through the module's own grams CTE."""
+def _jaccard_case(spark):
+    """One gram class shared by n_hot docs (over DF_CAP) + two docs
+    sharing an under-cap gram set, grams built through the module's own
+    grams CTE; spec: the classic df + self-join tail."""
     hot = " ".join(f"w{j}" for j in range(decontam.JAC_N))
     cold = " ".join(f"c{j}" for j in range(decontam.JAC_N))
-    rows = [(i, hot) for i in range(n_hot)]
+    rows = [(i, hot) for i in range(decontam.DF_CAP + 25)]
     rows += [(9000, cold), (9001, cold)]
     spark.createDataFrame(
         rows, "doc_id long, text string"
     ).createOrReplaceTempView("documents")
-    spark.sql(
+    grams = spark.sql(
         "WITH " + decontam._grams_cte_spark(decontam.JAC_N)
         + " SELECT * FROM grams"
-    ).createOrReplaceTempView("jac_grams")
-
-
-def test_jac_unfold_degenerate_gram_matches_spec(spark):
-    _jac_grams_view(spark, decontam.DF_CAP + 25)
-    grouped = spark.sql(decontam._JAC_GROUPED)
-    grouped.createOrReplaceTempView("jac_grouped")
-    got = sorted(
-        tuple(r)
-        for r in spark.sql(
-            "WITH " + decontam._JAC_UNFOLD_TAIL.lstrip()
-        ).collect()
     )
-    # spec: the classic df + self-join tail over the same grams
-    spec = sorted(
-        tuple(r)
-        for r in spark.sql(
-            "WITH grams AS (SELECT * FROM jac_grams),\n"
-            + decontam._JAC_TAIL.lstrip()
-        ).collect()
+    grams.createOrReplaceTempView("jac_grams")
+    got = decontam.ngram_jaccard_df(grams)
+    spec = spark.sql(
+        "WITH grams AS (SELECT * FROM jac_grams),\n"
+        + decontam._JAC_TAIL.lstrip()
     )
-    assert got == spec
-    assert got == [(9000, 9001, 1.0)]
+    return got, spec, lambda pairs: pairs == [(9000, 9001, 1.0)]
 
 
-def test_jac_grouped_plan_counts_before_collect(spark):
-    _jac_grams_view(spark, decontam.DF_CAP + 25)
-    _assert_count_prefilter_feeds_collect(spark.sql(decontam._JAC_GROUPED))
+@pytest.mark.parametrize(
+    "case",
+    [_bucket_case, _winnow_case, _jaccard_case],
+    ids=["bucket_pairs", "winnow", "ngram_jaccard"],
+)
+def test_degenerate_key_unfold_matches_self_join_spec(spark, case):
+    got, spec, shape_ok = case(spark)
+    got_rows = sorted(tuple(r) for r in got.collect())
+    assert got_rows == sorted(tuple(r) for r in spec.collect())
+    assert shape_ok(got_rows), got_rows
+
+
+# ---------------------------------------------------------- plan pin
+
+
+# (caller, frame builder, the guarded key's first column, the operator
+# that buffers a key's members)
+_CALLERS = [
+    ("kperm_lsh",
+     lambda s, d: dedup.lsh_pairs_df(catalog.load_table(s, d, "documents")),
+     "band", "collect_list"),
+    ("oph_lsh", dedup.QUERIES["minhash_oph_pairs"], "band", "collect_list"),
+    ("img_dhash", imagedup.QUERIES["img_dhash_near_dup_pairs"], "band",
+     "collect_list"),
+    ("img_phash", phash.QUERIES["img_phash_near_dup_pairs"], "band",
+     "collect_list"),
+    ("winnow", winnow.QUERIES["docs_winnow_overlap_pairs"], "fp",
+     "collect_list"),
+    ("ngram_jaccard", decontam.QUERIES["docs_ngram_jaccard_pairs"], "gh",
+     "collect_list"),
+    ("fuzzy_decontam", decontam.QUERIES["docs_fuzzy_decontam"], "band",
+     "BroadcastHashJoin"),
+    ("index_dedup", dedup.QUERIES["docs_index_dedup_newbatch"], "band",
+     "Join"),
+]
+
+
+@pytest.mark.parametrize(
+    "build,key,buffer_op",
+    [c[1:] for c in _CALLERS],
+    ids=[c[0] for c in _CALLERS],
+)
+def test_window_count_runs_below_the_buffering_operator(
+    spark, sf_dir, build, key, buffer_op
+):
+    """The tree string prints parents above children: the buffering
+    operator must appear ABOVE the guard's window count over ``key``
+    (the window runs first)."""
+    plan = _plan(build(spark, sf_dir))
+    guard = f"windowspecdefinition({key}#"
+    assert buffer_op in plan, plan
+    assert guard in plan, plan
+    assert plan.index(buffer_op) < plan.index(guard), (
+        f"window count must sit below (execute before) {buffer_op}:\n"
+        + plan
+    )

@@ -129,3 +129,18 @@ def test_coverage_doc_never_claims_rows_only_when_ledger_is_clean():
             f"fully hash-gated: {phrase!r} — fix the doc (or the "
             f"query actually regressed to rows-only; gate it)."
         )
+
+
+def test_package_reads_only_deployment_env_settings():
+    """Tuning constants live in code, next to the measurement that
+    sized them; the environment carries only deployment settings (the
+    core count and the warehouse path). An env-tunable constant is one
+    more configuration nothing tests or benchmarks."""
+    pkg = os.path.join(REPO, "dataset_batch_processor_spark")
+    seen: set[str] = set()
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as fh:
+                    seen |= set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", fh.read()))
+    assert seen <= {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_WAREHOUSE"}, sorted(seen)
