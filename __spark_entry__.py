@@ -199,6 +199,24 @@ def _q_caption_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Every module that registers queries, in registry order: each
+# contributes its QUERIES to queries() and its ORACLES to oracle_sql().
+_MODULES = (
+    dedup_ops, agreement, ragchunk, winnow, pii, components, decontam,
+    corpusstats, similarity, funnel, webquality, curationfunnel, phash,
+    dedupdash, events_ops, textanalysis, textclean, dsir, boilerplate,
+    mlfilter, merge_ops, setops, tpch, windows, embdup, lmscore, imagedup,
+    pca, mining, feathash, cms, histsketch, search, quantize, temporal,
+    curation, mm_queries, storage_ops, tabular_ops, jsonl_ops, stream_check,
+    stream_drift, analytics, dataops, doremi, pq, ivfpq, recall, substring,
+    stream_inc, stream_qg, stream_cvg, stream_qt, stream_rvg, stream_cng,
+    stream_hlg, stream_pfg, linkage, semdedup, bpe, lmobjectives, coreset,
+    perceptron, chat, chatvalidate, langid, preference, rlvr, canary, embed,
+    batching, hll, matryoshka, mmr, datacard, ffdpack, icp, recipe,
+    curriculum, stream_turndedup, mm_alignment,
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # --- reference parity (SURVEY.md §2) ---
@@ -225,87 +243,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_json_extract": relational.events_json_extract,
         "orders_running_total": relational.orders_running_total,
     }
-    q.update(dedup_ops.QUERIES)
-    q.update(agreement.QUERIES)
-    q.update(ragchunk.QUERIES)
-    q.update(winnow.QUERIES)
-    q.update(pii.QUERIES)
-    q.update(components.QUERIES)
-    q.update(decontam.QUERIES)
-    q.update(corpusstats.QUERIES)
-    q.update(similarity.QUERIES)
-    q.update(funnel.QUERIES)
-    q.update(webquality.QUERIES)
-    q.update(curationfunnel.QUERIES)
-    q.update(phash.QUERIES)
-    q.update(dedupdash.QUERIES)
-    q.update(events_ops.QUERIES)
-    q.update(textanalysis.QUERIES)
-    q.update(textclean.QUERIES)
-    q.update(dsir.QUERIES)
-    q.update(boilerplate.QUERIES)
-    q.update(mlfilter.QUERIES)
-    q.update(merge_ops.QUERIES)
-    q.update(setops.QUERIES)
-    q.update(tpch.QUERIES)
-    q.update(windows.QUERIES)
-    q.update(embdup.QUERIES)
-    q.update(lmscore.QUERIES)
-    q.update(imagedup.QUERIES)
-    q.update(pca.QUERIES)
-    q.update(mining.QUERIES)
-    q.update(feathash.QUERIES)
-    q.update(cms.QUERIES)
-    q.update(histsketch.QUERIES)
-    q.update(search.QUERIES)
-    q.update(quantize.QUERIES)
-    q.update(temporal.QUERIES)
-    q.update(curation.QUERIES)
-    q.update(mm_queries.QUERIES)
-    q.update(storage_ops.QUERIES)
-    q.update(tabular_ops.QUERIES)
-    q.update(jsonl_ops.QUERIES)
-    q.update(stream_check.QUERIES)
-    q.update(stream_drift.QUERIES)
-    q.update(analytics.QUERIES)
-    q.update(dataops.QUERIES)
-    q.update(doremi.QUERIES)
-    q.update(pq.QUERIES)
-    q.update(ivfpq.QUERIES)
-    q.update(recall.QUERIES)
-    q.update(substring.QUERIES)
-    q.update(stream_inc.QUERIES)
-    q.update(stream_qg.QUERIES)
-    q.update(stream_cvg.QUERIES)
-    q.update(stream_qt.QUERIES)
-    q.update(stream_rvg.QUERIES)
-    q.update(stream_cng.QUERIES)
-    q.update(stream_hlg.QUERIES)
-    q.update(stream_pfg.QUERIES)
-    q.update(linkage.QUERIES)
-    q.update(semdedup.QUERIES)
-    q.update(bpe.QUERIES)
-    q.update(lmobjectives.QUERIES)
-    q.update(coreset.QUERIES)
-    q.update(perceptron.QUERIES)
-    q.update(chat.QUERIES)
-    q.update(chatvalidate.QUERIES)
-    q.update(langid.QUERIES)
-    q.update(preference.QUERIES)
-    q.update(rlvr.QUERIES)
-    q.update(canary.QUERIES)
-    q.update(embed.QUERIES)
-    q.update(batching.QUERIES)
-    q.update(hll.QUERIES)
-    q.update(matryoshka.QUERIES)
-    q.update(mmr.QUERIES)
-    q.update(datacard.QUERIES)
-    q.update(ffdpack.QUERIES)
-    q.update(icp.QUERIES)
-    q.update(recipe.QUERIES)
-    q.update(curriculum.QUERIES)
-    q.update(stream_turndedup.QUERIES)
-    q.update(mm_alignment.QUERIES)
+    for mod in _MODULES:
+        q.update(mod.QUERIES)
     return q
 
 
@@ -364,85 +303,6 @@ FROM images_meta GROUP BY 1
         "events_json_extract": relational.EVENTS_JSON_SQL,
         "orders_running_total": relational.ORDERS_RUNNING_SQL,
     }
-    o.update(dedup_ops.ORACLES)
-    o.update(agreement.ORACLES)
-    o.update(ragchunk.ORACLES)
-    o.update(winnow.ORACLES)
-    o.update(pii.ORACLES)
-    o.update(components.ORACLES)
-    o.update(decontam.ORACLES)
-    o.update(corpusstats.ORACLES)
-    o.update(similarity.ORACLES)
-    o.update(funnel.ORACLES)
-    o.update(webquality.ORACLES)
-    o.update(curationfunnel.ORACLES)
-    o.update(phash.ORACLES)
-    o.update(dedupdash.ORACLES)
-    o.update(events_ops.ORACLES)
-    o.update(textanalysis.ORACLES)
-    o.update(textclean.ORACLES)
-    o.update(dsir.ORACLES)
-    o.update(boilerplate.ORACLES)
-    o.update(mlfilter.ORACLES)
-    o.update(merge_ops.ORACLES)
-    o.update(setops.ORACLES)
-    o.update(tpch.ORACLES)
-    o.update(windows.ORACLES)
-    o.update(embdup.ORACLES)
-    o.update(lmscore.ORACLES)
-    o.update(imagedup.ORACLES)
-    o.update(pca.ORACLES)
-    o.update(mining.ORACLES)
-    o.update(feathash.ORACLES)
-    o.update(cms.ORACLES)
-    o.update(histsketch.ORACLES)
-    o.update(search.ORACLES)
-    o.update(quantize.ORACLES)
-    o.update(temporal.ORACLES)
-    o.update(curation.ORACLES)
-    o.update(mm_queries.ORACLES)
-    o.update(storage_ops.ORACLES)
-    o.update(tabular_ops.ORACLES)
-    o.update(jsonl_ops.ORACLES)
-    o.update(stream_check.ORACLES)
-    o.update(stream_drift.ORACLES)
-    o.update(analytics.ORACLES)
-    o.update(dataops.ORACLES)
-    o.update(doremi.ORACLES)
-    o.update(pq.ORACLES)
-    o.update(ivfpq.ORACLES)
-    o.update(recall.ORACLES)
-    o.update(substring.ORACLES)
-    o.update(stream_inc.ORACLES)
-    o.update(stream_qg.ORACLES)
-    o.update(stream_cvg.ORACLES)
-    o.update(stream_qt.ORACLES)
-    o.update(stream_rvg.ORACLES)
-    o.update(stream_cng.ORACLES)
-    o.update(stream_hlg.ORACLES)
-    o.update(stream_pfg.ORACLES)
-    o.update(linkage.ORACLES)
-    o.update(semdedup.ORACLES)
-    o.update(bpe.ORACLES)
-    o.update(lmobjectives.ORACLES)
-    o.update(coreset.ORACLES)
-    o.update(perceptron.ORACLES)
-    o.update(chat.ORACLES)
-    o.update(chatvalidate.ORACLES)
-    o.update(langid.ORACLES)
-    o.update(preference.ORACLES)
-    o.update(rlvr.ORACLES)
-    o.update(canary.ORACLES)
-    o.update(embed.ORACLES)
-    o.update(batching.ORACLES)
-    o.update(hll.ORACLES)
-    o.update(matryoshka.ORACLES)
-    o.update(mmr.ORACLES)
-    o.update(datacard.ORACLES)
-    o.update(ffdpack.ORACLES)
-    o.update(icp.ORACLES)
-    o.update(recipe.ORACLES)
-    o.update(curriculum.ORACLES)
-    o.update(stream_turndedup.ORACLES)
-    o.update(mm_alignment.ORACLES)
+    for mod in _MODULES:
+        o.update(mod.ORACLES)
     return o

@@ -86,7 +86,9 @@ def fanout(df: DataFrame, rows: int | None = None) -> DataFrame:
     class, the fan width is capped at rows / FANOUT_ROWS_PER_TASK so
     tasks never shrink below the batch size where the Python
     round-trip dominates; omitted, the fan is full width (right for
-    the heavy md5/gram chains)."""
+    the heavy md5/gram chains). The multimodal fixture queries pick
+    one or the other through ``multimodal.qcommon.per_doc``'s
+    ``sized`` flag rather than passing ``rows`` themselves."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     if rows is not None:

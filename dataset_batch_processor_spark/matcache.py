@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple[str, str, str], str] = {}
 _SCRATCH_DIRS: list[str] = []
+_SESSION_DIRS: list[str] = []
 _LOCK = threading.Lock()
 _SCRATCH_ROOT: str | None = None
 
@@ -40,8 +41,9 @@ def set_scratch_root(root: str | None) -> None:
 
 def cleanup_scratch() -> None:
     """Remove every scratch directory this process created and drop
-    the cache. Registered via ``atexit``; a service tearing down a
-    session may also call it directly."""
+    the cache. Registered via ``atexit``; a service may also call it
+    directly. ``session_dir`` directories are not scratch: they stay
+    until exit."""
     with _LOCK:
         dirs, _SCRATCH_DIRS[:] = list(_SCRATCH_DIRS), []
         _CACHE.clear()
@@ -60,6 +62,25 @@ def scratch_dir(prefix: str) -> str:
     with _LOCK:
         _SCRATCH_DIRS.append(d)
     return d
+
+
+def session_dir(prefix: str) -> str:
+    """mkdtemp under the configured scratch root for a directory a
+    session holds for its whole life (its managed-table warehouse).
+    Removed at process exit, never by ``cleanup_scratch``: a service
+    may clear scratch while the session keeps writing tables there."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+    with _LOCK:
+        _SESSION_DIRS.append(d)
+    return d
+
+
+def _remove_session_dirs() -> None:
+    for d in _SESSION_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+atexit.register(_remove_session_dirs)
 
 
 def invalidate_exact(kind: str) -> None:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from .qcommon import per_doc
 
 
 # WAV analogue of the PNG roundtrip: deterministic int16 ramp per doc,
@@ -25,40 +26,23 @@ WAV_ROUNDTRIP_SCHEMA = (
 )
 
 
-def _q_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _wav_samples(d: int):
+    """The shared audio lattice: ``d % 500 + 100`` int16 ramp samples."""
     import numpy as np
 
+    i = np.arange(d % 500 + 100, dtype=np.int64)
+    return ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
+
+
+def _q_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents"),
-    )
+    def row(d):
+        data = av.encode_wav(_wav_samples(d), sample_rate=16_000)
+        dec, rate = av.AUDIO_CODECS["wav"](data)
+        yield d, int(rate), int(len(dec)), int(dec.astype("int64").sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                data = av.encode_wav(samples, sample_rate=16_000)
-                dec, rate = av.AUDIO_CODECS["wav"](data)
-                out.append(
-                    {
-                        "doc_id": d,
-                        "sample_rate": int(rate),
-                        "n_samples": int(len(dec)),
-                        "sample_sum": int(dec.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_samples", "sample_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=WAV_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, WAV_ROUNDTRIP_SCHEMA, row, sized=True)
 
 
 WAV_ROUNDTRIP_DUCK = """
@@ -81,37 +65,23 @@ FROM documents
 # are all correctly-rounded IEEE — bit-identical in numpy and DuckDB.
 
 
-def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
+def _wav_row(d: int):
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
+    yield str(d), "wav", av.encode_wav(_wav_samples(d), sample_rate=16_000)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "wav",
-                        "content": av.encode_wav(samples, sample_rate=16_000),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
 
-    vids = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
-    return av.audio_features(vids)
+def _wavs(spark: SparkSession, sf_dir: str, rem: int) -> DataFrame:
+    """WAV files of the shared lattice for the ``doc_id % 3 == rem``
+    slice, as the (id, fmt, content) frame the av operators take."""
+    return per_doc(spark, sf_dir, "id string, fmt string, content binary",
+                   _wav_row, mod=3, rem=rem, sized=True)
+
+
+def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from . import av
+
+    return av.audio_features(_wavs(spark, sf_dir, 0))
 
 
 AUDIO_FEATURES_DUCK = """
@@ -148,36 +118,9 @@ _VAD_THRESH = 22_900_000_000  # ~the all-x̄-uniform mean frame energy
 
 
 def _q_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 1)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "wav",
-                        "content": av.encode_wav(samples, sample_rate=16_000),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    wavs = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
-    return av.vad_segments(wavs, energy_thresh=_VAD_THRESH)
+    return av.vad_segments(_wavs(spark, sf_dir, 1), energy_thresh=_VAD_THRESH)
 
 
 VAD_SEGMENTS_DUCK = f"""
@@ -235,36 +178,9 @@ ORDER BY id, seg_idx
 
 
 def _q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 2)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "wav",
-                        "content": av.encode_wav(samples, sample_rate=16_000),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    wavs = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
-    return av.spectral_features(wavs)
+    return av.spectral_features(_wavs(spark, sf_dir, 2))
 
 
 def _audio_spectral_duck() -> str:
@@ -321,36 +237,9 @@ FROM pl
 
 
 def _q_audio_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 1)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "wav",
-                        "content": av.encode_wav(samples, sample_rate=16_000),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    wavs = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
-    return av.normalize_peak(wavs)
+    return av.normalize_peak(_wavs(spark, sf_dir, 1))
 
 
 # ------------------------------------------ rational audio resampling
@@ -362,36 +251,9 @@ def _q_audio_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 2)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 500 + 100
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 31 + i * 7) % 65536 - 32768).astype(np.int16)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "wav",
-                        "content": av.encode_wav(samples, sample_rate=16_000),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    wavs = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
-    return av.resample_linear(wavs, p=3, q=2)
+    return av.resample_linear(_wavs(spark, sf_dir, 2), p=3, q=2)
 
 
 AUDIO_RESAMPLE_DUCK = """
@@ -599,87 +461,62 @@ def _q_wav_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av as avmod
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 9 == 1)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 9,
-    )
+    def riff(code, bits, payload, rate):
+        fmt = _struct.pack(
+            "<HHIIHH", code, 1, rate, rate * bits // 8, bits // 8, bits
+        )
+        out = (b"WAVE" + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
+               + b"data" + _struct.pack("<I", len(payload)) + payload)
+        if len(payload) % 2:
+            out += b"\x00"
+        return b"RIFF" + _struct.pack("<I", len(out)) + out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def riff(code, bits, payload, rate):
-            fmt = _struct.pack(
-                "<HHIIHH", code, 1, rate, rate * bits // 8, bits // 8, bits
-            )
-            out = (b"WAVE" + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                   + b"data" + _struct.pack("<I", len(payload)) + payload)
-            if len(payload) % 2:
-                out += b"\x00"
-            return b"RIFF" + _struct.pack("<I", len(out)) + out
+    def row(d):
+        n = d % 50 + 10
+        rate = (8000, 16000, 44100)[d % 3]
+        branch = (d // 9) % 6
+        i = np.arange(n, dtype=np.int64)
+        if branch == 0:
+            v = (d * 7 + i * 13) % 256
+            payload = v.astype(np.uint8).tobytes()
+            code, bits = 1, 8
+            expect = ((v - 128) << 8).astype(np.int16)
+        elif branch == 1:
+            u = (d * 11 + i * 17) % 65536
+            expect = np.where(u >= 32768, u - 65536, u).astype(np.int16)
+            payload = expect.astype("<i2").tobytes()
+            code, bits = 1, 16
+        elif branch == 2:
+            u = (d * 13 + i * 101) % (1 << 24)
+            payload = b"".join(int(x).to_bytes(3, "little") for x in u)
+            code, bits = 1, 24
+            expect = (
+                ((u + (1 << 23)) % (1 << 24)) // 256 - 32768
+            ).astype(np.int16)
+        elif branch == 3:
+            u = (d * 19 + i * 333) % (1 << 32)
+            payload = u.astype("<u4").tobytes()
+            code, bits = 1, 32
+            expect = (
+                ((u + (1 << 31)) % (1 << 32)) // 65536 - 32768
+            ).astype(np.int16)
+        elif branch == 4:
+            c = ((d * 5 + i * 29) % 256).astype(np.uint8)
+            payload = c.tobytes()
+            code, bits = 7, 8
+            expect = avmod.mulaw_expand(c)
+        else:
+            c = ((d * 5 + i * 29) % 256).astype(np.uint8)
+            payload = c.tobytes()
+            code, bits = 6, 8
+            expect = avmod.alaw_expand(c)
+        dec, got_rate = avmod.decode_wav(riff(code, bits, payload, rate))
+        yield (d, _WAV_BRANCHES[branch], n, int(got_rate),
+               bool(np.array_equal(dec, expect)),
+               int(dec.astype(np.int64).sum()))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 50 + 10
-                rate = (8000, 16000, 44100)[d % 3]
-                branch = (d // 9) % 6
-                i = np.arange(n, dtype=np.int64)
-                if branch == 0:
-                    v = (d * 7 + i * 13) % 256
-                    payload = v.astype(np.uint8).tobytes()
-                    code, bits = 1, 8
-                    expect = ((v - 128) << 8).astype(np.int16)
-                elif branch == 1:
-                    u = (d * 11 + i * 17) % 65536
-                    expect = np.where(u >= 32768, u - 65536, u).astype(
-                        np.int16
-                    )
-                    payload = expect.astype("<i2").tobytes()
-                    code, bits = 1, 16
-                elif branch == 2:
-                    u = (d * 13 + i * 101) % (1 << 24)
-                    payload = b"".join(
-                        int(x).to_bytes(3, "little") for x in u
-                    )
-                    code, bits = 1, 24
-                    expect = (
-                        ((u + (1 << 23)) % (1 << 24)) // 256 - 32768
-                    ).astype(np.int16)
-                elif branch == 3:
-                    u = (d * 19 + i * 333) % (1 << 32)
-                    payload = u.astype("<u4").tobytes()
-                    code, bits = 1, 32
-                    expect = (
-                        ((u + (1 << 31)) % (1 << 32)) // 65536 - 32768
-                    ).astype(np.int16)
-                elif branch == 4:
-                    c = ((d * 5 + i * 29) % 256).astype(np.uint8)
-                    payload = c.tobytes()
-                    code, bits = 7, 8
-                    expect = avmod.mulaw_expand(c)
-                else:
-                    c = ((d * 5 + i * 29) % 256).astype(np.uint8)
-                    payload = c.tobytes()
-                    code, bits = 6, 8
-                    expect = avmod.alaw_expand(c)
-                dec, got_rate = avmod.decode_wav(riff(code, bits, payload,
-                                                      rate))
-                out.append({
-                    "doc_id": d,
-                    "codec": _WAV_BRANCHES[branch],
-                    "n_samples": n,
-                    "rate": int(got_rate),
-                    "decode_exact": bool(np.array_equal(dec, expect)),
-                    "sample_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "codec", "n_samples", "rate",
-                         "decode_exact", "sample_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=WAV_DEPTHS_SCHEMA)
+    return per_doc(spark, sf_dir, WAV_DEPTHS_SCHEMA, row, mod=9, rem=1,
+                   sized=True)
 
 
 # closed-form int16 normalization per branch; G.711 expansion spelled

@@ -8,13 +8,9 @@ on deterministic per-doc fixtures.
 """
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import catalog
+from .qcommon import per_doc
 
 
 
@@ -35,33 +31,15 @@ def _q_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 16 + 4, d % 13 + 4
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        dec = binary.decode_any("png", png.encode_png(arr, filter_type=d % 5))
+        yield (d, int(dec.shape[1]), int(dec.shape[0]),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 16 + 4, d % 13 + 4
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                data = png.encode_png(arr, filter_type=d % 5)
-                dec = binary.decode_any("png", data)
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(dec.shape[1]),
-                        "height": int(dec.shape[0]),
-                        "pix_sum": int(dec.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pix_sum"]
-            )
-
-    return docs.mapInPandas(run, schema=PNG_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, PNG_ROUNDTRIP_SCHEMA, row)
 
 
 PNG_ROUNDTRIP_DUCK = """
@@ -89,33 +67,16 @@ def _q_png_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 16 + 1, d % 13 + 1
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        data = png.encode_png(arr, filter_type=d % 5, interlace=True)
+        dec = binary.decode_any("png", data)
+        yield (d, int(dec.shape[1]), int(dec.shape[0]),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 16 + 1, d % 13 + 1
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                data = png.encode_png(arr, filter_type=d % 5, interlace=True)
-                dec = binary.decode_any("png", data)
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(dec.shape[1]),
-                        "height": int(dec.shape[0]),
-                        "pix_sum": int(dec.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pix_sum"]
-            )
-
-    return docs.mapInPandas(run, schema=PNG_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, PNG_ROUNDTRIP_SCHEMA, row)
 
 
 PNG_INTERLACED_ROUNDTRIP_DUCK = """
@@ -146,38 +107,19 @@ def _q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 24 + 8, d % 17 + 8
+        y, x = np.mgrid[0:h, 0:w]
+        # smooth ramps only (no modular wrap): wrap edges ring
+        # under DCT quantization and break the error bound
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        dec = binary.decode_any("jpg", jpeg.encode_jpeg(arr, quality=85))
+        err = int(np.abs(dec.astype(int) - arr.astype(int)).max())
+        yield d, int(dec.shape[1]), int(dec.shape[0]), bool(err <= 8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 8, d % 17 + 8
-                y, x = np.mgrid[0:h, 0:w]
-                # smooth ramps only (no modular wrap): wrap edges ring
-                # under DCT quantization and break the error bound
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50],
-                    axis=2,
-                ).astype(np.uint8)
-                dec = binary.decode_any("jpg", jpeg.encode_jpeg(arr, quality=85))
-                err = int(np.abs(dec.astype(int) - arr.astype(int)).max())
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(dec.shape[1]),
-                        "height": int(dec.shape[0]),
-                        "within_tol": bool(err <= 8),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "within_tol"]
-            )
-
-    return docs.mapInPandas(run, schema=JPEG_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, JPEG_ROUNDTRIP_SCHEMA, row)
 
 
 JPEG_ROUNDTRIP_DUCK = """
@@ -206,44 +148,21 @@ def _q_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 21 + 6, d % 15 + 6
+        y, x = np.mgrid[0:h, 0:w]
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        prog = binary.decode_any(
+            "jpg", jpeg.encode_jpeg_progressive(arr, quality=85)
+        )
+        base = binary.decode_any("jpg", jpeg.encode_jpeg(arr, quality=85))
+        err = int(np.abs(prog.astype(int) - arr.astype(int)).max())
+        yield (d, int(prog.shape[1]), int(prog.shape[0]), bool(err <= 8),
+               bool(np.array_equal(prog, base)))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 21 + 6, d % 15 + 6
-                y, x = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50],
-                    axis=2,
-                ).astype(np.uint8)
-                prog = binary.decode_any(
-                    "jpg", jpeg.encode_jpeg_progressive(arr, quality=85)
-                )
-                base = binary.decode_any(
-                    "jpg", jpeg.encode_jpeg(arr, quality=85)
-                )
-                err = int(np.abs(prog.astype(int) - arr.astype(int)).max())
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(prog.shape[1]),
-                        "height": int(prog.shape[0]),
-                        "within_tol": bool(err <= 8),
-                        "prog_eq_base": bool(np.array_equal(prog, base)),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "within_tol",
-                         "prog_eq_base"],
-            )
-
-    return docs.mapInPandas(run, schema=PROG_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, PROG_ROUNDTRIP_SCHEMA, row)
 
 
 PROG_ROUNDTRIP_DUCK = """
@@ -273,37 +192,20 @@ def _q_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 16 + 4, d % 13 + 4
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        small = binary.resize_nearest(
+            binary.decode_any("png", png.encode_png(arr)),
+            RESIZE_OUT,
+            RESIZE_OUT,
+        )
+        dec = binary.decode_any("png", png.encode_png(small))
+        yield (d, int(dec.shape[1]), int(dec.shape[0]),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 16 + 4, d % 13 + 4
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                small = binary.resize_nearest(
-                    binary.decode_any("png", png.encode_png(arr)),
-                    RESIZE_OUT,
-                    RESIZE_OUT,
-                )
-                dec = binary.decode_any("png", png.encode_png(small))
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(dec.shape[1]),
-                        "height": int(dec.shape[0]),
-                        "pix_sum": int(dec.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pix_sum"]
-            )
-
-    return docs.mapInPandas(run, schema=RESIZE_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, RESIZE_ROUNDTRIP_SCHEMA, row)
 
 
 RESIZE_ROUNDTRIP_DUCK = f"""
@@ -333,33 +235,16 @@ def _q_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, webp
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 11 + 3, d % 7 + 3
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 5 * x + 9 * y + 13 * c) % 256).astype(np.uint8)
+        data = webp.encode_webp(arr, subtract_green=bool(d % 2))
+        dec = binary.decode_any("xyz", data)  # sniffed, not ext
+        yield (d, int(dec.shape[1]), int(dec.shape[0]),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 11 + 3, d % 7 + 3
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 5 * x + 9 * y + 13 * c) % 256).astype(np.uint8)
-                data = webp.encode_webp(arr, subtract_green=bool(d % 2))
-                dec = binary.decode_any("xyz", data)  # sniffed, not ext
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": int(dec.shape[1]),
-                        "height": int(dec.shape[0]),
-                        "pix_sum": int(dec.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pix_sum"]
-            )
-
-    return docs.mapInPandas(run, schema=WEBP_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, WEBP_ROUNDTRIP_SCHEMA, row)
 
 
 WEBP_ROUNDTRIP_DUCK = """
@@ -412,59 +297,32 @@ def _q_vp8_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import vp8, webp
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 24 + 16, d % 17 + 16
+        y, x = np.mgrid[0:h, 0:w]
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        stream, recon = vp8.encode_vp8_with_recon(
+            arr, qi=20 + d % 30, bpred_every=d % 4
+        )
+        dec = vp8.decode_vp8_yuv(stream)
+        exact = all(np.array_equal(a, b) for a, b in zip(dec, recon))
+        ysrc, _, _ = vp8.rgb_to_yuv420(arr)
+        err = int(np.abs(dec[0].astype(int) - ysrc.astype(int)).max())
+        # animated-WebP first frame: ANMF(16-byte header + VP8)
+        frame = b"VP8 " + _struct.pack("<I", len(stream)) + stream
+        if len(stream) & 1:
+            frame += b"\x00"
+        anmf_payload = bytes(16) + frame
+        anmf = b"ANMF" + _struct.pack("<I", len(anmf_payload)) + anmf_payload
+        body = b"WEBP" + anmf
+        riff = b"RIFF" + _struct.pack("<I", len(body)) + body
+        anmf_rgb = webp.decode_webp(riff)
+        anmf_exact = np.array_equal(anmf_rgb, vp8.yuv420_to_rgb(*recon))
+        yield d, w, h, bool(exact), bool(err <= 24), bool(anmf_exact)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 16, d % 17 + 16
-                y, x = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
-                ).astype(np.uint8)
-                stream, recon = vp8.encode_vp8_with_recon(
-                    arr, qi=20 + d % 30, bpred_every=d % 4
-                )
-                dec = vp8.decode_vp8_yuv(stream)
-                exact = all(
-                    np.array_equal(a, b) for a, b in zip(dec, recon)
-                )
-                ysrc, _, _ = vp8.rgb_to_yuv420(arr)
-                err = int(np.abs(dec[0].astype(int) - ysrc.astype(int)).max())
-                # animated-WebP first frame: ANMF(16-byte header + VP8)
-                frame = b"VP8 " + _struct.pack("<I", len(stream)) + stream
-                if len(stream) & 1:
-                    frame += b"\x00"
-                anmf_payload = bytes(16) + frame
-                anmf = (b"ANMF" + _struct.pack("<I", len(anmf_payload))
-                        + anmf_payload)
-                body = b"WEBP" + anmf
-                riff = b"RIFF" + _struct.pack("<I", len(body)) + body
-                anmf_rgb = webp.decode_webp(riff)
-                anmf_exact = bool(
-                    np.array_equal(anmf_rgb, vp8.yuv420_to_rgb(*recon))
-                )
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": w,
-                        "height": h,
-                        "recon_exact": bool(exact),
-                        "within_tol": bool(err <= 24),
-                        "anmf_exact": anmf_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "recon_exact",
-                         "within_tol", "anmf_exact"],
-            )
-
-    return docs.mapInPandas(run, schema=VP8_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, VP8_ROUNDTRIP_SCHEMA, row)
 
 
 VP8_ROUNDTRIP_DUCK = """
@@ -504,43 +362,22 @@ def _q_heif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import binary
     from . import optional_codecs as oc
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter("doc_id % 8 = 0")
-        .select("doc_id")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 16, d % 17 + 16
-                y, x = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
-                ).astype(np.uint8)
-                oks = {}
-                for fmt in ("heic", "avif"):
-                    dec = binary.decode_any(
-                        fmt, oc.libheif_encode_rgb(arr, fmt, quality=95)
-                    )
-                    err = int(np.abs(dec.astype(int) - arr.astype(int)).max())
-                    oks[fmt] = dec.shape == arr.shape and err <= 12
-                out.append(
-                    {
-                        "doc_id": d,
-                        "width": w,
-                        "height": h,
-                        "heic_ok": bool(oks["heic"]),
-                        "avif_ok": bool(oks["avif"]),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "heic_ok", "avif_ok"]
+    def row(d):
+        w, h = d % 24 + 16, d % 17 + 16
+        y, x = np.mgrid[0:h, 0:w]
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        oks = {}
+        for fmt in ("heic", "avif"):
+            dec = binary.decode_any(
+                fmt, oc.libheif_encode_rgb(arr, fmt, quality=95)
             )
+            err = int(np.abs(dec.astype(int) - arr.astype(int)).max())
+            oks[fmt] = dec.shape == arr.shape and err <= 12
+        yield d, w, h, bool(oks["heic"]), bool(oks["avif"])
 
-    return docs.mapInPandas(run, schema=HEIF_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, HEIF_ROUNDTRIP_SCHEMA, row, mod=8)
 
 
 HEIF_ROUNDTRIP_DUCK = """
@@ -569,82 +406,57 @@ def _q_png_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from . import binary
+    from . import png as pngmod
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 1)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 3,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import png as pngmod
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 11 + 3, d % 9 + 3
-                branch = d % 6
-                interlace = bool(d % 2)
-                y, x = np.mgrid[0:h, 0:w]
-                base = d * 13 + x * 29 + y * 53
-                if branch <= 2:          # sub-byte gray
-                    depth, ctype = (1, 2, 4)[branch], 0
-                    v = (base % (1 << depth)).astype(np.uint8)
-                    data = pngmod.encode_png_ex(
-                        v, depth=depth, ctype=ctype, interlace=interlace
-                    )
-                    disp = (
-                        v.astype(np.uint16) * 255 // ((1 << depth) - 1)
-                    ).astype(np.uint8)
-                    expect = np.repeat(disp[:, :, None], 3, axis=2)
-                elif branch == 3:        # 4-bit palette
-                    depth, ctype = 4, 3
-                    idx = (base % 16).astype(np.uint8)
-                    plte = np.stack(
-                        [((d * 7 + np.arange(16) * 31) % 256)] * 3, axis=1
-                    ).astype(np.uint8)
-                    data = pngmod.encode_png_ex(
-                        idx, depth=depth, ctype=ctype, plte=plte,
-                        interlace=interlace,
-                    )
-                    expect = plte[idx]
-                elif branch == 4:        # 16-bit gray
-                    depth, ctype = 16, 0
-                    v = (base % 65536).astype(np.uint16)
-                    data = pngmod.encode_png_ex(
-                        v, depth=depth, ctype=ctype, interlace=interlace
-                    )
-                    expect = np.repeat(
-                        (v >> 8).astype(np.uint8)[:, :, None], 3, axis=2
-                    )
-                else:                    # 16-bit RGB
-                    depth, ctype = 16, 2
-                    c = np.arange(3)
-                    v = (
-                        (base[:, :, None] + c * 77) % 65536
-                    ).astype(np.uint16)
-                    data = pngmod.encode_png_ex(
-                        v, depth=depth, ctype=ctype, interlace=interlace
-                    )
-                    expect = (v >> 8).astype(np.uint8)
-                dec = binary.decode_any("png", data)
-                out.append({
-                    "doc_id": d,
-                    "depth": depth,
-                    "ctype": ctype,
-                    "interlaced": interlace,
-                    "lossless_exact": bool(np.array_equal(dec, expect)),
-                    "pix_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "depth", "ctype", "interlaced",
-                         "lossless_exact", "pix_sum"],
+    def row(d):
+        h, w = d % 11 + 3, d % 9 + 3
+        branch = d % 6
+        interlace = bool(d % 2)
+        y, x = np.mgrid[0:h, 0:w]
+        base = d * 13 + x * 29 + y * 53
+        if branch <= 2:          # sub-byte gray
+            depth, ctype = (1, 2, 4)[branch], 0
+            v = (base % (1 << depth)).astype(np.uint8)
+            data = pngmod.encode_png_ex(
+                v, depth=depth, ctype=ctype, interlace=interlace
             )
+            disp = (
+                v.astype(np.uint16) * 255 // ((1 << depth) - 1)
+            ).astype(np.uint8)
+            expect = np.repeat(disp[:, :, None], 3, axis=2)
+        elif branch == 3:        # 4-bit palette
+            depth, ctype = 4, 3
+            idx = (base % 16).astype(np.uint8)
+            plte = np.stack(
+                [((d * 7 + np.arange(16) * 31) % 256)] * 3, axis=1
+            ).astype(np.uint8)
+            data = pngmod.encode_png_ex(
+                idx, depth=depth, ctype=ctype, plte=plte, interlace=interlace,
+            )
+            expect = plte[idx]
+        elif branch == 4:        # 16-bit gray
+            depth, ctype = 16, 0
+            v = (base % 65536).astype(np.uint16)
+            data = pngmod.encode_png_ex(
+                v, depth=depth, ctype=ctype, interlace=interlace
+            )
+            expect = np.repeat(
+                (v >> 8).astype(np.uint8)[:, :, None], 3, axis=2
+            )
+        else:                    # 16-bit RGB
+            depth, ctype = 16, 2
+            c = np.arange(3)
+            v = ((base[:, :, None] + c * 77) % 65536).astype(np.uint16)
+            data = pngmod.encode_png_ex(
+                v, depth=depth, ctype=ctype, interlace=interlace
+            )
+            expect = (v >> 8).astype(np.uint8)
+        dec = binary.decode_any("png", data)
+        yield (d, depth, ctype, interlace, bool(np.array_equal(dec, expect)),
+               int(dec.astype(np.int64).sum()))
 
-    return docs.mapInPandas(run, schema=PNG_DEPTHS_SCHEMA)
+    return per_doc(spark, sf_dir, PNG_DEPTHS_SCHEMA, row, mod=3, rem=1,
+                   sized=True)
 
 
 PNG_DEPTHS_DUCK = """
@@ -700,82 +512,52 @@ def _q_bmp_depths_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     run/escape bug cannot hash green."""
     import numpy as np
 
-    from . import binary
+    from . import binary, codecs_extra
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 7 == 0)
-        .select("doc_id")
-    )
+    def row(d):
+        h, w = d % 8 + 2, d % 10 + 2
+        branch = (d // 7) % 7
+        y, x = np.mgrid[0:h, 0:w]
+        c = np.arange(3)
+        compression = (0, 0, 0, 0, 0, 1, 2)[branch]
+        if branch <= 2 or branch >= 5:   # palette depths
+            bpp = (8, 4, 1, 0, 0, 8, 4)[branch]
+            core = branch == 1
+            top_down = branch == 2
+            n = 1 << bpp
+            idx = ((d * 13 + x * 29 + y * 53) % n).astype(np.uint8)
+            pal = (
+                (d * 7 + np.arange(n)[:, None] * 31 + c * 59) % 256
+            ).astype(np.uint8)
+            if compression:
+                data = codecs_extra.encode_bmp_rle(idx, pal, bpp=bpp)
+            else:
+                data = codecs_extra.encode_bmp_ex(
+                    idx, bpp=bpp, palette=pal, core=core, top_down=top_down,
+                )
+            expect = pal[idx]
+        else:
+            rgb = (
+                (d * 13 + x[:, :, None] * 29 + y[:, :, None] * 53 + c * 77)
+                % 256
+            ).astype(np.uint8)
+            core = branch == 3
+            top_down = branch == 4
+            if branch == 3:      # 24-bit, core header
+                bpp = 24
+                data = codecs_extra.encode_bmp_ex(rgb, bpp=24, core=True)
+            else:                # 32-bit BGRA, top-down
+                bpp = 32
+                alpha = ((d + x + y) % 256).astype(np.uint8)
+                rgba = np.dstack([rgb, alpha])
+                data = codecs_extra.encode_bmp_ex(rgba, bpp=32, top_down=True)
+            expect = rgb
+        dec = binary.decode_any("bmp", data)
+        yield (d, bpp, compression, core, top_down,
+               bool(np.array_equal(dec, expect)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import codecs_extra
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 8 + 2, d % 10 + 2
-                branch = (d // 7) % 7
-                y, x = np.mgrid[0:h, 0:w]
-                c = np.arange(3)
-                compression = (0, 0, 0, 0, 0, 1, 2)[branch]
-                if branch <= 2 or branch >= 5:   # palette depths
-                    bpp = (8, 4, 1, 0, 0, 8, 4)[branch]
-                    core = branch == 1
-                    top_down = branch == 2
-                    n = 1 << bpp
-                    idx = ((d * 13 + x * 29 + y * 53) % n).astype(np.uint8)
-                    pal = (
-                        (d * 7 + np.arange(n)[:, None] * 31 + c * 59) % 256
-                    ).astype(np.uint8)
-                    if compression:
-                        data = codecs_extra.encode_bmp_rle(
-                            idx, pal, bpp=bpp
-                        )
-                    else:
-                        data = codecs_extra.encode_bmp_ex(
-                            idx, bpp=bpp, palette=pal, core=core,
-                            top_down=top_down,
-                        )
-                    expect = pal[idx]
-                else:
-                    rgb = (
-                        (d * 13 + x[:, :, None] * 29 + y[:, :, None] * 53
-                         + c * 77) % 256
-                    ).astype(np.uint8)
-                    core = branch == 3
-                    top_down = branch == 4
-                    if branch == 3:      # 24-bit, core header
-                        bpp = 24
-                        data = codecs_extra.encode_bmp_ex(
-                            rgb, bpp=24, core=True
-                        )
-                    else:                # 32-bit BGRA, top-down
-                        bpp = 32
-                        alpha = ((d + x + y) % 256).astype(np.uint8)
-                        rgba = np.dstack([rgb, alpha])
-                        data = codecs_extra.encode_bmp_ex(
-                            rgba, bpp=32, top_down=True
-                        )
-                    expect = rgb
-                dec = binary.decode_any("bmp", data)
-                out.append({
-                    "doc_id": d,
-                    "bpp": bpp,
-                    "compression": compression,
-                    "core": core,
-                    "top_down": top_down,
-                    "lossless_exact": bool(np.array_equal(dec, expect)),
-                    "pix_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "bpp", "compression", "core",
-                         "top_down", "lossless_exact", "pix_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=BMP_DEPTHS_SCHEMA)
+    return per_doc(spark, sf_dir, BMP_DEPTHS_SCHEMA, row, mod=7)
 
 
 BMP_DEPTHS_DUCK = """
@@ -836,40 +618,21 @@ def _q_format_convert_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 9 == 5)
-        .select("doc_id")
-    )
+    def row(d):
+        h, w = d % 9 + 3, d % 12 + 3
+        chain = _CONVERT_CHAINS[d % 3]
+        y, x = np.mgrid[0:h, 0:w]
+        c = np.arange(3)
+        arr0 = (
+            (d * 11 + x[:, :, None] * 37 + y[:, :, None] * 71 + c * 13) % 256
+        ).astype(np.uint8)
+        arr = arr0
+        for fmt in chain:
+            arr = binary.decode_any(fmt, binary.ENCODERS[fmt](arr))
+        yield (d, ">".join(chain), bool(np.array_equal(arr, arr0)),
+               int(arr.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 9 + 3, d % 12 + 3
-                chain = _CONVERT_CHAINS[d % 3]
-                y, x = np.mgrid[0:h, 0:w]
-                c = np.arange(3)
-                arr0 = (
-                    (d * 11 + x[:, :, None] * 37 + y[:, :, None] * 71
-                     + c * 13) % 256
-                ).astype(np.uint8)
-                arr = arr0
-                for fmt in chain:
-                    arr = binary.decode_any(fmt, binary.ENCODERS[fmt](arr))
-                out.append({
-                    "doc_id": d,
-                    "chain": ">".join(chain),
-                    "lossless_exact": bool(np.array_equal(arr, arr0)),
-                    "pix_sum": int(arr.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "chain", "lossless_exact", "pix_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=CONVERT_CHAIN_SCHEMA)
+    return per_doc(spark, sf_dir, CONVERT_CHAIN_SCHEMA, row, mod=9, rem=5)
 
 
 CONVERT_CHAIN_DUCK = """
@@ -905,46 +668,23 @@ def _q_jpeg12_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg as jpegmod
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 11 == 4)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 11,
-    )
+    def row(d):
+        h, w = d % 14 + 4, d % 21 + 4
+        quality = (90, 95, 100)[d % 3]
+        y, x = np.mgrid[0:h, 0:w]
+        arr = (x * 60 + y * 70 + d % 1000).astype(np.uint16)
+        data = jpegmod.encode_jpeg12_gray(arr, quality=quality)
+        dec = binary.decode_any("jpg", data)
+        exp = (arr >> 4).astype(np.uint8)
+        err = int(np.abs(dec[:, :, 0].astype(int) - exp.astype(int)).max())
+        gray_ok = bool(
+            np.array_equal(dec[:, :, 0], dec[:, :, 1])
+            and np.array_equal(dec[:, :, 0], dec[:, :, 2])
+        )
+        yield d, w, h, quality, bool(err <= 1 and gray_ok)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 14 + 4, d % 21 + 4
-                quality = (90, 95, 100)[d % 3]
-                y, x = np.mgrid[0:h, 0:w]
-                arr = (x * 60 + y * 70 + d % 1000).astype(np.uint16)
-                data = jpegmod.encode_jpeg12_gray(arr, quality=quality)
-                dec = binary.decode_any("jpg", data)
-                exp = (arr >> 4).astype(np.uint8)
-                err = int(
-                    np.abs(dec[:, :, 0].astype(int) - exp.astype(int)).max()
-                )
-                gray_ok = bool(
-                    np.array_equal(dec[:, :, 0], dec[:, :, 1])
-                    and np.array_equal(dec[:, :, 0], dec[:, :, 2])
-                )
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "quality": quality,
-                    "within_tol": bool(err <= 1 and gray_ok),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "quality",
-                         "within_tol"],
-            )
-
-    return docs.mapInPandas(run, schema=JPEG12_SCHEMA)
+    return per_doc(spark, sf_dir, JPEG12_SCHEMA, row, mod=11, rem=4,
+                   sized=True)
 
 
 JPEG12_DUCK = """
@@ -1012,63 +752,34 @@ WATERMARK_SCHEMA = ("doc_id long, width int, height int, "
                     "baseline_match_bits int")
 
 
-def _watermark_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Module-level so the scale study can drive the kernel directly."""
+def _q_watermark_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
 
     from . import binary, png
 
-    for pdf in batches:
-        out = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = d % 16 + 8, d % 13 + 8
-            y, x, c = np.mgrid[0:h, 0:w, 0:3]
-            arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-            hex16 = hashlib.md5(f"{d}:wm".encode()).hexdigest()[:16]
-            bits = [
-                (int(hex16[j // 4], 16) >> (3 - j % 4)) & 1
-                for j in range(64)
-            ]
-            wm = arr.copy()
-            flat = wm[:, :, 0].reshape(-1)
-            flat[:64] = (flat[:64] & 0xFE) | np.array(
-                bits, dtype=np.uint8
-            )
-            dec = binary.decode_any("png", png.encode_png(wm))
-            got = (dec[:, :, 0].reshape(-1)[:64] & 1).tolist()
-            rec_hex = "".join(
-                f"{int(''.join(map(str, got[i:i + 4])), 2):x}"
-                for i in range(0, 64, 4)
-            )
-            clean = binary.decode_any("png", png.encode_png(arr))
-            base = (clean[:, :, 0].reshape(-1)[:64] & 1).tolist()
-            out.append({
-                "doc_id": d,
-                "width": w,
-                "height": h,
-                "payload_hex": rec_hex,
-                "wm_pix_sum": int(dec.astype(np.int64).sum()),
-                "baseline_match_bits": int(
-                    sum(1 for b, g in zip(bits, base) if b == g)
-                ),
-            })
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "payload_hex",
-                     "wm_pix_sum", "baseline_match_bits"],
+    def row(d):
+        w, h = d % 16 + 8, d % 13 + 8
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        hex16 = hashlib.md5(f"{d}:wm".encode()).hexdigest()[:16]
+        bits = [(int(hex16[j // 4], 16) >> (3 - j % 4)) & 1 for j in range(64)]
+        wm = arr.copy()
+        flat = wm[:, :, 0].reshape(-1)
+        flat[:64] = (flat[:64] & 0xFE) | np.array(bits, dtype=np.uint8)
+        dec = binary.decode_any("png", png.encode_png(wm))
+        got = (dec[:, :, 0].reshape(-1)[:64] & 1).tolist()
+        rec_hex = "".join(
+            f"{int(''.join(map(str, got[i:i + 4])), 2):x}"
+            for i in range(0, 64, 4)
         )
+        clean = binary.decode_any("png", png.encode_png(arr))
+        base = (clean[:, :, 0].reshape(-1)[:64] & 1).tolist()
+        yield (d, w, h, rec_hex, int(dec.astype(np.int64).sum()),
+               int(sum(1 for b, g in zip(bits, base) if b == g)))
 
-
-def _q_watermark_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
-    return docs.mapInPandas(_watermark_kernel, schema=WATERMARK_SCHEMA)
+    return per_doc(spark, sf_dir, WATERMARK_SCHEMA, row)
 
 
 # closed-form oracle: payload bits from the same md5; watermarked sum

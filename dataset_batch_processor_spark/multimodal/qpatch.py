@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from .qcommon import per_doc
 
 
 TILE_CK = 4  # tile size; overlap 0.5 -> step 2
@@ -60,22 +61,14 @@ def _q_tile_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i", "j", "box_left", "box_top", "box_right", "box_bottom",
     )
 
-    def gen_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 10 + 5, d % 9 + 5
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                out.append(
-                    {"id": str(d), "fmt": "png", "content": png.encode_png(arr)}
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
+    def png_row(d):
+        w, h = d % 10 + 5, d % 9 + 5
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        yield str(d), "png", png.encode_png(arr)
 
-    content = catalog.fanout(docs.select("doc_id")).mapInPandas(
-        gen_png, schema="id string, fmt string, content binary"
-    )
+    content = per_doc(spark, sf_dir, "id string, fmt string, content binary",
+                      png_row)
     pix = binary.materialize_tiles(
         geom, content, tile_size=TILE_CK, pad_option="Extend Edges"
     )
@@ -145,45 +138,24 @@ def _q_vit_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 3)
-        .select("doc_id")
-    )
     wgt = (
         1 + np.arange(PATCH_P * PATCH_P * 3, dtype=np.int64)
     ).reshape(PATCH_P, PATCH_P, 3)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 4 + 1) * PATCH_P
-                h = (d % 3 + 1) * PATCH_P
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                dec = binary.decode_any("png", png.encode_png(arr))
-                grid = binary.patchify_rgb(dec, PATCH_P)
-                for pi in range(grid.shape[0]):
-                    for pj in range(grid.shape[1]):
-                        pt = grid[pi, pj].astype(np.int64)
-                        out.append({
-                            "doc_id": d,
-                            "pi": pi,
-                            "pj": pj,
-                            "patch_h": PATCH_P,
-                            "patch_w": PATCH_P,
-                            "pix_sum": int(pt.sum()),
-                            "pos_weighted_sum": int((pt * wgt).sum()),
-                        })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "pi", "pj", "patch_h", "patch_w",
-                         "pix_sum", "pos_weighted_sum"],
-            )
+    def row(d):
+        w = (d % 4 + 1) * PATCH_P
+        h = (d % 3 + 1) * PATCH_P
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        dec = binary.decode_any("png", png.encode_png(arr))
+        grid = binary.patchify_rgb(dec, PATCH_P)
+        for pi in range(grid.shape[0]):
+            for pj in range(grid.shape[1]):
+                pt = grid[pi, pj].astype(np.int64)
+                yield (d, pi, pj, PATCH_P, PATCH_P, int(pt.sum()),
+                       int((pt * wgt).sum()))
 
-    return docs.mapInPandas(run, schema=PATCHIFY_SCHEMA)
+    return per_doc(spark, sf_dir, PATCHIFY_SCHEMA, row, mod=5, rem=3)
 
 
 _P = PATCH_P
@@ -232,43 +204,21 @@ def _q_augment_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, png
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 4)
-        .select("doc_id")
-    )
+    def row(d):
+        w = (d % 4 + 1) * 8
+        h = (d % 3 + 1) * 8
+        y, x, c = np.mgrid[0:h, 0:w, 0:3]
+        arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
+        dec = binary.decode_any("png", png.encode_png(arr))
+        for name, v in binary.augment_views(dec).items():
+            vi = v.astype(np.int64)
+            oh, ow = vi.shape[:2]
+            wgt = (
+                1 + np.arange(oh * ow * 3, dtype=np.int64)
+            ).reshape(oh, ow, 3)
+            yield d, name, oh, ow, int(vi.sum()), int((vi * wgt).sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = (d % 4 + 1) * 8
-                h = (d % 3 + 1) * 8
-                y, x, c = np.mgrid[0:h, 0:w, 0:3]
-                arr = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                dec = binary.decode_any("png", png.encode_png(arr))
-                for name, v in binary.augment_views(dec).items():
-                    vi = v.astype(np.int64)
-                    oh, ow = vi.shape[:2]
-                    wgt = (
-                        1 + np.arange(oh * ow * 3, dtype=np.int64)
-                    ).reshape(oh, ow, 3)
-                    out.append({
-                        "doc_id": d,
-                        "view": name,
-                        "out_h": oh,
-                        "out_w": ow,
-                        "pix_sum": int(vi.sum()),
-                        "pos_weighted_sum": int((vi * wgt).sum()),
-                    })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "view", "out_h", "out_w",
-                         "pix_sum", "pos_weighted_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=AUGMENT_SCHEMA)
+    return per_doc(spark, sf_dir, AUGMENT_SCHEMA, row, mod=5, rem=4)
 
 
 def _augment_duck() -> str:

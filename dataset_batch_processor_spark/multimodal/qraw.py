@@ -7,13 +7,9 @@ multimodal/queries.py in round 10.
 """
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import catalog
+from .qcommon import per_doc
 
 
 # Camera-RAW entropy layer (T.81 process 14 / SOF3, multimodal/
@@ -37,38 +33,17 @@ def _q_dng_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 4 == 0)
-        .select("doc_id")
-    )
+    def row(d):
+        w, h, nc = d % 13 + 8, d % 11 + 8, d % 3 + 1
+        y, x, c = np.mgrid[0:h, 0:w, 0:nc]
+        arr = ((d * 7 + x * 257 + y * 1031 + c * 4099) % 65536
+               ).astype(np.uint16)
+        dng = tiff.encode_dng_lossless(arr, predictor=d % 7 + 1)
+        dec = tiff.decode_dng_lossless(dng)
+        yield (d, w, h, nc, bool(np.array_equal(dec, arr)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nc = d % 13 + 8, d % 11 + 8, d % 3 + 1
-                y, x, c = np.mgrid[0:h, 0:w, 0:nc]
-                arr = ((d * 7 + x * 257 + y * 1031 + c * 4099) % 65536
-                       ).astype(np.uint16)
-                dng = tiff.encode_dng_lossless(arr, predictor=d % 7 + 1)
-                dec = tiff.decode_dng_lossless(dng)
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "n_comp": nc,
-                    "lossless_exact": bool(np.array_equal(dec, arr)),
-                    "pix_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_comp",
-                         "lossless_exact", "pix_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=DNG_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, DNG_ROUNDTRIP_SCHEMA, row, mod=4)
 
 
 DNG_ROUNDTRIP_DUCK = """
@@ -108,42 +83,19 @@ def _q_dng_tiled_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 0)
-        .select("doc_id")
-    )
+    def row(d):
+        w, h, nc = d % 37 + 10, d % 29 + 10, d % 3 + 1
+        tw = 16 if d % 2 == 0 else 32
+        y, x, c = np.mgrid[0:h, 0:w, 0:nc]
+        arr = ((d * 7 + x * 257 + y * 1031 + c * 4099) % 65536
+               ).astype(np.uint16)
+        dng = tiff.encode_dng_lossless(arr, predictor=d % 7 + 1, tile=(tw, 16))
+        dec = tiff.decode_dng_lossless(dng)
+        yield (d, w, h, nc, ((w + tw - 1) // tw) * ((h + 15) // 16),
+               bool(np.array_equal(dec, arr)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nc = d % 37 + 10, d % 29 + 10, d % 3 + 1
-                tw = 16 if d % 2 == 0 else 32
-                y, x, c = np.mgrid[0:h, 0:w, 0:nc]
-                arr = ((d * 7 + x * 257 + y * 1031 + c * 4099) % 65536
-                       ).astype(np.uint16)
-                dng = tiff.encode_dng_lossless(
-                    arr, predictor=d % 7 + 1, tile=(tw, 16)
-                )
-                dec = tiff.decode_dng_lossless(dng)
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "n_comp": nc,
-                    "n_tiles": ((w + tw - 1) // tw) * ((h + 15) // 16),
-                    "lossless_exact": bool(np.array_equal(dec, arr)),
-                    "pix_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_comp", "n_tiles",
-                         "lossless_exact", "pix_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=DNG_TILED_SCHEMA)
+    return per_doc(spark, sf_dir, DNG_TILED_SCHEMA, row, mod=5)
 
 
 DNG_TILED_DUCK = """
@@ -188,58 +140,32 @@ def _q_cr2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, optional_codecs, rawvendor
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 4 == 1)
-        .select("doc_id")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 21 + 6, 2 * (d % 17 + 4)
-                ns, nc = d % 3 + 1, d % 2 + 1
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((d * 7 + x * 263 + y * 1021) % 65536).astype(
-                    np.uint16
-                )
-                # every third doc adds row-aligned restart markers, so
-                # the DRI/RSTn machinery sits under the hash gate too
-                cr2 = rawvendor.encode_cr2_lossless(
-                    arr, n_slices=ns, ncomp=nc, predictor=d % 7 + 1,
-                    restart_rows=(d % 3 + 2) if d % 3 == 0 else 0,
-                )
-                dec = rawvendor.decode_cr2_lossless(cr2)
-                # exactness gate is the pure decoder (deterministic on
-                # every install); the registry-path assertion only runs
-                # when 'cr2' still routes to it — optional rawpy/
-                # imageio codecs demosaic real CR2s and would reject or
-                # re-tone this synthetic minimal container (ADVICE r7)
-                ok = bool(np.array_equal(dec, arr))
-                if "cr2" not in optional_codecs.REGISTERED:
-                    disp = binary.decode_any("bin", cr2)
-                    ok = ok and bool(
-                        np.array_equal(
-                            disp[:, :, 0], (arr >> 8).astype(np.uint8)
-                        )
-                    )
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "n_slices": ns,
-                    "lossless_exact": ok,
-                    "pix_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_slices",
-                         "lossless_exact", "pix_sum"],
+    def row(d):
+        h, w = d % 21 + 6, 2 * (d % 17 + 4)
+        ns, nc = d % 3 + 1, d % 2 + 1
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((d * 7 + x * 263 + y * 1021) % 65536).astype(np.uint16)
+        # every third doc adds row-aligned restart markers, so
+        # the DRI/RSTn machinery sits under the hash gate too
+        cr2 = rawvendor.encode_cr2_lossless(
+            arr, n_slices=ns, ncomp=nc, predictor=d % 7 + 1,
+            restart_rows=(d % 3 + 2) if d % 3 == 0 else 0,
+        )
+        dec = rawvendor.decode_cr2_lossless(cr2)
+        # exactness gate is the pure decoder (deterministic on
+        # every install); the registry-path assertion only runs
+        # when 'cr2' still routes to it — optional rawpy/
+        # imageio codecs demosaic real CR2s and would reject or
+        # re-tone this synthetic minimal container (ADVICE r7)
+        ok = bool(np.array_equal(dec, arr))
+        if "cr2" not in optional_codecs.REGISTERED:
+            disp = binary.decode_any("bin", cr2)
+            ok = ok and bool(
+                np.array_equal(disp[:, :, 0], (arr >> 8).astype(np.uint8))
             )
+        yield d, w, h, ns, ok, int(dec.astype(np.int64).sum())
 
-    return docs.mapInPandas(run, schema=CR2_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, CR2_ROUNDTRIP_SCHEMA, row, mod=4, rem=1)
 
 
 CR2_ROUNDTRIP_DUCK = """
@@ -270,41 +196,18 @@ def _q_nef_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 4 == 2)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 4,
-    )
+    def row(d):
+        h, w = d % 19 + 5, d % 23 + 5
+        bits = (12, 14, 16)[d % 3]
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((d * 11 + x * 157 + y * 331) % (1 << bits)).astype(np.uint16)
+        nef = rawvendor.encode_nef_packed(arr, bits=bits)
+        dec = rawvendor.decode_nef_packed(nef)
+        yield (d, w, h, bits, bool(np.array_equal(dec, arr)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 19 + 5, d % 23 + 5
-                bits = (12, 14, 16)[d % 3]
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((d * 11 + x * 157 + y * 331) % (1 << bits)).astype(
-                    np.uint16
-                )
-                nef = rawvendor.encode_nef_packed(arr, bits=bits)
-                dec = rawvendor.decode_nef_packed(nef)
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "bits": bits,
-                    "lossless_exact": bool(np.array_equal(dec, arr)),
-                    "sample_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "bits",
-                         "lossless_exact", "sample_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=NEF_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, NEF_ROUNDTRIP_SCHEMA, row, mod=4, rem=2,
+                   sized=True)
 
 
 NEF_ROUNDTRIP_DUCK = """
@@ -348,40 +251,17 @@ def _q_nef_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 4)
-        .select("doc_id")
-    )
+    def row(d):
+        h, w = d % 15 + 4, d % 19 + 4
+        bits = (12, 14)[d % 2]
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((d * 17 + x * 101 + y * 577) % (1 << bits)).astype(np.uint16)
+        nef = rawvendor.encode_nef_compressed(arr, bits=bits)
+        dec = rawvendor.decode_nef_packed(nef)
+        yield (d, w, h, bits, bool(np.array_equal(dec, arr)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 15 + 4, d % 19 + 4
-                bits = (12, 14)[d % 2]
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((d * 17 + x * 101 + y * 577) % (1 << bits)).astype(
-                    np.uint16
-                )
-                nef = rawvendor.encode_nef_compressed(arr, bits=bits)
-                dec = rawvendor.decode_nef_packed(nef)
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "bits": bits,
-                    "lossless_exact": bool(np.array_equal(dec, arr)),
-                    "sample_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "bits",
-                         "lossless_exact", "sample_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=NEFC_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, NEFC_ROUNDTRIP_SCHEMA, row, mod=5, rem=4)
 
 
 NEFC_ROUNDTRIP_DUCK = """
@@ -420,53 +300,27 @@ def _q_arw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, optional_codecs, rawvendor
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 4 == 3)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 4,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 17 + 5, d % 13 + 5
-                bits = (12, 14, 16)[d % 3]
-                rps = d % 4 + 1
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((d * 13 + x * 211 + y * 397) % (1 << bits)).astype(
-                    np.uint16
-                )
-                arw = rawvendor.encode_arw_uncompressed(
-                    arr, bits=bits, rows_per_strip=rps
-                )
-                dec = rawvendor.decode_arw(arw)
-                ok = bool(np.array_equal(dec, arr))
-                if "arw" not in optional_codecs.REGISTERED:
-                    disp = binary.decode_any("arw", arw)
-                    ok = ok and bool(
-                        np.array_equal(
-                            disp[:, :, 0], (arr >> 8).astype(np.uint8)
-                        )
-                    )
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "bits": bits,
-                    "n_strips": (h + rps - 1) // rps,
-                    "lossless_exact": ok,
-                    "sample_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "bits", "n_strips",
-                         "lossless_exact", "sample_sum"],
+    def row(d):
+        h, w = d % 17 + 5, d % 13 + 5
+        bits = (12, 14, 16)[d % 3]
+        rps = d % 4 + 1
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((d * 13 + x * 211 + y * 397) % (1 << bits)).astype(np.uint16)
+        arw = rawvendor.encode_arw_uncompressed(
+            arr, bits=bits, rows_per_strip=rps
+        )
+        dec = rawvendor.decode_arw(arw)
+        ok = bool(np.array_equal(dec, arr))
+        if "arw" not in optional_codecs.REGISTERED:
+            disp = binary.decode_any("arw", arw)
+            ok = ok and bool(
+                np.array_equal(disp[:, :, 0], (arr >> 8).astype(np.uint8))
             )
+        yield (d, w, h, bits, (h + rps - 1) // rps, ok,
+               int(dec.astype(np.int64).sum()))
 
-    return docs.mapInPandas(run, schema=ARW_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, ARW_ROUNDTRIP_SCHEMA, row, mod=4, rem=3,
+                   sized=True)
 
 
 ARW_ROUNDTRIP_DUCK = """
@@ -506,42 +360,18 @@ def _q_arw_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import rawvendor
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 1)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
-    )
+    def row(d):
+        h, w = d % 9 + 2, 32 * (d % 3 + 1)
+        y, x = np.mgrid[0:h, 0:w]
+        # per-row base + small per-column ripple: block spread
+        # <= 100 < 0x80 keeps every block in the exact subset
+        arr = ((d * 19 + y * 37) % 1800 + (x * 7) % 101).astype(np.uint16)
+        dec = rawvendor.decode_arw(rawvendor.encode_arw_compressed(arr))
+        yield (d, w, h, h * w // 16, bool(np.array_equal(dec, arr)),
+               int(dec.astype(np.int64).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                h, w = d % 9 + 2, 32 * (d % 3 + 1)
-                y, x = np.mgrid[0:h, 0:w]
-                # per-row base + small per-column ripple: block spread
-                # <= 100 < 0x80 keeps every block in the exact subset
-                arr = (
-                    (d * 19 + y * 37) % 1800 + (x * 7) % 101
-                ).astype(np.uint16)
-                arw = rawvendor.encode_arw_compressed(arr)
-                dec = rawvendor.decode_arw(arw)
-                out.append({
-                    "doc_id": d,
-                    "width": w,
-                    "height": h,
-                    "n_blocks": h * w // 16,
-                    "lossless_exact": bool(np.array_equal(dec, arr)),
-                    "sample_sum": int(dec.astype(np.int64).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_blocks",
-                         "lossless_exact", "sample_sum"],
-            )
-
-    return docs.mapInPandas(run, schema=ARW2_ROUNDTRIP_SCHEMA)
+    return per_doc(spark, sf_dir, ARW2_ROUNDTRIP_SCHEMA, row, mod=5, rem=1,
+                   sized=True)
 
 
 ARW2_ROUNDTRIP_DUCK = """

@@ -5,13 +5,10 @@ live in metascrub.py/tiff.py.
 """
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .qcommon import per_doc
 
 
 
@@ -35,46 +32,21 @@ def _q_exif_orientation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import tiff
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-    )
+    def row(d):
+        o = d % 8 + 1
+        w, h = d % 9 + 6, d % 7 + 5
+        sy, sx = np.mgrid[0:h, 0:w]
+        arr = ((d * 3 + sx * 7 + sy * 13) % 251).astype(np.uint16)
+        dng = tiff.encode_dng_lossless(arr, predictor=d % 7 + 1, orientation=o)
+        probed = tiff.probe_tiff_orientation(dng)
+        dec = tiff.decode_dng_lossless(dng)[:, :, 0]
+        up = tiff.apply_exif_orientation(dec, probed)
+        oh, ow = up.shape
+        weights = np.arange(oh)[:, None] * ow + np.arange(ow)[None, :] + 1
+        yield (d, o, int(ow), int(oh), bool(probed == o),
+               int((weights * up.astype(np.int64)).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                o = d % 8 + 1
-                w, h = d % 9 + 6, d % 7 + 5
-                sy, sx = np.mgrid[0:h, 0:w]
-                arr = ((d * 3 + sx * 7 + sy * 13) % 251).astype(np.uint16)
-                dng = tiff.encode_dng_lossless(
-                    arr, predictor=d % 7 + 1, orientation=o
-                )
-                probed = tiff.probe_tiff_orientation(dng)
-                dec = tiff.decode_dng_lossless(dng)[:, :, 0]
-                up = tiff.apply_exif_orientation(dec, probed)
-                oh, ow = up.shape
-                weights = (
-                    np.arange(oh)[:, None] * ow + np.arange(ow)[None, :] + 1
-                )
-                out.append({
-                    "doc_id": d,
-                    "orientation": o,
-                    "out_w": int(ow),
-                    "out_h": int(oh),
-                    "probe_ok": bool(probed == o),
-                    "wsum": int((weights * up.astype(np.int64)).sum()),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "orientation", "out_w", "out_h",
-                         "probe_ok", "wsum"],
-            )
-
-    return docs.mapInPandas(run, schema=EXIF_ORIENT_SCHEMA)
+    return per_doc(spark, sf_dir, EXIF_ORIENT_SCHEMA, row, mod=3)
 
 
 # source coords per EXIF case (out(y,x) <- src(sy,sx)); 5-8 swap dims
@@ -136,41 +108,26 @@ def _q_scrub_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import jpeg, metascrub, tiff as tiff_mod
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents"),
-    )
+    def row(d):
+        w, h = d % 24 + 8, d % 17 + 8
+        y, x = np.mgrid[0:h, 0:w]
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        route = d % 3
+        if route == 0:
+            yield str(d), "jpg", metascrub.inject_app1(
+                jpeg.encode_jpeg(arr, quality=85),
+                metascrub.build_exif_app1(d % 17),
+            )
+        elif route == 1:
+            content = tiff_mod.encode_tiff(arr) + b"\x00" * (d % 23)
+            yield str(d), "tiff", content
+        else:
+            yield str(d), "gif", b"GIF89a..."
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 8, d % 17 + 8
-                y, x = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50],
-                    axis=2,
-                ).astype(np.uint8)
-                route = d % 3
-                if route == 0:
-                    content = metascrub.inject_app1(
-                        jpeg.encode_jpeg(arr, quality=85),
-                        metascrub.build_exif_app1(d % 17),
-                    )
-                    fmt = "jpg"
-                elif route == 1:
-                    content = tiff_mod.encode_tiff(arr) + b"\x00" * (d % 23)
-                    fmt = "tiff"
-                else:
-                    content = b"GIF89a..."
-                    fmt = "gif"
-                out.append({"id": str(d), "fmt": fmt, "content": content})
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    files = docs.mapInPandas(
-        gen, schema="id string, fmt string, content binary"
-    )
+    files = per_doc(spark, sf_dir, "id string, fmt string, content binary",
+                    row, sized=True)
     scrubbed = metascrub.scrub_images(files)
     return scrubbed.select(
         F.col("id").cast("bigint").alias("doc_id"),
@@ -219,55 +176,29 @@ def _q_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import binary, jpeg, metascrub
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 24 + 8, d % 17 + 8
+        y, x = np.mgrid[0:h, 0:w]
+        arr = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        orig = jpeg.encode_jpeg(arr, quality=85)
+        dirty = metascrub.inject_app1(orig, metascrub.build_exif_app1(d % 17))
+        before = metascrub.jpeg_metadata_flags(dirty)
+        clean, dropped, removed = metascrub.scrub_jpeg(dirty)
+        after = metascrub.jpeg_metadata_flags(clean)
+        yield (
+            d,
+            bool(before["has_gps"]),
+            int(dropped),
+            int(removed),
+            bool(not after["has_exif"] and after["n_meta_segments"] == 0),
+            bool(clean == orig),
+            bool(np.array_equal(binary.decode_any("jpg", dirty),
+                                binary.decode_any("jpg", clean))),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 8, d % 17 + 8
-                y, x = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50],
-                    axis=2,
-                ).astype(np.uint8)
-                orig = jpeg.encode_jpeg(arr, quality=85)
-                pad = d % 17
-                dirty = metascrub.inject_app1(
-                    orig, metascrub.build_exif_app1(pad)
-                )
-                before = metascrub.jpeg_metadata_flags(dirty)
-                clean, dropped, removed = metascrub.scrub_jpeg(dirty)
-                after = metascrub.jpeg_metadata_flags(clean)
-                out.append(
-                    {
-                        "doc_id": d,
-                        "had_gps": bool(before["has_gps"]),
-                        "n_dropped": int(dropped),
-                        "bytes_removed": int(removed),
-                        "clean_after": bool(
-                            not after["has_exif"]
-                            and after["n_meta_segments"] == 0
-                        ),
-                        "bytes_restored": bool(clean == orig),
-                        "pix_equal": bool(
-                            np.array_equal(
-                                binary.decode_any("jpg", dirty),
-                                binary.decode_any("jpg", clean),
-                            )
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "had_gps", "n_dropped", "bytes_removed",
-                         "clean_after", "bytes_restored", "pix_equal"],
-            )
-
-    return docs.mapInPandas(run, schema=EXIF_SCRUB_SCHEMA)
+    return per_doc(spark, sf_dir, EXIF_SCRUB_SCHEMA, row)
 
 
 def _exif_scrub_duck() -> str:
@@ -314,56 +245,33 @@ def _q_exif_orientation_normalize(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from . import binary, jpeg, metascrub, png, tiff
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents").select("doc_id")
-    )
+    def row(d):
+        w, h = d % 24 + 8, d % 17 + 8
+        o = d % 8 + 1
+        y, x = np.mgrid[0:h, 0:w]
+        upright = np.stack(
+            [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50], axis=2
+        ).astype(np.uint8)
+        stored = tiff.apply_exif_orientation(upright, _ORIENT_INV[o])
+        # lossless path: exact whole-pipeline equality
+        dec_png = binary.decode_any("png", png.encode_png(stored))
+        norm = tiff.apply_exif_orientation(dec_png, o)
+        # lossy path: real Exif APP1 drives the parse
+        dirty = metascrub.inject_app1(
+            jpeg.encode_jpeg(stored, quality=85),
+            metascrub.build_orientation_app1(o),
+        )
+        o_read = metascrub.jpeg_orientation(dirty)
+        norm_j = tiff.apply_exif_orientation(
+            binary.decode_any("jpg", dirty), o_read
+        )
+        err = int(
+            np.abs(norm_j.astype(int) - upright.astype(int)).max()
+        ) if norm_j.shape == upright.shape else 255
+        yield (d, o, int(norm.shape[1]), int(norm.shape[0]), int(o_read),
+               bool(np.array_equal(norm, upright)), bool(err <= 24))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 24 + 8, d % 17 + 8
-                o = d % 8 + 1
-                y, x = np.mgrid[0:h, 0:w]
-                upright = np.stack(
-                    [x * 3 + d % 100, y * 4 + d % 80, x + y + d % 50],
-                    axis=2,
-                ).astype(np.uint8)
-                stored = tiff.apply_exif_orientation(
-                    upright, _ORIENT_INV[o]
-                )
-                # lossless path: exact whole-pipeline equality
-                dec_png = binary.decode_any("png", png.encode_png(stored))
-                norm = tiff.apply_exif_orientation(dec_png, o)
-                # lossy path: real Exif APP1 drives the parse
-                dirty = metascrub.inject_app1(
-                    jpeg.encode_jpeg(stored, quality=85),
-                    metascrub.build_orientation_app1(o),
-                )
-                o_read = metascrub.jpeg_orientation(dirty)
-                norm_j = tiff.apply_exif_orientation(
-                    binary.decode_any("jpg", dirty), o_read
-                )
-                err = int(
-                    np.abs(norm_j.astype(int) - upright.astype(int)).max()
-                ) if norm_j.shape == upright.shape else 255
-                out.append({
-                    "doc_id": d,
-                    "orientation": o,
-                    "out_w": int(norm.shape[1]),
-                    "out_h": int(norm.shape[0]),
-                    "orient_parsed": int(o_read),
-                    "norm_exact": bool(np.array_equal(norm, upright)),
-                    "jpeg_within_tol": bool(err <= 24),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "orientation", "out_w", "out_h",
-                         "orient_parsed", "norm_exact", "jpeg_within_tol"],
-            )
-
-    return docs.mapInPandas(run, schema=EXIF_ORIENT_NORM_SCHEMA)
+    return per_doc(spark, sf_dir, EXIF_ORIENT_NORM_SCHEMA, row)
 
 
 EXIF_ORIENT_NORM_DUCK = """

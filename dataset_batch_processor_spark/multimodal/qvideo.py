@@ -8,10 +8,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .. import catalog
-
+from .qcommon import per_doc
 
 
 # --------------------------------------------------- video frame sampling
@@ -38,33 +36,16 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av, binary
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 0)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
-    )
+    def row(d):
+        n = d % 9 + 4
+        f = np.arange(n, dtype=np.int64)[:, None]
+        i = np.arange(_FS_H * _FS_W * 3, dtype=np.int64)[None, :]
+        px = ((d * 13 + f * 17 + i * 3) % 256).astype(np.uint8)
+        frames = px.reshape(n, _FS_H, _FS_W, 3)
+        yield str(d), "rawvid", av.encode_rawvid(frames, fps=_FS_FPS)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 9 + 4
-                f = np.arange(n, dtype=np.int64)[:, None]
-                i = np.arange(_FS_H * _FS_W * 3, dtype=np.int64)[None, :]
-                px = ((d * 13 + f * 17 + i * 3) % 256).astype(np.uint8)
-                frames = px.reshape(n, _FS_H, _FS_W, 3)
-                out.append(
-                    {
-                        "id": str(d),
-                        "fmt": "rawvid",
-                        "content": av.encode_rawvid(frames, fps=_FS_FPS),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "fmt", "content"])
-
-    vids = docs.mapInPandas(gen, schema="id string, fmt string, content binary")
+    vids = per_doc(spark, sf_dir, "id string, fmt string, content binary",
+                   row, mod=5, sized=True)
     sampled = av.sample_frames(vids, every_n=_FS_STRIDE)
 
     def checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -135,36 +116,19 @@ def _q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 5 == 0)
-        .select("doc_id"),
-        rows=catalog.table_rows(spark, sf_dir, "documents") // 5,
-    )
+    def row(d):
+        n = d % 9 + 4
+        cut = n // 2
+        f = np.arange(n, dtype=np.int64)[:, None]
+        i = np.arange(_FS_H * _FS_W * 3, dtype=np.int64)[None, :]
+        px = (
+            (d * 13 + f * 17 + i * 3 + (f >= cut) * 128) % 256
+        ).astype(np.uint8)
+        frames = px.reshape(n, _FS_H, _FS_W, 3)
+        yield str(d), av.encode_rawvid(frames, fps=_FS_FPS)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 9 + 4
-                cut = n // 2
-                f = np.arange(n, dtype=np.int64)[:, None]
-                i = np.arange(_FS_H * _FS_W * 3, dtype=np.int64)[None, :]
-                px = (
-                    (d * 13 + f * 17 + i * 3 + (f >= cut) * 128) % 256
-                ).astype(np.uint8)
-                out.append(
-                    {
-                        "id": str(d),
-                        "content": av.encode_rawvid(
-                            px.reshape(n, _FS_H, _FS_W, 3), fps=_FS_FPS
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["id", "content"])
-
-    vids = docs.mapInPandas(gen, schema="id string, content binary")
+    vids = per_doc(spark, sf_dir, "id string, content binary", row, mod=5,
+                   sized=True)
     return av.scene_changes(vids, energy_thresh=_SC_THRESH)
 
 
@@ -216,56 +180,30 @@ def _q_avi_mjpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import av as avmod
 
-    docs = catalog.fanout(
-        catalog.load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 13 == 6)
-        .select("doc_id")
-    )
+    def row(d):
+        n = d % 5 + 2
+        h, w = d % 10 + 8, d % 15 + 8
+        fps = (10, 24, 30)[d % 3]
+        implied = bool(d % 2)
+        y, x = np.mgrid[0:h, 0:w]
+        frames = np.stack([
+            np.stack(
+                [x * 3 + k * 10 + d % 50, y * 4 + k * 5, x + y + k * 7],
+                axis=2,
+            ).astype(np.uint8)
+            for k in range(n)
+        ])
+        data = avmod.encode_avi_mjpeg(frames, fps=fps, strip_dht=implied)
+        dec, got_fps = avmod.VIDEO_CODECS["avi"](data)
+        err = int(np.abs(dec.astype(int) - frames.astype(int)).max())
+        alt, _ = avmod.decode_avi_mjpeg(
+            avmod.encode_avi_mjpeg(frames, fps=fps, strip_dht=not implied)
+        )
+        yield (d, int(dec.shape[0]), int(got_fps), implied,
+               bool(err <= 8 and dec.shape == (n, h, w, 3)),
+               bool(np.array_equal(dec, alt)))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 5 + 2
-                h, w = d % 10 + 8, d % 15 + 8
-                fps = (10, 24, 30)[d % 3]
-                implied = bool(d % 2)
-                y, x = np.mgrid[0:h, 0:w]
-                frames = np.stack([
-                    np.stack(
-                        [x * 3 + k * 10 + d % 50, y * 4 + k * 5,
-                         x + y + k * 7],
-                        axis=2,
-                    ).astype(np.uint8)
-                    for k in range(n)
-                ])
-                data = avmod.encode_avi_mjpeg(
-                    frames, fps=fps, strip_dht=implied
-                )
-                dec, got_fps = avmod.VIDEO_CODECS["avi"](data)
-                err = int(np.abs(dec.astype(int) - frames.astype(int)).max())
-                alt, _ = avmod.decode_avi_mjpeg(
-                    avmod.encode_avi_mjpeg(
-                        frames, fps=fps, strip_dht=not implied
-                    )
-                )
-                out.append({
-                    "doc_id": d,
-                    "n_frames": int(dec.shape[0]),
-                    "fps": int(got_fps),
-                    "implied_dht": implied,
-                    "within_tol": bool(err <= 8 and dec.shape
-                                       == (n, h, w, 3)),
-                    "dht_forms_equal": bool(np.array_equal(dec, alt)),
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_frames", "fps", "implied_dht",
-                         "within_tol", "dht_forms_equal"],
-            )
-
-    return docs.mapInPandas(run, schema=AVI_SCHEMA)
+    return per_doc(spark, sf_dir, AVI_SCHEMA, row, mod=13, rem=6)
 
 
 AVI_DUCK = """

@@ -223,8 +223,10 @@ def split_text_file(
 ) -> RunResult:
     """§3.3 split: W1 chunk assignment + K4 exporter."""
     lines = text_src.read_lines(spark, in_path, glob="*.txt")
-    n_files = sinks.export_chunked_text(lines, out_dir, records_per_file)
-    return RunResult(metrics={"n_files": n_files, "n_lines": lines.count()})
+    n_files, n_lines = sinks.export_chunked_text(
+        lines, out_dir, records_per_file
+    )
+    return RunResult(metrics={"n_files": n_files, "n_lines": n_lines})
 
 
 def dedup_text_file(spark: SparkSession, in_path: str, out_path: str) -> RunResult:

@@ -27,7 +27,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .matcache import scratch_dir
+from .matcache import session_dir
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # The largest registry working set above (one pass in one session,
@@ -87,11 +87,11 @@ def get_spark(
     )
     # static conf: managed-table warehouse for bucketed tables
     # (sources/storage.py). Unset, each new session gets its own
-    # scratch directory (removed at exit); a running session keeps its
-    # warehouse, so none is made for it.
+    # session directory (removed at exit, kept by cleanup_scratch); a
+    # running session keeps its warehouse, so none is made for it.
     warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE")
     if warehouse is None and SparkSession.getActiveSession() is None:
-        warehouse = scratch_dir("dbp_warehouse_")
+        warehouse = session_dir("dbp_warehouse_")
     if warehouse is not None:
         builder = builder.config("spark.sql.warehouse.dir", warehouse)
     for k, v in (extra_conf or {}).items():

@@ -170,11 +170,15 @@ def export_ordered_lines_distributed(df: DataFrame, out_dir: str) -> int:
     return _write_ordered_parts(ordered, out_dir, fmt)
 
 
-def export_chunked_text(df: DataFrame, out_dir: str, records_per_file: int = 50) -> int:
+def export_chunked_text(
+    df: DataFrame, out_dir: str, records_per_file: int = 50
+) -> tuple[int, int]:
     """K4 chunked split sink as loose ``split_<k>.txt`` files — the
     exporter variant of textops.write_chunks. Each executor writes the
     chunks whose rows it holds after a repartition ON file_id, so one
-    file is written by exactly one task (no cross-task append)."""
+    file is written by exactly one task (no cross-task append).
+    Returns ``(n_files, n_lines)``, both counted inside the one write
+    job."""
     from ..operators.textops import split_chunks
 
     os.makedirs(out_dir, exist_ok=True)
@@ -183,8 +187,9 @@ def export_chunked_text(df: DataFrame, out_dir: str, records_per_file: int = 50)
         "file_id", "rn", "value"
     )
     # the repartition puts each file_id in one task, so the per-task
-    # file counts sum to the number of distinct files
-    n_files = df.sparkSession.sparkContext.accumulator(0)
+    # file and line counts sum to the totals written
+    sc = df.sparkSession.sparkContext
+    n_files, n_lines = sc.accumulator(0), sc.accumulator(0)
 
     def write_partition(rows):
         by_file: dict[int, list[tuple[int, str]]] = {}
@@ -195,10 +200,11 @@ def export_chunked_text(df: DataFrame, out_dir: str, records_per_file: int = 50)
             with open(os.path.join(out_dir, f"split_{fid}.txt"), "w") as fh:
                 for _, v in lines:
                     fh.write(v + "\n")
+            n_lines.add(len(lines))
         n_files.add(len(by_file))
 
     joined.repartition("file_id").foreachPartition(write_partition)
-    return n_files.value
+    return n_files.value, n_lines.value
 
 
 def export_crop_reports(routed: DataFrame, out_dir: str) -> int:

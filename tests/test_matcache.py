@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from dataset_batch_processor_spark import matcache
 
 
@@ -37,6 +39,24 @@ def test_cleanup_scratch_removes_dirs_and_cache(spark):
     )
     assert again.count() == 3
     matcache.cleanup_scratch()
+
+
+def test_cleanup_scratch_keeps_the_live_warehouse(spark):
+    """cleanup_scratch() with a live session must not delete its
+    warehouse: the next managed-table write would recreate it outside
+    every registry, and it would outlive the process."""
+    if os.environ.get("SPARK_GRAFT_WAREHOUSE"):
+        pytest.skip("warehouse is deployment-managed")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    matcache.cleanup_scratch()
+    assert os.path.isdir(wh)
+    spark.range(3).write.saveAsTable("warehouse_probe")
+    try:
+        assert os.path.isdir(os.path.join(wh, "warehouse_probe"))
+        assert wh in matcache._SESSION_DIRS
+        assert wh not in matcache._SCRATCH_DIRS
+    finally:
+        spark.sql("DROP TABLE IF EXISTS warehouse_probe")
 
 
 def test_scratch_root_override(spark, tmp_path):

@@ -13,6 +13,8 @@ from dataset_batch_processor_spark import pipeline
 from dataset_batch_processor_spark.multimodal import binary as mm
 from dataset_batch_processor_spark.multimodal import png
 from dataset_batch_processor_spark.operators.tiling import TileSpec
+from dataset_batch_processor_spark.sources import sinks
+from dataset_batch_processor_spark.sources import text as text_src
 
 
 def grad_image(h, w, seed=0):
@@ -208,6 +210,34 @@ def test_text_pipelines(spark, tmp_path):
     res = pipeline.dedup_text_file(spark, str(d), str(out))
     assert res.metrics == {"original": 4, "unique": 3, "removed": 1}
     assert out.read_text() == "x\ny\nz\n"
+
+
+def test_split_text_file_counts_in_its_write_jobs(spark, tmp_path):
+    """split_text_file's n_lines rides the chunked export's one write
+    (an accumulator): the facade starts exactly the jobs the exporter
+    starts on the same input, not one more count() job."""
+    d = tmp_path / "txt"
+    d.mkdir()
+    (d / "a.txt").write_text("x\ny\nx\n")
+    (d / "b.txt").write_text("z\n")
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res, facade = jobs("split-text-facade", lambda: pipeline.split_text_file(
+        spark, str(d), str(tmp_path / "sp"), 3))
+    _, export = jobs("split-text-export", lambda: sinks.export_chunked_text(
+        text_src.read_lines(spark, str(d), glob="*.txt"),
+        str(tmp_path / "ex"), 3))
+    assert res.metrics == {"n_files": 2, "n_lines": 4}
+    assert facade == export
 
 
 def test_tile_pipeline_sidecar_captions(spark, tmp_path):

@@ -5,6 +5,7 @@ correctness run at sf0.01."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
@@ -142,6 +143,69 @@ def test_rows_sized_mm_fanout_skips_a_width_one_exchange(spark, sf_dir):
 
     df = mmq.QUERIES["mm_audio_features"](spark, sf_dir)
     assert "REPARTITION_BY_NUM" not in explain.formatted_plan(df)
+
+
+# every query built through multimodal.qcommon.per_doc: (mod, sized)
+_PER_DOC_FANS = {
+    "mm_png_roundtrip": (None, False),
+    "mm_png_interlaced_roundtrip": (None, False),
+    "mm_jpeg_roundtrip": (None, False),
+    "mm_progressive_roundtrip": (None, False),
+    "mm_resize_roundtrip": (None, False),
+    "mm_webp_roundtrip": (None, False),
+    "mm_vp8_roundtrip": (None, False),
+    "mm_heif_roundtrip": (8, False),
+    "mm_png_depths_roundtrip": (3, True),
+    "mm_bmp_depths_roundtrip": (7, False),
+    "mm_format_convert_chain": (9, False),
+    "mm_jpeg12_roundtrip": (11, True),
+    "mm_watermark_lsb_roundtrip": (None, False),
+    "mm_dng_lossless_roundtrip": (4, False),
+    "mm_dng_tiled_roundtrip": (5, False),
+    "mm_cr2_lossless_roundtrip": (4, False),
+    "mm_nef_packed_roundtrip": (4, True),
+    "mm_nef_compressed_roundtrip": (5, False),
+    "mm_arw_roundtrip": (4, True),
+    "mm_arw_compressed_roundtrip": (5, True),
+    "mm_wav_roundtrip": (None, True),
+    "mm_wav_depths_roundtrip": (9, True),
+    "mm_audio_features": (3, True),
+    "mm_audio_vad_segments": (3, True),
+    "mm_audio_spectral": (3, True),
+    "mm_audio_normalize": (3, True),
+    "mm_audio_resample": (3, True),
+    "mm_frame_sample": (5, True),
+    "mm_video_scene_cuts": (5, True),
+    "mm_avi_mjpeg_roundtrip": (13, False),
+    "mm_exif_orientation": (3, False),
+    "mm_exif_scrub": (None, False),
+    "mm_scrub_routing": (None, True),
+    "mm_exif_orientation_normalize": (None, False),
+    "mm_tile_checksum": (None, False),
+    "mm_vit_patchify": (5, False),
+    "mm_augment_views": (5, False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PER_DOC_FANS))
+def test_per_doc_fan_width(spark, sf_dir, name):
+    """Each per_doc query keeps the fan width the fan rule gives its
+    site: defaultParallelism unsized, table_rows // mod //
+    FANOUT_ROWS_PER_TASK (at least 1) sized, and no round-robin
+    exchange where the one-file scan is already that wide."""
+    from dataset_batch_processor_spark.multimodal import queries as mmq
+
+    mod, sized = _PER_DOC_FANS[name]
+    width = spark.sparkContext.defaultParallelism
+    if sized:
+        rows = catalog.table_rows(spark, sf_dir, "documents") // (mod or 1)
+        width = max(1, min(width, rows // catalog.FANOUT_ROWS_PER_TASK))
+    scan = catalog.load_table(spark, sf_dir, "documents").rdd.getNumPartitions()
+    plan = explain.formatted_plan(mmq.QUERIES[name](spark, sf_dir))
+    if width > scan:
+        assert f"RoundRobinPartitioning({width})" in plan
+    else:
+        assert "RoundRobinPartitioning" not in plan
 
 
 def test_first_last_order_is_one_agg_no_window(spark, sf_dir):

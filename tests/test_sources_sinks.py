@@ -100,8 +100,8 @@ def test_export_merged_and_chunked(spark, tmp_path):
     assert merged.read_text() == "\n\n".join(f"line{n}" for n in range(7))
 
     out = tmp_path / "chunks"
-    n_files = sinks.export_chunked_text(lines, str(out), records_per_file=3)
-    assert n_files == 3
+    n_files, n_lines = sinks.export_chunked_text(lines, str(out), records_per_file=3)
+    assert (n_files, n_lines) == (3, 7)
     assert (out / "split_0.txt").read_text() == "line0\nline1\nline2\n"
     assert (out / "split_2.txt").read_text() == "line6\n"
 

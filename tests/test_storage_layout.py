@@ -5,7 +5,6 @@ range-sorted writes, audited through the parquet footers themselves.
 from __future__ import annotations
 
 import glob
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -13,12 +12,12 @@ from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.sources import storage
 
 
-def test_compaction_reduces_files_and_preserves_rows(spark, sf_dir):
+def test_compaction_reduces_files_and_preserves_rows(spark, sf_dir, tmp_path):
     orders = catalog.load_table(spark, sf_dir, "orders")
-    src = tempfile.mkdtemp(prefix="dbp_small_") + "/orders"
+    src = str(tmp_path / "small" / "orders")
     # simulate a small-files mess: 40 files for a tiny table
     orders.repartition(40).write.parquet(src)
-    dst = tempfile.mkdtemp(prefix="dbp_compact_") + "/orders"
+    dst = str(tmp_path / "compact" / "orders")
     before, after = storage.compact_parquet_dir(
         spark, src, dst, target_rows_per_file=100_000
     )
@@ -30,11 +29,11 @@ def test_compaction_reduces_files_and_preserves_rows(spark, sf_dir):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_compaction_rejects_hive_partitioned_source(spark, sf_dir):
+def test_compaction_rejects_hive_partitioned_source(spark, sf_dir, tmp_path):
     import pytest
 
     orders = catalog.load_table(spark, sf_dir, "orders")
-    src = tempfile.mkdtemp(prefix="dbp_part_") + "/orders"
+    src = str(tmp_path / "part" / "orders")
     orders.write.partitionBy("o_orderpriority").parquet(src)
     with pytest.raises(ValueError, match="hive-partitioned"):
         storage.compact_parquet_dir(
@@ -42,9 +41,9 @@ def test_compaction_rejects_hive_partitioned_source(spark, sf_dir):
         )
 
 
-def test_range_sorted_layout_gives_disjoint_file_ranges(spark, sf_dir):
+def test_range_sorted_layout_gives_disjoint_file_ranges(spark, sf_dir, tmp_path):
     orders = catalog.load_table(spark, sf_dir, "orders")
-    dst = tempfile.mkdtemp(prefix="dbp_sorted_") + "/orders"
+    dst = str(tmp_path / "sorted" / "orders")
     storage.write_range_sorted(orders, dst, "o_orderkey", n_files=8)
     assert len(glob.glob(f"{dst}/part-*.parquet")) == 8
     ranges = storage.parquet_file_ranges(dst, "o_orderkey")
@@ -59,12 +58,12 @@ def test_range_sorted_layout_gives_disjoint_file_ranges(spark, sf_dir):
     assert hit.count() == 1
 
 
-def test_unsorted_layout_has_overlapping_ranges(spark, sf_dir):
+def test_unsorted_layout_has_overlapping_ranges(spark, sf_dir, tmp_path):
     """Counter-case: hash-partitioned writes give every file the full
     value range — nothing prunes. This is the measurable difference
     the sorted layout exists to create."""
     orders = catalog.load_table(spark, sf_dir, "orders")
-    dst = tempfile.mkdtemp(prefix="dbp_hashed_") + "/orders"
+    dst = str(tmp_path / "hashed" / "orders")
     orders.repartition(8, "o_orderkey").write.parquet(dst)
     ranges = storage.parquet_file_ranges(dst, "o_orderkey")
     ranges.sort()
@@ -79,7 +78,7 @@ def _files_matching(ranges, lo, hi):
     return sum(1 for mn, mx in ranges if not (mx < lo or mn > hi))
 
 
-def test_zorder_write_prunes_both_dimensions(spark, sf_dir):
+def test_zorder_write_prunes_both_dimensions(spark, sf_dir, tmp_path):
     """Z-order layout vs single-column range sort, audited from the
     parquet footers: sorting by user_id alone serves user predicates
     but leaves every file spanning the full value range (a value
@@ -87,7 +86,7 @@ def test_zorder_write_prunes_both_dimensions(spark, sf_dir):
     tight boxes over BOTH columns, so both predicate classes prune."""
     events = catalog.load_events(spark, sf_dir).select("user_id", "value")
     n_files = 16
-    base = tempfile.mkdtemp(prefix="dbp_zorder_")
+    base = str(tmp_path)
     storage.write_range_sorted(events, base + "/by_user", "user_id", n_files)
     storage.write_zordered(events, base + "/zorder", "user_id", "value", n_files)
 
