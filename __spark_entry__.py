@@ -180,7 +180,9 @@ def _q_merge_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_split_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textops.split_chunks(catalog.text_lines(spark, sf_dir), records_per_file=50)
+    return textops.split_chunks(
+        catalog.text_lines(spark, sf_dir), records_per_file=50
+    ).select("line_no", "input_file", "rn", "file_id")
 
 
 def _q_caption_join(spark: SparkSession, sf_dir: str) -> DataFrame:

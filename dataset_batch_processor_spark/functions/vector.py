@@ -1,10 +1,11 @@
 """Vector expression library for embedding similarity.
 
 Dot products and cosine similarity over ``array<float>`` columns,
-computed JVM-side with higher-order functions (zip_with + aggregate)
-— no Python in the hot path. Elements are cast to double before
-accumulation; accumulation is sequential in index order, which both
-Spark and an index-ordered DuckDB formulation reproduce exactly.
+computed JVM-side with higher-order functions (zip_with + aggregate),
+or with the same fold as an Arrow kernel (:func:`cosine_exact_arrow`).
+Elements are cast to double before accumulation; accumulation is
+sequential in index order, which both Spark and an index-ordered
+DuckDB formulation reproduce exactly. There is no other cosine.
 """
 
 from __future__ import annotations
@@ -77,30 +78,3 @@ def cosine_exact_arrow():
 
     return cos_exact
 
-
-def cosine6_vectorized():
-    """Arrow-vectorized cosine (rounded to 6 dp) — the production fast
-    path (~2x the zip_with fold locally; the gap widens with batch
-    size since einsum runs the whole Arrow batch in C).
-
-    Kept OUT of the oracle-checked queries on purpose: numpy's
-    pairwise accumulation can differ from the oracle's sequential sum
-    in the last ulp, and while rounding to 6 dp absorbed every case
-    we measured, the exact JVM fold is the one with a determinism
-    PROOF, not an observation. Flip the similarity operators to this
-    UDF when throughput matters more than oracle bit-parity.
-    """
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos6(a: "pd.Series", b: "pd.Series") -> "pd.Series":
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", A, B)
-        na = np.sqrt(np.einsum("ij,ij->i", A, A))
-        nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-        return pd.Series(np.round(dots / (na * nb), 6))
-
-    return cos6

@@ -224,7 +224,7 @@ def build_ivfpq_topk(spark, sf_dir):
     emb = emb.repartition(par)  # one-file scan -> spread the kernels
     ids, C = coarse_centroids(emb)
     sub = sub_codebook_from_residuals(emb, ids, C)
-    index = ivfpq_encode(emb, ids, C, sub, exact_fold=True)
+    index = ivfpq_encode(emb, ids, C, sub)
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
     luts = ivfpq_query_luts(queries, ids, C, sub)
     return ivfpq_topk_from_index(index, luts)
@@ -260,20 +260,13 @@ def coarse_centroids(emb, centroid_mod: int = CENTROID_MOD):
     return ids, C
 
 
-def ivfpq_encode(emb, ids, C, sub_cents, exact_fold: bool = True):
+def ivfpq_encode(emb, ids, C, sub_cents):
     """(vec_id, c_id, j, cid) — coarse assignment + residual PQ codes
     in ONE mapInPandas pass against the broadcast coarse centroids
     (n_cells × DIM) and sub-codebook (K × DIM residuals). The
     index-build kernel: corpus is touched once, output is the two
-    bucketable index tables joined flat.
-
-    ``exact_fold=True`` accumulates coarse distances dim-by-dim for
-    bit-parity with the SQL oracle (the fixture contract).
-    ``exact_fold=False`` is the production build: one GEMM per Arrow
-    batch (|x|² - 2x·C + |c|², the ``ivf_assign_gemm`` trick) — ~10×
-    faster at sqrt(n) cells; float-order differences can flip argmin
-    only on exact near-ties, which trained (non-degenerate) centroids
-    don't produce."""
+    bucketable index tables joined flat. Coarse distances accumulate
+    dim-by-dim for bit-parity with the SQL oracle."""
     import numpy as np
     import pandas as pd
 
@@ -284,25 +277,20 @@ def ivfpq_encode(emb, ids, C, sub_cents, exact_fold: bool = True):
         cids, CC, SC = bc.value
         n_cells, dim = CC.shape
         k = len(SC)
-        c_sq = (CC * CC).sum(axis=1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = len(E)
-            if exact_fold:
-                # coarse argmin: accumulate (x_i - c_i)^2 LEFT-TO-RIGHT
-                # over the 64 dims (SQL fold parity), fixed-point,
-                # lowest-index tie-break == lowest c_id (cids ascending)
-                acc = np.zeros((n, n_cells), dtype=np.float64)
-                for d in range(dim):
-                    diff = E[:, d, None] - CC[None, :, d]
-                    acc = acc + diff * diff
-                fx = np.floor(acc * FX + 0.5)
-                cell_idx = np.argmin(fx, axis=1)
-            else:
-                d2 = (E * E).sum(axis=1)[:, None] - 2.0 * (E @ CC.T) + c_sq
-                cell_idx = np.argmin(d2, axis=1)
+            # coarse argmin: accumulate (x_i - c_i)^2 LEFT-TO-RIGHT
+            # over the 64 dims (SQL fold parity), fixed-point,
+            # lowest-index tie-break == lowest c_id (cids ascending)
+            acc = np.zeros((n, n_cells), dtype=np.float64)
+            for d in range(dim):
+                diff = E[:, d, None] - CC[None, :, d]
+                acc = acc + diff * diff
+            fx = np.floor(acc * FX + 0.5)
+            cell_idx = np.argmin(fx, axis=1)
             R = E - CC[cell_idx]  # residuals, exact double subtraction
             out_codes = np.empty((n, M), dtype=np.int32)
             for j in range(M):

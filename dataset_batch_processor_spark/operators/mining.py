@@ -68,9 +68,7 @@ def _scored(emb: DataFrame) -> DataFrame:
         "q_label",
         F.col("vec_id").alias("neighbor_id"),
         "label",
-        _cos_expr(
-            F.col("q_emb"), F.col("embedding"), vectorized=False
-        ).alias("cos_sim"),
+        _cos_expr(F.col("q_emb"), F.col("embedding")).alias("cos_sim"),
     )
 
 

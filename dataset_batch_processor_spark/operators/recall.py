@@ -63,9 +63,7 @@ def _q_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the family sides; eager per-family evaluation loses all
     # cross-family sharing). The lazy union lets Spark dedupe the
     # identical exchanges itself.
-    bf = brute_force_topk(emb, vectorized=False).select(
-        "query_id", "neighbor_id"
-    )
+    bf = brute_force_topk(emb).select("query_id", "neighbor_id")
     # Each family result comes from the SAME materialize_once-backed
     # function its registered driver query uses, so within one session
     # (the bench run, the driver's correctness sweep) the five family

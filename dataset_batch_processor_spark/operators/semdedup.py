@@ -53,7 +53,6 @@ from .. import catalog
 from .similarity import (
     CENTROID_MOD,
     PANEL_TAIL_SQL,
-    _cos_expr,
     _cos_sql,
     ivf_assignments,
 )
@@ -61,7 +60,7 @@ from .similarity import (
 EPS = 0.3  # fixture-calibrated; see module docstring
 
 
-def _pair_cos_kernel(eps: float, vectorized: bool):
+def _pair_cos_kernel(eps: float):
     """Per-cluster pairwise-cosine kernel for ``applyInPandas``
     (round 16, guide §4.2): receives one pair_key group's members
     (vec_id, embedding, centroid_sim), emits the (a_id < b_id) pairs
@@ -72,14 +71,11 @@ def _pair_cos_kernel(eps: float, vectorized: bool):
     re-filtered exactly on the JVM side).
 
     Exactness: members are sorted by vec_id and expanded to the i<j
-    index pairs; ``vectorized=False`` accumulates dot/norms with the
-    SAME dimension-major multiply-add sequence as
+    index pairs, and dot/norms accumulate with the SAME
+    dimension-major multiply-add sequence as
     ``vector.cosine_exact_arrow`` (bit-identical doubles — see its
-    determinism proof), ``vectorized=True`` uses the same einsum as
-    ``vector.cosine6_vectorized``. Emitting the raw double and
-    rounding once JVM-side equals the old column expression for both
-    modes (the vectorized path's extra np.round was idempotent under
-    F.round)."""
+    determinism proof). Emitting the raw double and rounding once
+    JVM-side equals the column expression it replaced."""
     import numpy as np
     import pandas as pd
 
@@ -104,21 +100,16 @@ def _pair_cos_kernel(eps: float, vectorized: bool):
         iu, ju = np.triu_indices(m, 1)
         X = A[iu]
         Y = A[ju]
-        if vectorized:
-            dot = np.einsum("ij,ij->i", X, Y)
-            na = np.einsum("ij,ij->i", X, X)
-            nb = np.einsum("ij,ij->i", Y, Y)
-        else:
-            n = len(X)
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for d in range(X.shape[1]):
-                x = X[:, d]
-                y = Y[:, d]
-                dot += x * y
-                na += x * x
-                nb += y * y
+        n = len(X)
+        dot = np.zeros(n)
+        na = np.zeros(n)
+        nb = np.zeros(n)
+        for d in range(X.shape[1]):
+            x = X[:, d]
+            y = Y[:, d]
+            dot += x * y
+            na += x * x
+            nb += y * y
         raw = dot / (np.sqrt(na) * np.sqrt(nb))
         keep = raw >= eps - 1e-6
         return pd.DataFrame(
@@ -139,7 +130,6 @@ def semdedup_survivors(
     eps: float = EPS,
     centroid_mod: int = CENTROID_MOD,
     max_cluster_size: int = 0,
-    vectorized: bool = True,
     assignments: DataFrame | None = None,
 ) -> DataFrame:
     """(vec_id, centroid_id, centroid_sim, dup_degree) for every
@@ -161,7 +151,7 @@ def semdedup_survivors(
     assign = (
         assignments
         if assignments is not None
-        else ivf_assignments(emb, centroid_mod, vectorized)
+        else ivf_assignments(emb, centroid_mod)
     ).select(
         "vec_id", "centroid_id", F.round("cos_sim", 6).alias("centroid_sim")
     )
@@ -209,9 +199,8 @@ def semdedup_survivors(
     # per-key build side had, and the documented max_cluster_size /
     # raise-k levers apply unchanged. Exactness: the kernel performs
     # the identical accumulation sequence as the column expression it
-    # replaces (dimension-major multiply-add for the exact fold,
-    # einsum for the vectorized path — see _pair_cos_kernel), emits
-    # the RAW double, and leaves the HALF_UP rounding + eps gate
+    # replaces (dimension-major multiply-add — see _pair_cos_kernel),
+    # emits the RAW double, and leaves the HALF_UP rounding + eps gate
     # JVM-side; the kernel prefilter keeps every pair whose raw cosine
     # could round up to eps (round moves a value < 5e-7).
     members = members.repartition(par, "pair_key")
@@ -219,7 +208,7 @@ def semdedup_survivors(
         members.select("pair_key", "vec_id", "embedding", "centroid_sim")
         .groupBy("pair_key")
         .applyInPandas(
-            _pair_cos_kernel(eps, vectorized),
+            _pair_cos_kernel(eps),
             "a_id long, b_id long, a_csim double, b_csim double, "
             "raw_cos double",
         )
@@ -287,13 +276,12 @@ def semdedup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "semdedup_survivors", sf_dir,
         lambda: semdedup_survivors(
             catalog.load_table(spark, sf_dir, "embeddings"),
-            vectorized=False,
         ),
     )
 
 
 def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # oracle entry: join-formulated assignment + exact JVM cosine fold
+    # oracle entry: join-formulated assignment + exact cosine fold
     return semdedup_table(spark, sf_dir)
 
 

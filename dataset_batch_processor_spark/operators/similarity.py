@@ -83,13 +83,10 @@ def adaptive_n_planes(
     return min(hi, max(lo, math.ceil(math.log2(max(1.0, n / target_bucket)))))
 
 
-def _cos_expr(a, b, vectorized: bool, small: bool = False):
-    """Vectorized numpy cosine (production default: the zip_with fold
-    is an interpreted higher-order function — measured 25x slower at
-    200k vectors) vs the exact sequential JVM fold (oracle queries:
-    provable bit-determinism, see vector.cosine6_vectorized docstring)."""
-    if vectorized:
-        return vector.cosine6_vectorized()(a, b)
+def _cos_expr(a, b, small: bool = False):
+    """The exact sequential cosine fold, rounded to 6 dp JVM-side
+    (HALF_UP). The only choice is where the fold runs, and the call
+    site makes it from its row bound."""
     if small:
         # panel/bucket-bounded row counts (IVF probe: |Q| x cells,
         # candidates: |Q| x n_probe x bucket): an Arrow stage's fixed
@@ -97,15 +94,14 @@ def _cos_expr(a, b, vectorized: bool, small: bool = False):
         # (measured: emb_ivf_topk 0.82 -> 1.25 s when Arrow'd) — keep
         # the interpreted JVM fold for these stages
         return F.round(vector.cosine(a, b), 6)
-    # round 15: same exact sequential fold, executed as a vectorized
-    # Arrow kernel — bit-identical by operation-sequence construction
-    # (see cosine_exact_arrow docstring), JVM-side HALF_UP rounding
+    # same exact sequential fold, executed as a vectorized Arrow
+    # kernel — bit-identical by operation-sequence construction (see
+    # cosine_exact_arrow docstring), JVM-side HALF_UP rounding
     return F.round(vector.cosine_exact_arrow()(a, b), 6)
 
 
 def brute_force_topk(
     emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k for each query vector (vec_id % query_mod == 0)."""
     queries = bounded_panel(emb, query_mod).select(
@@ -117,7 +113,7 @@ def brute_force_topk(
     scored = pairs.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        _cos_expr(F.col("q_emb"), F.col("embedding"), vectorized).alias("cos_sim"),
+        _cos_expr(F.col("q_emb"), F.col("embedding")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
     return (
@@ -128,7 +124,6 @@ def brute_force_topk(
 
 
 def _q_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # oracle entry: exact JVM fold for provable determinism.
     # fanout (guide §2.5): the pair fold ran in one task on the
     # one-row-group scan (the panel-bounded ANN probes measured the
     # opposite — the exchange exceeds their stage cost — and stay
@@ -141,7 +136,6 @@ def _q_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
             catalog.load_table(spark, sf_dir, "embeddings"),
             rows=catalog.table_rows(spark, sf_dir, "embeddings"),
         ),
-        vectorized=False,
     )
 
 
@@ -236,12 +230,11 @@ def lsh_signature(emb_col, n_planes: int = N_PLANES) -> F.Column:
 
 def lsh_signature_exact_arrow(n_planes: int = N_PLANES):
     """Arrow twin of :func:`lsh_signature` with the SAME fold order —
-    bit-identical buckets ALWAYS (round 15; the GEMM path below is
-    sign-identical only off the measure-zero hyperplane boundary,
-    this one reproduces the JVM fold's operation sequence exactly:
-    for each plane, the projection accumulates dimension-by-dimension
-    in index order — the dim loop below performs one vectorized
-    multiply-add per dimension across the batch x plane matrix)."""
+    bit-identical buckets ALWAYS, where a GEMM would be sign-identical
+    only off the measure-zero hyperplane boundary. For each plane the
+    projection accumulates dimension-by-dimension in index order: the
+    dim loop below performs one vectorized multiply-add per dimension
+    across the batch x plane matrix."""
     import numpy as np
     import pandas as pd
 
@@ -267,44 +260,14 @@ def lsh_signature_exact_arrow(n_planes: int = N_PLANES):
 
 def hyperplane_matrix(n_planes: int, dim: int = DIM):
     """The ±1 hyperplane matrix (n_planes × dim) behind
-    ``lsh_signature``, as numpy — shared by the vectorized kernel so
-    both paths hash to IDENTICAL buckets."""
+    ``lsh_signature``, as numpy — the Arrow kernel's planes, so both
+    paths hash to IDENTICAL buckets."""
     import numpy as np
 
     return np.array(
         [[_hyperplane_sign(t, i) for i in range(1, dim + 1)]
          for t in range(n_planes)],
         dtype=np.float64,
-    )
-
-
-def lsh_signature_batches(emb: DataFrame, n_planes: int) -> DataFrame:
-    """(vec_id, bucket) via one GEMM per Arrow batch — the production
-    signature path for wide corpora (the Catalyst ``lsh_signature``
-    expression is n_planes interpreted aggregate folds per row, fine
-    for the fixture, ~an order slower at 10^7+ rows). Bit-identical
-    buckets to ``lsh_signature`` for inputs where no projection lands
-    exactly on a hyperplane (measure-zero; test-pinned on the
-    fixture)."""
-    import numpy as np
-    import pandas as pd
-
-    P = hyperplane_matrix(n_planes)
-    w = (2 ** np.arange(n_planes, dtype=np.int64))
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            sig = ((E @ P.T) > 0).astype(np.int64) @ w
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(),
-                 "bucket": sig.astype(np.int32)}
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        run, schema="vec_id long, bucket int"
     )
 
 
@@ -326,8 +289,7 @@ def multiprobe_masks(n_planes: int, r: int) -> list[int]:
 
 def ann_lsh_topk(
     emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
-    vectorized: bool = True, n_planes: int | None = None,
-    multiprobe: int = 0,
+    n_planes: int | None = None, multiprobe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: probe the query's own LSH bucket, plus — with
     ``multiprobe=r`` — every bucket within Hamming distance r of it
@@ -373,8 +335,7 @@ def ann_lsh_topk(
         # a multi-probe Hamming ball scores enough candidates for the
         # Arrow exact fold to pay off (measured both ways, r15)
         _cos_expr(
-            F.col("q_emb"), F.col("embedding"), vectorized,
-            small=multiprobe == 0,
+            F.col("q_emb"), F.col("embedding"), small=multiprobe == 0,
         ).alias("cos_sim"),
     ).distinct()
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
@@ -395,7 +356,7 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "anntopk_lsh", sf_dir,
         lambda: ann_lsh_topk(
             catalog.load_table(spark, sf_dir, "embeddings"),
-            vectorized=False, n_planes=N_PLANES,
+            n_planes=N_PLANES,
         ),
     )
 
@@ -463,7 +424,7 @@ def _q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "anntopk_lsh_multiprobe", sf_dir,
         lambda: ann_lsh_topk(
             catalog.load_table(spark, sf_dir, "embeddings"),
-            vectorized=False, n_planes=N_PLANES, multiprobe=MULTIPROBE_R,
+            n_planes=N_PLANES, multiprobe=MULTIPROBE_R,
         ),
     )
 
@@ -602,30 +563,6 @@ def _gemm_assign_fn(bc):
             )
 
     return run
-
-
-def ivf_assign_gemm(emb: DataFrame, centroid_mod: int = CENTROID_MOD) -> DataFrame:
-    """Oracle-fixture GEMM assignment (fixed-mod sampled centroids).
-
-    Collects the sampled centroid matrix to the driver — bounded ONLY
-    because the oracle fixture is small; production goes through
-    `ivf_train_centroids` + `ivf_assign_trained` where the collect is
-    bounded at ~sqrt(n) rows by construction."""
-    import numpy as np
-
-    cent_rows = sorted(
-        emb.filter(F.col("vec_id") % centroid_mod == 0)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )[:PANEL_CAP]  # mirror bounded_panel / IVF_ASSIGN_CTES exactly
-    cent_ids = np.array([r.vec_id for r in cent_rows], dtype=np.int64)
-    C = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in cent_rows])
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    bc = emb.sparkSession.sparkContext.broadcast((cent_ids, Cn))
-    return emb.select("vec_id", "embedding").mapInPandas(
-        _gemm_assign_fn(bc), schema="vec_id long, centroid_id long, cos_sim double"
-    )
 
 
 def _truncdiv(s: int, d: int) -> int:
@@ -856,7 +793,6 @@ def ivf_build_index(
 def ivf_topk_trained(
     emb: DataFrame, ids, Cn, k: int = TOP_K, query_mod: int = QUERY_MOD,
     n_probe: int = N_PROBE, assign: DataFrame | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Production IVF probe against trained centroids.
 
@@ -912,8 +848,7 @@ def ivf_topk_trained(
         # full probe (n_probe = every list) scores corpus-sized
         # candidates — the Arrow exact fold pays off there
         _cos_expr(
-            F.col("q_emb"), F.col("embedding"), vectorized,
-            small=n_probe < len(ids),
+            F.col("q_emb"), F.col("embedding"), small=n_probe < len(ids),
         ).alias("cos_sim"),
     ).distinct()
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
@@ -924,18 +859,7 @@ def ivf_topk_trained(
     )
 
 
-def _q_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only driver query for the PRODUCTION IVF path (k-means is
-    not SQL-expressible; recall vs brute force is pytest-bounded)."""
-    # the trainer + probe make several passes; persist the (narrow)
-    # corpus projection once instead of re-scanning parquet per pass
-    emb = catalog.load_table(spark, sf_dir, "embeddings").persist()
-    ids, Cn = ivf_train_centroids(emb)
-    return ivf_topk_trained(emb, ids, Cn, n_probe=4)
-
-
-def ivf_assignments(emb: DataFrame, centroid_mod: int = CENTROID_MOD,
-                    vectorized: bool = True) -> DataFrame:
+def ivf_assignments(emb: DataFrame, centroid_mod: int = CENTROID_MOD) -> DataFrame:
     """(vec_id, centroid_id, cos_sim): each vector binned to its
     nearest centroid (rounded cosine, centroid-id tiebreak).
 
@@ -950,7 +874,7 @@ def ivf_assignments(emb: DataFrame, centroid_mod: int = CENTROID_MOD,
     scored = emb.crossJoin(F.broadcast(centroids)).select(
         "vec_id",
         "centroid_id",
-        _cos_expr(F.col("embedding"), F.col("c_emb"), vectorized).alias("cos_sim"),
+        _cos_expr(F.col("embedding"), F.col("c_emb")).alias("cos_sim"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.col("centroid_id"))
     return (
@@ -960,28 +884,21 @@ def ivf_assignments(emb: DataFrame, centroid_mod: int = CENTROID_MOD,
     )
 
 
-def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
-             n_probe: int = N_PROBE, centroid_mod: int = CENTROID_MOD,
-             vectorized: bool = True, gemm_assign: bool = True,
-             assign_df: DataFrame | None = None) -> DataFrame:
+def ivf_topk(emb: DataFrame, assign_df: DataFrame, k: int = TOP_K,
+             query_mod: int = QUERY_MOD, n_probe: int = N_PROBE,
+             centroid_mod: int = CENTROID_MOD) -> DataFrame:
     """Probe the n_probe nearest inverted lists, exact-rank inside.
 
     Note the IVF cost model: the assignment is an INDEX BUILD — pay it
     once (persist the assignment table), amortize over every query
-    batch. Pass ``assign_df`` (vec_id, centroid_id) to probe a
-    prebuilt/persisted index (round 9: the registered query does this
-    via a session-materialized assignment, so repeated probes measure
-    probe cost, not rebuild cost — the production shape); otherwise
-    this convenience wrapper builds the assignment inline."""
+    batch. ``assign_df`` (vec_id, centroid_id) is that prebuilt index
+    (the registered query passes the session-materialized
+    ``ivf_flat_assign``, so repeated probes measure probe cost, not
+    rebuild cost — the production shape)."""
     centroids = bounded_panel(emb, centroid_mod).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
-    if assign_df is None:
-        assign_fn = ivf_assign_gemm(emb, centroid_mod) if gemm_assign else \
-            ivf_assignments(emb, centroid_mod, vectorized)
-        assign = assign_fn.select("vec_id", "centroid_id")
-    else:
-        assign = assign_df.select("vec_id", "centroid_id")
+    assign = assign_df.select("vec_id", "centroid_id")
     queries = emb.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -990,7 +907,7 @@ def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
         "q_emb",
         "centroid_id",
         _cos_expr(
-            F.col("q_emb"), F.col("c_emb"), vectorized, small=True
+            F.col("q_emb"), F.col("c_emb"), small=True
         ).alias("c_cos"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("c_cos"), F.col("centroid_id"))
@@ -1009,7 +926,7 @@ def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
         F.col("vec_id").alias("neighbor_id"),
         # candidates are |Q| x n_probe x bucket — panel-bounded
         _cos_expr(
-            F.col("q_emb"), F.col("embedding"), vectorized, small=True
+            F.col("q_emb"), F.col("embedding"), small=True
         ).alias("cos_sim"),
     ).distinct()  # a candidate can arrive via both probed lists
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
@@ -1032,22 +949,20 @@ def ivf_flat_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "ivf_flat_assign", sf_dir,
         lambda: ivf_assignments(
             catalog.load_table(spark, sf_dir, "embeddings"),
-            vectorized=False,
         ).select("vec_id", "centroid_id"),
     )
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # oracle entry: join-formulated assignment + exact JVM cosine fold;
+    # oracle entry: join-formulated assignment + exact cosine fold;
     # the assignment index is session-materialized (ivf_flat_assign),
     # the top-k result cached for the recall report — identical output
-    # to the inline build, so IVF_TOPK_DUCK is unchanged
+    # to an inline assignment, so IVF_TOPK_DUCK replays it inline
     return matcache.materialize_once(
         spark, "anntopk_ivf", sf_dir,
         lambda: ivf_topk(
             catalog.load_table(spark, sf_dir, "embeddings"),
-            vectorized=False,
-            assign_df=ivf_flat_assign(spark, sf_dir),
+            ivf_flat_assign(spark, sf_dir),
         ),
     )
 
@@ -1193,7 +1108,7 @@ def _q_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6 dp — IVF_TRAINED_TOPK_DUCK replays both iterations
     op-for-op."""
     emb, ids, Cn = _trained_index(spark, sf_dir)
-    return ivf_topk_trained(emb, ids, Cn, vectorized=False)
+    return ivf_topk_trained(emb, ids, Cn)
 
 
 def _cosq_duck(v: str, c: str) -> str:
@@ -1383,14 +1298,12 @@ def truncated_topk(
     t = emb.select(
         "vec_id", F.slice("embedding", 1, dim).alias("embedding")
     )
-    return brute_force_topk(t, k=k, query_mod=query_mod, vectorized=False)
+    return brute_force_topk(t, k=k, query_mod=query_mod)
 
 
 def _q_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    full = brute_force_topk(emb, vectorized=False).select(
-        "query_id", "neighbor_id"
-    )
+    full = brute_force_topk(emb).select("query_id", "neighbor_id")
     trunc = truncated_topk(emb, MRL_DIM).select("query_id", "neighbor_id")
     hits = (
         trunc.join(full, ["query_id", "neighbor_id"])
@@ -1487,7 +1400,6 @@ LABEL_TOP_K = 3
 
 def label_blocked_knn(
     emb: DataFrame, k: int = LABEL_TOP_K, query_mod: int = QUERY_MOD,
-    vectorized: bool = False,
 ) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % query_mod == 0).select(
         "label",
@@ -1508,7 +1420,7 @@ def label_blocked_knn(
         "label",
         "query_id",
         F.col("neighbor_id"),
-        _cos_expr(F.col("q_emb"), F.col("c_emb"), vectorized).alias("cos_sim"),
+        _cos_expr(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.col("neighbor_id")
@@ -1521,9 +1433,7 @@ def label_blocked_knn(
 
 
 def _q_label_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return label_blocked_knn(
-        catalog.load_table(spark, sf_dir, "embeddings"), vectorized=False
-    )
+    return label_blocked_knn(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
 LABEL_KNN_DUCK = f"""
@@ -1769,7 +1679,6 @@ def _q_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign=trained_assign_df(spark, sf_dir).select(
             "vec_id", "centroid_id"
         ),
-        vectorized=False,
     )
 
 
@@ -1788,7 +1697,6 @@ def _q_ivf_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign=trained_assign_df(spark, sf_dir).select(
             "vec_id", "centroid_id"
         ),
-        vectorized=False,
     )
 
 

@@ -224,16 +224,14 @@ def split_chunks(lines: DataFrame, records_per_file: int = 50) -> DataFrame:
     primary knob is the sane ``records_per_file``. Trailing empty
     chunks are never emitted (deviation per SURVEY.md §2.9.4).
 
-    Output: (line_no, input_file, rn, file_id) — the chunk assignment
-    is the checkable contract; the partitioned write is
-    ``.write.partitionBy("file_id")``.
+    Output: the input columns plus ``rn`` and ``file_id``, so a sink
+    writes ``value`` without joining the input back. The chunk
+    assignment (line_no, input_file, rn, file_id) is the checkable
+    contract.
     """
-    numbered = attach_global_row_number(lines)
-    return numbered.select(
-        "line_no",
-        "input_file",
-        "rn",
-        F.floor((F.col("rn") - 1) / records_per_file).cast("long").alias("file_id"),
+    return attach_global_row_number(lines).withColumn(
+        "file_id",
+        F.floor((F.col("rn") - 1) / records_per_file).cast("long"),
     )
 
 
@@ -245,15 +243,6 @@ SELECT line_no, input_file,
             / {records_per_file}) AS BIGINT) AS file_id
 FROM text_lines
 """
-
-
-def write_chunks(lines: DataFrame, path: str, records_per_file: int = 50) -> None:
-    """K4 chunked split sink: one directory per chunk via partitionBy —
-    the distributed replacement for sequential split_{k}.txt writes
-    (/root/reference/modules/other_tasks.py:80-95)."""
-    split_chunks(lines, records_per_file).write.partitionBy("file_id").mode(
-        "errorifexists"
-    ).parquet(path)
 
 
 def dedup_lines_exact_bytes(lines_exact: DataFrame) -> DataFrame:

@@ -49,10 +49,7 @@ def split_jsonl_preserving_lines(
     """Reference-parity JSONL split: raw lines -> chunk ids (W1),
     bytes untouched. Returns (input_file, line_no, value, rn,
     file_id); write with ``.write.partitionBy("file_id")``."""
-    lines = read_lines(spark, path)
-    return split_chunks(lines, records_per_file).join(
-        lines, ["line_no", "input_file"]
-    )
+    return split_chunks(read_lines(spark, path), records_per_file)
 
 
 # ------------------------------------------------- roundtrip query

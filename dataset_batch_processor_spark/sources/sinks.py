@@ -174,18 +174,16 @@ def export_chunked_text(
     df: DataFrame, out_dir: str, records_per_file: int = 50
 ) -> tuple[int, int]:
     """K4 chunked split sink as loose ``split_<k>.txt`` files — the
-    exporter variant of textops.write_chunks. Each executor writes the
-    chunks whose rows it holds after a repartition ON file_id, so one
-    file is written by exactly one task (no cross-task append).
+    distributed replacement for the reference's sequential writes
+    (modules/other_tasks.py:80-95). Each executor writes the chunks
+    whose rows it holds after a repartition ON file_id, so one file
+    is written by exactly one task (no cross-task append).
     Returns ``(n_files, n_lines)``, both counted inside the one write
     job."""
     from ..operators.textops import split_chunks
 
     os.makedirs(out_dir, exist_ok=True)
-    chunks = split_chunks(df, records_per_file)
-    joined = chunks.join(df, ["line_no", "input_file"]).select(
-        "file_id", "rn", "value"
-    )
+    chunks = split_chunks(df, records_per_file).select("file_id", "rn", "value")
     # the repartition puts each file_id in one task, so the per-task
     # file and line counts sum to the totals written
     sc = df.sparkSession.sparkContext
@@ -203,7 +201,7 @@ def export_chunked_text(
             n_lines.add(len(lines))
         n_files.add(len(by_file))
 
-    joined.repartition("file_id").foreachPartition(write_partition)
+    chunks.repartition("file_id").foreachPartition(write_partition)
     return n_files.value, n_lines.value
 
 

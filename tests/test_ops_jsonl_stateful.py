@@ -61,6 +61,20 @@ def test_split_jsonl_preserves_bytes(spark, tmp_path):
     assert {r.value for r in rows} == set(raw)
 
 
+def test_split_jsonl_does_not_join_its_input_back(spark, tmp_path):
+    """split_chunks carries ``value`` through the row numbering, so the
+    only join left in the optimized plan is attach_rank's broadcast of
+    the per-partition offsets."""
+    d = tmp_path / "jl"
+    d.mkdir()
+    (d / "f.jsonl").write_text("".join(f'{{"k": {i}}}\n' for i in range(6)))
+    out = jsonl.split_jsonl_preserving_lines(spark, str(d), records_per_file=4)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert len(joins) == 1, plan
+    assert "_pid" in joins[0]
+
+
 def test_stateful_running_counts(spark, tmp_path):
     land = tmp_path / "ev"
     land.mkdir()

@@ -263,6 +263,19 @@ def test_norm_histogram_single_agg_shuffle(spark, sf_dir):
     assert explain.broadcast_join_count(df) == 0
 
 
+def test_gated_full_probe_scores_with_exact_fold(spark, sf_dir):
+    """emb_ivf_fullprobe_equiv is hash-gated against brute force, so
+    it must score with the exact sequential fold (the ``cos_exact``
+    Arrow UDF), never an einsum cosine (``cos6``) whose pairwise
+    accumulation has no determinism proof."""
+    from dataset_batch_processor_spark.operators import similarity
+
+    df = similarity.QUERIES["emb_ivf_fullprobe_equiv"](spark, sf_dir)
+    plan = explain.formatted_plan(df)
+    assert "cos_exact" in plan
+    assert "cos6" not in plan
+
+
 def test_containment_reuses_candidate_join_shape(spark, sf_dir):
     """Candidates-only verification: the pair graph joins shingles
     twice (A side, B side) and sizes twice — same shape as Jaccard;

@@ -42,9 +42,7 @@ def fixture_emb(spark):
 
 
 def test_keeps_least_centroid_similar_member(spark, fixture_emb):
-    out = semdedup.semdedup_survivors(
-        fixture_emb, eps=0.95, centroid_mod=7, vectorized=False
-    )
+    out = semdedup.semdedup_survivors(fixture_emb, eps=0.95, centroid_mod=7)
     rows = {r["vec_id"]: r.asDict() for r in out.collect()}
     # 1,2,3 are mutual duplicates (pairwise cos > 0.95); the paper's
     # rule keeps the member farthest from the centroid — vector 1 —
@@ -58,9 +56,7 @@ def test_keeps_least_centroid_similar_member(spark, fixture_emb):
 
 
 def test_eps_disables_dedup(spark, fixture_emb):
-    out = semdedup.semdedup_survivors(
-        fixture_emb, eps=1.01, centroid_mod=7, vectorized=False
-    )
+    out = semdedup.semdedup_survivors(fixture_emb, eps=1.01, centroid_mod=7)
     assert out.count() == 5  # nothing can pair above cos 1.0
 
 
@@ -74,11 +70,9 @@ def test_max_cluster_size_bounds_candidates(spark):
         (i, _unit(1, 0.001 * i, 0, 0)) for i in range(1, 40)
     ]
     emb = _emb_df(spark, rows)
-    full = semdedup.semdedup_survivors(
-        emb, eps=0.99, centroid_mod=997, vectorized=False
-    )
+    full = semdedup.semdedup_survivors(emb, eps=0.99, centroid_mod=997)
     capped = semdedup.semdedup_survivors(
-        emb, eps=0.99, centroid_mod=997, max_cluster_size=8, vectorized=False
+        emb, eps=0.99, centroid_mod=997, max_cluster_size=8
     )
     n_full, n_capped = full.count(), capped.count()
     assert n_full == 1  # one survivor of the clique

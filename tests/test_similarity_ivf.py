@@ -121,15 +121,16 @@ def test_trained_ivf_high_recall_on_clustered_data(spark):
 
 
 def test_vectorized_signature_matches_catalyst(spark, sf_dir):
-    """The GEMM signature kernel must bucket every fixture vector
-    identically to the Catalyst lsh_signature expression for any
-    plane count (4..12 covers the adaptive range at fixture scale)."""
+    """The Arrow signature kernel that ann_lsh_topk and embdup run must
+    bucket every fixture vector identically to the Catalyst
+    lsh_signature expression for any plane count (4..12 covers the
+    adaptive range at fixture scale)."""
     from pyspark.sql import functions as F
 
     from dataset_batch_processor_spark import catalog
     from dataset_batch_processor_spark.operators.similarity import (
         lsh_signature,
-        lsh_signature_batches,
+        lsh_signature_exact_arrow,
     )
 
     emb = catalog.load_table(spark, sf_dir, "embeddings")
@@ -137,10 +138,13 @@ def test_vectorized_signature_matches_catalyst(spark, sf_dir):
         jvm = emb.select(
             "vec_id", lsh_signature(F.col("embedding"), p).alias("bucket")
         )
-        gemm = lsh_signature_batches(emb, p)
+        arrow = emb.select(
+            "vec_id",
+            lsh_signature_exact_arrow(p)(F.col("embedding")).alias("bucket"),
+        )
         diff = (
             jvm.withColumnRenamed("bucket", "b1")
-            .join(gemm.withColumnRenamed("bucket", "b2"), "vec_id")
+            .join(arrow.withColumnRenamed("bucket", "b2"), "vec_id")
             .filter(F.col("b1") != F.col("b2"))
             .count()
         )
