@@ -12,24 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from .matcache import file_fact, read_parquet
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name`` of ``sf_dir``. Its schema is inferred
+    once per session and file version (``matcache.read_parquet``): the
+    first call pays the one-task footer job, every later call builds
+    with no Spark job, and a table rewritten in place (a new
+    modification time or length) is inferred again."""
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # Minimum rows a rows-sized fanned task should hold: the one fanout
@@ -46,16 +40,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # chains, per-bit entropy decoders) keep the full-width fan.
 FANOUT_ROWS_PER_TASK = 256
 
-_ROWS_CACHE: dict[tuple[str, str], int] = {}
-
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of a fixture table, counted once per (dir, table) —
-    a parquet-metadata count job, cached for fanout sizing."""
-    key = (sf_dir, name)
-    if key not in _ROWS_CACHE:
-        _ROWS_CACHE[key] = load_table(spark, sf_dir, name).count()
-    return _ROWS_CACHE[key]
+    """Row count of a fixture table for fanout sizing: a
+    parquet-metadata count job, run once per session and file version
+    (``matcache.file_fact``, the key of ``load_table``'s schema)."""
+    return file_fact(spark, f"{sf_dir}/{name}.parquet", "rows",
+                     lambda: load_table(spark, sf_dir, name).count())
 
 
 def fanout(df: DataFrame, rows: int | None = None) -> DataFrame:
@@ -109,7 +100,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # conf may be static in some deployments; fall through
-    return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_event_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -142,10 +133,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
             "(nanos), timestamp_ntz, or timestamp"
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def images_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,13 +233,3 @@ caption_dict AS (
   FROM part GROUP BY p_brand
 )
 """
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register base tables + derived views as temp views for spark.sql."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    images_meta(spark, sf_dir).createOrReplaceTempView("images_meta")
-    captions(spark, sf_dir).createOrReplaceTempView("captions")
-    text_lines(spark, sf_dir).createOrReplaceTempView("text_lines")
-    caption_dict(spark, sf_dir).createOrReplaceTempView("caption_dict")

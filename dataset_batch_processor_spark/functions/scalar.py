@@ -123,18 +123,6 @@ def derived_tile_size(w: Column, h: Column, num_tiles: Column | int) -> Column:
     return F.floor(F.least(w, h) / F.floor(F.sqrt(num))).cast("int")
 
 
-def basename_of(path: Column) -> Column:
-    """P7: ``os.path.splitext(os.path.basename(p))[0]``
-    (/root/reference/modules/tiling.py:64)."""
-    base = F.element_at(F.split(path, "/"), -1)
-    return F.regexp_replace(base, r"\.[^.]*$", "")
-
-
-def extension_of(path: Column) -> Column:
-    """P7: extension without the dot, lowercased at use sites."""
-    return F.regexp_extract(path, r"\.([^.]*)$", 1)
-
-
 def tile_filename(
     base: Column, i: Column, j: Column, save_format: Column | str
 ) -> Column:

@@ -35,24 +35,6 @@ def tokens(text: Column) -> Column:
     )
 
 
-def char_shingles(text: Column, width: int = 8, stride: int = 4) -> Column:
-    """Character shingles: substr(text, pos, width) for pos = 1,
-    1+stride, ... while pos + width - 1 <= len. Deterministic and
-    expressible identically in DuckDB via generate_series + substr.
-
-    Returns an array column (possibly empty for short texts).
-    """
-    n = F.length(text)
-    positions = F.when(
-        n >= width, F.sequence(F.lit(1), n - width + 1, F.lit(stride))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(positions, lambda p: F.substring(text, p, width))
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def stopword_hits(text: Column, stopwords: tuple[str, ...]) -> Column:
     """Count of tokens that are in the stopword list."""
     sw = F.array(*[F.lit(s) for s in stopwords])

@@ -8,6 +8,11 @@ later consumer scans that. A materialized table — not ``persist()``
 bench/driver queries, and it is the local-mode twin of the production
 recipe (write the index bucketed once, equi-join it thereafter).
 
+The same registry holds the per-session facts about input files
+(:func:`file_fact`): each parquet schema is inferred once per session
+and file version (:func:`read_parquet`, behind ``catalog.load_table``),
+so building a query over known tables starts no Spark job.
+
 Keyed on ``sparkContext.applicationId`` (stable and unique per
 session) rather than ``id(spark)``: CPython reuses object ids after
 garbage collection, which could hand a new session a stale cache
@@ -21,10 +26,17 @@ import shutil
 import tempfile
 import threading
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+T = TypeVar("T")
+
 _CACHE: dict[tuple[str, str, str], str] = {}
+# (applicationId, qualified path, mtime ms, bytes, what) -> value: the
+# facts about an input file (its schema, its row count) that a query
+# build would otherwise recompute with a Spark job on every call
+_FILE_FACTS: dict[tuple[str, str, int, int, str], object] = {}
 _SCRATCH_DIRS: list[str] = []
 _SESSION_DIRS: list[str] = []
 _LOCK = threading.Lock()
@@ -41,12 +53,13 @@ def set_scratch_root(root: str | None) -> None:
 
 def cleanup_scratch() -> None:
     """Remove every scratch directory this process created and drop
-    the cache. Registered via ``atexit``; a service may also call it
-    directly. ``session_dir`` directories are not scratch: they stay
-    until exit."""
+    the caches (materializations and file facts). Registered via
+    ``atexit``; a service may also call it directly. ``session_dir``
+    directories are not scratch: they stay until exit."""
     with _LOCK:
         dirs, _SCRATCH_DIRS[:] = list(_SCRATCH_DIRS), []
         _CACHE.clear()
+        _FILE_FACTS.clear()
     for d in dirs:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -122,7 +135,44 @@ def materialize_once(
             with _LOCK:
                 if base in _SCRATCH_DIRS:
                     _SCRATCH_DIRS.remove(base)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
+
+
+def file_fact(
+    spark: SparkSession, path: str, what: str, compute: Callable[[], T],
+) -> T:
+    """``compute()`` at most once per (session, ``path`` as it is now,
+    ``what``).
+
+    "As it is now" is the Hadoop ``FileSystem`` status of ``path``: its
+    qualified name, modification time and length (a directory's length
+    is the bytes under it), so a file or directory rewritten in place
+    gets a new key and is computed again, and ``hdfs://``/``s3a://``
+    paths key the same way as local ones. The status costs a few Py4J
+    calls and no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(jpath)
+    size = (fs.getContentSummary(jpath).getLength() if st.isDirectory()
+            else st.getLen())
+    ck = (spark.sparkContext.applicationId, st.getPath().toString(),
+          st.getModificationTime(), size, what)
+    with _LOCK:
+        if ck in _FILE_FACTS:
+            return _FILE_FACTS[ck]
+    value = compute()
+    with _LOCK:
+        return _FILE_FACTS.setdefault(ck, value)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and file version (:func:`file_fact`). Inference is a
+    one-task footer job; with the schema passed in, building the read
+    starts no job."""
+    schema = file_fact(spark, path, "schema",
+                       lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def staged_once(

@@ -33,12 +33,6 @@ FROM images_meta i LEFT JOIN captions c ON i.basename = c.basename
 """
 
 
-def broadcast_caption(df: DataFrame, caption: str) -> DataFrame:
-    """J2: one UI-chosen caption stamped on every row
-    (/root/reference/modules/tiling.py:71-75) — a degenerate broadcast."""
-    return df.withColumn("caption", F.lit(caption))
-
-
 def mru_captions(caption_dict: DataFrame) -> DataFrame:
     """A5: caption list ordered most-recently-used first
     (/root/reference/modules/caption_manager.py:19-22); the rank

@@ -191,15 +191,6 @@ HLL_SPARK = _hll_sql("spark")
 HLL_DUCK = _hll_sql("duck")
 
 
-def _vals_sql(engine: str = "spark", table: str = "documents") -> str:
-    """Just the vals explode (tokens + strided shingles) — the piece
-    the round-15 driver entry materializes once."""
-    full = _hll_sql(engine, table=table)
-    start = full.index("WITH vals AS (") + len("WITH vals AS (")
-    end = full.index("),\nhashed AS (")
-    return full[start:end]
-
-
 def _q_hll_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 note: a persist-the-vals-once variant (via ``vals_table``)
     # was measured SLOWER at sf0.1 (2.13 -> 2.75 s): the explode is

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import catalog
+
 
 def _dsum(col, scale: int = 6):
     """Exact decimal accumulation -> double result (order-insensitive)."""
@@ -30,7 +32,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     linestatus) — cardinality 6, so AQE coalesces to a handful of
     reducers.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = catalog.load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -69,9 +71,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer is tiny → broadcast; orders⋈lineitem is the real shuffle
     join on orderkey. Top-10 with a deterministic tiebreak.
     """
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cust = catalog.load_table(spark, sf_dir, "customer")
+    orders = catalog.load_table(spark, sf_dir, "orders")
+    li = catalog.load_table(spark, sf_dir, "lineitem")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(
@@ -113,12 +115,12 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join chain through the dimension
     hierarchy. region/nation/supplier/customer are all broadcastable;
     only orders⋈lineitem shuffles."""
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    region = catalog.load_table(spark, sf_dir, "region")
+    nation = catalog.load_table(spark, sf_dir, "nation")
+    cust = catalog.load_table(spark, sf_dir, "customer")
+    sup = catalog.load_table(spark, sf_dir, "supplier")
+    orders = catalog.load_table(spark, sf_dir, "orders")
+    li = catalog.load_table(spark, sf_dir, "lineitem")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -156,8 +158,8 @@ def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function surface: rank customers by lifetime order value
     within each nation; keep the top 3. One shuffle for the agg, one
     for the window partition — both on low-skew keys."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = catalog.load_table(spark, sf_dir, "customer")
+    orders = catalog.load_table(spark, sf_dir, "orders")
     totals = (
         orders.groupBy("o_custkey")
         .agg(_dsum(F.col("o_totalprice")).alias("total_spent"), F.count("*").alias("n_orders"))
@@ -256,7 +258,7 @@ def orders_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running-sum window per customer over order time — the classic
     cumulative-metric shape. Decimal accumulation keeps the running
     values exact so every prefix matches the oracle bit-for-bit."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = catalog.load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")

@@ -74,7 +74,3 @@ def broadcast_join_count(df: DataFrame) -> int:
             re.MULTILINE,
         )
     )
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", formatted_plan(df)))

@@ -60,6 +60,9 @@ def get_spark(
       (read once, when the JVM-wide cache is created), so it is set
       on the builder before ``getOrCreate`` and cannot change in a
       running session; ``extra_conf`` can still override it.
+    - PySpark call-site capture off, which cuts a query build's Py4J
+      round trips about threefold (the trade-off is in the comment at
+      the conf); ``extra_conf`` can still override it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -84,6 +87,19 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # static conf: sized by CODEGEN_CACHE_MAX_ENTRIES
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # PySpark call-site capture off. On, every Column/DataFrame API
+        # call also asks the JVM for the active session and a conf and
+        # sets/clears a call-site origin, after a Python stack walk:
+        # about 3x the Py4J round trips of the call itself, and a build
+        # is mostly such calls (building one stream-twin micro-batch
+        # step, ``incremental.lsh_step``: 1,132 round trips on, 432
+        # off; tests/test_build_registry.py pins it). The price: a
+        # runtime error (a divide by zero under ANSI, a failed cast)
+        # loses the PySpark call-site fragment of its DataFrame query
+        # context. Analysis errors still raise at the builder line with
+        # a Python traceback, and queries built from SQL strings keep
+        # their SQL fragment. PySpark reads the flag once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # static conf: managed-table warehouse for bucketed tables
     # (sources/storage.py). Unset, each new session gets its own

@@ -73,20 +73,36 @@ def parse_gif_header(content: bytes) -> tuple[int, int] | None:
 
 
 def parse_jpeg_header(content: bytes) -> tuple[int, int] | None:
-    """Walk JPEG segments to the SOF marker; header-only, no decode."""
+    """Walk JPEG segments to the SOF marker; header-only, no decode.
+
+    Strict: after SOI every marker position must hold 0xFF (fill 0xFF
+    bytes allowed) and every segment length must be at least 2, so an
+    SOI followed by junk never "parses" on a stray SOF-like byte pair
+    inside the junk."""
     if len(content) < 4 or content[:2] != b"\xff\xd8":
         return None
     i = 2
     n = len(content)
-    while i + 9 < n:
+    while i + 1 < n:
         if content[i] != 0xFF:
+            return None
+        if content[i + 1] == 0xFF:  # fill byte
             i += 1
             continue
         marker = content[i + 1]
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # no length field
+            i += 2
+            continue
+        if marker in (0x00, 0xD8, 0xD9) or i + 4 > n:
+            return None
+        seg_len = struct.unpack(">H", content[i + 2 : i + 4])[0]
+        if seg_len < 2:
+            return None
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            if i + 9 > n:
+                return None
             h, w = struct.unpack(">HH", content[i + 5 : i + 9])
             return w, h
-        seg_len = struct.unpack(">H", content[i + 2 : i + 4])[0]
         i += 2 + seg_len
     return None
 

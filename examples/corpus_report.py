@@ -19,9 +19,10 @@ Usage: python examples/corpus_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import (

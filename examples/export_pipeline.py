@@ -10,9 +10,10 @@ Usage: python examples/export_pipeline.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataset_batch_processor_spark.export import export_plan
 from dataset_batch_processor_spark.session import get_spark

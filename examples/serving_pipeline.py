@@ -18,9 +18,10 @@ Usage: python examples/serving_pipeline.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataset_batch_processor_spark.operators import batching, chat, similarity
 from dataset_batch_processor_spark.session import get_spark

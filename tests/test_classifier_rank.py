@@ -3,10 +3,6 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from dataset_batch_processor_spark.operators import perceptron
 
 

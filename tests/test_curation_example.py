@@ -4,12 +4,17 @@ end-to-end and its funnel is monotone."""
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+
+EXAMPLES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"
+)
 
 
 def load_example():
     spec = importlib.util.spec_from_file_location(
-        "curate_corpus", "/root/repo/examples/curate_corpus.py"
+        "curate_corpus", os.path.join(EXAMPLES, "curate_corpus.py")
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["curate_corpus"] = mod
@@ -36,7 +41,7 @@ def test_curation_funnel(spark, sf_dir, tmp_path):
 def test_dedup_pipeline_example(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from dedup_pipeline import curate
 
     out = curate(spark, "/root/testdata/sf0.001").collect()
@@ -56,7 +61,7 @@ def test_dedup_pipeline_example(spark):
 def test_export_pipeline_example(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from export_pipeline import export_plan
 
     kept, emb, packed, manifest = export_plan(spark, "/root/testdata/sf0.001")
@@ -85,7 +90,7 @@ def test_ingest_pipeline_example(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from ingest_pipeline import ingest_batch
 
     from dataset_batch_processor_spark import catalog
@@ -177,7 +182,7 @@ def test_export_plan_dsir_selector(spark):
 def test_web_pipeline_example(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from web_pipeline import web_pipeline
 
     selected, funnel = web_pipeline(spark, "/root/testdata/sf0.001")
@@ -206,7 +211,7 @@ def test_rlhf_pipeline_example(spark, tmp_path):
     ensemble-agreed subset of the gated pair set."""
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     import rlhf_pipeline
 
     from dataset_batch_processor_spark import catalog
@@ -240,7 +245,7 @@ def test_rlvr_pipeline_example(spark, tmp_path):
     minus canary-leaked tasks."""
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     import rlvr_pipeline
 
     from dataset_batch_processor_spark.operators import rlvr
@@ -284,7 +289,7 @@ def test_governance_pipeline_example(spark, tmp_path):
     leaked, and the provenance check passed on every image."""
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     import governance_pipeline
 
     from dataset_batch_processor_spark.operators import decontam
@@ -325,7 +330,7 @@ def test_governance_pipeline_example(spark, tmp_path):
 def test_serving_pipeline_example(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from serving_pipeline import serve_plan
 
     from dataset_batch_processor_spark.operators import curation
@@ -356,7 +361,7 @@ def test_rag_store_pipeline(spark, sf_dir):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "rag_store_pipeline", "/root/repo/examples/rag_store_pipeline.py"
+        "rag_store_pipeline", os.path.join(EXAMPLES, "rag_store_pipeline.py")
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["rag_store_pipeline"] = mod

@@ -101,6 +101,21 @@ def test_header_probe_agrees():
     assert images.parse_jpeg_header(data) == (34, 21)
 
 
+def test_header_probe_rejects_junk_after_soi():
+    """An SOI followed by junk is no JPEG, even when the junk holds an
+    SOF-like byte pair; a loose walk that skipped non-0xFF bytes read
+    32x16 out of this string."""
+    from dataset_batch_processor_spark.sources import images
+
+    junk = b"\xff\xd8\x12\x34\xff\xc0\x00\x11\x08\x00\x10\x00\x20" + bytes(19)
+    assert images.parse_jpeg_header(junk) is None
+    # a zero segment length is no segment either
+    assert images.parse_jpeg_header(b"\xff\xd8\xff\xe0\x00\x00" + bytes(16)) is None
+    # fill bytes before a marker are allowed
+    sof = b"\xff\xc0\x00\x11\x08\x00\x10\x00\x20" + bytes(12)
+    assert images.parse_jpeg_header(b"\xff\xd8\xff\xff" + sof[1:]) == (32, 16)
+
+
 def test_convert_png_to_jpeg_end_to_end(spark):
     """P12 path: PNG in, JPEG out through the Spark conversion kernel."""
     from dataset_batch_processor_spark.multimodal import png

@@ -9,8 +9,6 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 from dataset_batch_processor_spark.operators import embed, optional_encoders
 
 

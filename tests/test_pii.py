@@ -4,9 +4,6 @@ the one-pass fixed-point property of the typed redaction."""
 from __future__ import annotations
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import pii

@@ -16,10 +16,6 @@ customer_value_ntiles). All six are fixed — the assertion is empty.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from dataset_batch_processor_spark.plans import audit, explain
 
 # Queries allowed to carry a named violation, each with a reason.

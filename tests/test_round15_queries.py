@@ -4,11 +4,7 @@ n=1 degenerate guard (ADVICE r14)."""
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import dedup

@@ -8,7 +8,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo/examples")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"))
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import chat

@@ -144,3 +144,23 @@ def test_package_reads_only_deployment_env_settings():
                 with open(os.path.join(root, name)) as fh:
                     seen |= set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", fh.read()))
     assert seen <= {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_WAREHOUSE"}, sorted(seen)
+
+
+def test_no_python_file_pins_a_checkout_path():
+    """Paths to the repository come from ``__file__``. A file that puts
+    a literal absolute path on ``sys.path``, or names this checkout's
+    own absolute path, imports the code at that fixed path: the suite
+    run from any other checkout (a parent-commit copy, a CI workspace)
+    would silently test another tree."""
+    on_path = re.compile(r"sys\.path\.(?:insert|append)\([^)]*[\"']/")
+    bad = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    text = fh.read()
+                if REPO in text or on_path.search(text):
+                    bad.append(os.path.relpath(path, REPO))
+    assert not bad, sorted(bad)

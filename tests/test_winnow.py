@@ -5,9 +5,6 @@ yields >= 1 shared selected fingerprint)."""
 from __future__ import annotations
 
 import hashlib
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import winnow
