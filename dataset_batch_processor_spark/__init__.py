@@ -19,7 +19,7 @@ Layout:
                    relational)
     sources/     — readers (binary images, line-oriented text)
     multimodal/  — binary-column plumbing (mapInPandas decode stubs)
-    streaming/   — Structured Streaming file-watch mode
+    streaming/   — availableNow stream twins and batch-parity checks
     plans/       — plan-shape assertion helpers
 """
 

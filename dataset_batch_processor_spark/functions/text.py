@@ -33,9 +33,3 @@ def tokens(text: Column) -> Column:
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, TOKEN_SPLIT_RE)
     )
-
-
-def stopword_hits(text: Column, stopwords: tuple[str, ...]) -> Column:
-    """Count of tokens that are in the stopword list."""
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(sw, t)))

@@ -206,8 +206,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16_000) -> bytes:
 def _missing(fmt: str, needs: str) -> Callable[[bytes], tuple]:
     def decode(_content: bytes) -> tuple:
         raise NotImplementedError(
-            f"codec '{fmt}' requires {needs}, not present in this container; "
-            "register via register_audio_codec()/register_video_codec()"
+            f"codec '{fmt}' requires {needs}, not present in this container"
         )
 
     return decode
@@ -388,14 +387,6 @@ VIDEO_CODECS: dict[str, Callable[[bytes], tuple[np.ndarray, int]]] = {
     "avi": decode_avi_mjpeg,  # REAL (MJPEG over the baseline-JPEG codec)
     **{f: _missing(f, "ffmpeg/decord") for f in ("mp4", "webm", "mkv")},
 }
-
-
-def register_audio_codec(fmt: str, dec: Callable) -> None:
-    AUDIO_CODECS[fmt.lower()] = dec
-
-
-def register_video_codec(fmt: str, dec: Callable) -> None:
-    VIDEO_CODECS[fmt.lower()] = dec
 
 
 # ---------------------------------------------------------- audio features

@@ -247,43 +247,6 @@ def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 # ------------------------------------------------------- Spark plumbing
 
-DECODE_META_SCHEMA = StructType(
-    [
-        StructField("id", StringType()),
-        StructField("fmt", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def decode_metadata(binary_df: DataFrame, id_col: str = "id",
-                    fmt_col: str = "fmt", content_col: str = "content") -> DataFrame:
-    """Decode each payload via the codec registry and emit typed
-    metadata. Errors (including NotImplementedError from stub codecs)
-    are captured per row (F7 quarantine semantics), never fatal."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, fmt, content in zip(pdf[id_col], pdf[fmt_col], pdf[content_col]):
-                row = {"id": str(rid), "fmt": fmt, "width": None, "height": None,
-                       "n_bytes": len(content), "error": None}
-                try:
-                    arr = decode_any(fmt, bytes(content))
-                    row["height"], row["width"] = int(arr.shape[0]), int(arr.shape[1])
-                except Exception as e:
-                    row["error"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in DECODE_META_SCHEMA.fields])
-
-    return binary_df.select(id_col, fmt_col, content_col).mapInPandas(
-        run, schema=DECODE_META_SCHEMA
-    )
-
-
 TILE_PIXELS_SCHEMA = StructType(
     [
         StructField("id", StringType()),
@@ -485,4 +448,3 @@ def augment_views(arr: np.ndarray) -> dict[str, np.ndarray]:
         "rot90": np.rot90(arr),
         "crop": arr[h // 4: h // 4 + h // 2, w // 4: w // 4 + w // 2],
     }
-

@@ -55,34 +55,6 @@ N_BANDS = NUM_HASHES // BAND_ROWS
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
 
 
-def banding_for_threshold(
-    threshold: float, num_hashes: int = NUM_HASHES
-) -> tuple[int, int]:
-    """Choose (n_bands, band_rows) for a target Jaccard threshold.
-
-    MinHash-LSH's S-curve crosses 50% capture at t ≈ (1/b)^(1/r); pick
-    the (b, r) factorization of ``num_hashes`` closest to the requested
-    threshold (log-space distance). Scale note: unlike the sign-LSH
-    plane count, banding does NOT need to grow with corpus size — the
-    bucket key is (band, r minhash values), an unbounded hash space, so
-    expected bucket size stays O(duplication density), not O(n/2^p).
-    What banding controls is the similarity threshold; corpus-size
-    adaptivity enters through ``num_hashes`` (more hashes = sharper
-    S-curve = fewer low-similarity candidate pairs on huge corpora)."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for r in range(1, num_hashes + 1):
-        if num_hashes % r:
-            continue
-        b = num_hashes // r
-        t = (1.0 / b) ** (1.0 / r) if b > 1 else 1.0
-        d = abs(math.log(t) - math.log(threshold))
-        if best is None or d < best[0]:
-            best = (d, b, r)
-    return best[1], best[2]
-
-
 def _md5int(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
@@ -367,36 +339,6 @@ OPH_K = NUM_HASHES
 OPH_C = 1 << 25
 
 
-def signatures_df(docs: DataFrame, method: str = "kperm",
-                  production_hash: bool = False) -> DataFrame:
-    """The ONE front door for MinHash signature builds (round 10,
-    VERDICT r9 next #8). Defaults to K-perm because that is what the
-    measurements say to run on this engine: tools/round9_scale_study.py
-    (at git 0753e1d, since deleted) study A (SCALE.md) found K
-    independent affine mins effectively free under whole-stage
-    codegen up to 4096× fanout (~400M shingles), while the OPH build
-    carries a ~15 s constant plan overhead with no better slope —
-    K-perm wins the wall clock at
-    every tested scale for K ≤ 64. ``method="oph"`` remains available
-    as algorithm parity (Li/Owen/Zhang 2012) and is the right shape
-    only when the per-shingle hash itself is expensive or K >> 64;
-    callers who reach for it get that guidance here instead of
-    accidentally picking the measured-slower shape."""
-    if method == "kperm":
-        return minhash_signatures_df(docs, production_hash=production_hash)
-    if method == "oph":
-        if production_hash:
-            raise ValueError(
-                "production_hash is implemented for the kperm build "
-                "(the measured-fastest default); the OPH parity path "
-                "keeps the oracle md5 base hash"
-            )
-        return oph_signatures_df(docs)
-    raise ValueError(f"unknown signature method {method!r}:"
-                     " expected 'kperm' (default, measured-fastest at"
-                     " K<=64) or 'oph' (parity / large-K)")
-
-
 def oph_signatures_df(docs: DataFrame) -> DataFrame:
     """K-wide OPH signature per doc: (doc_id, oph_0 .. oph_{K-1}).
 
@@ -468,7 +410,8 @@ def _q_oph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SAME candidate-pair graph, and at any scale the shingle→minhash→
 # band pipeline dominates their cost. Pay it once per (session,
 # dataset) via matcache.materialize_once — the local-mode twin of
-# "storage.write_bucketed the pair graph once, equi-join it forever".
+# "write the pair graph once as a bucketed table, equi-join it
+# forever".
 
 
 def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1134,8 +1077,8 @@ ORDER BY doc_id
 
 # ------------------------------------------- banding parameter sweep
 
-# The tuning report behind ``banding_for_threshold``: for every
-# (n_bands, band_rows) factorization of the signature, measure the
+# The banding tuning report: for every (n_bands, band_rows)
+# factorization of the signature, measure the
 # candidate-pair volume and the precision/recall against exact
 # ground truth — the table an operator reads before picking a banding
 # for a new corpus (the ANN family's emb_ann_recall_report, applied

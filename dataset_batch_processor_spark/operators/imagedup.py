@@ -21,10 +21,7 @@ driver's value hash is stable by construction.
 The oracled query computes hashes from a deterministic pixel lattice
 in PURE SQL on both engines — the whole pipeline (pixel explode, box
 aggregation, bit assembly, banded join, Hamming verify) runs
-JVM-side in Spark with zero Python.  ``dhash_bands`` below is the
-same computation as a mapInPandas kernel over real binary image
-columns (decode via the codec registry), pinned equal to the SQL
-path by tests/test_imagedup.py.
+JVM-side in Spark with zero Python.
 
 At 100 TB: the pixel explode is a narrow flat map (no shuffle); box
 aggregation is one map-side-combined shuffle on (doc_id, r, c) —
@@ -411,72 +408,6 @@ def dhash_pairs_df(
 
 def _q_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dhash_pairs_df(catalog.load_table(spark, sf_dir, "documents"))
-
-
-# ----------------------------------------------- kernel over binary images
-
-
-def dhash_bands(df: DataFrame) -> DataFrame:
-    """dHash band signature for real binary image columns
-    (id, fmt, content) — identical bit semantics to the SQL path:
-    fixed-point luma, pixel-to-box assignment ``r = y*8 div h``,
-    integer cross-product comparisons. Decode failures quarantine
-    (F7) with band columns NULL."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal import binary as mmbin
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "b0": None, "b1": None,
-                       "b2": None, "b3": None, "error": None}
-                try:
-                    arr = mmbin.decode_any(
-                        row.fmt.lower(), bytes(row.content)
-                    ).astype(np.int64)
-                    h, w = arr.shape[0], arr.shape[1]
-                    if w < 9 or h < 8:
-                        # smaller than the 8x9 grid -> empty boxes,
-                        # which would silently diverge from the SQL
-                        # semantics; quarantine instead
-                        raise ValueError(
-                            f"image {w}x{h} too small for dHash "
-                            "(needs >= 9x8)"
-                        )
-                    l = (77 * arr[:, :, 0] + 150 * arr[:, :, 1]
-                         + 29 * arr[:, :, 2]) // 256
-                    y = np.arange(h)[:, None]
-                    x = np.arange(w)[None, :]
-                    r = (y * 8) // h
-                    c = (x * 9) // w
-                    flat = (r * 9 + c).ravel()
-                    s = np.bincount(flat, weights=l.ravel(),
-                                    minlength=72).astype(np.int64)
-                    a = np.bincount(flat, minlength=72).astype(np.int64)
-                    s, a = s.reshape(8, 9), a.reshape(8, 9)
-                    bit = (s[:, :8] * a[:, 1:] > s[:, 1:] * a[:, :8])
-                    k = ((np.arange(8)[:, None] % 2) * 8
-                         + np.arange(8)[None, :])
-                    vals = (bit.astype(np.int64) << k)
-                    band = vals.reshape(4, 2, 8).sum(axis=(1, 2))
-                    rec.update(b0=int(band[0]), b1=int(band[1]),
-                               b2=int(band[2]), b3=int(band[3]))
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    rec["error"] = f"{type(e).__name__}: {e}"
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=["id", "b0", "b1", "b2", "b3", "error"]
-            )
-
-    return df.select("id", "fmt", "content").mapInPandas(
-        run,
-        schema="id string, b0 int, b1 int, b2 int, b3 int, error string",
-    )
 
 
 # ----------------------------------------------- near-dup clusters

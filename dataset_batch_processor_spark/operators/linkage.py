@@ -22,9 +22,6 @@ pinned by part_a < part_b.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
 from .sqlrun import _run
 
 MAX_DIST = 2
@@ -72,102 +69,3 @@ ORDER BY s.blk
 
 QUERIES = {"parts_fuzzy_match_stats": _run(_fuzzy_sql("spark"), ("part",))}
 ORACLES = {"parts_fuzzy_match_stats": _fuzzy_sql("duck")}
-
-
-# ------------------------------------------------- hot-block capping
-# The one open hardening item from the block-then-verify design: a
-# single mega-block (every record sharing the blocking key) makes that
-# block's candidate set quadratic no matter how well the OTHER blocks
-# behave — AQE skew-splitting spreads the work but cannot shrink it.
-# The standard bound is the sorted-neighborhood method (Hernández &
-# Stolfo merge/purge, public): order the block by the match attribute
-# and only pair records within a sliding window of W positions, so an
-# n-record block emits ≤ n·W candidates instead of n²/2. Near-
-# identical strings sort adjacently, which is exactly why the method
-# keeps recall on the pairs edit-distance would accept. Blocks at or
-# under ``block_budget`` keep the exact pairwise join (no recall loss
-# where it's affordable); only over-budget blocks pay the window
-# approximation. The ``parts_fuzzy_match_stats`` oracle query is
-# deliberately uncapped — its fixture blocks are small — so its hash
-# is unchanged; production calls this API with a budget.
-
-
-def fuzzy_match_pairs(
-    recs: DataFrame,
-    id_col: str = "p_partkey",
-    name_col: str = "p_name",
-    max_dist: int = MAX_DIST,
-    block_budget: int | None = None,
-    window: int = 10,
-    verify: bool = True,
-) -> DataFrame:
-    """(id_a, id_b, dist) fuzzy-match pairs, blocked on the first
-    token. With ``block_budget`` set, blocks larger than the budget
-    switch to sorted-neighborhood candidate generation (window ``W``
-    positions in (name, id) order): the window join is STRUCTURAL —
-    each record is expanded to its W forward offsets and equi-joined
-    on (blk, rn) — so the executor never materializes a quadratic
-    intermediate for a hot key; candidates are hard-bounded at
-    max(budget, W) · n per block. ``verify=False`` returns the raw
-    candidate pairs (used by the bound-pinning test)."""
-    r = recs.select(
-        F.col(id_col).alias("rid"),
-        F.col(name_col).alias("nm"),
-        F.element_at(F.split(F.col(name_col), " "), 1).alias("blk"),
-    )
-    if block_budget is None:
-        a, b = r.alias("a"), r.alias("b")
-        cands = a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.rid") < F.col("b.rid")),
-        ).select(
-            F.col("a.rid").alias("id_a"),
-            F.col("b.rid").alias("id_b"),
-            F.col("a.nm").alias("nm_a"),
-            F.col("b.nm").alias("nm_b"),
-        )
-    else:
-        w = Window.partitionBy("blk").orderBy("nm", "rid")
-        sz = Window.partitionBy("blk")
-        r2 = r.withColumn("rn", F.row_number().over(w)).withColumn(
-            "bsz", F.count(F.lit(1)).over(sz)
-        )
-        small = r2.filter(F.col("bsz") <= block_budget)
-        sa, sb = small.alias("a"), small.alias("b")
-        small_cands = sa.join(
-            sb,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.rid") < F.col("b.rid")),
-        ).select(
-            F.col("a.rid").alias("id_a"),
-            F.col("b.rid").alias("id_b"),
-            F.col("a.nm").alias("nm_a"),
-            F.col("b.nm").alias("nm_b"),
-        )
-        big = r2.filter(F.col("bsz") > block_budget)
-        probes = big.select(
-            "blk",
-            F.col("rid").alias("rid_l"),
-            F.col("nm").alias("nm_l"),
-            F.explode(
-                F.sequence(F.col("rn") + 1, F.col("rn") + window)
-            ).alias("rn"),
-        )
-        big_cands = probes.join(
-            big.select("blk", "rn", "rid", "nm"), ["blk", "rn"]
-        ).select(
-            F.least("rid_l", "rid").alias("id_a"),
-            F.greatest("rid_l", "rid").alias("id_b"),
-            # window order is (nm, rid): keep name columns aligned
-            # with the id order for a deterministic output shape
-            F.when(F.col("rid_l") < F.col("rid"), F.col("nm_l"))
-            .otherwise(F.col("nm")).alias("nm_a"),
-            F.when(F.col("rid_l") < F.col("rid"), F.col("nm"))
-            .otherwise(F.col("nm_l")).alias("nm_b"),
-        )
-        cands = small_cands.unionByName(big_cands)
-    out = cands.withColumn(
-        "dist", F.levenshtein("nm_a", "nm_b")
-    ).select("id_a", "id_b", "dist")
-    return out.filter(F.col("dist") <= max_dist) if verify else out

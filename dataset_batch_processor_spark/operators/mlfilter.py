@@ -5,106 +5,30 @@ The reference's only ML operator is dead code
 SURVEY.md §2.9.9): MTCNN face detection, keep a tile iff any face has
 confidence >= 0.95, else move tile + sidecar to a skip folder.
 
-Spark-first shape: a batch-inference pandas UDF producing
-``faces: array<struct<box array<int>, confidence double>>``, then a
-pure-SQL existential ``exists(faces, f -> f.confidence >= T)`` and an
-F4-style routing column. The scorer is PLUGGABLE (avoid a hard MTCNN
-dependency): any callable batch of decoded arrays -> list of face
-lists. Two scorers ship:
-
-- ``hash_scorer`` — deterministic, codec-free: confidence derived
-  from the md5 of the row id (keeps the full routing pipeline
-  SQL-oracle-able; used by the correctness queries below);
-- a real detector would be registered the same way in a full
-  deployment (batch-inference on executors, model broadcast once per
-  worker — the standard Spark inference pattern).
+Spark-first shape: a per-row confidence column and an F4-style
+routing column, keep iff confidence >= 0.95. The scorer here is the
+hash scorer — deterministic and codec-free: the confidence is derived
+from the md5 of the row id, so the full routing decision stays
+SQL-oracle-able. A real detector would replace that column with a
+batch-inference kernel on the executors (model broadcast once per
+worker — the standard Spark inference pattern).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .. import catalog
 from ..functions.text import md5_long
 
 CONF_THRESHOLD = 0.95
 
-FACES_SCHEMA = StructType(
-    [
-        StructField("id", StringType()),
-        StructField(
-            "faces",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("box", ArrayType(IntegerType())),
-                        StructField("confidence", DoubleType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
 
 def hash_confidence_expr(id_col: F.Column) -> F.Column:
     """Deterministic pseudo-confidence in [0, 1): md5-derived — the
     same value is computable in DuckDB, keeping F5 oracle-checkable."""
     return (md5_long(id_col) % 1000).cast("double") / 1000.0
-
-
-def score_faces(df: DataFrame, id_col: str = "id",
-                scorer: Callable[[list], list] | None = None) -> DataFrame:
-    """Batch-inference pandas UDF attaching the ``faces`` column.
-
-    Default scorer is the hash scorer (one face whose confidence is
-    the md5-derived value; empty list when the hash says "no face",
-    exercising the null/empty path)."""
-
-    def default_scorer(ids: list) -> list:
-        import hashlib
-
-        out = []
-        for rid in ids:
-            h = int(hashlib.md5(str(rid).encode()).hexdigest()[:15], 16) % 1000
-            conf = h / 1000.0
-            if conf < 0.05:  # ~5%: no face at all
-                out.append([])
-            else:
-                out.append([{"box": [0, 0, 10, 10], "confidence": conf}])
-        return out
-
-    scorer = scorer or default_scorer
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [str(x) for x in pdf[id_col]]
-            yield pd.DataFrame({"id": ids, "faces": scorer(ids)})
-
-    return df.select(F.col(id_col).cast("string").alias(id_col)).mapInPandas(
-        run, schema=FACES_SCHEMA
-    )
-
-
-def route_by_faces(faces_df: DataFrame, threshold: float = CONF_THRESHOLD) -> DataFrame:
-    """The F5 existential + routing split: keep iff ∃ face with
-    confidence >= threshold (skip_tiles.py:29-34 semantics)."""
-    keep = F.exists("faces", lambda f: f["confidence"] >= threshold)
-    return faces_df.withColumn(
-        "route", F.when(keep, F.lit("keep")).otherwise(F.lit("skip"))
-    )
 
 
 # ------------------------------------------------ oracle-checked query

@@ -1,12 +1,9 @@
-"""PCA over embedding columns: distributed fixed-point covariance +
-driver-side eigendecomposition + broadcast projection.
+"""PCA over embedding columns: the distributed fixed-point covariance.
 
 The standard pre-step for embedding compression (OPQ rotations, dim
-reduction before ANN, whitening before cosine). The split follows
-the IVF/PQ house pattern (similarity.py, pq.py): the O(n·d²) work is
-distributed, the O(d²)–O(d³) work (eigh of a 64x64 matrix) happens
-once on the driver, and the O(n·d·k) projection broadcasts a KB-sized
-loadings matrix.
+reduction before ANN, whitening before cosine). The O(n·d²) work is
+distributed; what a PCA fit needs from the corpus is this d x d
+matrix (an eigh of a 64x64 matrix is KBs of driver work).
 
 Determinism: covariance is accumulated in FIXED POINT. Each float32
 component is quantized as ``floor(x * 1e3 + 0.5)`` — ONE explicit
@@ -24,8 +21,7 @@ At 100 TB: the Spark side is a single mapInPandas GEMM pass — each
 Arrow batch contributes Q^T Q (an int64 matmul) plus column sums,
 2,080 (i<=j) partial rows per batch — followed by one
 map-side-combined groupBy over a key space of size d², independent
-of n. Driver traffic is the d x d matrix (32 KB). The projection is
-a broadcast matmul kernel, no shuffle at all.
+of n. Driver traffic is the d x d matrix (32 KB).
 """
 
 from __future__ import annotations
@@ -125,57 +121,6 @@ JOIN si sb ON sb.i = pairs.j
 CROSS JOIN n_t
 ORDER BY i, j
 """
-
-
-# --------------------------------------------------------- fit + project
-
-
-def fit_loadings(cov_rows, k: int):
-    """Driver-side eigendecomposition of the collected covariance
-    stats (a 64x64 symmetric matrix — KBs). Returns the top-k
-    loadings as a plain (k, DIM) float64 array, eigenvalue-descending,
-    sign-normalized (largest-|component| positive) so the basis is
-    deterministic."""
-    import numpy as np
-
-    cov = np.zeros((DIM, DIM))
-    for r in cov_rows:
-        n = r["n"]
-        c = r["cov_num"] / (SCALE * SCALE * n * (n - 1))
-        cov[r["i"], r["j"]] = cov[r["j"], r["i"]] = c
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    load = v[:, order].T
-    for row in load:
-        if row[np.argmax(np.abs(row))] < 0:
-            row *= -1
-    return load
-
-
-def pca_project(emb: DataFrame, loadings) -> DataFrame:
-    """Project embeddings onto the (broadcast) loadings: adds a
-    ``projected`` array<double> column of length k. One narrow
-    mapInPandas matmul — no shuffle."""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        lt = np.asarray(loadings, dtype=np.float64).T
-
-        for pdf in batches:
-            if len(pdf):
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                pdf = pdf.assign(projected=list(x @ lt))
-            else:
-                pdf = pdf.assign(projected=[])
-            yield pdf
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    )
-    return emb.mapInPandas(
-        run, schema=f"{out_schema}, projected array<double>"
-    )
 
 
 QUERIES = {"emb_pca_covariance": _q_covariance}

@@ -317,13 +317,13 @@ QUERIES = {"img_phash_near_dup_pairs": _q_phash_pairs}
 ORACLES = {"img_phash_near_dup_pairs": PHASH_PAIRS_DUCK}
 
 
-# ------------------------------------------------ production kernel twin
-# Same bit semantics as the SQL lattice path, for REAL binary image
-# columns — the pHash sibling of imagedup.dhash_bands. The DCT runs
-# as two int64 matrix products against the same fixed-point cosine
-# table, the threshold is the same rank-32 order statistic with the
-# same (coef, idx) tie-break, so a lattice image hashed through the
-# kernel equals the SQL hash bit-for-bit (test-pinned).
+# ------------------------------------------------ per-image reference
+# Same bit semantics as the SQL lattice path, for one decoded image:
+# the reference the tests hold the lattice kernel and the SQL hashes
+# to. The DCT runs as two int64 matrix products against the same
+# fixed-point cosine table, the threshold is the same rank-32 order
+# statistic with the same (coef, idx) tie-break, so a lattice image
+# hashed here equals the SQL hash bit-for-bit (test-pinned).
 
 
 def phash_hash_array(arr) -> tuple[int, int, int, int]:
@@ -357,40 +357,6 @@ def phash_hash_array(arr) -> tuple[int, int, int, int]:
         if coef > med:
             bands[idx // 16] |= 1 << (idx % 16)
     return tuple(bands)
-
-
-def phash_bands(df: DataFrame) -> DataFrame:
-    """pHash band signature for real binary image columns
-    (id, fmt, content); decode failures quarantine (F7) with band
-    columns NULL — same contract as imagedup.dhash_bands."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..multimodal import binary as mmbin
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rec = {"id": str(row.id), "b0": None, "b1": None,
-                       "b2": None, "b3": None, "error": None}
-                try:
-                    arr = mmbin.decode_any(
-                        row.fmt.lower(), bytes(row.content)
-                    )
-                    b0, b1, b2, b3 = phash_hash_array(arr)
-                    rec.update(b0=b0, b1=b1, b2=b2, b3=b3)
-                except Exception as exc:  # noqa: BLE001 — F7 quarantine
-                    rec["error"] = f"{type(exc).__name__}: {exc}"
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=["id", "b0", "b1", "b2", "b3", "error"]
-            )
-
-    return df.mapInPandas(
-        run, schema="id string, b0 int, b1 int, b2 int, b3 int, error string"
-    )
 
 
 # ------------------------------------------------ pHash dup clusters

@@ -11,9 +11,9 @@ candidate instead of a 64-dim dot product.
 
 Scale topology (the parts that matter at 10^9 vectors):
 - **Encode once, store codes.** The corpus × M × K assignment explode
-  is the one-off index build (the analogue of `ivf_build_index`); the
-  codes table (vec_id, j, cid) is what persists — bucketed on vec_id
-  it joins exchange-free.
+  is the one-off index build (the analogue of IVF's trained
+  assignment); the codes table (vec_id, j, cid) is what persists —
+  bucketed on vec_id it joins exchange-free.
 - **Query side is a broadcast LUT.** Each query contributes M×K
   sub-distances (128 rows here) — KBs per query; the ADC join hits
   the codes table on (j, cid), both tiny-cardinality keys that

@@ -195,7 +195,7 @@ FROM (
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling-window aggregation (batch form of the
-    streaming hourly rollup in streaming/watch.py): per (hour,
+    streaming hourly rollup in streaming/batchcheck.py): per (hour,
     event_type) counts + exact-decimal value sum."""
     from .. import catalog as _cat
     ev = _cat.load_events(spark, sf_dir)

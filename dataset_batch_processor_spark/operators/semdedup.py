@@ -58,6 +58,11 @@ from .similarity import (
 )
 
 EPS = 0.3  # fixture-calibrated; see module docstring
+# Pairs per block of ``_pair_cos_kernel``: its working set is about ten
+# arrays of this length (8 B each, ~5 MB) whatever the cluster size,
+# where building all m(m-1)/2 pairs at once held O(m^2 * dim) doubles
+# (197 MB for one 1,500-member cluster at dim 8).
+PAIR_BLOCK = 65_536
 
 
 def _pair_cos_kernel(eps: float):
@@ -71,8 +76,10 @@ def _pair_cos_kernel(eps: float):
     re-filtered exactly on the JVM side).
 
     Exactness: members are sorted by vec_id and expanded to the i<j
-    index pairs, and dot/norms accumulate with the SAME
-    dimension-major multiply-add sequence as
+    index pairs in blocks of at most ``PAIR_BLOCK`` pairs (row-major
+    order, so memory stays bounded on a degenerate cluster and the
+    rows come out as one block would emit them), and dot/norms
+    accumulate with the SAME dimension-major multiply-add sequence as
     ``vector.cosine_exact_arrow`` (bit-identical doubles — see its
     determinism proof). Emitting the raw double and rounding once
     JVM-side equals the column expression it replaced."""
@@ -89,6 +96,8 @@ def _pair_cos_kernel(eps: float):
         }
     )
 
+    block = PAIR_BLOCK
+
     def run(pdf: "pd.DataFrame") -> "pd.DataFrame":
         m = len(pdf)
         if m < 2:
@@ -96,29 +105,52 @@ def _pair_cos_kernel(eps: float):
         pdf = pdf.sort_values("vec_id", kind="mergesort")
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         csim = pdf["centroid_sim"].to_numpy(dtype=np.float64)
-        A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        iu, ju = np.triu_indices(m, 1)
-        X = A[iu]
-        Y = A[ju]
-        n = len(X)
-        dot = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for d in range(X.shape[1]):
-            x = X[:, d]
-            y = Y[:, d]
-            dot += x * y
-            na += x * x
-            nb += y * y
-        raw = dot / (np.sqrt(na) * np.sqrt(nb))
-        keep = raw >= eps - 1e-6
+        # one contiguous row per dimension: the fold gathers one
+        # dimension of a block's pairs at a time
+        AT = np.ascontiguousarray(
+            np.stack(pdf["embedding"].to_numpy()).astype(np.float64).T
+        )
+        # row i of the upper triangle holds the m-1-i pairs (i, j > i);
+        # a block is a run of whole rows holding at most ``block``
+        # pairs (or one row, if a row alone is larger), so the pairs
+        # come out in the row-major (i, j) order of triu_indices
+        row_pairs = np.arange(m - 1, 0, -1, dtype=np.int64)
+        ends = np.cumsum(row_pairs)
+        parts = []
+        i0 = 0
+        while i0 < m - 1:
+            start = ends[i0 - 1] if i0 else 0
+            i1 = int(np.searchsorted(ends, start + block, "right"))
+            i1 = max(i1, i0 + 1)
+            rows = np.arange(i0, i1, dtype=np.int64)
+            counts = row_pairs[i0:i1]
+            iu = np.repeat(rows, counts)
+            first = np.cumsum(counts) - counts
+            ju = np.arange(len(iu), dtype=np.int64) - np.repeat(
+                first - rows - 1, counts
+            )
+            n = len(iu)
+            dot = np.zeros(n)
+            na = np.zeros(n)
+            nb = np.zeros(n)
+            for col in AT:
+                x = col[iu]
+                y = col[ju]
+                dot += x * y
+                na += x * x
+                nb += y * y
+            raw = dot / (np.sqrt(na) * np.sqrt(nb))
+            keep = raw >= eps - 1e-6
+            parts.append((iu[keep], ju[keep], raw[keep]))
+            i0 = i1
+        iu, ju, raw = (np.concatenate(c) for c in zip(*parts))
         return pd.DataFrame(
             {
-                "a_id": ids[iu[keep]],
-                "b_id": ids[ju[keep]],
-                "a_csim": csim[iu[keep]],
-                "b_csim": csim[ju[keep]],
-                "raw_cos": raw[keep],
+                "a_id": ids[iu],
+                "b_id": ids[ju],
+                "a_csim": csim[iu],
+                "b_csim": csim[ju],
+                "raw_cos": raw,
             }
         )
 

@@ -195,46 +195,24 @@ def _hyperplane_sign(plane_idx: int, dim_idx: int) -> int:
     """Deterministic pseudo-random ±1 for hyperplane ``plane_idx`` at
     1-based dimension ``dim_idx``: parity of the first md5 nibble of
     "t:i" — computable identically in SQL (see ANN_LSH_DUCK). Folded
-    to Python constants here so the Spark plan carries literal plane
-    arrays instead of re-hashing per row×element."""
+    to Python constants here so the signature kernel carries literal
+    planes instead of re-hashing per row×element."""
     import hashlib
 
     nibble = int(hashlib.md5(f"{plane_idx}:{dim_idx}".encode()).hexdigest()[0], 16)
     return (nibble % 2) * 2 - 1
 
 
-def lsh_signature(emb_col, n_planes: int = N_PLANES) -> F.Column:
-    """n_planes-bit sign-random-projection signature as an int.
-
-    Each plane is a literal ±1 array (constant-folded), so the per-row
-    cost is n_planes fused zip_with/aggregate passes — all JVM-side.
+def lsh_signature_exact_arrow(n_planes: int = N_PLANES):
+    """n_planes-bit sign-random-projection signature as an int, with
+    the per-element fold order of a JVM ``zip_with``/``aggregate`` over
+    each plane — bit-identical buckets ALWAYS, where a GEMM would be
+    sign-identical only off the measure-zero hyperplane boundary.
     Fewer planes = coarser buckets = higher recall & higher candidate
     cost; 2^n_planes buckets should be ~corpus_size / desired_bucket.
-    """
-    bits = []
-    for t in range(n_planes):
-        plane = F.array(
-            *[F.lit(float(_hyperplane_sign(t, i))) for i in range(1, DIM + 1)]
-        )
-        proj = F.aggregate(
-            F.zip_with(emb_col, plane, lambda x, p: x.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(2**t)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("int")
-
-
-def lsh_signature_exact_arrow(n_planes: int = N_PLANES):
-    """Arrow twin of :func:`lsh_signature` with the SAME fold order —
-    bit-identical buckets ALWAYS, where a GEMM would be sign-identical
-    only off the measure-zero hyperplane boundary. For each plane the
-    projection accumulates dimension-by-dimension in index order: the
-    dim loop below performs one vectorized multiply-add per dimension
-    across the batch x plane matrix."""
+    For each plane the projection accumulates dimension-by-dimension in
+    index order: the dim loop below performs one vectorized
+    multiply-add per dimension across the batch x plane matrix."""
     import numpy as np
     import pandas as pd
 
@@ -259,9 +237,9 @@ def lsh_signature_exact_arrow(n_planes: int = N_PLANES):
 
 
 def hyperplane_matrix(n_planes: int, dim: int = DIM):
-    """The ±1 hyperplane matrix (n_planes × dim) behind
-    ``lsh_signature``, as numpy — the Arrow kernel's planes, so both
-    paths hash to IDENTICAL buckets."""
+    """The ±1 hyperplane matrix (n_planes × dim) the signature kernel
+    projects on, as numpy; the DuckDB oracle derives the same planes
+    from ``_hyperplane_sign``."""
     import numpy as np
 
     return np.array(
@@ -514,9 +492,9 @@ ORACLES = {
 # - **trained** (production, `ivf_train_centroids`): ~sqrt(n) spherical
 #   k-means centroids. Centroid count scales with sqrt of the corpus, so
 #   the broadcast matrix stays bounded (1e9 vectors x 64 dims -> ~3e4
-#   centroids = 16 MB) and every pass is GEMM-speed. Persisted via
-#   `ivf_build_index` as a table bucketed by centroid_id, so the probe
-#   join needs no corpus-side Exchange.
+#   centroids = 16 MB) and every pass is GEMM-speed. At deployment the
+#   assignments persist as a table bucketed by centroid_id, so the
+#   probe join needs no corpus-side Exchange.
 # - **fixed-mod sample** (oracle fixture only): vec_id % 31 == 0 —
 #   deterministic and DuckDB-expressible, but centroid count grows
 #   LINEARLY with the corpus; never use it beyond the oracle fixture.
@@ -772,24 +750,6 @@ def ivf_assign_trained(emb: DataFrame, ids, Cn) -> DataFrame:
     )
 
 
-def ivf_build_index(
-    emb: DataFrame, table: str, n_centroids: int | None = None,
-    iters: int = KMEANS_ITERS, n_buckets: int = 32, mode: str = "errorifexists",
-):
-    """Train centroids, assign the corpus, persist assignments as a
-    table bucketed by centroid_id (`storage.write_bucketed`). The index
-    build is paid once; every probe equi-joins the bucketed table on
-    centroid_id with no corpus-side Exchange. Returns (ids, Cn)."""
-    from ..sources import storage
-
-    ids, Cn = ivf_train_centroids(emb, n_centroids, iters)
-    assign = ivf_assign_trained(emb, ids, Cn).select("vec_id", "centroid_id")
-    storage.write_bucketed(
-        assign, table, "centroid_id", n_buckets=n_buckets, mode=mode
-    )
-    return ids, Cn
-
-
 def ivf_topk_trained(
     emb: DataFrame, ids, Cn, k: int = TOP_K, query_mod: int = QUERY_MOD,
     n_probe: int = N_PROBE, assign: DataFrame | None = None,
@@ -798,10 +758,11 @@ def ivf_topk_trained(
 
     Per query: pick its n_probe nearest centroids driver-side-free (a
     GEMM mapInPandas over the tiny query set), then EQUI-JOIN the
-    inverted lists on centroid_id (pass ``assign`` read back from the
-    bucketed index table to skip even that shuffle), exact-rank within
-    the probed lists. No cross join anywhere; the corpus is touched by
-    (a) the one-off index build and (b) the candidate equi-join."""
+    inverted lists on centroid_id (pass a materialized ``assign``,
+    e.g. ``trained_assign_df``, to skip re-assigning the corpus),
+    exact-rank within the probed lists. No cross join anywhere; the
+    corpus is touched by (a) the one-off index build and (b) the
+    candidate equi-join."""
     import numpy as np
     import pandas as pd
 
@@ -1570,10 +1531,9 @@ def load_ivf_index(spark: SparkSession, index_dir: str):
 def trained_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized inverted lists (vec_id, centroid_id) for the
     trained index — built once per (session, dataset), the local twin
-    of the production bucketed index table (``ivf_build_index``). A
-    serving deployment reads these lists from storage; it does NOT
-    re-assign the corpus per probe, so neither do the serving-path
-    queries below."""
+    of the production bucketed index table. A serving deployment reads
+    these lists from storage; it does NOT re-assign the corpus per
+    probe, so neither do the serving-path queries below."""
 
     def build() -> DataFrame:
         emb, ids, Cn = _trained_index(spark, sf_dir)

@@ -38,9 +38,6 @@ hash gate pins them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
 from .sqlrun import _run
 
 WIDTH = 24       # gram width, chars
@@ -52,8 +49,7 @@ def _spans_sql(dialect: str) -> str:
     # the gram hash is internal-only (grams are compared for
     # EQUALITY; the gated output is span extents, which are
     # hash-function-independent barring a 60-bit collision), so the
-    # Spark side uses the codegen-native xxhash64 — the production
-    # hash substring_dup_spans_df already runs — while the DuckDB
+    # Spark side uses the codegen-native xxhash64 while the DuckDB
     # oracle keeps the md5 prefix: identical spans, ~2x Spark
     # throughput (round 15; measured in OPTIMIZATION_r15.md at git
     # 0753e1d, since deleted; the same md5-vs-xxhash64 delta SCALE.md
@@ -127,66 +123,6 @@ QUERIES = {"docs_substring_dedup_spans": _run(
     SPANS_SPARK, ("documents",), fanout=("documents",)
 )}
 ORACLES = {"docs_substring_dedup_spans": SPANS_DUCK}
-
-
-def substring_dup_spans_df(
-    docs: DataFrame, width: int = WIDTH, min_span: int = MIN_SPAN,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """DataFrame-API formulation of the same pipeline (for composition
-    and the amplified-scale study): (doc_id, span_start, span_end,
-    span_len) of maximal repeated spans.
-
-    ``hash_fn='md5'`` matches the oracle SQL bit-for-bit (the parity
-    test relies on it). Production uses ``'xxhash64'`` — same 64-bit
-    collision class, ~2× the end-to-end throughput (measured,
-    SCALE.md), no cross-engine requirement."""
-    d = docs.filter(F.length("text") >= width)
-    gram = F.expr(f"substr(text, p, {width})")
-    h = (
-        F.xxhash64(gram)
-        if hash_fn == "xxhash64"
-        else F.substring(F.md5(gram), 1, 15)
-    )
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(1), F.length("text") - width + 1)
-        ).alias("p"),
-        "text",
-    ).select("doc_id", "p", h.alias("h"))
-    # single pass over the corpus-sized gram table: one shuffle on h,
-    # repeated-anywhere = windowed count (the groupBy+join-back shape
-    # hashes every gram twice; measured 16.6 s -> 7.2 s at sf0.1)
-    wh = Window.partitionBy("h")
-    dpos = (
-        grams.withColumn("c", F.count(F.lit(1)).over(wh))
-        .filter(F.col("c") >= 2)
-        .select("doc_id", "p")
-    )
-    w = Window.partitionBy("doc_id").orderBy("p")
-    marked = dpos.withColumn(
-        "brk",
-        F.when(F.col("p") <= F.lag("p").over(w) + width, 0).otherwise(1),
-    )
-    islands = marked.withColumn(
-        "isl",
-        F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        islands.groupBy("doc_id", "isl")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + width - 1).alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start") + 1).alias("span_len"),
-        )
-        .filter(F.col("span_len") >= min_span)
-    )
 
 
 # ------------------------------------------------------- apply

@@ -140,8 +140,8 @@ def attach_rank(
     # evaluation (RangePartitioner seeds by RDD id; AQE can also
     # re-plan the two branches differently). Without a materialized
     # snapshot the two branches can disagree on _pid at scale and the
-    # offsets silently misalign — caught by tools/prefix_sum_bench.py
-    # at 2M rows. localCheckpoint freezes one partitioning for both.
+    # offsets silently misalign — caught by a 2M-row microbenchmark
+    # (SCALE.md). localCheckpoint freezes one partitioning for both.
     with_idx = ranged.select(
         "*",
         F.spark_partition_id().alias("_pid"),
@@ -189,8 +189,8 @@ def exclusive_prefix_sum(
     ).sortWithinPartitions(*order_cols)
     # same checkpoint-before-fan-out as attach_global_row_number: the
     # local-cumsum branch and the totals branch must see the SAME
-    # sampled range boundaries (see comment there; regression caught
-    # by tools/prefix_sum_bench.py).
+    # sampled range boundaries (see comment there; the regression and
+    # its measurement are in SCALE.md).
     with_pid = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
     intra = Window.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, -1

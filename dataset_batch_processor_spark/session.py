@@ -36,6 +36,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # evicted ones could be unloaded. After two registry passes at sf0.001
 # it held 251 MB at this cap and 214 MB at 100.
 CODEGEN_CACHE_MAX_ENTRIES = 8192
+# The directory that holds this package. Python workers get it on
+# their PYTHONPATH, so a kernel that imports the package runs whatever
+# the driver's working directory is; a driver that only put the
+# checkout on its own ``sys.path`` otherwise fails at its first Python
+# kernel with ModuleNotFoundError.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -63,6 +69,9 @@ def get_spark(
     - PySpark call-site capture off, which cuts a query build's Py4J
       round trips about threefold (the trade-off is in the comment at
       the conf); ``extra_conf`` can still override it.
+    - Python workers import the package from :data:`PACKAGE_PARENT`
+      (``spark.executorEnv.PYTHONPATH``, which Spark merges with the
+      process's own PYTHONPATH); ``extra_conf`` can still override it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -100,11 +109,12 @@ def get_spark(
         # a Python traceback, and queries built from SQL strings keep
         # their SQL fragment. PySpark reads the flag once per process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
-    # static conf: managed-table warehouse for bucketed tables
-    # (sources/storage.py). Unset, each new session gets its own
-    # session directory (removed at exit, kept by cleanup_scratch); a
-    # running session keeps its warehouse, so none is made for it.
+    # static conf: the managed-table warehouse. Unset, each new
+    # session gets its own session directory (removed at exit, kept by
+    # cleanup_scratch); a running session keeps its warehouse, so none
+    # is made for it.
     warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE")
     if warehouse is None and SparkSession.getActiveSession() is None:
         warehouse = session_dir("dbp_warehouse_")

@@ -14,10 +14,9 @@ server):
 
 A reader resolves the LATEST COMMITTED version from the manifest
 directory and reads only that data dir — a crash after step 1 or 2
-leaves an orphan directory that no reader ever sees, and
-``vacuum_snapshots`` reclaims it. Old versions stay readable by pin
-(``read_snapshot(version=3)``) until vacuumed: snapshot-level time
-travel, complementing analytics.py's row-level SCD2.
+leaves an orphan directory that no reader ever sees. Old versions
+stay readable by pin (``read_snapshot(version=3)``): snapshot-level
+time travel, complementing analytics.py's row-level SCD2.
 
 Scope note: atomicity here rides on POSIX/HDFS ``rename``. An object
 store without atomic rename needs a log-service commit instead (what
@@ -74,7 +73,7 @@ def publish_snapshot(df: DataFrame, table_dir: str) -> int:
         except OSError as e:
             # retry ONLY the target-exists collision (an orphan from
             # a crashed attempt); any other rename failure — staging
-            # gone (a concurrent vacuum), permissions — must surface,
+            # removed by another process, permissions — must surface,
             # not spin the version counter forever
             if e.errno in (errno.EEXIST, errno.ENOTEMPTY) or (
                 os.path.exists(data_dir) and os.path.exists(staging)
@@ -114,47 +113,3 @@ def read_snapshot(
             f"(committed: {committed})"
         )
     return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
-
-
-def vacuum_snapshots(
-    table_dir: str, keep_latest: int = 1
-) -> list[str]:
-    """Remove (a) orphan data/staging dirs with no manifest and
-    (b) committed versions older than the newest ``keep_latest``.
-    Returns the removed paths."""
-    import shutil
-
-    committed = committed_versions(table_dir)
-    # committed[-0:] would slice the WHOLE list — keep_latest=0 means
-    # "reclaim everything committed"
-    keep = (
-        set(committed[-keep_latest:]) if committed and keep_latest > 0
-        else set()
-    )
-    removed = []
-    for name in os.listdir(table_dir):
-        path = os.path.join(table_dir, name)
-        if name == _COMMITS:
-            # crashed publishes can strand .N.json.tmp manifests here
-            for f in os.listdir(path):
-                if f.endswith(".json.tmp"):
-                    tmp = os.path.join(path, f)
-                    os.remove(tmp)
-                    removed.append(tmp)
-            continue
-        if not os.path.isdir(path):
-            continue
-        if name.startswith("_staging_"):
-            shutil.rmtree(path)
-            removed.append(path)
-        elif name.startswith("v="):
-            v = int(name[2:])
-            if v not in keep:
-                # manifest FIRST: a crash mid-vacuum must never leave
-                # a committed manifest pointing at deleted data
-                manifest = os.path.join(_commit_dir(table_dir), f"{v}.json")
-                if os.path.exists(manifest):
-                    os.remove(manifest)
-                shutil.rmtree(path)
-                removed.append(path)
-    return removed

@@ -1,55 +1,18 @@
-"""Storage layout for scale: bucketing and skew mitigation.
+"""Storage layout for scale: skew mitigation and Z-order cells.
 
-At 100 TB the dominant costs are shuffles. Two standard levers:
-
-- **Bucketing**: persist fact tables bucketed (and sorted) by their
-  join/aggregation key. Two tables bucketed identically join WITHOUT
-  any Exchange — the shuffle happened once at write time and is
-  amortized over every subsequent query. This is the put-the-work-
-  where-it-runs-once move for star-schema fact-fact joins
-  (lineitem ⋈ orders on orderkey being the canonical case).
-- **Salting**: when a groupBy/join key is skewed (one hot key owns a
-  double-digit percentage of rows), prepend a deterministic salt to
-  fan the hot key across reducers, then merge partials. AQE's skew
-  handling covers sort-merge joins; explicit salting covers
-  aggregations and the cases AQE can't re-plan.
-
-Both helpers are deterministic (salts from xxhash64, not rand()) so
-results stay reproducible and oracle-checkable.
+At 100 TB the dominant costs are shuffles. When a groupBy/join key is
+skewed (one hot key owns a double-digit percentage of rows),
+**salting** prepends a deterministic salt to fan the hot key across
+reducers, then merges partials. AQE's skew handling covers sort-merge
+joins; explicit salting covers aggregations and the cases AQE can't
+re-plan. The salts come from xxhash64, not rand(), so results stay
+reproducible and oracle-checkable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "errorifexists",
-) -> None:
-    """Persist as a bucketed (+sorted) managed table. Reading it back
-    exposes the bucketing to the planner, eliminating the Exchange on
-    ``bucket_col`` for joins/aggregations between co-bucketed tables."""
-    w = df.write.bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.mode(mode).format("parquet").saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, left_key: str,
-    right_key: str
-) -> DataFrame:
-    """Join two co-bucketed tables on their bucket keys — shuffle-free
-    by construction (see tests/test_storage.py plan assertion)."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, left[left_key] == right[right_key])
 
 
 def salt_column(cols: list[Column], n_salts: int) -> Column:
@@ -391,103 +354,6 @@ def apply_join_strategy(
     raise ValueError(f"unknown join strategy: {strategy!r}")
 
 
-# ------------------------------------------------------ file layout ops
-# The two operational layout levers bucketing doesn't cover:
-#
-# - **Compaction**: streaming sinks, incremental appends, and
-#   over-parallel writes leave directories of tiny files; at 100 TB
-#   "the small-files problem" dominates NameNode/listing/open costs
-#   and caps scan throughput. Compaction rewrites a directory into
-#   size-targeted files — paid once, amortized over every later scan.
-# - **Sorted (range) layout**: parquet row-group min/max statistics
-#   only prune when values are clustered; repartitionByRange +
-#   sortWithinPartitions gives files/row-groups tight, mostly
-#   disjoint value ranges, so predicate scans skip whole files.
-#   tests/test_storage_layout.py proves the skip via the parquet
-#   footer statistics themselves.
-
-
-def compact_parquet_dir(
-    spark: SparkSession, src: str, dst: str,
-    target_rows_per_file: int = 1_000_000,
-) -> tuple[int, int]:
-    """Rewrite ``src`` (a parquet dir with possibly many small files)
-    into ``dst`` with ~target_rows_per_file rows per output file.
-    Returns (files_before, files_after).
-
-    Row-count-based sizing keeps the helper engine-portable and
-    deterministic; a byte-based target would need sampled row widths
-    (the storage layer's autotuner does that — out of scope here).
-    Shrinking uses coalesce (no shuffle); growing — the oversized-
-    files direction — needs a real repartition, since coalesce can
-    never increase partition count.
-
-    Hive-partitioned sources (key=value subdirs) are rejected
-    explicitly: a flat rewrite would silently DROP the partitioning —
-    the caller should compact per-partition (the directory key is
-    part of the layout contract, not ours to erase)."""
-    import glob as _glob
-    import math
-
-    def _count_parts(root: str) -> int:
-        # recursive: files may sit under key=value partition subdirs
-        return len(_glob.glob(f"{root}/**/part-*", recursive=True))
-
-    if _glob.glob(f"{src}/*=*/"):
-        raise ValueError(
-            f"compact_parquet_dir: {src!r} is hive-partitioned; "
-            "compact each partition directory separately to preserve "
-            "the partition columns"
-        )
-    df = spark.read.parquet(src)
-    n = df.count()
-    before = _count_parts(src)
-    n_files = max(1, math.ceil(n / target_rows_per_file))
-    if n_files < max(before, 1):
-        writer = df.coalesce(n_files)
-    else:
-        writer = df.repartition(n_files)
-    writer.write.mode("errorifexists").parquet(dst)
-    after = _count_parts(dst)
-    return before, after
-
-
-def write_range_sorted(
-    df: DataFrame, dst: str, col: str, n_files: int,
-) -> None:
-    """Range-partition ``df`` on ``col`` into ``n_files`` files, each
-    sorted within — files carry tight, near-disjoint [min, max] value
-    ranges in their parquet footers, so a point/range predicate on
-    ``col`` prunes to ~one file at planning/scan time."""
-    (
-        df.repartitionByRange(n_files, F.col(col))
-        .sortWithinPartitions(col)
-        .write.mode("errorifexists")
-        .parquet(dst)
-    )
-
-
-def parquet_file_ranges(path: str, col: str) -> list[tuple]:
-    """[(min, max)] of ``col`` per parquet file under ``path`` — read
-    from the FOOTER statistics (pyarrow), no data scan. The layout
-    audit: disjoint tight ranges == data skipping works."""
-    import glob as _glob
-
-    import pyarrow.parquet as pa_pq
-
-    out = []
-    for f in sorted(_glob.glob(f"{path}/part-*.parquet")):
-        pf = pa_pq.ParquetFile(f)
-        idx = pf.schema_arrow.get_field_index(col)
-        mins, maxs = [], []
-        for rg in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        out.append((min(mins), max(maxs)))
-    return out
-
-
 # ------------------------------------------------- z-order clustering
 # The multi-column layout lever: a single-column range sort gives
 # perfect pruning on ONE predicate column and none on any other
@@ -499,8 +365,7 @@ def parquet_file_ranges(path: str, col: str) -> list[tuple]:
 # is min/max-normalized fixed-grid (2^bits per dim) — one 1-row
 # bounds aggregate, then pure arithmetic, so the cell assignment is
 # SQL-expressible and sits under the driver hash gate
-# (events_zorder_cells); the write path is footer-audited in
-# tests/test_storage_layout.py like the other layout ops.
+# (events_zorder_cells).
 
 ZBITS = 4  # 16 buckets/dim -> 256 cells for the oracle fixture
 
@@ -566,35 +431,3 @@ def _q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["events_zorder_cells"] = _q_zorder_cells
 ORACLES["events_zorder_cells"] = ZORDER_CELLS_SQL
-
-
-def write_zordered(
-    df: DataFrame, dst: str, ucol: str, vcol: str,
-    n_files: int, bits: int = ZBITS,
-) -> None:
-    """Write ``df`` clustered by the Z-order of (ucol, vcol): range-
-    partition + sort on the interleaved cell id, then drop it. Every
-    output file's parquet footer carries a tight [min,max] box over
-    BOTH columns — predicates on either (or both) prune files, where
-    a plain ``write_range_sorted`` only serves its one sort column."""
-    row = df.agg(
-        F.min(ucol).cast("double").alias("umin"),
-        F.max(ucol).cast("double").alias("umax"),
-        F.min(vcol).cast("double").alias("vmin"),
-        F.max(vcol).cast("double").alias("vmax"),
-    ).collect()[0]
-    z = F.expr(
-        _zcell_arith(
-            ucol, vcol, bits,
-            repr(row["umin"]), repr(row["umax"]),
-            repr(row["vmin"]), repr(row["vmax"]),
-        )
-    )
-    (
-        df.withColumn("_zcell", z)
-        .repartitionByRange(n_files, F.col("_zcell"))
-        .sortWithinPartitions("_zcell")
-        .drop("_zcell")
-        .write.mode("errorifexists")
-        .parquet(dst)
-    )

@@ -269,48 +269,3 @@ ORACLES = {
     "xml_roundtrip_orders": XML_ROUNDTRIP_DUCK,
     "orc_roundtrip_lineitem": ORC_ROUNDTRIP_DUCK,
 }
-
-
-# ------------------------------------------------------ schema evolution
-
-
-def read_evolving_parquet(
-    spark: SparkSession,
-    path: str,
-    expected_schema: str | None = None,
-) -> DataFrame:
-    """Read a parquet directory whose files were written under
-    DIFFERENT schema versions (columns added over time — the normal
-    life of a long-lived corpus table).
-
-    ``mergeSchema`` unions the per-file footers (files missing a
-    column yield typed nulls for it). When ``expected_schema`` (a DDL
-    string) is given, the result is additionally CONFORMED to it:
-    expected columns absent from every file are materialized as typed
-    nulls, unexpected extras are dropped, and column order follows the
-    expected schema — so downstream operators see one stable contract
-    no matter which schema era a file came from.
-
-    Scale note: mergeSchema reads FOOTERS of all files at planning
-    time (a distributed Spark job, not a driver loop), not the data;
-    with thousands of schema-identical files prefer a pinned
-    ``.schema(...)`` read, which skips the merge entirely.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if expected_schema is None:
-        return df
-    want = StructType.fromDDL(expected_schema)
-    # match case-INsensitively, like Spark's own name resolution
-    # (spark.sql.caseSensitive=false): a file era that wrote "ID"
-    # must satisfy an expected "id", not be nulled out as missing
-    have = {f.name.lower(): f.name for f in df.schema.fields}
-    cols = [
-        F.col(have[f.name.lower()]).cast(f.dataType).alias(f.name)
-        if f.name.lower() in have
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in want.fields
-    ]
-    return df.select(*cols)

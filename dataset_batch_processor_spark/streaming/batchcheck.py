@@ -1,8 +1,7 @@
 """Driver-gated streaming query: Structured Streaming vs SQL oracle.
 
-The streaming operators in watch.py/stateful.py are pytest-checked
-against their batch equivalents; this module puts one of them under
-the DRIVER's DuckDB hash gate too. The query runs a real Structured
+This module puts streaming operators under the DRIVER's DuckDB hash
+gate against their batch equivalents. Each query runs a real Structured
 Streaming job — file source, groupBy aggregation state, complete
 output mode, memory sink — to completion with the availableNow
 trigger (process-everything-then-stop, the batch-parity execution

@@ -36,7 +36,7 @@ exact uncapped-batch parity the oracle pins.
 Scale: the index grows as corpus x N_BANDS rows of (doc_id, band,
 bucket); the join key (band, bucket) is the same uniformly-hashed key
 the batch pipeline shuffles on. At deployment the index is a table
-bucketed by (band, bucket) (`storage.write_bucketed`) so each
+bucketed by (band, bucket) so each
 micro-batch joins exchange-free on the index side, and compaction is
 a background rewrite.
 """

@@ -22,8 +22,8 @@ identical digest set.
 Bounded state: the index holds one 32-char digest row per DISTINCT
 turn — it grows with unique content, never with corpus volume; the
 admission join is an equi-join on the digest, the same key the batch
-dedup shuffles. At deployment the index is bucketed by digest
-(storage.write_bucketed) for exchange-free probes.
+dedup shuffles. At deployment the index is bucketed by digest for
+exchange-free probes.
 """
 
 from __future__ import annotations

@@ -7,8 +7,7 @@ feeding the standard embedding toolchain end-to-end.
   2. dedup   — embedding-cosine near-dup audit over the PRODUCED
                vectors (`embdup` shape: brute cosine >= threshold)
   3. index   — train a spherical-k-means IVF index on the produced
-               vectors and persist it (`similarity.ivf_build_index`
-               path: save_ivf_index/load_ivf_index)
+               vectors and persist it (save_ivf_index/load_ivf_index)
   4. serve   — probe the LOADED index (the emb_ivf_serving_topk
                posture: no retraining, no corpus re-assignment)
   5. swap    — register a (fake) model-backed encoder to show the F5

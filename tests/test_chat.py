@@ -167,28 +167,6 @@ def test_turn_near_dup_pairs_are_really_similar(spark, sf_dir):
         assert shingles(a) & shingles(b), (a, b)
 
 
-def test_signatures_front_door():
-    from dataset_batch_processor_spark.operators import dedup
-
-    # kperm default; production_hash defaults OFF (md5 = oracle path)
-    assert dedup.signatures_df.__defaults__ == ("kperm", False)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup.signatures_df(None, method="nope")
-
-
-def test_signatures_front_door_dispatch(spark, sf_dir):
-    from dataset_batch_processor_spark import catalog
-    from dataset_batch_processor_spark.operators import dedup
-
-    docs = catalog.load_table(spark, sf_dir, "documents").limit(20)
-    kp = dedup.signatures_df(docs).columns
-    oph = dedup.signatures_df(docs, method="oph").columns
-    assert kp == dedup.minhash_signatures_df(docs).columns
-    assert oph == dedup.oph_signatures_df(docs).columns
-
-
 def test_pack_sequences_invariants(spark, sf_dir):
     """Packing conservation laws: every non-final sequence is exactly
     full; tokens_used sums to the corpus token total; every doc starts

@@ -53,10 +53,10 @@ def test_production_hash_changes_signatures(spark, sf_dir):
 
 def test_production_hash_deterministic(spark, sf_dir):
     docs = catalog.load_table(spark, sf_dir, "documents")
-    a = dedup.signatures_df(docs, production_hash=True).orderBy(
+    a = dedup.minhash_signatures_df(docs, production_hash=True).orderBy(
         "doc_id"
     ).collect()
-    b = dedup.signatures_df(docs, production_hash=True).orderBy(
+    b = dedup.minhash_signatures_df(docs, production_hash=True).orderBy(
         "doc_id"
     ).collect()
     assert a == b
@@ -71,14 +71,6 @@ def test_production_hash_pair_recall_parity(spark, sf_dir):
     # banding is probabilistic per hash family; demand the production
     # family is within 10 points of the gate family on the fixture
     assert recall_xx >= recall_md5 - 0.10, (recall_md5, recall_xx)
-
-
-def test_oph_rejects_production_hash(spark, sf_dir):
-    import pytest
-
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError):
-        dedup.signatures_df(docs, method="oph", production_hash=True)
 
 
 def test_md5_default_unchanged_by_flag_plumbing(spark, sf_dir):

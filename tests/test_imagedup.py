@@ -1,79 +1,8 @@
-"""Image near-dup dHash: the binary-image kernel must produce
-bit-identical band signatures to the pure-SQL lattice path, and
-decode failures must quarantine."""
+"""Image near-dup dHash: the hot-band cap bounds the candidate join."""
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Row
-
 from dataset_batch_processor_spark.operators import imagedup
-
-
-_lattice = imagedup.lattice_image
-
-
-def test_kernel_matches_sql_path(spark):
-    from dataset_batch_processor_spark.multimodal import png
-
-    ids = list(range(0, 40)) + list(range(250, 290))
-    rows = [
-        Row(
-            id=str(d),
-            fmt="png",
-            content=bytearray(png.encode_png(_lattice(d), filter_type=d % 5)),
-        )
-        for d in ids
-    ]
-    got = {
-        int(r.id): (r.b0, r.b1, r.b2, r.b3)
-        for r in imagedup.dhash_bands(spark.createDataFrame(rows)).collect()
-    }
-
-    spark.range(0, 500).selectExpr("id AS doc_id").createOrReplaceTempView(
-        "documents"
-    )
-    sql = (
-        f"WITH {imagedup._hash_sql('spark')} SELECT * FROM "
-        f"({imagedup.HASHES_PIVOT})"
-    )
-    want = {
-        r.doc_id: (r.b0, r.b1, r.b2, r.b3)
-        for r in spark.sql(sql).collect()
-        if r.doc_id in got
-    }
-    assert got == want
-    # near-dup pair members differ, so the perturbation is visible
-    assert any(got[d] != got[d + 250] for d in range(0, 40))
-    # ...but mostly in only a few bits (near-dups, not strangers);
-    # the occasional pair beyond the threshold is exactly what the
-    # pairs query is supposed to exclude
-    hams = [
-        sum(bin(a ^ b).count("1") for a, b in zip(got[d], got[d + 250]))
-        for d in range(0, 40)
-    ]
-    assert sum(h <= imagedup.HAMMING_MAX for h in hams) >= 30
-    assert max(hams) <= 16
-
-
-def test_decode_failure_quarantines(spark):
-    rows = [Row(id="bad", fmt="png", content=bytearray(b"not a png"))]
-    out = imagedup.dhash_bands(spark.createDataFrame(rows)).collect()[0]
-    assert out.error is not None and out.b0 is None
-
-
-def test_tiny_image_quarantines(spark):
-    """Images smaller than the 8x9 grid must quarantine, not emit a
-    signature that silently diverges from the SQL semantics."""
-    from dataset_batch_processor_spark.multimodal import png
-
-    tiny = np.zeros((4, 4, 3), dtype=np.uint8)
-    rows = [
-        Row(id="tiny", fmt="png", content=bytearray(png.encode_png(tiny)))
-    ]
-    out = imagedup.dhash_bands(spark.createDataFrame(rows)).collect()[0]
-    assert out.error is not None and "too small" in out.error
-    assert out.b0 is None
 
 
 def test_hot_band_cap_bounds_candidates(spark):

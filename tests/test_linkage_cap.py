@@ -1,6 +1,6 @@
-"""Hot-block capping (linkage.fuzzy_match_pairs sorted-neighborhood,
-dedup.lsh_pairs_df bucket cap): the worst-case candidate bounds, and
-fixture-equivalence so the capped APIs don't perturb oracle hashes.
+"""Hot-bucket capping (dedup.lsh_pairs_df bucket cap): the worst-case
+pair bound, and fixture-equivalence so the cap doesn't perturb the
+pairs of small buckets.
 """
 
 from __future__ import annotations
@@ -8,67 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
-from dataset_batch_processor_spark.operators import dedup, linkage
-
-
-def _skewed_block(spark, n=600):
-    """One mega-block: every record shares the first token; names sort
-    so that true near-dups (same stem, 1-char suffix variants) are
-    adjacent while far-apart ranks differ by many edits."""
-    return spark.range(n).select(
-        F.col("id").alias("p_partkey"),
-        F.concat(
-            F.lit("metal stem"),
-            (F.col("id") / 8).cast("int").cast("string"),
-            F.lit(" v"),
-            (F.col("id") % 8).cast("string"),
-        ).alias("p_name"),
-    )
-
-
-def test_window_cap_bounds_candidates(spark):
-    n, w = 600, 8
-    recs = _skewed_block(spark, n)
-    capped = linkage.fuzzy_match_pairs(
-        recs, block_budget=100, window=w, verify=False
-    )
-    n_cands = capped.count()
-    assert n_cands <= n * w          # structural bound
-    assert n_cands < n * (n - 1) / 2 / 10  # far below quadratic
-
-
-def test_window_cap_keeps_adjacent_near_dups(spark):
-    """Records differing only in the trailing v-digit sort adjacently,
-    so the window join must still surface them: every stem group of 8
-    contributes its within-threshold pairs."""
-    recs = _skewed_block(spark, 160)
-    capped = linkage.fuzzy_match_pairs(
-        recs, block_budget=10, window=8, max_dist=2
-    )
-    full = linkage.fuzzy_match_pairs(recs, max_dist=2)
-    # same-stem pairs differ by ≤2 edits and sit within 8 ranks —
-    # the capped result must contain ALL of the full result's
-    # same-stem pairs (here: every within-threshold pair whose ranks
-    # are within the window)
-    got = {(r.id_a, r.id_b) for r in capped.collect()}
-    want = {
-        (r.id_a, r.id_b)
-        for r in full.collect()
-        if r.id_a // 8 == r.id_b // 8  # same stem group → adjacent
-    }
-    assert want <= got
-
-
-def test_under_budget_blocks_match_uncapped_exactly(spark, sf_dir):
-    """On the fixture part table every first-token block is far under
-    budget, so capped == uncapped — the API-level twin of 'the oracle
-    hash is unchanged'."""
-    part = catalog.load_table(spark, sf_dir, "part")
-    capped = linkage.fuzzy_match_pairs(part, block_budget=10_000, window=4)
-    full = linkage.fuzzy_match_pairs(part)
-    a = {(r.id_a, r.id_b, r.dist) for r in capped.collect()}
-    b = {(r.id_a, r.id_b, r.dist) for r in full.collect()}
-    assert a == b
+from dataset_batch_processor_spark.operators import dedup
 
 
 def test_lsh_bucket_cap_bounds_pairs_and_keeps_small_buckets(spark, sf_dir):

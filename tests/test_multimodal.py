@@ -1,6 +1,5 @@
 """Multimodal binary plumbing: codec registry, pixel kernels (golden
-arrays per SURVEY.md §5.2 item 2), mapInPandas schema/batch contract,
-and the F5 ML routing shape."""
+arrays per SURVEY.md §5.2 item 2) and the mapInPandas tile contract."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 from pyspark.sql import Row
 
 from dataset_batch_processor_spark.multimodal import binary as mm
-from dataset_batch_processor_spark.operators import mlfilter
 
 
 def grad_image(h, w):
@@ -59,18 +57,21 @@ def test_stub_codec_raises():
         mm.CODECS["heic"](b"anything")
 
 
-def test_decode_metadata_plumbing(spark):
-    rows = [
-        Row(id="ok", fmt="rawrgb", content=bytearray(mm.encode_rawrgb(grad_image(8, 6)))),
-        Row(id="stub", fmt="heic", content=bytearray(b"ftypheic")),
-        Row(id="bad", fmt="rawrgb", content=bytearray(b"junk")),
-    ]
-    got = {r.id: r for r in mm.decode_metadata(spark.createDataFrame(rows)).collect()}
-    assert (got["ok"].width, got["ok"].height, got["ok"].error) == (6, 8, None)
-    # quarantine path exercised: the stub's NotImplementedError, or a
-    # registered real decoder's error on the truncated payload
-    assert got["stub"].error is not None and got["stub"].width is None
-    assert got["bad"].error is not None  # quarantine, not fatal
+def test_decode_any_dims_and_failures():
+    """What a quarantining kernel gets from decode_any per codec: the
+    dims of a good payload, and an exception (never an array) from a
+    stub codec or a truncated payload."""
+    from dataset_batch_processor_spark.multimodal import optional_codecs
+
+    ok = mm.decode_any("rawrgb", mm.encode_rawrgb(grad_image(8, 6)))
+    assert ok.shape == (8, 6, 3)
+    # the stub's NotImplementedError, or a registered real decoder's
+    # error on the truncated payload
+    exc = ValueError if "heic" in optional_codecs.REGISTERED else NotImplementedError
+    with pytest.raises(exc):
+        mm.decode_any("heic", b"ftypheic")
+    with pytest.raises(ValueError):
+        mm.decode_any("rawrgb", b"junk")
 
 
 def test_materialize_tiles_end_to_end(spark):
@@ -104,17 +105,6 @@ def test_materialize_tiles_pad_extend(spark):
     assert (out.tile_w, out.tile_h) == (2, 2)
     tile = mm.decode_rawrgb(bytes(out.content))
     assert (tile == img[2, 2]).all()  # single pixel replicated
-
-
-def test_ml_face_routing(spark):
-    df = spark.createDataFrame([Row(id=f"img_{k}") for k in range(200)])
-    routed = mlfilter.route_by_faces(mlfilter.score_faces(df))
-    rows = routed.collect()
-    assert {r.route for r in rows} <= {"keep", "skip"}
-    # existential semantics: keep iff any face conf >= 0.95
-    for r in rows:
-        has_good = any(f.confidence >= 0.95 for f in (r.faces or []))
-        assert (r.route == "keep") == has_good
 
 
 # ----------------------------------------------------- ViT patchify

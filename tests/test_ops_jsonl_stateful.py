@@ -1,4 +1,4 @@
-"""Cancellation handle, JSONL paths, stateful streaming."""
+"""Cancellation handle, JSONL paths."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import ops
 from dataset_batch_processor_spark.sources import jsonl
-from dataset_batch_processor_spark.streaming import stateful
 
 
 def test_cancellable_run_completes(spark):
@@ -73,45 +72,3 @@ def test_split_jsonl_does_not_join_its_input_back(spark, tmp_path):
     joins = [ln for ln in plan.splitlines() if "Join " in ln]
     assert len(joins) == 1, plan
     assert "_pid" in joins[0]
-
-
-def test_stateful_running_counts(spark, tmp_path):
-    land = tmp_path / "ev"
-    land.mkdir()
-    rows1 = [{"user_id": 1, "event_type": "a", "ts": "2024-01-01T00:00:00"},
-             {"user_id": 1, "event_type": "b", "ts": "2024-01-01T00:01:00"},
-             {"user_id": 2, "event_type": "c", "ts": "2024-01-01T00:02:00"}]
-    (land / "b1.jsonl").write_text("\n".join(json.dumps(r) for r in rows1) + "\n")
-    stream = (
-        spark.readStream.schema("user_id long, event_type string, ts string")
-        .json(str(land))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    ckpt = str(tmp_path / "ck")
-    out1, out2 = str(tmp_path / "out1"), str(tmp_path / "out2")
-
-    def run_batch(sink_path):
-        # update-mode stateful output -> foreachBatch parquet append
-        # (checkpoint-recoverable, unlike the memory sink)
-        q = (
-            stateful.running_user_counts(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(sink_path)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch(out1)
-    got = {r.user_id: r.n_events_total for r in spark.read.parquet(out1).collect()}
-    assert got == {1: 2, 2: 1}
-
-    # second micro-batch: state carries across RESTARTS via checkpoint
-    rows2 = [{"user_id": 1, "event_type": "d", "ts": "2024-01-01T00:05:00"}]
-    (land / "b2.jsonl").write_text("\n".join(json.dumps(r) for r in rows2) + "\n")
-    run_batch(out2)
-    got2 = {r.user_id: r.n_events_total for r in spark.read.parquet(out2).collect()}
-    assert got2 == {1: 3}  # 2 (restored state) + 1 new event

@@ -1,4 +1,4 @@
-"""pHash: kernel-vs-SQL bit parity, hash invariances, quarantine."""
+"""pHash: kernel-vs-SQL bit parity and hash invariances."""
 
 from __future__ import annotations
 
@@ -59,28 +59,3 @@ def test_hash_differs_for_unrelated_images():
 def test_empty_image_rejected():
     with pytest.raises(ValueError):
         phash.phash_hash_array(np.zeros((0, 5, 3), dtype=np.uint8))
-
-
-def test_kernel_bands_quarantine_bad_payload(spark):
-    df = spark.createDataFrame(
-        [("good", "ppm", None), ("bad", "png", b"not a png")],
-        "id string, fmt string, content binary",
-    )
-    from dataset_batch_processor_spark.multimodal import codecs_extra
-
-    good = codecs_extra.encode_ppm(_lattice_img(5))
-    rows = {
-        r["id"]: r
-        for r in phash.phash_bands(
-            spark.createDataFrame(
-                [("good", "ppm", good), ("bad", "png", b"not a png")],
-                "id string, fmt string, content binary",
-            )
-        ).collect()
-    }
-    assert rows["good"]["error"] is None
-    assert rows["good"]["b0"] is not None
-    assert rows["bad"]["error"] is not None and rows["bad"]["b0"] is None
-    assert (rows["good"]["b0"], rows["good"]["b1"], rows["good"]["b2"],
-            rows["good"]["b3"]) == phash.phash_hash_array(_lattice_img(5))
-    del df

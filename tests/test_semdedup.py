@@ -1,12 +1,16 @@
 """SemDeDup: keep-rule semantics on a hand-built cluster fixture and
 the oversized-cluster sub-split bound. The numeric path is proven by
 the driver oracle (emb_semdedup_survivors); these tests pin the parts
-a value hash can't see: WHICH member survives and why, and that the
-cap actually bounds the candidate join."""
+a value hash can't see: WHICH member survives and why, that the
+cap actually bounds the candidate join, and that the pair kernel's
+memory is bounded without changing a row."""
 
 from __future__ import annotations
 
+import tracemalloc
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from dataset_batch_processor_spark.operators import semdedup
@@ -78,3 +82,43 @@ def test_max_cluster_size_bounds_candidates(spark):
     assert n_full == 1  # one survivor of the clique
     assert n_capped >= n_full
     assert n_capped <= 8  # at most one survivor per sub-bucket
+
+
+def _cluster(m, dim, seed):
+    """One pair_key group as the kernel receives it, in shuffled order."""
+    rng = np.random.default_rng(seed)
+    return pd.DataFrame(
+        {
+            "vec_id": rng.permutation(m).astype(np.int64),
+            "embedding": list(rng.standard_normal((m, dim))),
+            "centroid_sim": rng.random(m),
+        }
+    )
+
+
+def test_pair_kernel_memory_is_bounded():
+    """A 1,500-member cluster at dim 8 is 1.1M pairs; building them all
+    at once peaked at 197 MB. In blocks the peak stays a few MB."""
+    pdf = _cluster(1500, 8, seed=0)
+    run = semdedup._pair_cos_kernel(0.99)
+    tracemalloc.start()
+    try:
+        run(pdf)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, f"peak {peak / 2**20:.1f} MB"
+
+
+def test_pair_kernel_blocks_emit_identical_rows(monkeypatch):
+    """Many small blocks emit exactly the rows, order and doubles of one
+    block (300 members: 44,850 pairs, under the default budget)."""
+    pdf = _cluster(300, 16, seed=1)
+    one = semdedup._pair_cos_kernel(0.3)(pdf)
+    monkeypatch.setattr(semdedup, "PAIR_BLOCK", 97)
+    many = semdedup._pair_cos_kernel(0.3)(pdf)
+    assert len(one) > 1000
+    pd.testing.assert_frame_equal(
+        one.reset_index(drop=True), many.reset_index(drop=True),
+        check_exact=True,
+    )

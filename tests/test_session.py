@@ -1,16 +1,19 @@
-"""The session factory's codegen class cache holds a repeated pass."""
+"""The session factory: its codegen class cache holds a repeated pass,
+and its Python workers find the package from any working directory."""
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
+import textwrap
 
 import __spark_entry__ as entry
 from dataset_batch_processor_spark import matcache
 from dataset_batch_processor_spark.session import CODEGEN_CACHE_MAX_ENTRIES
 
-_PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "perfbench")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PERFBENCH = os.path.join(_REPO, "perfbench")
 
 
 def _llm_curation():
@@ -57,3 +60,33 @@ def test_repeated_pass_compiles_nothing(spark, sf_dir):
 
     run_pass()
     assert run_pass() == {}
+
+
+def test_python_workers_import_the_package_from_any_directory(tmp_path):
+    """A driver that puts the checkout on its own ``sys.path`` and runs
+    from another directory with no PYTHONPATH: its Python workers get
+    neither, yet a kernel that imports the package must run."""
+    driver = tmp_path / "driver.py"
+    driver.write_text(textwrap.dedent(f"""
+        import sys
+
+        sys.path.insert(0, {_REPO!r})
+        from dataset_batch_processor_spark.session import get_spark
+
+        def kernel(batches):
+            import dataset_batch_processor_spark  # noqa: F401
+            yield from batches
+
+        spark = get_spark("workers-path", master="local[1]",
+                          shuffle_partitions=1)
+        n = spark.range(3).mapInPandas(kernel, schema="id long").count()
+        spark.stop()
+        sys.exit(0 if n == 3 else 1)
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, str(driver)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]

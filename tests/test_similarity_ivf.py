@@ -62,22 +62,20 @@ def test_probe_plan_is_equi_join_no_nested_loop(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_build_index_persists_bucketed_assignments(spark, sf_dir, tmp_path):
-    spark.sql("DROP TABLE IF EXISTS ivf_assign_test")
+def test_probe_with_given_assignments_matches_fresh(spark, sf_dir):
+    """Probing through a supplied assignment frame (the materialized
+    ``trained_assign_df`` posture) equals probing with a fresh one."""
     emb = _emb(spark, sf_dir)
-    ids, Cn = similarity.ivf_build_index(
-        emb, "ivf_assign_test", n_centroids=16, mode="overwrite"
+    ids, Cn = similarity.ivf_train_centroids(emb, n_centroids=16, iters=1)
+    assign = similarity.ivf_assign_trained(emb, ids, Cn).select(
+        "vec_id", "centroid_id"
     )
-    assign = spark.table("ivf_assign_test")
-    assert assign.columns == ["vec_id", "centroid_id"]
     assert assign.count() == emb.count()  # every vector in exactly one list
-    # probing via the persisted index matches probing via a fresh assign
-    via_table = similarity.ivf_topk_trained(emb, ids, Cn, assign=assign)
+    via_given = similarity.ivf_topk_trained(emb, ids, Cn, assign=assign)
     via_fresh = similarity.ivf_topk_trained(emb, ids, Cn)
-    assert sorted(map(tuple, via_table.collect())) == sorted(
+    assert sorted(map(tuple, via_given.collect())) == sorted(
         map(tuple, via_fresh.collect())
     )
-    spark.sql("DROP TABLE IF EXISTS ivf_assign_test")
 
 
 def test_assignment_partials_are_centroid_sized(spark, sf_dir):
@@ -120,27 +118,36 @@ def test_trained_ivf_high_recall_on_clustered_data(spark):
     assert recall >= 0.9, f"clustered recall@{similarity.TOP_K} = {recall:.2f}"
 
 
+def _catalyst_signature(emb_col, n_planes):
+    """Reference: the sign-projection signature as a JVM expression,
+    one zip_with/aggregate fold per plane over literal ±1 planes."""
+    sig = F.lit(0)
+    for t, row in enumerate(similarity.hyperplane_matrix(n_planes)):
+        plane = F.array(*[F.lit(float(x)) for x in row])
+        proj = F.aggregate(
+            F.zip_with(emb_col, plane, lambda x, p: x.cast("double") * p),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        sig = sig + F.when(proj > 0, F.lit(2**t)).otherwise(F.lit(0))
+    return sig.cast("int")
+
+
 def test_vectorized_signature_matches_catalyst(spark, sf_dir):
     """The Arrow signature kernel that ann_lsh_topk and embdup run must
     bucket every fixture vector identically to the Catalyst
-    lsh_signature expression for any plane count (4..12 covers the
-    adaptive range at fixture scale)."""
-    from pyspark.sql import functions as F
-
-    from dataset_batch_processor_spark import catalog
-    from dataset_batch_processor_spark.operators.similarity import (
-        lsh_signature,
-        lsh_signature_exact_arrow,
-    )
-
+    expression for any plane count (4..12 covers the adaptive range at
+    fixture scale)."""
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     for p in (4, 8, 12):
         jvm = emb.select(
-            "vec_id", lsh_signature(F.col("embedding"), p).alias("bucket")
+            "vec_id", _catalyst_signature(F.col("embedding"), p).alias("bucket")
         )
         arrow = emb.select(
             "vec_id",
-            lsh_signature_exact_arrow(p)(F.col("embedding")).alias("bucket"),
+            similarity.lsh_signature_exact_arrow(p)(F.col("embedding")).alias(
+                "bucket"
+            ),
         )
         diff = (
             jvm.withColumnRenamed("bucket", "b1")

@@ -1,5 +1,4 @@
-"""Atomic snapshot publishing: crash invisibility, time travel,
-orphan vacuum."""
+"""Atomic snapshot publishing: crash invisibility, time travel."""
 
 from __future__ import annotations
 
@@ -37,19 +36,6 @@ def test_crashed_write_is_invisible(spark, tmp_path):
     assert snapshots.read_snapshot(spark, table).count() == 7
     # the orphan remains invisible even though it sits on disk
     assert snapshots.committed_versions(table) == [1, 3]
-
-
-def test_vacuum_reclaims_orphans_and_old_versions(spark, tmp_path):
-    table = str(tmp_path / "t")
-    snapshots.publish_snapshot(spark.range(5), table)
-    snapshots.publish_snapshot(spark.range(6), table)
-    spark.range(9).write.parquet(os.path.join(table, "v=3"))  # orphan
-    os.makedirs(os.path.join(table, "_staging_deadbeef"))
-
-    removed = snapshots.vacuum_snapshots(table, keep_latest=1)
-    assert len(removed) == 3  # v=1, orphan v=3, staging dir
-    assert snapshots.committed_versions(table) == [2]
-    assert snapshots.read_snapshot(spark, table).count() == 6
 
 
 def test_streaming_micro_batches_publish_atomically(spark, tmp_path):
@@ -91,26 +77,6 @@ def test_streaming_micro_batches_publish_atomically(spark, tmp_path):
     assert total == 30
 
 
-def test_vacuum_keep_latest_zero_reclaims_all(spark, tmp_path):
-    table = str(tmp_path / "t")
-    snapshots.publish_snapshot(spark.range(5), table)
-    snapshots.publish_snapshot(spark.range(6), table)
-    snapshots.vacuum_snapshots(table, keep_latest=0)
-    assert snapshots.committed_versions(table) == []
-
-
-def test_vacuum_reclaims_stranded_tmp_manifest(spark, tmp_path):
-    table = str(tmp_path / "t")
-    snapshots.publish_snapshot(spark.range(5), table)
-    # simulate a crash between tmp manifest write and its rename
-    tmp = os.path.join(table, "_commits", ".2.json.tmp")
-    with open(tmp, "w") as fh:
-        fh.write("{}")
-    removed = snapshots.vacuum_snapshots(table, keep_latest=1)
-    assert tmp in removed and not os.path.exists(tmp)
-    assert snapshots.committed_versions(table) == [1]
-
-
 def test_publish_raises_when_staging_lost(spark, tmp_path, monkeypatch):
     """A rename failure that is NOT a version collision must raise,
     not spin the version counter forever."""
@@ -124,7 +90,7 @@ def test_publish_raises_when_staging_lost(spark, tmp_path, monkeypatch):
             import shutil
 
             if os.path.exists(src):
-                shutil.rmtree(src)  # concurrent vacuum ate the staging
+                shutil.rmtree(src)  # another process removed the staging
             raise OSError(2, "No such file or directory", src)
         return real_rename(src, dst)
 

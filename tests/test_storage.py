@@ -1,50 +1,11 @@
-"""Bucketed tables (shuffle-free co-located joins) + salted aggregation."""
+"""Salted aggregation and joins, and the skew audit -> strategy wiring."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dataset_batch_processor_spark.plans import explain
 from dataset_batch_processor_spark.sources import storage
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    # warehouse dir is a static conf, set session-unique in session.py
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    storage.write_bucketed(li, "li_b", "l_orderkey", 8, mode="overwrite")
-    storage.write_bucketed(orders, "ord_b", "o_orderkey", 8, mode="overwrite")
-    yield "li_b", "ord_b"
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-
-
-def test_bucketed_join_is_shuffle_free(spark, bucketed_tables):
-    lt, rt = bucketed_tables
-    # suppress broadcast so the bucketing (not a broadcast) kills the
-    # shuffle — this is the fact-fact join shape at 100 TB
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = storage.bucketed_join(spark, lt, rt, "l_orderkey", "o_orderkey")
-        assert explain.count_exchanges(joined) == 0
-        # and it computes the same result as the plain join
-        plain = (
-            spark.table(lt)
-            .join(spark.table(rt), F.col("l_orderkey") == F.col("o_orderkey"))
-            .count()
-        )
-        assert joined.count() == plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucketed_agg_is_shuffle_free(spark, bucketed_tables):
-    lt, _ = bucketed_tables
-    agg = spark.table(lt).groupBy("l_orderkey").agg(F.count("*").alias("n"))
-    assert explain.count_exchanges(agg) == 0
 
 
 def test_salted_aggregate_matches_plain(spark, sf_dir):

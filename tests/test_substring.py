@@ -2,20 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from dataset_batch_processor_spark import catalog
 from dataset_batch_processor_spark.operators import substring
 
 
-def test_dataframe_path_matches_sql_exactly(spark, sf_dir):
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    a = {
-        tuple(r) for r in substring.substring_dup_spans_df(docs).collect()
-    }
-    b = {tuple(r) for r in spark.sql(substring.SPANS_SPARK).collect()}
-    assert a == b and len(a) > 0
+def _spans(spark, rows):
+    """SPANS_SPARK (the registered query's SQL) over planted docs."""
+    spark.createDataFrame(
+        rows, "doc_id long, text string"
+    ).createOrReplaceTempView("documents")
+    return spark.sql(substring.SPANS_SPARK)
 
 
 def test_known_repeated_span_is_recovered_exactly(spark):
@@ -35,12 +30,9 @@ def test_known_repeated_span_is_recovered_exactly(spark):
     )
     a = "A" + filler(100) + shared
     b = shared + "B" + filler(90)
-    docs = spark.createDataFrame(
-        [(1, a), (2, b)], "doc_id long, text string"
-    )
     spans = {
         r.doc_id: (r.span_start, r.span_end)
-        for r in substring.substring_dup_spans_df(docs).collect()
+        for r in _spans(spark, [(1, a), (2, b)]).collect()
     }
     # doc 1: span covers exactly the shared suffix (1-based)
     assert spans[1] == (len(a) - len(shared) + 1, len(a))
@@ -57,10 +49,9 @@ def test_within_doc_repetition_is_detected(spark):
     block = "the same exact block of text repeated twice in one doc!! "
     filler = "".join(chr(97 + rng.randrange(26)) for _ in range(70))
     text = block + filler + block
-    docs = spark.createDataFrame([(7, text)], "doc_id long, text string")
     spans = sorted(
         (r.span_start, r.span_end)
-        for r in substring.substring_dup_spans_df(docs).collect()
+        for r in _spans(spark, [(7, text)]).collect()
     )
     assert len(spans) == 2
     assert spans[0] == (1, len(block))
@@ -68,16 +59,13 @@ def test_within_doc_repetition_is_detected(spark):
 
 
 def test_no_false_spans_on_unique_text(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "".join(__import__("random").Random(1).choices(
-                "abcdefghijklmnopqrstuvwxyz", k=300))),
-            (2, "".join(__import__("random").Random(2).choices(
-                "abcdefghijklmnopqrstuvwxyz", k=300))),
-        ],
-        "doc_id long, text string",
-    )
-    assert substring.substring_dup_spans_df(docs).count() == 0
+    docs = [
+        (1, "".join(__import__("random").Random(1).choices(
+            "abcdefghijklmnopqrstuvwxyz", k=300))),
+        (2, "".join(__import__("random").Random(2).choices(
+            "abcdefghijklmnopqrstuvwxyz", k=300))),
+    ]
+    assert _spans(spark, docs).count() == 0
 
 
 def test_apply_removes_planted_spans_exactly(spark):

@@ -85,34 +85,3 @@ def test_csv_multiline_roundtrip(spark, tmp_path):
     tabular.write_csv(df, path, allow_embedded_newlines=True)
     back = tabular.read_csv_multiline(spark, path, "id INT, s STRING")
     assert sorted((r.id, r.s) for r in back.collect()) == sorted(rows)
-
-
-def test_read_evolving_parquet_conforms_schema(spark, tmp_path):
-    """Files from different schema eras read as ONE stable contract:
-    merged columns, typed nulls for columns a file predates, extras
-    dropped, expected order."""
-    from dataset_batch_processor_spark.sources.tabular import (
-        read_evolving_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    # era 1: (id, a)            era 2: (id, a, b)       era 3: extra col
-    spark.range(0, 5).selectExpr("id", "id * 2 AS a").coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    spark.range(5, 10).selectExpr(
-        "id", "id * 2 AS a", "CAST(id AS STRING) AS b"
-    ).coalesce(1).write.mode("append").parquet(path)
-    spark.range(10, 12).selectExpr(
-        "id", "id * 2 AS a", "CAST(id AS STRING) AS b", "id AS junk"
-    ).coalesce(1).write.mode("append").parquet(path)
-
-    out = read_evolving_parquet(
-        spark, path, expected_schema="id long, a long, b string, c double"
-    )
-    assert [f.name for f in out.schema.fields] == ["id", "a", "b", "c"]
-    rows = {r.id: r for r in out.collect()}
-    assert len(rows) == 12
-    assert rows[0].b is None and rows[0].c is None  # era-1 file: typed nulls
-    assert rows[7].b == "7"                          # era-2 file: real values
-    assert not hasattr(rows[11], "junk")             # extras dropped

@@ -6,10 +6,13 @@
   without a green verify_oracle run on it trips this test.
 * every ``oracle_sql()`` key must name a registered query (a stray
   oracle is a dead row nothing would ever exercise).
+* every package definition is reached from non-test code, or sits on
+  an allowlist with the reason tests alone may reach it.
 """
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import json
 import os
@@ -154,13 +157,132 @@ def test_no_python_file_pins_a_checkout_path():
     would silently test another tree."""
     on_path = re.compile(r"sys\.path\.(?:insert|append)\([^)]*[\"']/")
     bad = []
+    for rel in _python_files():
+        with open(os.path.join(REPO, rel)) as fh:
+            text = fh.read()
+        if REPO in text or on_path.search(text):
+            bad.append(rel)
+    assert not bad, sorted(bad)
+
+
+def _python_files() -> list[str]:
+    """Every ``*.py`` of the checkout, relative to it."""
+    out = []
     for root, dirs, files in os.walk(REPO):
         dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
-        for name in files:
-            if name.endswith(".py"):
-                path = os.path.join(root, name)
-                with open(path) as fh:
-                    text = fh.read()
-                if REPO in text or on_path.search(text):
-                    bad.append(os.path.relpath(path, REPO))
-    assert not bad, sorted(bad)
+        out += [
+            os.path.relpath(os.path.join(root, name), REPO)
+            for name in files if name.endswith(".py")
+        ]
+    return sorted(out)
+
+
+def _names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Names a tree uses (``Name``, ``Attribute`` and import aliases),
+    leaving out the subtree ``skip``."""
+    out: set[str] = set()
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _unreached_definitions() -> dict[str, bool]:
+    """Top-level package ``def``/``class`` names that no non-test file
+    uses outside the definition's own body, keyed ``module.name``; the
+    value says whether a test uses the name. Uses are read from the
+    syntax tree, not from name tokens: an f-string's body is code that
+    calls (a SQL builder), and a docstring's mention calls nothing."""
+    trees = {}
+    for rel in _python_files():
+        with open(os.path.join(REPO, rel)) as fh:
+            trees[rel] = ast.parse(fh.read(), rel)
+    tests = "tests" + os.sep
+    in_tests = set().union(
+        *(_names(t) for rel, t in trees.items() if rel.startswith(tests))
+    )
+    elsewhere = {
+        rel: _names(t) for rel, t in trees.items()
+        if not rel.startswith(tests)
+    }
+    pkg = "dataset_batch_processor_spark" + os.sep
+    out = {}
+    for rel, tree in trees.items():
+        if not rel.startswith(pkg):
+            continue
+        module = rel[len(pkg):-len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            if node.name.startswith("__") or node.name in _names(tree, node):
+                continue
+            if any(node.name in names for other, names in elsewhere.items()
+                   if other != rel):
+                continue
+            out[f"{module}.{node.name}"] = node.name in in_tests
+    return out
+
+
+# Package definitions that only tests reach, each with why it stays.
+TEST_ONLY_DEFINITIONS = {
+    # references and inverse encoders that tests compare against
+    "multimodal.av.encode_rawpcm": "inverse encoder the rawpcm decoder tests round-trip through",
+    "multimodal.av.mulaw_compress": "G.711 mu-law encoder the mu-law decoder is checked against",
+    "multimodal.av.alaw_compress": "G.711 A-law encoder the A-law decoder is checked against",
+    "multimodal.vp8.encode_webp_vp8": "inverse encoder the WebP/VP8 decoder tests round-trip through",
+    "operators.chat.render_py": "Python reference of the SQL chat-template render",
+    "operators.chat.loss_spans_py": "Python reference of the SQL assistant loss spans",
+    "operators.bpe.bpe_apply_tokens": "Python reference of the SQL BPE merge fold",
+    "operators.imagedup.lattice_image": "numpy reference of the SQL pixel lattice",
+    "operators.phash.phash_hash_array": "per-image pHash reference of the lattice kernel and SQL",
+    # plan audits: the plan shapes stay as constraints
+    "plans.audit.audit_registry": "registry-wide plan audit the plan tests run",
+    "plans.explain.has_pushed_filter": "pushdown assertion of the plan tests",
+    "plans.explain.read_schema_columns": "column-pruning assertion of the plan tests",
+    # reference parity not wired into a query or facade yet
+    "sources.text.load_caption_dictionary": "S9 caption-dictionary loader",
+    "sources.text.read_lines_exact": "exact-byte line identity (SURVEY 1.4)",
+    "operators.textops.dedup_lines_exact_bytes": "exact-byte line identity (SURVEY 1.4)",
+    "sources.jsonl.split_jsonl_preserving_lines": "the Split JSONL tab",
+    "ops.run_cancellable": "the Stop button; ROADMAP item 1 wires its record",
+    # named by a live error message
+    "sources.tabular.read_csv_multiline": "write_csv's embedded-newline error names it",
+    # test drivers of live stream steps
+    "streaming.incremental.run_incremental_over_dir": "drives the live lsh_step over a staged folder",
+    "streaming.turndedup.run_turn_admission_over_dir": "drives the live turn-admission step over a staged folder",
+    # F7 accessors and a public name for live logic
+    "sources.images.quarantine": "F7 accessor: the rows an image read quarantined",
+    "sources.jsonl.jsonl_quarantine": "F7 accessor: the rows a JSONL read quarantined",
+    "operators.dsir.dsir_bucket_weights": "public name for the live DSIR bucket weights",
+}
+
+
+def test_every_package_definition_is_reached():
+    """No query, facade, example, tool or benchmark reaching a package
+    definition means it is dead weight, unless it is allowlisted above
+    with a reason. An allowlisted name must still exist, stay reached
+    by tests and stay unreached elsewhere, so the list cannot rot."""
+    unreached = _unreached_definitions()
+    dead = sorted(set(unreached) - set(TEST_ONLY_DEFINITIONS))
+    assert not dead, (
+        f"package definitions no non-test code reaches (delete them, or "
+        f"allowlist them with a reason): {dead}"
+    )
+    stale = sorted(
+        name for name in TEST_ONLY_DEFINITIONS if not unreached.get(name)
+    )
+    assert not stale, (
+        f"allowlisted definitions that are gone, reached from non-test "
+        f"code again, or reached by no test: {stale}"
+    )
