@@ -23,4 +23,7 @@ Layout:
     plans/       — plan-shape assertion helpers
 """
 
+# This module must import nothing: Python workers start from
+# ``pydaemon``, which drops Spark's archives from ``sys.path`` before
+# pyspark is imported, and the package's ``__init__`` runs before it.
 __version__ = "0.1.0"

@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-IMAGE_EXTENSIONS = ("png", "jpg", "jpeg", "heic", "cr2", "nef", "arw", "dng")
 # F1 extension predicate, /root/reference/modules/filter_crop.py:39
 EXT_PATTERN = r"(?i)\.(png|jpg|jpeg|heic|cr2|nef|arw|dng)$"
 

@@ -41,8 +41,6 @@ hash) match exactly.
 
 from __future__ import annotations
 
-from .sqlrun import _run
-
 EVAL_MOD = 23  # doc_id % EVAL_MOD == 0 -> held-out eval set (fixture)
 DECON_N = 8  # words per collision gram (GPT-3 used 13; fixture docs are short)
 JAC_N = 3  # words per Jaccard shingle

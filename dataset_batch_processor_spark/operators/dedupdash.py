@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..matcache import materialize_once
 from .components import _PAIRS_AS_CTE, connected_components, doc_dup_labels
-from .dedup import pair_graph
 from .imagedup import _pairs_bare_sql
 from .phash import PHASH_PAIRS_DUCK, phash_pairs
 from .semdedup import SEMDEDUP_DUCK, semdedup_table

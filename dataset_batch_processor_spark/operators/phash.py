@@ -53,31 +53,33 @@ _COS_ROWS = ",\n    ".join(
 )
 
 
-def _phash_sql(engine: str) -> str:
+def _phash_sql() -> str:
+    """The lattice pHash pairs as DuckDB SQL: the oracle of
+    :func:`phash_pairs`."""
     from .dedup import DEFAULT_MAX_BUCKET_SIZE as cap
 
-    div = "DIV" if engine == "spark" else "//"
     # DuckDB may inline a plain CTE at every reference; bands is
     # referenced three times (cand twice, hashes once), so inlining
     # would recompute the whole 32x32-grid DCT pipeline per reference
     # — the same exponential-inlining hazard the k-core/LPA unrolled
     # oracles guard against (components.py _kcore_duck). MATERIALIZED
-    # pins one evaluation; Spark has no such keyword (Catalyst reuses
-    # the subplan via exchange reuse on its own).
-    mat = "" if engine == "spark" else " MATERIALIZED"
-    if engine == "spark":
-        grid = """
-grid AS (
-  SELECT doc_id, g, v, w, h, r, c
-  FROM dims
-  LATERAL VIEW explode(sequence(0, 31)) rs AS r
-  LATERAL VIEW explode(sequence(0, 31)) cs AS c
-)"""
-        shl = "shiftleft(bit, CAST(idx % 16 AS INT))"
-        xor = ("bit_count(ha.b0 ^ hb.b0) + bit_count(ha.b1 ^ hb.b1) + "
-               "bit_count(ha.b2 ^ hb.b2) + bit_count(ha.b3 ^ hb.b3)")
-    else:
-        grid = """
+    # pins one evaluation.
+    xor = ("bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))"
+           " + bit_count(xor(ha.b2, hb.b2))"
+           " + bit_count(xor(ha.b3, hb.b3))")
+    return f"""
+WITH imgs AS (
+  SELECT doc_id,
+         CAST(doc_id % 250 AS BIGINT) AS g,
+         CAST(doc_id // 250 AS BIGINT) AS v
+  FROM documents
+),
+dims AS (
+  SELECT doc_id, g, v,
+         CAST(g % 12 + 16 AS INT) AS w,
+         CAST(g % 9 + 16 AS INT) AS h
+  FROM imgs
+),
 rs AS (
   SELECT doc_id, g, v, w, h,
          unnest(generate_series(0, CAST(31 AS BIGINT))) AS r
@@ -87,28 +89,11 @@ grid AS (
   SELECT doc_id, g, v, w, h, r,
          unnest(generate_series(0, CAST(31 AS BIGINT))) AS c
   FROM rs
-)"""
-        shl = "bit << (idx % 16)"
-        xor = ("bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))"
-               " + bit_count(xor(ha.b2, hb.b2))"
-               " + bit_count(xor(ha.b3, hb.b3))")
-    return f"""
-WITH imgs AS (
-  SELECT doc_id,
-         CAST(doc_id % 250 AS BIGINT) AS g,
-         CAST(doc_id {div} 250 AS BIGINT) AS v
-  FROM documents
 ),
-dims AS (
-  SELECT doc_id, g, v,
-         CAST(g % 12 + 16 AS INT) AS w,
-         CAST(g % 9 + 16 AS INT) AS h
-  FROM imgs
-),{grid},
 luma AS (
   SELECT doc_id, r, c,
          (77 * a + 150 * ((a * 2 + 11) % 256)
-                 +  29 * ((a * 3 + 22) % 256)) {div} 256 AS l
+                 +  29 * ((a * 3 + 22) % 256)) // 256 AS l
   FROM (
     SELECT doc_id, r, c,
            (sx * sx * (g % 7 + 1) + sy * sy * (g % 11 + 1)
@@ -117,8 +102,8 @@ luma AS (
                      THEN v * 37 ELSE 0 END) % 256 AS a
     FROM (
       SELECT doc_id, g, v, r, c,
-             (c * w) {div} 32 AS sx,
-             (r * h) {div} 32 AS sy
+             (c * w) // 32 AS sx,
+             (r * h) // 32 AS sy
       FROM grid
     ) s
   ) p
@@ -159,14 +144,14 @@ bits AS (
          CASE WHEN ac.coef > med.m THEN 1 ELSE 0 END AS bit
   FROM ac JOIN med ON med.doc_id = ac.doc_id
 ),
-bands AS{mat} (
+bands AS MATERIALIZED (
   SELECT doc_id,
-         CAST(idx {div} 16 AS INT) AS band_idx,
-         CAST(sum({shl}) AS INT) AS band_val
+         CAST(idx // 16 AS INT) AS band_idx,
+         CAST(sum(bit << (idx % 16)) AS INT) AS band_val
   FROM bits
-  GROUP BY doc_id, idx {div} 16
+  GROUP BY doc_id, idx // 16
 ),
-hashes AS{mat} (
+hashes AS MATERIALIZED (
   SELECT doc_id,
          CAST(sum(CASE WHEN band_idx = 0 THEN band_val END) AS INT) AS b0,
          CAST(sum(CASE WHEN band_idx = 1 THEN band_val END) AS INT) AS b1,
@@ -197,8 +182,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-PHASH_PAIRS_SPARK = _phash_sql("spark")
-PHASH_PAIRS_DUCK = _phash_sql("duck")
+PHASH_PAIRS_DUCK = _phash_sql()
 
 
 def _lattice_phash_batch(ids):

@@ -36,8 +36,6 @@ k-means sub-codebooks exactly like `ivf_train_centroids`
 
 from __future__ import annotations
 
-from .sqlrun import _run
-
 DIM = 64
 M = 8           # subspaces
 SUB = DIM // M  # dims per subspace

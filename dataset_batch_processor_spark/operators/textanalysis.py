@@ -377,9 +377,6 @@ WIN_W = 4  # winnowing window (hashes)
 
 _KR_POWS = [pow(KR_B, j, KR_P) for j in range(KR_W)]
 
-_KR_TERMS_SPARK = " + ".join(
-    f"ascii(substr(text, p + {j}, 1)) * {_KR_POWS[j]}" for j in range(KR_W)
-)
 _KR_TERMS_DUCK = " + ".join(
     f"ascii(substr(text, CAST(p AS INT) + {j}, 1)) * {_KR_POWS[j]}"
     for j in range(KR_W)

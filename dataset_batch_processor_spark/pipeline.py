@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from .multimodal import binary as mm
 from .operators import routing as routing_ops
-from .operators import textops
 from .operators.tiling import TileSpec, tile_grid
 from .sources import images as img_src
 from .sources import sinks
@@ -211,10 +210,8 @@ def merge_text_folder(spark: SparkSession, in_dir: str, out_path: str,
     single file byte-for-byte)."""
     lines = text_src.read_lines(spark, in_dir, glob=glob)
     if distributed:
-        n_parts = sinks.export_merged_text_distributed(lines, out_path)
-        return RunResult(
-            metrics={"n_lines": lines.count(), "n_parts": n_parts}
-        )
+        n_parts, n_lines = sinks.export_merged_text_distributed(lines, out_path)
+        return RunResult(metrics={"n_lines": n_lines, "n_parts": n_parts})
     return RunResult(metrics={"n_lines": sinks.export_merged_text(lines, out_path)})
 
 
@@ -235,27 +232,36 @@ def dedup_text_file(spark: SparkSession, in_path: str, out_path: str) -> RunResu
 
     Reference parity is ONE ``{name}_purged{ext}`` file, but the line
     content never rides through the driver (round 11, VERDICT r10
-    wrong #4 — this used to collect every kept line): the kept set
-    streams through the W1 ordered distributed writer
-    (sinks.export_ordered_lines_distributed, the merged-text sink's
-    machinery) and the single file is a sequential byte-concat of the
-    ordered parts — file IO bounded by one record of memory."""
+    wrong #4 — this used to collect every kept line): each distinct
+    line keeps its first position, the least ``(input_file, line_no)``
+    (line_no is per-file), and the kept set streams through the
+    ordered part writer ranged on that position
+    (sinks.write_ordered_parts, the merged-text sink's machinery).
+    The single file is a sequential byte-concat of the ordered parts —
+    file IO bounded by one record of memory. Both counts ride that one
+    write job: ``unique`` is the records written, ``original`` an
+    accumulator over each record's occurrence count."""
     import shutil
 
     from . import matcache
 
-    lines = text_src.read_lines(spark, in_path, glob="*.txt")
-    stats = textops.dedup_stats(lines).collect()[0]
-    # line_no is per-file; dedup across a folder needs the GLOBAL
-    # (input_file, line_no) order, i.e. the W1 row number
-    numbered = textops.attach_global_row_number(lines)
+    first = F.struct("input_file", "line_no")
     kept = (
-        numbered.groupBy("value")
-        .agg(F.min("rn").alias("rn"))
-        .select("rn", "value")
+        text_src.read_lines(spark, in_path, glob="*.txt")
+        .groupBy("value")
+        .agg(F.min(first).alias("first"), F.count("*").alias("n"))
+        .repartitionByRange("first")
+        .sortWithinPartitions("first")
     )
+    original = spark.sparkContext.accumulator(0)
+
+    def fmt(fh, row):
+        fh.write(row["value"])
+        fh.write("\n")
+        original.add(row["n"])
+
     part_dir = matcache.scratch_dir("dbp_purged_")
-    sinks.export_ordered_lines_distributed(kept, part_dir)
+    _, unique = sinks.write_ordered_parts(kept, part_dir, fmt)
     with open(out_path, "wb") as out:
         for part in sorted(
             (
@@ -273,9 +279,9 @@ def dedup_text_file(spark: SparkSession, in_path: str, out_path: str) -> RunResu
                 shutil.copyfileobj(fh, out)
     return RunResult(
         metrics={
-            "original": stats["original_count"],
-            "unique": stats["unique_count"],
-            "removed": stats["removed_count"],
+            "original": original.value,
+            "unique": unique,
+            "removed": original.value - unique,
         }
     )
 

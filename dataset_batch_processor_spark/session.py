@@ -72,6 +72,12 @@ def get_spark(
     - Python workers import the package from :data:`PACKAGE_PARENT`
       (``spark.executorEnv.PYTHONPATH``, which Spark merges with the
       process's own PYTHONPATH); ``extra_conf`` can still override it.
+    - Python workers start from :mod:`.pydaemon`, found on that same
+      path, which imports pyspark and py4j from their installed
+      directories instead of Spark's zips: a noop ``mapInPandas`` job
+      went from about 0.24 to 0.14 s at 1 partition and from 0.8 to
+      0.5 s at 16 (local[4], 4-vCPU host). ``extra_conf`` can still
+      override it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -110,6 +116,7 @@ def get_spark(
         # their SQL fragment. PySpark reads the flag once per process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
     # static conf: the managed-table warehouse. Unset, each new
     # session gets its own session directory (removed at exit, kept by

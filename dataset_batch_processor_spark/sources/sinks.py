@@ -87,7 +87,7 @@ def export_merged_text(df: DataFrame, out_path: str, sep: str = "\n\n") -> int:
     return row["n_lines"]
 
 
-def _write_ordered_parts(ordered: DataFrame, out_dir: str, fmt) -> int:
+def write_ordered_parts(ordered: DataFrame, out_dir: str, fmt) -> tuple[int, int]:
     """Shared ordered-part writer (round-11 review #4: the merged-text
     and purged-lines sinks had copy-pasted partition writers that
     could silently diverge). ``ordered`` must already be arranged so
@@ -101,15 +101,17 @@ def _write_ordered_parts(ordered: DataFrame, out_dir: str, fmt) -> int:
     'part-100000' sorts lexicographically before 'part-99999'), and
     in-house consumers additionally sort by the PARSED id
     (pipeline.py) so even foreign-width files order correctly.
-    Returns the number of part files written."""
+    Returns ``(n_parts, n_rows)``: the part files written and the
+    records in them, counted by an accumulator in the one write job."""
     import glob
 
     from pyspark import TaskContext
 
     os.makedirs(out_dir, exist_ok=True)
+    written = ordered.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
-        fh = None
+        fh, n = None, 0
         try:
             for row in rows:
                 if fh is None:
@@ -118,17 +120,19 @@ def _write_ordered_parts(ordered: DataFrame, out_dir: str, fmt) -> int:
                         os.path.join(out_dir, f"part-{pid:09d}.txt"), "w"
                     )
                 fmt(fh, row)
+                n += 1
         finally:
             if fh is not None:
                 fh.close()
+        written.add(n)
 
     ordered.foreachPartition(write_partition)
-    return len(glob.glob(os.path.join(out_dir, "part-*.txt")))
+    return len(glob.glob(os.path.join(out_dir, "part-*.txt"))), written.value
 
 
 def export_merged_text_distributed(
     df: DataFrame, out_dir: str, sep: str = "\n\n"
-) -> int:
+) -> tuple[int, int]:
     """K3 at scale: the ordered merge WITHOUT ever materializing the
     merged string (round-1 verdict 'What's wrong #2': one collect_list
     row OOMs an executor at 100 TB).
@@ -138,7 +142,7 @@ def export_merged_text_distributed(
     rows are sorted within each partition. Record ``rn`` is prefixed by
     ``sep`` unless it is the global first, so the part concatenation
     equals exactly what export_merged_text writes (asserted in
-    tests/test_textops.py)."""
+    tests/test_textops.py). Returns ``(n_parts, n_lines)``."""
     from ..operators.textops import attach_global_row_number
 
     numbered = attach_global_row_number(df).select("rn", "value")
@@ -148,26 +152,7 @@ def export_merged_text_distributed(
             fh.write(sep)
         fh.write(row["value"])
 
-    return _write_ordered_parts(numbered, out_dir, fmt)
-
-
-def export_ordered_lines_distributed(df: DataFrame, out_dir: str) -> int:
-    """K5's scale half (round 11, VERDICT r10 wrong #4): stream
-    ``(rn, value)`` rows as newline-terminated lines to ordered part
-    files — ``repartitionByRange(rn)`` makes partition index order the
-    global order (rn may be SPARSE, e.g. first-occurrence ranks after
-    a dedup, so this re-ranges rather than trusting upstream layout),
-    and the part concatenation reproduces the single purged file
-    exactly."""
-    ordered = df.select("rn", "value").repartitionByRange(
-        "rn"
-    ).sortWithinPartitions("rn")
-
-    def fmt(fh, row):
-        fh.write(row["value"])
-        fh.write("\n")
-
-    return _write_ordered_parts(ordered, out_dir, fmt)
+    return write_ordered_parts(numbered, out_dir, fmt)
 
 
 def export_chunked_text(

@@ -27,7 +27,7 @@ def test_kernel_matches_sql_hashes_bit_for_bit():
 
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM range(60) t(doc_id)")
-    sql = phash._phash_sql("duck")
+    sql = phash.PHASH_PAIRS_DUCK
     hashes_sql = (
         sql[: sql.index(",\ncand AS")]
         + "\nSELECT doc_id, b0, b1, b2, b3 FROM hashes ORDER BY doc_id"

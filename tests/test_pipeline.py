@@ -212,32 +212,65 @@ def test_text_pipelines(spark, tmp_path):
     assert out.read_text() == "x\ny\nz\n"
 
 
-def test_split_text_file_counts_in_its_write_jobs(spark, tmp_path):
-    """split_text_file's n_lines rides the chunked export's one write
-    (an accumulator): the facade starts exactly the jobs the exporter
-    starts on the same input, not one more count() job."""
+@pytest.fixture()
+def text_folder(tmp_path):
     d = tmp_path / "txt"
     d.mkdir()
     (d / "a.txt").write_text("x\ny\nx\n")
     (d / "b.txt").write_text("z\n")
+    return d
+
+
+def _jobs(spark, group, run):
+    """``run()``'s result and the number of Spark jobs it started."""
     sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def jobs(group, run):
-        sc.setJobGroup(group, group)
-        try:
-            out = run()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    res, facade = jobs("split-text-facade", lambda: pipeline.split_text_file(
+def test_split_text_file_counts_in_its_write_jobs(spark, text_folder, tmp_path):
+    """split_text_file's n_lines rides the chunked export's one write
+    (an accumulator): the facade starts exactly the jobs the exporter
+    starts on the same input, not one more count() job."""
+    d = text_folder
+
+    res, facade = _jobs(spark, "split-text-facade", lambda: pipeline.split_text_file(
         spark, str(d), str(tmp_path / "sp"), 3))
-    _, export = jobs("split-text-export", lambda: sinks.export_chunked_text(
+    _, export = _jobs(spark, "split-text-export", lambda: sinks.export_chunked_text(
         text_src.read_lines(spark, str(d), glob="*.txt"),
         str(tmp_path / "ex"), 3))
     assert res.metrics == {"n_files": 2, "n_lines": 4}
     assert facade == export
+
+
+def test_distributed_merge_counts_in_its_write_jobs(spark, text_folder, tmp_path):
+    """merge_text_folder(distributed=True) counts its lines inside the
+    ordered-part write: no more jobs than the exporter alone."""
+    d = text_folder
+    res, facade = _jobs(spark, "merge-text-facade", lambda: pipeline.merge_text_folder(
+        spark, str(d), str(tmp_path / "merged"), distributed=True))
+    _, export = _jobs(spark, "merge-text-export", lambda: sinks.export_merged_text_distributed(
+        text_src.read_lines(spark, str(d), glob="*.txt"), str(tmp_path / "ex")))
+    assert res.metrics["n_lines"] == 4
+    assert b"".join(
+        p.read_bytes() for p in sorted((tmp_path / "merged").glob("part-*.txt"))
+    ) == b"x\n\ny\n\nx\n\nz"
+    assert facade == export
+
+
+def test_dedup_text_file_leaves_no_persisted_rdd(spark, text_folder, tmp_path):
+    """The dedup facade persists nothing that outlives its call."""
+    d = text_folder
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persisted()
+    res = pipeline.dedup_text_file(spark, str(d), str(tmp_path / "dedup.txt"))
+    assert res.metrics == {"original": 4, "unique": 3, "removed": 1}
+    assert persisted() == before
 
 
 def test_tile_pipeline_sidecar_captions(spark, tmp_path):

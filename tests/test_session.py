@@ -1,5 +1,6 @@
 """The session factory: its codegen class cache holds a repeated pass,
-and its Python workers find the package from any working directory."""
+and its Python workers find the package from any working directory and
+import pyspark from a directory rather than from Spark's archives."""
 
 from __future__ import annotations
 
@@ -8,8 +9,11 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 import __spark_entry__ as entry
 from dataset_batch_processor_spark import matcache
+from dataset_batch_processor_spark.pydaemon import zip_free_path
 from dataset_batch_processor_spark.session import CODEGEN_CACHE_MAX_ENTRIES
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -65,7 +69,8 @@ def test_repeated_pass_compiles_nothing(spark, sf_dir):
 def test_python_workers_import_the_package_from_any_directory(tmp_path):
     """A driver that puts the checkout on its own ``sys.path`` and runs
     from another directory with no PYTHONPATH: its Python workers get
-    neither, yet a kernel that imports the package must run."""
+    neither, yet their daemon (``pydaemon``, a package module) must
+    start and a kernel that imports the package must run."""
     driver = tmp_path / "driver.py"
     driver.write_text(textwrap.dedent(f"""
         import sys
@@ -90,3 +95,61 @@ def test_python_workers_import_the_package_from_any_directory(tmp_path):
         capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stderr[-3000:]
+
+
+def test_python_workers_import_pyspark_from_a_directory(spark):
+    """With the package's daemon, a worker imports pyspark from its
+    installed directory and has none of Spark's archives on its path
+    (each one made every task re-read it: importlib.invalidate_caches)."""
+
+    def report(batches):
+        import pandas as pd
+        import pyspark
+
+        for _ in batches:
+            yield pd.DataFrame({"file": [pyspark.__file__],
+                                "path": [list(sys.path)]})
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(
+        report, "file string, path array<string>").collect()
+    assert rows
+    for row in rows:
+        names = [os.path.basename(p) for p in row.path]
+        assert ".zip" not in row.file, row.file
+        assert not [n for n in names if n == "pyspark.zip" or n.endswith(".jar")
+                    or (n.startswith("py4j-") and n.endswith(".zip"))], row.path
+
+
+def _spark_layout(tmp_path, zip_version: str, installed: bool) -> list[str]:
+    """A worker path shaped like Spark's: its working directory, the
+    pyspark and py4j zips and the core jar, then site-packages with
+    (``installed``) or without a pyspark 1.0 and a py4j directory."""
+    import zipfile
+
+    lib, site = tmp_path / "lib", tmp_path / "site"
+    lib.mkdir()
+    site.mkdir()
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", f"__version__: str = '{zip_version}'\n")
+    with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as zf:
+        zf.writestr("py4j/__init__.py", "")
+    (lib / "spark-core_2.13-1.0.jar").write_bytes(b"")
+    if installed:
+        for pkg in ("pyspark", "py4j"):
+            (site / pkg).mkdir()
+            (site / pkg / "__init__.py").write_text("")
+        (site / "pyspark" / "version.py").write_text("__version__: str = '1.0'\n")
+    return [str(tmp_path), str(lib / "pyspark.zip"),
+            str(lib / "py4j-0.10.9.9-src.zip"),
+            str(lib / "spark-core_2.13-1.0.jar"), str(site)]
+
+
+@pytest.mark.parametrize("zip_version, installed, drops", [
+    ("1.0", True, True),
+    ("1.1", True, False),  # the installed pyspark is another version
+    ("1.0", False, False),  # no pyspark directory to fall back on
+])
+def test_zip_free_path(tmp_path, zip_version, installed, drops):
+    path = _spark_layout(tmp_path, zip_version, installed)
+    assert zip_free_path(path) == ([path[0], path[-1]] if drops else path)

@@ -152,8 +152,8 @@ def test_distributed_merge_matches_single_file(spark, tmp_path):
     single = tmp_path / "merged.txt"
     sinks.export_merged_text(lines, str(single))
     parts_dir = tmp_path / "parts"
-    n = sinks.export_merged_text_distributed(lines, str(parts_dir))
-    assert n >= 1
+    n_parts, n_lines = sinks.export_merged_text_distributed(lines, str(parts_dir))
+    assert n_parts >= 1 and n_lines == len(LINES)
     merged = b"".join(
         p.read_bytes() for p in sorted(parts_dir.glob("part-*.txt"))
     )
