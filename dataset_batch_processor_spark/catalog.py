@@ -9,6 +9,8 @@ so the Spark engine and the DuckDB oracle compute them identically.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,17 +91,28 @@ def fanout(df: DataFrame, rows: int | None = None) -> DataFrame:
     return df.repartition(par)
 
 
+@contextlib.contextmanager
+def shuffle_partitions(spark: SparkSession, n: int | str):
+    """Scope ``spark.sql.shuffle.partitions`` to ``n``, restoring the
+    session's value on ANY exit, so an error mid-query can't leak the
+    sizing into the long-lived session."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Some fixture generations store ``ts`` as TIMESTAMP(NANOS),
     which Spark's parquet reader rejects outright; others store
-    timestamp[us], which reads natively. Handle both: read nanos as
-    long and floor to microseconds — exactly what DuckDB's
-    TIMESTAMP_NS → TIMESTAMP cast does (event times are post-epoch,
-    so floor == trunc) — and pass native timestamps through."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # conf may be static in some deployments; fall through
+    timestamp[us], which reads natively. Handle both: the session
+    reads nanos as long (``session.get_spark``), and
+    :func:`normalize_event_ts` floors them to microseconds — exactly
+    what DuckDB's TIMESTAMP_NS → TIMESTAMP cast does (event times are
+    post-epoch, so floor == trunc) — and passes native timestamps
+    through."""
     return normalize_event_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
 
 

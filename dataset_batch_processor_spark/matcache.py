@@ -113,29 +113,39 @@ def materialize_once(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """Return ``build()``'s result as a scratch-parquet scan, building
-    at most once per (session, kind, key).
-
-    The build itself runs outside the lock (it is a Spark job), but
-    cache publication is guarded: if two first callers race, one build
-    wins the cache slot and the loser's directory is removed, so at
-    most one copy survives per key."""
+    at most once per (session, kind, key) (:func:`_publish_once`)."""
     ck = (spark.sparkContext.applicationId, kind, os.path.abspath(key))
+    path = _publish_once(ck, f"dbp_{kind}_", kind,
+                         lambda p: build().write.parquet(p))
+    return read_parquet(spark, path)
+
+
+def _publish_once(
+    ck: tuple[str, str, str], prefix: str, leaf: str,
+    write: Callable[[str], None],
+) -> str:
+    """The cached path of ``ck``, or a fresh ``<scratch>/<leaf>``
+    populated by ``write`` and published as it.
+
+    The write runs outside the lock (it is a Spark job), but
+    publication is guarded: if two first callers race, one write wins
+    the cache slot and the loser's directory is removed, so at most
+    one copy survives per key."""
     with _LOCK:
         path = _CACHE.get(ck)
-    if path is None:
-        base = scratch_dir(f"dbp_{kind}_")
-        candidate = os.path.join(base, kind)
-        build().write.parquet(candidate)
+    if path is not None:
+        return path
+    base = scratch_dir(prefix)
+    candidate = os.path.join(base, leaf)
+    write(candidate)
+    with _LOCK:
+        path = _CACHE.setdefault(ck, candidate)
+    if path != candidate:  # lost the publication race
+        shutil.rmtree(base, ignore_errors=True)
         with _LOCK:
-            path = _CACHE.get(ck)
-            if path is None:
-                path = _CACHE[ck] = candidate
-        if path != candidate:  # lost the publication race
-            shutil.rmtree(base, ignore_errors=True)
-            with _LOCK:
-                if base in _SCRATCH_DIRS:
-                    _SCRATCH_DIRS.remove(base)
-    return read_parquet(spark, path)
+            if base in _SCRATCH_DIRS:
+                _SCRATCH_DIRS.remove(base)
+    return path
 
 
 def file_fact(
@@ -199,19 +209,4 @@ def staged_once(
     fixtures.stage_shards)."""
     ck = (spark.sparkContext.applicationId, f"staged:{kind}:{layout}",
           os.path.abspath(key))
-    with _LOCK:
-        path = _CACHE.get(ck)
-    if path is None:
-        base = scratch_dir(f"dbp_{kind}_stage_")
-        candidate = os.path.join(base, "stage")
-        write(candidate)
-        with _LOCK:
-            path = _CACHE.get(ck)
-            if path is None:
-                path = _CACHE[ck] = candidate
-        if path != candidate:  # lost the publication race
-            shutil.rmtree(base, ignore_errors=True)
-            with _LOCK:
-                if base in _SCRATCH_DIRS:
-                    _SCRATCH_DIRS.remove(base)
-    return path
+    return _publish_once(ck, f"dbp_{kind}_stage_", "stage", write)

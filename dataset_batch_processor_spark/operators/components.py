@@ -180,9 +180,7 @@ def connected_components(
         max(4, int(prev[0]) // 20_000 + 4),
         max(spark.sparkContext.defaultParallelism, 2048),
     )
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+    with catalog.shuffle_partitions(spark, n_parts):
         for _ in range(max_iters):
             # Witness rides the checkpoint job via observe() — one
             # job per round instead of checkpoint + separate agg.
@@ -202,8 +200,6 @@ def connected_components(
             if new == prev:
                 break
             prev = new
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     # Fixed point = disjoint stars: (satellite, center) edges with the
     # center = component min. Centers label themselves.
     sats = cur.select(F.col("hi").alias("node"), F.col("lo").alias("comp"))

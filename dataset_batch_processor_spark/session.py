@@ -96,6 +96,8 @@ def get_spark(
         # shrinking their post-shuffle parallelism.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # event fixtures may store TIMESTAMP(NANOS); normalize_event_ts floors it
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")

@@ -1,12 +1,12 @@
 """Driver-gated streaming query: Structured Streaming vs SQL oracle.
 
 This module puts streaming operators under the DRIVER's DuckDB hash
-gate against their batch equivalents. Each query runs a real Structured
-Streaming job — file source, groupBy aggregation state, complete
-output mode, memory sink — to completion with the availableNow
-trigger (process-everything-then-stop, the batch-parity execution
-Spark provides for exactly this purpose), then hands the sink table
-back as the result DataFrame.
+gate against their batch equivalents. Each query is one stateful
+transform run by :func:`_run_stream` as a real Structured Streaming
+job — file source, operator state, memory sink — to completion with
+the availableNow trigger (process-everything-then-stop, the
+batch-parity execution Spark provides for exactly this purpose); the
+sink's rows come back as the result DataFrame.
 
 What this proves that the batch queries don't: the incremental
 execution path (MicroBatchExecution, streaming aggregation state
@@ -19,43 +19,19 @@ the answer invariant to how the input got micro-batched.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
-from dataset_batch_processor_spark.matcache import scratch_dir
-
-# Stateful streaming operators (agg / dedup / session-window / join)
-# allocate one state-store instance PER shuffle partition PER
-# operator, and AQE cannot coalesce them — so at fixture volume the
-# session default (32) is pure per-instance overhead (~2x the query
-# wall, measured on the stream-stream join; round 15 applies the same
-# sizing to the other stateful classes per VERDICT r14 next #7). A
-# production stream sizes this to throughput, not the session default.
-# Round 15b re-measured 8/4/3/2 across all five stateful twins: 4
-# dominates (join 5.8 -> 3.8 s, sessions 2.9 -> 2.2 s; 2-3 is inside
-# noise of 4 but loses parallelism headroom) — aligned with the
-# foreachBatch twins' drain sizing (fixtures.DRAIN_PARTITIONS).
-STATE_PARTITIONS = "4"
-
-
-@contextlib.contextmanager
-def _state_sized_session(spark: SparkSession):
-    """Scope shuffle.partitions=STATE_PARTITIONS around a streaming
-    query start/drain, restoring the session default on ANY exit so a
-    mid-construction error can't leak the tweak into the long-lived
-    session (the streaming_click_purchase_join discipline)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", STATE_PARTITIONS)
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+from dataset_batch_processor_spark.matcache import (
+    read_parquet, scratch_dir, staged_once,
+)
+from dataset_batch_processor_spark.streaming.fixtures import DRAIN_PARTITIONS
 
 
 def _stage_file_once(spark: SparkSession, sf_dir: str, table: str) -> str:
@@ -63,7 +39,6 @@ def _stage_file_once(spark: SparkSession, sf_dir: str, table: str) -> str:
     fixture is a single read-only file, so stage a copy once per
     (session, table, dataset) — at deployment the input would already
     be a landing directory. (Per-run mkdtemp copies before round 15.)"""
-    from ..matcache import staged_once
 
     def write(path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -72,31 +47,60 @@ def _stage_file_once(spark: SparkSession, sf_dir: str, table: str) -> str:
     return staged_once(spark, f"srcdir_{table}", sf_dir, write)
 
 
+def _run_stream(
+    spark: SparkSession, sf_dir: str, table: str,
+    query: Callable[[DataFrame], DataFrame], mode: str = "complete",
+) -> DataFrame:
+    """Run ``query`` over fixture ``table`` as an availableNow stream
+    into a memory sink and return the sink's rows as a scratch-parquet
+    scan.
+
+    The source is the staged table with its schema (inferred once per
+    session, ``matcache.read_parquet``) and ``ts`` normalized like the
+    batch loader's (``catalog.normalize_event_ts``). Stateful
+    operators allocate one state-store instance per shuffle partition
+    per operator, and AQE cannot coalesce them, so shuffles run at the
+    drain's :data:`~.fixtures.DRAIN_PARTITIONS`: at the session
+    default of 32 the stream-stream join took about twice as long.
+    The sink's rows are copied to scratch and its view dropped before
+    returning, so no relation outlives the query."""
+    stage = _stage_file_once(spark, sf_dir, table)
+    schema = read_parquet(spark, f"{sf_dir}/{table}.parquet").schema
+    name = f"stream_{table}_{uuid.uuid4().hex}"
+    out = os.path.join(scratch_dir(f"dbp_stream_{table}_"), "result")
+    try:
+        with catalog.shuffle_partitions(spark, DRAIN_PARTITIONS):
+            src = catalog.normalize_event_ts(
+                spark.readStream.schema(schema).parquet(stage)
+            )
+            q = (
+                query(src).writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        sink = spark.table(name)
+        sink.write.parquet(out)
+    finally:
+        spark.catalog.dropTempView(name)
+    return spark.read.schema(sink.schema).parquet(out)
+
+
 def streaming_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders.parquet through a real streaming aggregation."""
-    path = f"{sf_dir}/orders.parquet"
-    stage = _stage_file_once(spark, sf_dir, "orders")
-    schema = spark.read.parquet(path).schema
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = spark.readStream.schema(schema).parquet(stage)
-        agg = src.groupBy("o_orderpriority").agg(
+
+    def query(src: DataFrame) -> DataFrame:
+        return src.groupBy("o_orderpriority").agg(
             F.count("*").alias("n_orders"),
             F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
             .cast("double")
             .alias("total_price"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(
-        f"SELECT o_orderpriority, n_orders, total_price FROM {name} "
-        "ORDER BY o_orderpriority"
+
+    return _run_stream(spark, sf_dir, "orders", query).orderBy(
+        "o_orderpriority"
     )
 
 
@@ -121,19 +125,9 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream uses. availableNow + complete mode makes the result
     batch-identical, which the DuckDB hash gate then proves against
     relational.EVENTS_HOURLY_SQL semantics."""
-    path = f"{sf_dir}/events.parquet"
-    stage = _stage_file_once(spark, sf_dir, "events")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    schema = spark.read.parquet(path).schema
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = catalog.normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
-        agg = (
+
+    def query(src: DataFrame) -> DataFrame:
+        return (
             src.groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(
                 F.count("*").alias("n_events"),
@@ -150,17 +144,9 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(
-        f"SELECT hour, event_type, n_events, sum_value FROM {name} "
-        "ORDER BY hour, event_type"
+
+    return _run_stream(spark, sf_dir, "events", query).orderBy(
+        "hour", "event_type"
     )
 
 
@@ -195,33 +181,16 @@ def streaming_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     production deployment bounds the dedup state with
     dropDuplicatesWithinWatermark; availableNow over a finite
     backlog is the unbounded-state batch-parity case."""
-    path = f"{sf_dir}/events.parquet"
-    stage = _stage_file_once(spark, sf_dir, "events")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    schema = spark.read.parquet(path).schema
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_sized_session(spark):
-        src = spark.readStream.schema(schema).parquet(stage)
-        agg = (
+
+    def query(src: DataFrame) -> DataFrame:
+        return (
             src.select("user_id", "event_type")
             .dropDuplicates(["user_id", "event_type"])
             .groupBy("event_type")
             .agg(F.count("*").alias("n_users"))
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(
-        f"SELECT event_type, n_users FROM {name} ORDER BY event_type"
-    )
+
+    return _run_stream(spark, sf_dir, "events", query).orderBy("event_type")
 
 
 STREAM_DEDUP_DUCK = """
@@ -247,78 +216,31 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
     immediately (append mode); availableNow over the finite backlog
     is the batch-parity case. The per-pair rows land in the memory
     sink; the returned per-user pair counts are batch post-processing
-    of the sink table, so the hash gate pins the JOIN's exact output
+    of the sink's rows, so the hash gate pins the JOIN's exact output
     multiset against DuckDB's interval self-join."""
-    path = f"{sf_dir}/events.parquet"
-    stage = _stage_file_once(spark, sf_dir, "events")
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev_nanos = spark.conf.get(nanos_key, None)
-        spark.conf.set(nanos_key, "true")
-    except Exception:
-        prev_nanos = None
-    schema = spark.read.parquet(path).schema
-    # State-store instances scale with shuffle partitions x join sides
-    # (x2 here) — the query where the 8-partition sizing was measured
-    # (~2x the query wall at 32); see STATE_PARTITIONS.
 
-    def side(event_type, ts_name, uid_name):
-        src = catalog.normalize_event_ts(
-            spark.readStream.schema(schema).parquet(stage)
-        )
+    def side(src: DataFrame, event_type: str, uid: str, ts: str) -> DataFrame:
         return (
             src.filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(uid_name),
-                F.col("ts").alias(ts_name),
-            )
-            .withWatermark(ts_name, "1 hour")
+            .select(F.col("user_id").alias(uid), F.col("ts").alias(ts))
+            .withWatermark(ts, "1 hour")
         )
 
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    try:
-        # EVERYTHING that can fail (plan building included) sits
-        # inside the scoped session so a mid-construction error can't
-        # leak partitions=8 into the long-lived session
-        with _state_sized_session(spark):
-            clicks = side("click", "click_ts", "user_id")
-            purchases = side("purchase", "p_ts", "p_user")
-            joined = clicks.join(
-                purchases,
-                F.expr(
-                    "user_id = p_user AND p_ts > click_ts "
-                    "AND p_ts <= click_ts + INTERVAL 1 HOUR"
-                ),
-            )
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        # Materialize the per-user counts NOW (bounded: one row per
-        # distinct user) so the memory-sink table and the nanosAsLong
-        # override can be released before returning — the caller gets
-        # a clean local-relation plan. (The staging dir is session-
-        # shared via staged_once and must NOT be removed here.)
-        rows = spark.sql(
-            f"SELECT user_id, count(*) AS n_pairs FROM {name} "
-            "GROUP BY user_id ORDER BY user_id"
-        ).collect()
-    finally:
-        try:
-            if prev_nanos is None:
-                spark.conf.unset(nanos_key)
-            else:
-                spark.conf.set(nanos_key, prev_nanos)
-        except Exception:
-            pass
-        spark.catalog.dropTempView(name)
-    return spark.createDataFrame(
-        rows, "user_id BIGINT, n_pairs BIGINT"
-    ).orderBy("user_id")
+    def query(src: DataFrame) -> DataFrame:
+        return side(src, "click", "user_id", "click_ts").join(
+            side(src, "purchase", "p_user", "p_ts"),
+            F.expr(
+                "user_id = p_user AND p_ts > click_ts "
+                "AND p_ts <= click_ts + INTERVAL 1 HOUR"
+            ),
+        )
+
+    pairs = _run_stream(spark, sf_dir, "events", query, mode="append")
+    return (
+        pairs.groupBy("user_id")
+        .agg(F.count("*").alias("n_pairs"))
+        .orderBy("user_id")
+    )
 
 
 STREAM_SSJ_DUCK = """
@@ -355,75 +277,27 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user gap-sessions over the event stream: availableNow +
     complete mode makes the stateful session_window agg
     batch-identical, and the DuckDB islands oracle hash-gates it."""
-    path = f"{sf_dir}/events.parquet"
-    stage = _stage_file_once(spark, sf_dir, "events")
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev_nanos = spark.conf.get(nanos_key, None)
-        spark.conf.set(nanos_key, "true")
-    except Exception:
-        prev_nanos = None
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    try:
-        schema = spark.read.parquet(path).schema
-        with _state_sized_session(spark):
-            src = catalog.normalize_event_ts(
-                spark.readStream.schema(schema).parquet(stage)
+
+    def query(src: DataFrame) -> DataFrame:
+        return (
+            src.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.col("value").cast("decimal(25,6)"))
+                .cast("double")
+                .alias("sum_value"),
             )
-            agg = (
-                src.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
-                .agg(
-                    F.count("*").alias("n_events"),
-                    F.sum(F.col("value").cast("decimal(25,6)"))
-                    .cast("double")
-                    .alias("sum_value"),
-                )
-                .select(
-                    "user_id",
-                    F.unix_micros("session_window.start").alias(
-                        "session_start_us"
-                    ),
-                    "n_events",
-                    "sum_value",
-                )
+            .select(
+                "user_id",
+                F.unix_micros("session_window.start").alias(
+                    "session_start_us"
+                ),
+                "n_events",
+                "sum_value",
             )
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        # materialize off the memory sink so the view can be dropped
-        # before returning (same hygiene as
-        # streaming_click_purchase_join; staging is session-shared).
-        # Unlike the join's ~|users| rows, sessions are ~|corpus|-
-        # sized, so spill to scratch parquet instead of driver-side
-        # Row objects (round 15: the collect/createDataFrame
-        # roundtrip of ~100k rows was ~1s of pure serialization).
-        out = scratch_dir("dbp_stream_sess_out_")
-        spark.sql(
-            f"SELECT user_id, session_start_us, n_events, sum_value FROM {name}"
-        ).write.mode("overwrite").parquet(out)
-    finally:
-        try:
-            if prev_nanos is None:
-                spark.conf.unset(nanos_key)
-            else:
-                spark.conf.set(nanos_key, prev_nanos)
-        except Exception:
-            pass
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-    return spark.read.parquet(out).select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("session_start_us").cast("long").alias("session_start_us"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
+        )
+
+    return _run_stream(spark, sf_dir, "events", query)
 
 
 STREAM_SESSION_DUCK = f"""

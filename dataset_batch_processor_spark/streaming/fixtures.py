@@ -30,7 +30,6 @@ emission-exact).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
 from collections.abc import Callable
@@ -54,21 +53,6 @@ DRAIN_PARTITIONS = "4"
 SHARDS = 2
 
 Step = Callable[..., "DataFrame | dict[str, DataFrame]"]
-
-
-@contextlib.contextmanager
-def drain_sized(spark: SparkSession):
-    """Scope ``shuffle.partitions`` to the micro-batch volume around a
-    streaming drain (stream build + start + awaitTermination),
-    restoring the session default on ANY exit so a mid-drain error
-    can't leak the tweak into the long-lived session (the
-    batchcheck._state_sized_session discipline)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", DRAIN_PARTITIONS)
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def stage_shards(
@@ -187,10 +171,11 @@ def drain(
     rows, and its concurrent overwrite would delete files the read
     is still scanning.
 
-    Sizing. Shuffles inside the drain run at :data:`DRAIN_PARTITIONS`
-    (:func:`drain_sized`)."""
+    Sizing. Shuffles inside the drain (stream build, start and
+    awaitTermination) run at :data:`DRAIN_PARTITIONS`
+    (``catalog.shuffle_partitions``)."""
     work = work_dir or scratch_dir("dbp_drain_")
-    with drain_sized(spark):
+    with catalog.shuffle_partitions(spark, DRAIN_PARTITIONS):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)

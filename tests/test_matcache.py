@@ -23,6 +23,32 @@ def test_materialize_once_builds_once(spark):
     assert a.count() == 5 and b.count() == 5
 
 
+def test_materialize_once_lost_race_keeps_one_dir(spark, tmp_path, monkeypatch):
+    """A build that itself publishes the same key makes the outer call
+    lose the publication race: both calls scan the winner's directory,
+    and the loser's is removed from disk and from the registry."""
+    monkeypatch.setattr(matcache, "_SCRATCH_DIRS", [])
+    monkeypatch.setattr(matcache, "_CACHE", {})
+    matcache.set_scratch_root(str(tmp_path))
+    try:
+        inner = []
+
+        def build():
+            inner.append(matcache.materialize_once(
+                spark, "t_race", "/k3", lambda: spark.range(3).toDF("v")
+            ))
+            return spark.range(3).toDF("v")
+
+        outer = matcache.materialize_once(spark, "t_race", "/k3", build)
+    finally:
+        matcache.set_scratch_root(None)
+    assert sorted(outer.inputFiles()) == sorted(inner[0].inputFiles())
+    on_disk = [str(d) for d in tmp_path.glob("dbp_t_race_*")]
+    assert len(on_disk) == 1 and matcache._SCRATCH_DIRS == on_disk
+    assert all(f"{on_disk[0]}/" in f for f in outer.inputFiles())
+    assert outer.count() == 3
+
+
 def test_cleanup_scratch_removes_dirs_and_cache(spark):
     matcache.materialize_once(
         spark, "t_clean", "/k2", lambda: spark.range(3).toDF("v")

@@ -1,22 +1,23 @@
 """Structured Streaming: the one availableNow drain behind the stream
-twins, its scoped sizing and its replay semantics."""
+twins, the one memory-sink runner behind the stateful stream queries,
+their scoped sizing and the drain's replay semantics."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from dataset_batch_processor_spark import catalog
-from dataset_batch_processor_spark.streaming import fixtures
+from dataset_batch_processor_spark.streaming import batchcheck, fixtures
 
 
-def test_drain_sized_scopes_and_restores_shuffle_partitions(spark):
-    """drain_sized must apply DRAIN_PARTITIONS only inside the drain
-    scope and restore the session default on normal AND error exit, so
-    a failed drain can't leak micro-batch sizing into the session."""
-    from dataset_batch_processor_spark.streaming import fixtures
-
+def test_shuffle_partitions_scopes_and_restores(spark):
+    """catalog.shuffle_partitions (the drain's and the stateful
+    runner's sizing) must apply its width only inside the scope and
+    restore the session value on normal AND error exit, so a failed
+    drain can't leak micro-batch sizing into the session."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with fixtures.drain_sized(spark):
+    with catalog.shuffle_partitions(spark, fixtures.DRAIN_PARTITIONS):
         assert (
             spark.conf.get("spark.sql.shuffle.partitions")
             == fixtures.DRAIN_PARTITIONS
@@ -24,11 +25,67 @@ def test_drain_sized_scopes_and_restores_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     try:
-        with fixtures.drain_sized(spark):
+        with catalog.shuffle_partitions(spark, fixtures.DRAIN_PARTITIONS):
             raise RuntimeError("mid-drain failure")
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+@pytest.mark.parametrize("name", sorted(batchcheck.QUERIES))
+def test_stateful_stream_query_leaves_no_session_state(spark, sf_dir, name):
+    """A memory-sink stream query leaves the session as it found it:
+    no sink view, no active stream, no persisted RDD, and the confs it
+    reads (nanos-as-long, shuffle width) unchanged."""
+    keys = ("spark.sql.legacy.parquet.nanosAsLong",
+            "spark.sql.shuffle.partitions")
+
+    def state():
+        return (
+            sorted(t.name for t in spark.catalog.listTables()),
+            spark.sparkContext._jsc.getPersistentRDDs().size(),
+            [spark.conf.get(k) for k in keys],
+        )
+
+    before = state()
+    batchcheck.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert state() == before
+    assert not spark.streams.active
+
+
+def test_nanos_event_ts_floors_in_batch_and_stream(spark, tmp_path):
+    """events.ts stored as TIMESTAMP(NANOS) reads as long (a session
+    conf) and is floored to micros, the same in the batch loader and
+    the stream runner: 00:59:59.999999999 stays in hour 00."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = 1_704_067_200_000_000_000  # 2024-01-01T00:00:00Z in ns
+    ts = [base + 1_999, base + 3_599_999_999_999, base + 3_600_000_000_000]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("ns", tz="UTC")),
+            "user_id": pa.array([7, 7, 7], pa.int64()),
+            "event_type": ["click", "click", "purchase"],
+            "value": [1.0, 2.0, 4.0],
+        }),
+        tmp_path / "events.parquet", version="2.6",
+    )
+    raw = spark.read.parquet(str(tmp_path / "events.parquet"))
+    assert dict(raw.dtypes)["ts"] == "bigint"
+    events = catalog.load_events(spark, str(tmp_path))
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    assert [r[0] for r in events.select(F.unix_micros("ts")).collect()] == [
+        t // 1000 for t in ts
+    ]
+    hourly = batchcheck.streaming_hourly_events(spark, str(tmp_path))
+    assert [tuple(r) for r in hourly.collect()] == [
+        ("2024-01-01 00:00:00", "click", 2, 3.0),
+        ("2024-01-01 01:00:00", "purchase", 1, 4.0),
+    ]
 
 
 STREAM_TWINS = {
